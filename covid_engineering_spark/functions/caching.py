@@ -19,7 +19,7 @@ _LAST: dict[str, DataFrame] = {}
 
 def reset() -> None:
     """Unpersist every registered frame and forget it — the bench's
-    per-timed-run hook (VERDICT r11 #1). The ``sameResult`` fast path
+    per-timed-run hook. The ``sameResult`` fast path
     below deliberately lets a long-lived session REUSE a warm cache
     across invocations of the same query; that is correct for a
     notebook or the driver's correctness loop, but it means a bench
@@ -32,8 +32,13 @@ def reset() -> None:
     ``blocking=True`` so the eviction completes before the timed
     region starts instead of overlapping it.
     """
-    for key in list(_LAST):
-        df = _LAST.pop(key)
+    # Atomic popitem, not a snapshot of the keys: another client's
+    # evicting_cache may pop a key while unpersist blocks.
+    while True:
+        try:
+            _, df = _LAST.popitem()
+        except KeyError:  # empty
+            break
         try:
             df.unpersist(blocking=True)
         except Exception:
@@ -48,8 +53,7 @@ def evicting_cache(
     already-cached frame is returned as-is. Re-invoking the same query
     with the same inputs (a notebook, the driver's correctness loop)
     reuses the warm cache; the BENCH calls :func:`reset` before every
-    timed run so that reuse never crosses into a timed region
-    (VERDICT r11 #1).
+    timed run so that reuse never crosses into a timed region.
 
     ``sameResult`` on the analyzed plans is the exact equivalence
     CacheManager itself uses.
@@ -61,7 +65,7 @@ def evicting_cache(
     deserialized cache and spills the remainder to disk — the
     shuffle-file treatment, routine at scale. Keys should include the
     variant parameters (hash family, gram length) so distinct variants
-    hold distinct slots instead of thrashing one (ADVICE r11).
+    hold distinct slots instead of thrashing one.
     """
     prev = _LAST.get(key)
     if prev is not None:

@@ -53,7 +53,7 @@ def salted_block_sides(
     """
     if cap is None or cap < 1:
         raise ValueError(f"salted_block_sides cap must be >= 1, got {cap!r}")
-    # NOTE (r12): caching the projected input here (the size aggregate
+    # NOTE: caching the projected input here (the size aggregate
     # and both join sides re-derive it) was implemented and A/B'd —
     # and REJECTED: the three derivations are a thin projection of an
     # already-fanned scan, while the InMemoryRelation in the middle

@@ -282,11 +282,11 @@ def _minhash_signatures(
     never overflows int64 in either engine (DuckDB raises on overflow;
     Spark would silently wrap).
 
-    The signature row also carries ``_n_sh`` = the doc's shingle count
-    (r12): the exact-Jaccard verification needs per-doc set sizes, and
-    they ride the SAME groupBy(doc_id) for free — computing them as a
-    separate aggregation re-scanned the whole shingle frame once more
-    per execution.
+    The signature row also carries ``_n_sh`` = the doc's shingle count:
+    the exact-Jaccard verification needs per-doc set sizes, and they
+    ride the SAME groupBy(doc_id) for free — computing them as a
+    separate aggregation would re-scan the whole shingle frame once
+    more per execution.
     """
     if portable:
         md = F.md5(F.col("s"))
@@ -488,7 +488,7 @@ def minhash_lsh_pairs(
         "minhash_sig",
     )
     bands = _band_frame(sig, portable, carry=("_n_sh",))
-    # per-doc set sizes ride the signature aggregation (_n_sh, r12)
+    # per-doc set sizes ride the signature aggregation (_n_sh)
     # and then the bucket-pair join itself (carry) — the verification
     # needs (na, nb) per pair, and getting them from the pair join
     # replaces two joins of the verified frame against a per-doc size
@@ -717,24 +717,22 @@ def substring_dup_span_frame(
         F.array().cast("array<bigint>" if hashed else "array<string>")
     )
     g = docs.select("doc_id", F.posexplode(grams_arr).alias("pos", "gram"))
-    # Cache the positional gram frame (r11, the decon/minhash shingle-
-    # cache discipline): it feeds TWO consumers — the duplicated-gram
-    # set's groupBy and the semi-join's position side — and Catalyst
-    # re-derives uncached subtrees per consumer, so the corpus-wide
-    # explode + per-position gram build (the compute-dense stage of
-    # the whole family) ran twice per execution.
+    # Cache the positional gram frame (the decon/minhash shingle-cache
+    # discipline): it feeds TWO consumers — the duplicated-gram set's
+    # groupBy and the semi-join's position side — and Catalyst
+    # re-derives uncached subtrees per consumer, so uncached the
+    # corpus-wide explode + per-position gram build (the compute-dense
+    # stage of the whole family) would run twice per execution.
     #
     # This is the ONE engine cache that is O(corpus tokens), not
-    # bounded-by-construction (VERDICT r11 #4), so it is stored
-    # SERIALIZED with disk spill (MEMORY_AND_DISK, not the default
-    # deserialized cache): at 100 TB the frame is a shuffle-file-sized
-    # disk artifact, never a resident deserialized heap. It buys back
-    # one full corpus scan + gram build per execution; the honest A/B
-    # (cache vs rebuild-twice, caches reset per run) is recorded in
-    # OPTIMIZATION_r12.md. The key carries the variant parameters
-    # (hash family, gram length — ADVICE r11) so the hashed production
-    # form and the exact-string registered form hold separate slots
-    # instead of thrashing one on alternating callers.
+    # bounded-by-construction, so it is stored SERIALIZED with disk
+    # spill (MEMORY_AND_DISK, not the default deserialized cache): at
+    # 100 TB the frame is a shuffle-file-sized disk artifact, never a
+    # resident deserialized heap. It buys back one full corpus scan +
+    # gram build per execution. The key carries the variant parameters
+    # (hash family, gram length) so the hashed production form and the
+    # exact-string registered form hold separate slots instead of
+    # thrashing one on alternating callers.
     from pyspark import StorageLevel
 
     from covid_engineering_spark.functions import evicting_cache
@@ -809,13 +807,13 @@ def substring_dup_spans(
     duplication counters literal 0, ``has_dup`` literal FALSE — a
     payload-less document carries no duplicated content.
 
-    ``hashed=True`` — the DEFAULT since r11 (VERDICT r10 #4), the
-    production path at corpus scale: each gram collapses to
+    ``hashed=True`` — the DEFAULT, the production path at corpus
+    scale: each gram collapses to
     ``xxhash64(gram)`` MAP-SIDE (inside the same projection that
     builds it — the string never leaves the scan task), so the
     dup-set groupBy and the semi-join shuffle 8-byte BIGINT keys
     instead of ~50-byte strings (measured 1000× exponent 0.755 vs
-    0.806 exact-string, PROBE_r10). The cost is a birthday-collision
+    0.806 exact-string). The cost is a birthday-collision
     false-dup rate of ~n²/2⁶⁵ over n distinct grams (~3·10⁻⁶ at
     10¹² grams ≈ 100 TB) — the same exact-vs-hashed trade the DSIR
     feature hash and the minhash ``portable`` flag document. The

@@ -290,10 +290,10 @@ def bloom_decontaminate(
             F.explode(F.array(*pos)).alias("bit")
         ).distinct()
     )
-    # Materialize the set-bit frame ONCE (r11, the bounded-frame
-    # checkpoint discipline): left lazy, each of the k probe joins
-    # broadcast-builds its own copy of this subtree, so the eval-side
-    # scan + explode + distinct shuffle ran k times per execution.
+    # Materialize the set-bit frame ONCE (the bounded-frame checkpoint
+    # discipline): left lazy, each of the k probe joins broadcast-builds
+    # its own copy of this subtree, so the eval-side scan + explode +
+    # distinct shuffle would run k times per execution.
     # The frame is ≤ m rows BY CONSTRUCTION (fixed filter geometry,
     # however large the eval suite), so the eager localCheckpoint is a
     # bounded micro-materialization at any scale.
@@ -570,19 +570,19 @@ def connected_components(
     """
     from covid_engineering_spark.functions import evicting_cache
 
-    # SELF-LOOPS ride the cached edge frame (r12): with (v, v) present
-    # for every endpoint, "min label over my neighbors" automatically
+    # SELF-LOOPS ride the cached edge frame: with (v, v) present for
+    # every endpoint, "min label over my neighbors" automatically
     # includes my OWN label, so each round is one join + one partial
-    # aggregation — the r11 form needed an extra left-join back onto
-    # the labels frame per round just to keep the own-label candidate,
+    # aggregation — without them each round needs an extra left-join
+    # back onto the labels frame just to keep the own-label candidate,
     # and a prev_lbl carry column just to detect convergence. Duplicate
     # self-loop rows (a doc in many pairs) are harmless under min().
     # ONE map-side Generate fans each pair into its 4 edge rows
     # (forward, mirror, both self-loops). The union form Catalyst would
     # otherwise need re-derives the ENTIRE pair-generation pipeline once
-    # per branch — Catalyst plans trees, not DAGs — so the edge cache
-    # build paid the shingle self-join 2x before r12 (and 4x with
-    # self-loops as union branches). The explode pays it exactly once.
+    # per branch — Catalyst plans trees, not DAGs — so a union-built
+    # edge cache pays the shingle self-join 2x (4x with self-loops as
+    # union branches). The explode pays it exactly once.
     edges = pairs.select(
         F.explode(
             F.array(
@@ -598,9 +598,9 @@ def connected_components(
     # truncation).
     edges = evicting_cache(edges, "cc_edges")
     # Round 0 fused into initialization: min(dst) over the self-looped
-    # edges IS "least(v, min neighbor)" — the r11 form spent a distinct
-    # exchange + an eager checkpoint just to seed lbl = v, then paid a
-    # full round to reach this state. localCheckpoint(eager=False)
+    # edges IS "least(v, min neighbor)" — seeding lbl = v instead costs
+    # a distinct exchange + an eager checkpoint, then a full round to
+    # reach this state. localCheckpoint(eager=False)
     # truncates the plan NOW but materializes inside the convergence
     # aggregate below — one action per round instead of a checkpoint
     # job plus a count job (guide §2.4: two ops keyed the same way
@@ -698,7 +698,7 @@ def _keep_best_scored(scored: DataFrame, clusters: DataFrame) -> DataFrame:
     """Survivor pick over an already-scored corpus — (doc_id,
     quality_score) plus the (doc_id, cluster_id) contested set.
 
-    Scale shape (the r05 rewrite): ``clusters`` is tiny relative to
+    Scale shape: ``clusters`` is tiny relative to
     the corpus — only docs that appear in a dup pair — so membership
     is resolved with two broadcast-sized joins (inner for the
     contested docs, left_anti for the singletons) and the ranked
@@ -1343,10 +1343,11 @@ def _dsir_weights(docs: DataFrame, target) -> DataFrame:
         ).alias("feat"),
     )
     # Collapse the token stream ONCE to per-(doc, feature) counts and
-    # cache that (r11, guide §2.3/§2.4): the raw ``toks`` frame fed
-    # TWO aggregations (the bucket models and the per-doc counts) and
-    # the weight frame feeds two consumer branches, so the corpus-wide
-    # explode + md5 per token ran up to four times per execution.
+    # cache that (guide §2.3/§2.4): the raw ``toks`` frame feeds TWO
+    # aggregations (the bucket models and the per-doc counts) and the
+    # weight frame feeds two consumer branches, so uncached the
+    # corpus-wide explode + md5 per token runs up to four times per
+    # execution.
     # ``tokfeat`` is ≤ |docs| × DSIR_BUCKETS rows at ANY corpus size
     # (bounded cache, unlike caching ``toks`` itself), carries the
     # partial-aggregated token shuffle exactly once, and both model
@@ -1472,12 +1473,7 @@ def dsir_gumbel_topk_exact(
     Gumbel-top-k resampling rule with a hash-stable score column, so
     the whole selection (not just the id set) is checkable against an
     ANSI-SQL twin (:func:`dsir_gumbel_sql`; differential test in
-    tests/test_round9_ops.py — VERDICT r08 next-round #6). Registered
-    as ``pipe_dsir_gumbel``, overflow-pinned: the r09 window is fully
-    spoken for by the NULL-hardening re-green set, so the entry sits
-    at the front of the tail (``WINDOW_OVERFLOW``) and is first in
-    line for the r10 window — the #6 "overflow-pinned otherwise"
-    path, locally differential-checked like every oracle meanwhile.
+    tests/test_round9_ops.py). Registered as ``pipe_dsir_gumbel``.
 
     The draw: ``u = (h + 1) / 2^60`` from the md5-derived
     ``portable_hash64(doc_id, seed)`` — one exact int→double convert
@@ -1577,10 +1573,9 @@ def curate_corpus(
     4. best-of-cluster retention by quality score
     5. deterministic train/val/test split of the survivors
 
-    Scale shape (r05 rewrite — the 100x probe put this composite's
-    exponent at 0.71, highest on the books, driven by Catalyst
-    re-deriving the normalize→dedup subchain once per consumer and by
-    corpus-wide shuffles in the dedup join and retention window):
+    Scale shape (the costs at depth are Catalyst re-deriving the
+    normalize→dedup subchain once per consumer and corpus-wide
+    shuffles in the dedup join and retention window):
 
     * normalization AND quality scoring are scan-side codegen in one
       projection — the original plan attached quality via a separate
@@ -2104,9 +2099,9 @@ def build_near_dup_index(
       row_number window over the (band, bh) shuffle is the one
       corpus-sized stage of the whole incremental path, and baking it
       into the index is what makes the per-batch job O(batch + probe)
-      (PROBE_r10_x1000 measured the in-query form's exponent rising
-      to 0.792 as the corpus dwarfed the batch: that was exactly this
-      re-rank being recomputed per refresh).
+      (the in-query form's measured 1000x exponent rises to 0.792 as
+      the corpus dwarfs the batch: that is exactly this re-rank being
+      recomputed per refresh).
     * ``shingles`` — (doc_id, s) distinct word-3-grams: the exact-
       Jaccard verification side.
     * ``sizes`` — (doc_id, n) per-doc shingle counts: the union-size
@@ -2208,7 +2203,7 @@ def probe_near_dup_index(
 ) -> DataFrame:
     """Batch probe of a persisted ``write_near_dup_index`` layout
     with SCAN PRUNING — the missing half of the standing-index story
-    PROBE_r11_x1000 measured: the prebuilt index drops the per-batch
+    (measured at 1000x): the prebuilt index drops the per-batch
     exponent from 0.792 to 0.659, but the residual growth is the
     index SCAN itself (the probe is a JOIN, which parquet cannot
     prune against). Here the batch's bucket keys and then its
@@ -2346,8 +2341,8 @@ def near_dup_incremental_lsh(
     so per-batch cost is O(batch + probe) regardless of corpus size.
     This is the production shape: the in-query derivation below
     re-shingles, re-hashes, and re-caps the full corpus on every
-    batch, which PROBE_r10_x1000 measured growing toward the corpus
-    scan (exponent 0.792) once the corpus dwarfs the batch. Tests pin
+    batch, which grows toward the corpus scan (measured 1000x
+    exponent 0.792) once the corpus dwarfs the batch. Tests pin
     both paths to identical output on the same corpus.
     """
     from pyspark.sql import Window
@@ -2372,7 +2367,7 @@ def near_dup_incremental_lsh(
             )
         # two consumers each (band build + verification sizes/join)
         shc = evicting_cache(shingles_of(corpus), "inc_lsh_sh_corpus")
-        # Signature frame cached (r12): it feeds the band/bucket build
+        # Signature frame cached: it feeds the band/bucket build
         # AND the verification's size lookup (per-doc shingle counts
         # ride the signature groupBy as ``_n_sh`` instead of a second
         # full aggregation pass over the shingle frame); one

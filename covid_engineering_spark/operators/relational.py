@@ -915,11 +915,11 @@ def q_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape). Covers S1+P3+A2/A5+F1 in one plan; partial aggregation
     makes the shuffle carry 6 rows regardless of input scale.
     """
-    # fan=True (r11, guide §2.5 input skew): the sf parquet is a single
-    # row group, so the 8-aggregate decimal map stage — the whole query
-    # — ran as ONE task. Interleaved min-of-10 A/B after deep JIT warm:
-    # 1.22s -> 1.03s min, 1.44 -> 1.23 med; identity at scale (scan
-    # carries >= defaultParallelism splits).
+    # fan=True (guide §2.5 input skew): the sf parquet is a single
+    # row group, so without it the 8-aggregate decimal map stage — the
+    # whole query — runs as ONE task. Interleaved min-of-10 A/B after
+    # deep JIT warm: 1.22s -> 1.03s min, 1.44 -> 1.23 med; identity at
+    # scale (scan carries >= defaultParallelism splits).
     li = read_table(spark, sf_dir, "lineitem", fan=True).filter(
         F.col("l_shipdate") <= "2000-09-02"
     )
@@ -1011,7 +1011,7 @@ def q_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         costs.join(minc, "l_partkey")
         .filter(F.col("cost") == F.col("min_cost"))
         # part/supplier scale with SF: broadcast is the size-based
-        # planner's decision, not a pinned hint (the r01 lesson).
+        # planner's decision, not a pinned hint.
         .join(part, costs.l_partkey == part.p_partkey)
         .join(supp, costs.l_suppkey == supp.s_suppkey)
         .select(
@@ -1069,7 +1069,7 @@ def q_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Timestamp-preserving add: F.date_add would truncate the
     # TimestampNTZ order date to a DATE before comparing, silently
     # diverging from the oracle's `+ INTERVAL 30 DAY` the moment an
-    # order date carries a time component (round-4 advice).
+    # order date carries a time component.
     late = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey)
@@ -1105,7 +1105,7 @@ def q_q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H query-shape completion (round 6). The reference's analytical
+# TPC-H query-shape completion. The reference's analytical
 # surface is groupBy/join/window over the COVID frames (main.py:452-650);
 # these composites exercise the same relational algebra on the TPC-H-ish
 # fixtures at the canonical benchmark shapes, so the engine's join
@@ -1722,8 +1722,8 @@ def q_q21_suppliers_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is_late",
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
     )
-    # Two-level aggregation (r12, guide §2.3): the countDistinct pair
-    # planned an Expand (3 projections per input row — one per
+    # Two-level aggregation (guide §2.3): the countDistinct pair
+    # plans an Expand (3 projections per input row — one per
     # distinct-aggregate group plus the plain max) feeding TWO
     # exchanges (keys ⊕ gid, then key). Collapsing to distinct
     # (order, supplier) pairs first — with the per-pair late flag as a
@@ -1970,9 +1970,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated shuffle; each quintile is then assigned by
     ``global_ntile`` — range-repartition + per-partition row_number +
     broadcast prefix-sum offsets — so NO stage sorts the full frame
-    in one task (the r06 registered form's three
-    ``Window.orderBy``-without-``partitionBy`` windows died at ~10¹⁰
-    customers; this plan's parallelism grows with the data). The
+    in one task (three ``Window.orderBy``-without-``partitionBy``
+    windows die at ~10¹⁰ customers; this plan's parallelism grows
+    with the data). The
     output is bit-identical to the NTILE(5) window form — the window
     form stays as this query's exactness oracle (DuckDB NTILE in the
     driver, ``F.ntile`` in

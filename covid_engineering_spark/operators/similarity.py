@@ -12,7 +12,7 @@ Two paths:
   corpus vectors are scored. Sub-linear candidate sets at the cost of
   recall, verified against the brute-force path in tests.
 
-NULL ``embedding`` semantics (round 9): index/train/eval operators
+NULL ``embedding`` semantics: index/train/eval operators
 (PQ / IVF-PQ codebooks, centroids, nearest-centroid assignment, RP
 recall) EXCLUDE NULL vectors on both engine and twin — a vector row
 without a vector is not retrievable, and one NULL seed would poison a
@@ -175,8 +175,8 @@ def _centroids(emb: DataFrame) -> DataFrame:
     codebook IS a fitted model; the query plan built on top of it
     stays lazy. The sample filter is a pure column predicate
     (xxhash64 % mod), so the training scan prunes to the embedding
-    column and needs no prior count or max (the round-1 stride
-    codebook pulled max(vec_id) eagerly AND never learned the space).
+    column and needs no prior count or max (a stride codebook pulls
+    max(vec_id) eagerly AND never learns the space).
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -349,7 +349,7 @@ def kmeans_centroids(
     )
     for _ in range(iters):
         assigned = _assign(e, cent, "vec_id", "embedding", 1)
-        # M-step, fused (r11): one groupBy(cell) whose DIM per-dim
+        # M-step, fused: one groupBy(cell) whose DIM per-dim
         # DECIMAL sums run as ordinary partial-aggregated columns —
         # the shuffle carries one (cells × DIM)-column row per map
         # partition instead of the corpus×DIM posexplode stream, and
@@ -359,14 +359,14 @@ def kmeans_centroids(
         # dims), value-identical to the exploded form: per-(cell,dim)
         # decimal sums and counts are order-independent.
         cent = _cell_means(assigned, "c_id")
-        # Truncate lineage at the round boundary (r11, the CC-loop /
+        # Truncate lineage at the round boundary (the CC-loop /
         # beam-hop discipline): the codebook is ≤k rows BY
         # CONSTRUCTION, but left lazy it nests the previous round's
         # whole corpus aggregation inside this round's broadcast —
         # every downstream consumer (the next E-step, ivf_topk's two
         # probes, kmeans_lloyd's final join) re-materializes the
         # nested chain as its own sequence of broadcast-build jobs,
-        # and the depth made the trained-index queries the most
+        # and the depth makes the trained-index queries the most
         # unstable in the bench (ann_ivf_kmeans_topk spreads of
         # 8–27s). An eager localCheckpoint is a bounded ≤k-row
         # micro-materialization per round, paid on EVERY invocation
@@ -503,17 +503,17 @@ def pca_power(emb: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
     summary columns constant across rows via a broadcast 1-row
     cross join (the scalar-subquery pattern).
 
-    Scale shape (r11 fused form): the centered corpus is cached
+    Scale shape (fused form): the centered corpus is cached
     (iters+2 consumers); each round is one map-side broadcast of the
     64-float v and ONE whole-corpus aggregate whose 64 per-dim sums
     run as ordinary partial-aggregated columns (the shuffle carries
     one 64-column row per map partition, never the corpus, and never
-    the corpus×DIM posexplode stream the r10 form paid per round);
+    the corpus×DIM posexplode stream an exploded form pays per round);
     normalization then happens map-side on the single result row.
     The final pass fuses the Rayleigh Σ(dm²) sum and the 64 variance
-    sums into one aggregate — two corpus passes fewer than the r10
-    shape, and the per-dim frames the output joins over collapse to
-    1-row arrays (no 64-row join chain). Integer headroom: the linear
+    sums into one aggregate — two corpus passes fewer than separate
+    aggregates, and the per-dim frames the output joins over collapse
+    to 1-row arrays (no 64-row join chain). Integer headroom: the linear
     w-sums carry |w_j| ≤ N·10⁶·max|dot·x'| — exact to corpus sizes
     ~10¹² rows. The Rayleigh Σ(dm²) term squares the micro scale
     (~4·10¹² per row), so it accumulates in DECIMAL(38,0) (exact to
@@ -959,7 +959,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     # THREE consumers read the degree table (both orientation joins and
     # the final per-vertex join) and Catalyst re-derives uncached
     # subtrees per consumer — without the cache the union+aggregation
-    # over the edge frame ran three times per execution (r12). Bounded
+    # over the edge frame runs three times per execution. Bounded
     # at one thin row per vertex.
     deg = evicting_cache(
         und.select(F.col("a").alias("v"))
@@ -1058,8 +1058,8 @@ def label_propagation(
     from covid_engineering_spark.functions import evicting_cache
 
     fwd = edges.select("src_id", "n_id")
-    # (Pre-partitioning the cache on n_id was tried in r11 and does
-    # NOT remove the per-round join exchange: with
+    # (Pre-partitioning the cache on n_id does NOT remove the
+    # per-round join exchange: with
     # canChangeCachedPlanOutputPartitioning=true — load-bearing for
     # AQE-coalescing every cache build — EnsureRequirements cannot
     # trust a cached plan's output partitioning and re-shuffles
@@ -1077,11 +1077,11 @@ def label_propagation(
     labels = und.select(F.col("src_id").alias("node")).distinct().select(
         "node", F.col("node").alias("lab")
     )
-    # Winner fold (r11, guide §2.3/§2.4): the r10→batch-1 form counted
-    # votes with groupBy(node, nlab) and picked the winner with a
-    # second groupBy(node) — TWO exchanges per round on different
-    # keys. Votes per node are DEGREE-BOUNDED by construction (the
-    # kNN graph carries ≤2k neighbors after union-symmetrization), so
+    # Winner fold (guide §2.3/§2.4): counting votes with
+    # groupBy(node, nlab) and picking the winner with a second
+    # groupBy(node) costs TWO exchanges per round on different keys.
+    # Votes per node are DEGREE-BOUNDED by construction (the kNN graph
+    # carries ≤2k neighbors after union-symmetrization), so
     # collect the node's votes in ONE partial-aggregated groupBy(node)
     # and fold the sorted list: one ascending pass tracks the current
     # run (cv, cc) against the best committed run (bv, bc); a strictly
@@ -1293,7 +1293,7 @@ def _navigable_graph(emb: DataFrame, nq: int, with_payload: bool = False):
     edge row — the HNSW trade (adjacency stored with vectors): each
     beam hop then scores candidates FROM the adjacency scan itself
     instead of paying a second corpus join + broadcast build per hop.
-    A/B'd in r12 and NOT taken for the registered walk: the payload
+    A/B'd and NOT taken for the registered walk: the payload
     attach join at index-build time costs what the per-hop joins save
     (4.81s vs 4.96s at sf0.1), and the cached index grows by one
     vector per edge — k× the corpus's embedding bytes at any scale.
@@ -1406,7 +1406,7 @@ def graph_greedy_search(
     first bound: the broadcast state/candidate frames grow ∝
     queries × beam (× max_degree for candidates), so past ~10⁷
     query-rows per wave the move is batching query waves, not a
-    different plan. PROBE_r11 measures this axis.
+    different plan.
     """
     from covid_engineering_spark.functions import evicting_cache
 
@@ -1424,10 +1424,10 @@ def graph_greedy_search(
     def _score(ids):
         """Attach embeddings and the 6dp query cosine to a tiny
         (q_id, q_emb, id) frame: corpus equi-join, small side
-        broadcast. ``q_emb`` rides the candidate frame (r12) so each
-        hop pays ONE broadcast build instead of two — the r11 form
-        re-joined the query table per hop, and every broadcast build
-        is its own driver-blocking job."""
+        broadcast. ``q_emb`` rides the candidate frame so each hop
+        pays ONE broadcast build instead of two (re-joining the query
+        table per hop costs another), and every broadcast build is
+        its own driver-blocking job."""
         return (
             e.join(F.broadcast(ids), e["vec_id"] == ids["id"])
             .select(
@@ -1441,15 +1441,16 @@ def graph_greedy_search(
         )
 
     state = _score(q.join(F.broadcast(entry)))
-    # Beam selection per hop (r11): ONE groupBy(q_id) that collects
+    # Beam selection per hop: ONE groupBy(q_id) that collects
     # the merged candidate+incumbent rows into a set and keeps the
     # top-``beam`` map-side via array_sort — the (cs DESC, id ASC)
     # order rides a (cs, -id) struct sort (the `_assign` idiom), and
     # collect_set dedupes re-reached candidates exactly (a vertex's
     # (q_id, id) score is deterministic, so duplicate rows are
-    # byte-identical). The r10 form paid three exchanges per hop
-    # (candidate distinct, merged distinct, rank window); this pays
-    # one, and the per-group state stays ≤ beam·(max_degree+1) rows.
+    # byte-identical). Distinct + rank-window selection pays three
+    # exchanges per hop (candidate distinct, merged distinct, rank
+    # window); this pays one, and the per-group state stays
+    # ≤ beam·(max_degree+1) rows.
     def _top_beam(merged: DataFrame, n: int) -> DataFrame:
         return (
             merged.groupBy("q_id")
@@ -1489,16 +1490,16 @@ def graph_greedy_search(
             .filter(F.col("id") != F.col("q_id"))
         )
         state = _top_beam(_score(cand).unionByName(state), beam)
-        # Truncate lineage at the hop boundary (r11, guide §2.4/§3):
+        # Truncate lineage at the hop boundary (guide §2.4/§3):
         # ``state`` feeds the next hop TWICE (the frontier join and
         # the incumbent union), and Catalyst plans trees, not DAGs —
-        # unchecked, the walk's plan doubled per hop (measured: 264
+        # unchecked, the walk's plan doubles per hop (measured: 264
         # BroadcastExchange nodes, only 30 runtime-reused; 111
         # broadcast-materialization jobs per execution). The CC-loop
         # discipline applies verbatim: the state frame is ≤ |Q|·beam
         # rows BY CONSTRUCTION at any corpus scale, so the checkpoint
         # is a bounded micro-materialization that makes each hop's
-        # plan O(1) instead of O(2^hop). eager=False (r12): the plan
+        # plan O(1) instead of O(2^hop). eager=False: the plan
         # is truncated immediately either way, but materialization
         # folds into the next hop's first broadcast build instead of
         # running as its own driver-blocking job — and the nested
@@ -1821,10 +1822,10 @@ def pq_adc_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     an all-NULL LUT and rank noise.
     """
     emb = emb.filter(F.col("embedding").isNotNull())
-    # ONE seed draw for both consumers (r11, the bounded-frame
-    # checkpoint discipline): the encode path and the LUT each built
+    # ONE seed draw for both consumers (the bounded-frame checkpoint
+    # discipline): left lazy, the encode path and the LUT each build
     # their own copy of the md5-ranked seed subtree, so the corpus
-    # TakeOrdered ran twice per execution (once under each broadcast
+    # TakeOrdered runs twice per execution (once under each broadcast
     # build). The frame is ≤ PQ_K rows BY CONSTRUCTION — an eager
     # localCheckpoint is a bounded micro-materialization at any scale.
     seeds = _pq_seeds(emb).localCheckpoint(eager=True)
@@ -2813,8 +2814,8 @@ def rp_project(emb: DataFrame, emb_col: str = "embedding") -> DataFrame:
     coarse retrieval at 100 TB (4× fewer bytes per vector here;
     arbitrary ratios by picking RP_DIM).
     """
-    # One SQL expression string for all RP_DIM components (r11): the
-    # Column-API form built 16 × 64 literal Columns plus nested
+    # One SQL expression string for all RP_DIM components: the
+    # Column-API form builds 16 × 64 literal Columns plus nested
     # lambdas — ~7000 py4j round-trips per invocation, the single
     # largest plan-CONSTRUCTION cost in the bench (measured 1.7s of
     # emb_rp_recall's build). The SQL tree below is node-for-node the

@@ -8,7 +8,7 @@ whole-stage-codegen and scale with the scan. Each heuristic is
 deterministic and mirrored expression-for-expression in its DuckDB
 oracle.
 
-NULL ``text`` semantics (round 9 — a real 100 TB corpus contains
+NULL ``text`` semantics (a real 100 TB corpus contains
 payload-less rows even though ingest's p4_null_drop discipline removes
 most): per-document METRIC columns (token counts, ratios,
 fingerprints, normalized forms) propagate NULL; GATE/keep verdicts

@@ -382,8 +382,8 @@ ANOMALY_Z = 3
 #: (exact on doubles), so Spark and any SQL oracle engine are
 #: bit-identical by construction — unlike ``round(v*100)``, whose
 #: half-way tie-breaking differs between Spark (HALF_UP on a decimal
-#: rendering) and DuckDB (C-library rounding on the binary value) and
-#: produced the one r03 driver hash mismatch on a half-cent boundary.
+#: rendering) and DuckDB (C-library rounding on the binary value), so
+#: a half-cent boundary value hashes differently in the two engines.
 #: Semantics: round-half-toward-+inf; values are non-negative in the
 #: feed, where this coincides with round-half-away-from-zero.
 CENTS_SQL = "CAST(floor(value * 100 + 0.5) AS BIGINT)"

@@ -54,13 +54,13 @@ def with_interpolated(
     evaluates them in a single sort+window pass per value column, all
     partitions in parallel.
 
-    Expressions ride ONE SQL string per output column (r12): the
-    Column-API chain cost ~15 py4j round-trips per window expression
-    per value column, and the driver's plan-assembly time was a
-    measurable slice of the query (guide §1.2 step 2 — the "task"
-    here is the driver's build). The parsed trees are identical to
-    the former Column chain (same window specs, same coalesce/CASE
-    structure, double literals cast explicitly), pinned by the golden
+    Expressions ride ONE SQL string per output column: a Column-API
+    chain costs ~15 py4j round-trips per window expression per value
+    column, and the driver's plan-assembly time is a measurable slice
+    of the query (guide §1.2 step 2 — the "task" here is the driver's
+    build). The parsed trees are identical to the Column-API chain
+    (same window specs, same coalesce/CASE structure, double literals
+    cast explicitly), pinned by the golden
     reference tests.
     """
     over = "PARTITION BY {} ORDER BY {}".format(
@@ -127,7 +127,7 @@ _PARTS = ("active", "deaths", "recovered")
 def _missing_sql(*cols: str) -> str:
     """SQL form of :func:`missing_count` (row-wise null count) — the
     same expression tree, assembled as one string so the fill stages
-    below cost one py4j round-trip each instead of dozens (r12)."""
+    below cost one py4j round-trip each instead of dozens."""
     return "(0 + " + " + ".join(
         f"CASE WHEN {c} IS NULL THEN 1 ELSE 0 END" for c in cols
     ) + ")"
@@ -212,8 +212,8 @@ def clean_complete(
     )
 
     # 3: per-country first valid date (min date having any non-null).
-    # (SQL-string expressions since r12 — same trees, one parse each;
-    # see with_interpolated's docstring.)
+    # (SQL-string expressions — same trees, one parse each; see
+    # with_interpolated's docstring.)
     df = df.withColumn(
         "_first_valid",
         F.expr(

@@ -4,17 +4,17 @@ DataFrame` callable and its DuckDB oracle SQL into the dicts that
 
 Modules register themselves via ``QUERIES`` / ``ORACLES`` dicts; a
 query without an oracle entry would get the driver's weaker rows-only
-check — since round 3 there are NONE: every registered query carries a
+check — there are NONE: every registered query carries a
 SQL twin (the last holdout, the IVF ANN index, switched its registered
 codebook to a deterministic SQL-replayable form; the MLlib-KMeans
 codebook stays available as a lib function).
 
 Registration ORDER is part of the driver contract: the driver hashes
 exactly the first 50 registry entries, so ``PRIORITY`` pins the
-verification window explicitly. Each round the window rotates: entries
-without a driver CORRECTNESS row yet go first, then the stalest
-``last checked`` rows in LEDGER.md. Everything after slot 50 holds a
-green driver row from an earlier round (see LEDGER.md, regenerated
+verification window explicitly. The window rotates between driver
+runs: entries without a driver CORRECTNESS row yet go first, then the
+stalest ``last checked`` rows in LEDGER.md. Everything after slot 50
+holds a green driver row from an earlier run (see LEDGER.md, regenerated
 from the CORRECTNESS_r*.json artifacts) or sits in the explicit
 ``WINDOW_OVERFLOW`` queue, and keeps its local DuckDB-differential
 coverage either way (tests/test_oracle.py).
@@ -65,49 +65,18 @@ _MODULES = [
 #:   2. entries whose code or registered output changed after their
 #:      last green row re-enter (tests/test_registry_order.py
 #:      CHANGED_SINCE_LAST_GREEN);
-#:   3. operators born this round claim slots as they land;
+#:   3. newly added operators claim slots as they land;
 #:   4. remaining slots re-verify the STALEST `last checked` rows in
 #:      LEDGER.md.
 #:
-#: r12 window: the r11 driver run greened all 50 window entries (50/50
-#: — LEDGER.md), so the window splits between policies 1, 2 and 4.
-#:
-#: Policy 1 (never green, 9 entries): the nine round-11 births that
-#: spent r11 in WINDOW_OVERFLOW take the first nine slots — including
-#: the two semantics-sensitive r11 rewrites VERDICT r11 #3 requires
-#: driver-confirmed (graph_label_propagation's winner fold,
-#: ann_rerank_topk's shared PQ seed draw).
-#:
-#: Policy 2 (changed since last green, 12 entries): the r12
-#: optimization batches restructure the internals of the
-#: connected-components loop (self-loop edges, fused round-0, lazy
-#: checkpoints, sum convergence: pipe_curate_corpus, dedup_clusters),
-#: the beam walk (q_emb-carrying state: ann_graph_greedy), the salted
-#: self-join base cache (emb_knn_graph, emb_semdedup,
-#: graph_triangle_count — which also caches its degree table), the
-#: MinHash size-carry verification (dedup_minhash_lsh), the Bloom
-#: eval-set cache (pipe_bloom_decontaminate), fan-out call sites
-#: (pipe_near_dup_incremental_lsh), the q21 two-level distinct
-#: aggregation, and the wrangling SQL-string expression assembly
-#: (wrangle_clean_complete, w6_interpolate). Outputs oracle-proven
-#: unchanged at sf0.01 + sf0.1; re-verify anyway. (The salted-base
-#: cache was A/B'd and REVERTED — see skew.py — so emb_knn_graph and
-#: emb_semdedup ended the round byte-identical to their r11-greened
-#: code and their slots go to stale rows instead.) Siblings left out
-#: with an in-window representative on the identical changed path:
-#: pipe_keep_best (sibling pipe_curate_corpus/dedup_clusters — same
-#: CC + retention path), graph_pagerank/graph_kcore (sibling
-#: graph_triangle_count — same kNN-graph build), x1_sird_sim
-#: (wrangling expression strings are covered by the two wrangling
-#: entries).
-#:
-#: Policy 4 (stalest rows): 31 of the 32 remaining r07-tier rows.
-#: DISPLACED to r13 (1, with in-window siblings on the same code
-#: path, unchanged since its r07 green row): p4_null_drop (siblings
-#: p2_filter_eq + p5_masked_assign — the same projection/filter/null
-#: family).
+#: Entries left out with an in-window sibling on the identical code
+#: path: pipe_keep_best (pipe_curate_corpus/dedup_clusters — same CC +
+#: retention path), graph_pagerank/graph_kcore (graph_triangle_count —
+#: same kNN-graph build), x1_sird_sim (the two wrangling entries cover
+#: the SQL-string expression assembly), p4_null_drop (p2_filter_eq +
+#: p5_masked_assign — the same projection/filter/null family).
 PRIORITY = [
-    # 1: never green — the nine r11 overflow-pinned births.
+    # 1: never green.
     "text_js_divergence",
     "ts_decompose",
     "pipe_quality_classifier",
@@ -117,7 +86,7 @@ PRIORITY = [
     "emb_outliers",
     "a27_quantile_sketch",
     "a28_quantile_hist",
-    # 2: changed after their last green rows (r12 optimization work).
+    # 2: changed after their last green rows.
     "pipe_curate_corpus",
     "dedup_clusters",
     "ann_graph_greedy",
@@ -128,7 +97,7 @@ PRIORITY = [
     "q21_suppliers_waiting",
     "wrangle_clean_complete",
     "w6_interpolate",
-    # 4: the r07 tier — last checked round 7, unchanged (31 of 32).
+    # 4: the stalest `last checked` rows, unchanged since.
     "a25_quantile_cuts",
     "a2_groupby_sum",
     "a3_groupby_avg",
@@ -164,9 +133,7 @@ PRIORITY = [
 
 #: The overflow queue: pinned to the FRONT of the post-window tail
 #: (slots 51+, asserted in tests/test_registry_order.py) and FIRST in
-#: line for the next window. All nine r11 births drained into this
-#: round's policy-1 slots at r12 start; r12 is an optimization round
-#: with no new operators, so the queue is empty.
+#: line for the next window.
 WINDOW_OVERFLOW: list[str] = []
 
 

@@ -23,7 +23,7 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # AQE coalescing floor (r12). With parallelismFirst (default true)
+    # AQE coalescing floor. With parallelismFirst (default true)
     # AQE targets max(stage bytes / defaultParallelism,
     # minPartitionSize); the stock 1 MB floor collapses any post-
     # shuffle stage under ~2 MB to 1-2 tasks. For relational stages
@@ -31,17 +31,14 @@ _DEFAULTS: dict[str, str] = {
     # (shingle self-joins, md5 signature builds, per-token metrics
     # downstream of an exchange) then run serially while every other
     # core idles, at ANY scale where a stage's bytes are small but its
-    # CPU is not (measured r12: the whole minhash pipeline ran 1 task
-    # per stage at bench SF). 64 KB keeps bytes-based coalescing for
-    # real data (a stage only fragments once its total bytes are
-    # already tiny) and never raises task counts above
-    # defaultParallelism (the parallelismFirst target). Env-overridable
-    # for A/B and for deployments that prefer the stock floor.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"
-    ),
+    # CPU is not (measured: the whole minhash pipeline ran 1 task per
+    # stage at bench SF on the stock floor). 64 KB keeps bytes-based
+    # coalescing for real data (a stage only fragments once its total
+    # bytes are already tiny) and never raises task counts above
+    # defaultParallelism (the parallelismFirst target).
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     # NOTE on coalescePartitions.parallelismFirst: deliberately LEFT at
-    # its default (true). Measured here (r11 bisect): false collapses
+    # its default (true). Measured by bisection: false collapses
     # compute-dense, small-byte stages (bloom md5 shingles, substring
     # token filters) to 1 task — a wall-clock loss that the advisory-
     # size savings don't repay at any SF where compute >> shuffle bytes.
@@ -109,13 +106,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 in the test
-    container); on a real cluster pass ``None`` and submit with
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to one
+    thread per CPU this process may run on when that is unset; on a
+    real cluster set ``SPARK_MASTER`` and submit with
     ``--master yarn``/``k8s`` so the builder inherits it.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(
+            os.sched_getaffinity(0)
+        )
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)

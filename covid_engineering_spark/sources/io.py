@@ -153,15 +153,14 @@ def read_table(
     Only for operators whose results are partition-independent (the
     oracle sweep re-proves each). Catalyst pushes filters and column
     pruning through Repartition, so PushedFilters/ReadSchema at the
-    scan are unchanged. ``SPARK_GRAFT_FANOUT=0`` disables globally
-    (A/B harness).
+    scan are unchanged.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         df = _read_events(spark, path)
     else:
         df = spark.read.schema(schemas.STAR[name]).parquet(path)
-    if fan and os.environ.get("SPARK_GRAFT_FANOUT", "1") != "0":
+    if fan:
         from covid_engineering_spark.functions.partitioning import fan_out
 
         df = fan_out(df)

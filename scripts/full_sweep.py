@@ -3,13 +3,15 @@
 DuckDB oracle at an arbitrary scale directory — the driver's contract,
 but over the whole registry and at scales the driver never checks.
 
-    python scripts/full_sweep.py [sf_dir]     # default /root/testdata/sf0.1
+    python scripts/full_sweep.py [sf_dir [query ...]]
 
-Exit code 1 on any mismatch. Worth running at sf0.1 once per round:
-the larger scale exercises thresholds, sketch collisions, and rounding
-magnitudes the small SFs never reach — the sf0.1 sweep caught a real
-one-ulp ROUND divergence in the SIRD MSE (values ~1e11, where DuckDB's
-scale-by-10^k round leaves exact-integer double range).
+``sf_dir`` defaults to /root/testdata/sf0.1; naming queries restricts
+the sweep to them. Exit code 1 on any mismatch. Worth running at sf0.1
+after engine changes: the larger scale exercises thresholds, sketch
+collisions, and rounding magnitudes the small SFs never reach — the
+sf0.1 sweep caught a real one-ulp ROUND divergence in the SIRD MSE
+(values ~1e11, where DuckDB's scale-by-10^k round leaves exact-integer
+double range).
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ sys.path.insert(0, ".")
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    only = set(sys.argv[2:])
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.master("local[16]").getOrCreate()
@@ -31,6 +34,13 @@ def main() -> int:
     from tests.oracle_check import compare, duck_con
 
     queries, oracle_sql = entry.queries(), entry.oracle_sql()
+    unknown = only - set(queries)
+    if unknown:
+        print("unknown queries:", sorted(unknown))
+        return 2
+    if only:
+        queries = {k: v for k, v in queries.items() if k in only}
+        oracle_sql = {k: v for k, v in oracle_sql.items() if k in only}
     con = duck_con(sf_dir)
     bad: list[tuple[str, object]] = []
     t0 = time.time()

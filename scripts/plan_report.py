@@ -43,147 +43,10 @@ def main() -> None:
     with open("PLANS.md", "w") as f:
         f.write(
             "# Physical-plan audit (generated by scripts/plan_report.py)\n\n"
-            f"Every registered query at sf0.001, post-AQE. Columns: pushed\n"
+            "Every registered query at sf0.001, post-AQE. Columns: pushed\n"
             "filter groups at the scan, broadcast-hash joins, sort-merge\n"
             "joins, exchanges (shuffles), whole-stage-codegen spans in the\n"
             "final executed plan, cartesian products (must stay empty).\n\n"
-            "Bench-drift audit (r07, VERDICT r06 item 5): the r04->r06\n"
-            "slowdown on the common bench subset (1.15x, reproduced 1.25x\n"
-            "on a QUIET r07 box) was checked against this audit — every\n"
-            "pre-r07 query's plan-counts row, including the four movers\n"
-            "(w1_cumsum, w6_interpolate, pipe_curate_corpus,\n"
-            "dedup_minhash_lsh), is IDENTICAL to the committed r06 table,\n"
-            "so the drift is environmental (the whole timing distribution\n"
-            "shifted uniformly, queries untouched since r01 included),\n"
-            "not a plan change. Versus the r01 baseline the common subset\n"
-            "is 1.08x — inside the 2x bar with headroom. rfm_segments is\n"
-            "the one intentional plan change this round (global_ntile:\n"
-            "range-exchange + pid-window + broadcast offsets behind a lazy\n"
-            "branch-point localCheckpoint, which truncates what this audit\n"
-            "sees to the final 3-exchange stage).\n\n"
-            "dedup_minhash_lsh creep audit (r09, VERDICT r08 item 4): the\n"
-            "monotone bench drift 1.126s (r01) -> 1.153 (r04) -> 1.425\n"
-            "(r06) -> 1.700 (r07) -> 1.564 (r08) on code untouched since\n"
-            "r03 is ENVIRONMENTAL, pinned with measurements: on a quiet\n"
-            "r09 box (loadavg ~0.7 at start), the bench protocol (noop\n"
-            "sink, warmup + timed runs, local[32]) gives\n"
-            "[1.598, 1.331, 1.252, 1.227, 1.126]s — converging to the r01\n"
-            "floor exactly — while the r08 artifact's 1.564 was recorded\n"
-            "at loadavg_before 3.81 (visible in BENCH_r08.json since the\n"
-            "r08 loadavg stamp landed). Stage breakdown of one run: ~85%\n"
-            "of executor time is the single map-side sketch stage (md5\n"
-            "signatures + band hashes; 32 parallel tasks, ~0.17s each, no\n"
-            "skew), shuffle write a constant 372 KB; nothing data-sized\n"
-            "moved. No fix needed; the sketch-stage CPU is the documented\n"
-            "md5-portability cost (production swap: xxhash64, portable=\n"
-            "False).\n\n"
-            "Whole-distribution drift audit (r10): the machine this round\n"
-            "sits ~1.2-1.5x slower per-query than the r09 boot across\n"
-            "REPEATED quiet-box bench runs (carried-query sums 39.5 /\n"
-            "45.4 / 58.1s across three runs vs 32.9 at r09, with the\n"
-            "mover SET different each run — ts_funnel_steps 6.2x in one\n"
-            "run and inside noise the next), while every carried query's\n"
-            "plan-counts row in this table is byte-identical to the\n"
-            "committed r09 table (checked via git diff at close: the only\n"
-            "changed rows are the round-10 births). Same verdict as the\n"
-            "r07 audit: environmental, not a plan change; vs the r01\n"
-            "baseline the 17-query common subset is 1.45x — inside the 2x\n"
-            "bar. BENCH_LOCAL.json carries per-query min/max spread and\n"
-            "the loadavg stamp so the run-to-run variance is auditable\n"
-            "from the artifact.\n\n"
-            "Re-adjudication on the r11 box (VERDICT r10 #2): two full\n"
-            "bench runs this round — one with concurrent pytest load\n"
-            "(90.5s total, carried-vs-r09 1.08x) and one quiet (69.45s\n"
-            "total, carried-vs-r09 1.23x). The quiet run reproduces the\n"
-            "r10 driver artifact almost exactly (all-55 sum 69.46 vs\n"
-            "70.32 = 0.988x), the two runs' worst-mover sets are DISJOINT\n"
-            "(q6_forecast_revenue/a12_cube/dedup_exact quiet vs\n"
-            "text_perplexity/ts_holt/a25 loaded), and a 5x repeated\n"
-            "measure of r10's three named movers in one fresh session\n"
-            "spans +-40% (text_perplexity 1.44-2.42s) with code and plan\n"
-            "rows untouched since their greens. Conclusion upheld: the\n"
-            "r09 numbers came from a faster boot; r10/r11 boxes agree\n"
-            "with each other, every carried plan is byte-identical, and\n"
-            "the common-subset-vs-r01 ratio stays inside the 2x bar. No\n"
-            "per-stage chase is warranted when the mover identity does\n"
-            "not survive a re-run.\n\n"
-            "r11 deep probes (PROBE_r11_x1000.json /\n"
-            "PROBE_r11_queryaxis.json):\n\n"
-            "- ExactSubstr strip at 1000x (VERDICT r10 #4): exact-string\n"
-            "  0.805, hashed xxhash64 grams 0.778 — the hashed production\n"
-            "  default tracks BELOW the exact form at depth (707.9s vs\n"
-            "  253.7s wall at 1000x, a 2.8x lever), matching the analysis\n"
-            "  pair's relation (0.806/0.755).\n"
-            "- Standing near-dup index at 1000x (VERDICT r10 #3):\n"
-            "  prebuilt-index probe exponent 0.659 vs the recompute path's\n"
-            "  0.792 (387s -> 146s, 2.6x). The remaining growth is the\n"
-            "  INDEX SCAN itself: the persisted band-bucket table is\n"
-            "  corpus-sized and the per-batch probe is a join, which\n"
-            "  parquet cannot prune without a partition/DPP key (the\n"
-            "  bucket hash is too high-cardinality to partition by). The\n"
-            "  storage-side lever is probe_near_dup_index: collect the\n"
-            "  batch's bucket keys and candidate ids (both batch-bounded)\n"
-            "  and push them as literal In filters into the clustered\n"
-            "  scans — In(doc_id)/In(band) reach parquet PushedFilters\n"
-            "  (measured; the string bh set stays a scan-operator INSET\n"
-            "  DataFilter). The registered op stays twin-replayable;\n"
-            "  the pushdown path is library + probe surface.\n"
-            "- ann_graph_greedy query axis (VERDICT r10 #5): serving walk\n"
-            "  wall time is FLAT from 8 -> 80 -> 800 queries (19.5 / 17.9\n"
-            "  / 19.0s; exponents -0.04 / -0.01) — per-hop cost is the\n"
-            "  corpus/edge join, and the |Q|x(beam x max_degree) state\n"
-            "  frames ride broadcasts whose size is still noise at 800\n"
-            "  queries. First real bound: broadcast state ~ queries x\n"
-            "  beam x degree rows (~10^7 query-rows per wave before\n"
-            "  executor memory pressure) — past that, batch the query set\n"
-            "  into waves; the plan is unchanged.\n"
-            "- Fixed-batch index probes (PROBE_r11_fixedbatch.json — the\n"
-            "  production axis: batch CONSTANT, corpus x1000): the plain\n"
-            "  standing-index probe grows 3.28s -> 21.37s (exponent\n"
-            "  0.271 — the index-scan term isolated), while the\n"
-            "  In-pushdown probe is FLAT (26.7s -> 11.6s, trend ~0): the\n"
-            "  corpus-growth term is gone, replaced by a roughly constant\n"
-            "  key-collect + large-In-list plan-compile overhead that\n"
-            "  dominates at small corpora (crossover around x100). The\n"
-            "  regime split is explicit: small corpus -> plain probe;\n"
-            "  100 TB corpus + bounded batch -> pushdown probe, 1.8x at\n"
-            "  x1000 and widening with corpus size.\n\n"
-            "- Events-tier depth (PROBE_r11_events_x1000.json, ~600M-row\n"
-            "  blowup): ts_decompose 0.173 at 1000x (2.9 -> 9.6s — everything\n"
-            "  after the resample agg is bucket-bounded); a27_quantile_sketch\n"
-            "  0.633 (2.7 -> 214s) — the per-(type, shard) rank sort over the\n"
-            "  full corpus is the dominant term, exactly the local-sort tier the\n"
-            "  design names. The levers at deeper scale: raise QS_SHARDS (each\n"
-            "  shard sorts n/shards — the parallelism axis a salted sort rides)\n"
-            "  and/or collapse tied cents into a weighted value histogram before\n"
-            "  ranking (the bounded-value-domain shortcut); the summary merge and\n"
-            "  verification stay bounded either way. The histogram lever is now\n"
-            "  BUILT and measured: a28_quantile_hist answers the same percentiles\n"
-            "  EXACTLY at 0.156 (1.4 -> 4.2s over the same ~600M rows) - one\n"
-            "  partial-agg collapse instead of the corpus sort; a27 remains the\n"
-            "  general-domain form for unbounded values.\n"
-            "\n"
-            "- Documents/embeddings-tier depth (PROBE_r11_docs_x1000.json,\n"
-            "  5M docs / 2M vectors): text_js_divergence 0.134 (the one corpus\n"
-            "  pass is the (source, token) partial agg), pipe_curriculum_order\n"
-            "  0.202 (two range repartitions, no single-task sort),\n"
-            "  emb_outliers 0.362 (two broadcast map-side passes over the\n"
-            "  vector scan), pipe_quality_classifier 0.531 (one md5 per token\n"
-            "  over ~300M tokens in 26s — the scan IS the cost; swap the\n"
-            "  portable md5 for xxhash64 in production exactly as the sketch\n"
-            "  tier documents). Every round-11 birth now carries a measured\n"
-            "  depth row: nothing super-linear anywhere in the batch.\n"
-            "\n"
-            "r11 close: three quiet full-headline runs (63 queries after\n"
-            "the round-11 births) land at 95.2 / 111.6 / 95.4s with carried-55\n"
-            "ratios vs BENCH_r10 of 1.236 / 1.469 / 1.228 and a DIFFERENT worst-\n"
-            "mover set each run (q1/q3 in the first, ann_graph_greedy 23.1s in the\n"
-            "second but 8.6s/11.9s in the others, dedup_minhash_lsh in the third)\n"
-            "— the same mover-identity-does-not-survive-a-re-run signature the\n"
-            "r10/r11 adjudications pinned. BENCH_LOCAL.json carries the last run\n"
-            "with per-query spread. The eight round-11 births together add ~8.3s\n"
-            "to the headline (largest ann_rerank_topk ~2.4s).\n"
-            "\n"
             "| query | pushed | bhj | smj | shuffles | codegen | cartesian |\n"
             "|---|---|---|---|---|---|---|\n"
         )

@@ -104,6 +104,41 @@ def test_caching_reset_unpersists_and_forgets(spark):
     reset()
 
 
+def test_caching_reset_survives_a_concurrent_eviction():
+    # reset() blocks in unpersist while another client's evicting_cache
+    # can pop a different key: each fake frame's unpersist evicts the
+    # other's key, so a reset that snapshots the keys hits a KeyError.
+    from covid_engineering_spark.functions.caching import _LAST, reset
+
+    class _Frame:
+        def __init__(self, other):
+            self.other, self.unpersisted = other, False
+
+        def unpersist(self, blocking=False):
+            self.unpersisted = True
+            _LAST.pop(self.other, None)
+
+    a, b = _Frame("k_race_b"), _Frame("k_race_a")
+    _LAST.update(k_race_a=a, k_race_b=b)
+    reset()
+    assert not _LAST
+    # reset unpersisted one; the concurrent evictor owns the other
+    assert a.unpersisted != b.unpersisted
+
+
+def test_read_table_fan_out(spark):
+    # A tiny single-row-group file scans as fewer splits than cores;
+    # fan=True spreads it to the default parallelism, fan=False keeps
+    # the scan's own layout.
+    want = spark.sparkContext.defaultParallelism
+    raw = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    plain = read_table(spark, SF_SMOKE, "documents")
+    fanned = read_table(spark, SF_SMOKE, "documents", fan=True)
+    assert plain.rdd.getNumPartitions() == raw.rdd.getNumPartitions() < want
+    assert fanned.rdd.getNumPartitions() == want
+    assert fanned.count() == plain.count()
+
+
 def test_evicting_cache_storage_level_override(spark):
     # The O(corpus) gram cache persists SERIALIZED with disk spill
     # (MEMORY_AND_DISK) instead of the default deserialized level.
