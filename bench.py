@@ -289,7 +289,7 @@ def main() -> None:
         from covid_engineering_spark.sources import read_table
 
         st = lsh_bucket_stats(
-            read_table(spark, sf_dir, "documents"), portable=True
+            read_table(spark, sf_dir, "documents")
         ).head()
         preflight = {
             "n_buckets": st["n_buckets"],

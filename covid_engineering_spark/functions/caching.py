@@ -8,13 +8,20 @@ bench's warmup + timed runs, a notebook, the driver loop) must not
 accumulate one cached copy per invocation. ``evicting_cache`` keeps
 exactly ONE live cached frame per key: each call unpersists the
 previous holder before caching the new one.
+
+Every client of a session shares ``_LAST``; ``_LOCK`` makes each
+check-and-replace atomic, so two first callers for one key cannot both
+cache a frame and orphan one of them.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 _LAST: dict[str, DataFrame] = {}
+_LOCK = threading.Lock()
 
 
 def reset() -> None:
@@ -32,13 +39,14 @@ def reset() -> None:
     ``blocking=True`` so the eviction completes before the timed
     region starts instead of overlapping it.
     """
-    # Atomic popitem, not a snapshot of the keys: another client's
-    # evicting_cache may pop a key while unpersist blocks.
+    # One entry at a time, popped under the lock and unpersisted outside
+    # it: another client's evicting_cache may pop a key while unpersist
+    # blocks.
     while True:
-        try:
+        with _LOCK:
+            if not _LAST:
+                break
             _, df = _LAST.popitem()
-        except KeyError:  # empty
-            break
         try:
             df.unpersist(blocking=True)
         except Exception:
@@ -64,33 +72,36 @@ def evicting_cache(
     (serialized) halves the memory footprint vs the default
     deserialized cache and spills the remainder to disk — the
     shuffle-file treatment, routine at scale. Keys should include the
-    variant parameters (hash family, gram length) so distinct variants
+    variant parameters (e.g. gram length) so distinct variants
     hold distinct slots instead of thrashing one.
     """
-    prev = _LAST.get(key)
+    with _LOCK:
+        prev = _LAST.get(key)
+        if prev is not None:
+            try:
+                # Same LIVE session only: a stopped-and-replaced
+                # session's frame can still answer sameResult/
+                # storageLevel from memoized state, then blow up at
+                # first action — so the reuse path requires session
+                # identity, not just plan equality.
+                same = (
+                    df.sparkSession is prev.sparkSession
+                    and not df.sparkSession._sc._jsc.sc().isStopped()
+                    and df._jdf.queryExecution()
+                    .analyzed()
+                    .sameResult(prev._jdf.queryExecution().analyzed())
+                )
+            except Exception:
+                same = False  # old frame's session may already be stopped
+            if same and prev.storageLevel.useMemory:
+                return prev
+        out = (
+            df.cache() if storage_level is None else df.persist(storage_level)
+        )
+        _LAST[key] = out
     if prev is not None:
-        try:
-            # Same LIVE session only: a stopped-and-replaced session's
-            # frame can still answer sameResult/storageLevel from
-            # memoized state, then blow up at first action — so the
-            # reuse path requires session identity, not just plan
-            # equality.
-            same = (
-                df.sparkSession is prev.sparkSession
-                and not df.sparkSession._sc._jsc.sc().isStopped()
-                and df._jdf.queryExecution()
-                .analyzed()
-                .sameResult(prev._jdf.queryExecution().analyzed())
-            )
-        except Exception:
-            same = False  # old frame's session may already be stopped
-        if same and prev.storageLevel.useMemory:
-            return prev
-        _LAST.pop(key, None)
         try:
             prev.unpersist()
         except Exception:
             pass
-    out = df.cache() if storage_level is None else df.persist(storage_level)
-    _LAST[key] = out
     return out

@@ -137,7 +137,6 @@ def country_fractions(
     )
 
 
-TRANSFER_SCHEMA = "t int, date date, s double, i double, r double, d double"
 PAIRS_SCHEMA = (
     "param_country string, sim_country string, "
     "t int, date date, s double, i double, r double, d double"
@@ -154,8 +153,8 @@ def transfer_simulation_pairs(
     job: ``pairs`` is a (param_country, sim_country) frame — up to the
     full countries×countries cross — and each pair becomes one group
     of a single grouped-map kernel, so a 1000-executor cluster
-    integrates every pair concurrently. Semantics per pair are
-    identical to :func:`transfer_simulation` (verified in tests).
+    integrates every pair concurrently. Per-pair semantics are
+    documented on :func:`transfer_simulation`.
 
     Shape: per-country params are estimated once (one window pass),
     joined to the pairs dimension on the param side; actual series
@@ -257,82 +256,19 @@ def transfer_simulation(
     position from the START of the param series (``iloc[t]``,
     main.py:670-672), not date-aligned; N = sim country's population.
 
-    Executed as ONE grouped-map kernel over the union of the tagged
-    param and actual series — the sequential-in-time Euler loop runs
-    executor-side; nothing is collected to the driver (the sim
-    population rides along as a broadcast-joined column instead of an
-    eager scalar lookup, so building the query plans no job). With
-    many (param, sim) pairs the same kernel parallelizes per pair key.
-
+    Runs :func:`transfer_simulation_pairs` on the one (param, sim)
+    pair, so the sequential-in-time Euler loop runs executor-side in
+    one grouped-map kernel and nothing is collected to the driver.
     A missing or empty country on either side yields an EMPTY result
-    frame (mirroring transfer_simulation_pairs' guard) rather than an
-    executor-side IndexError.
+    frame rather than an executor-side IndexError.
     """
-    import pandas as pd
-
-    from covid_engineering_spark.operators.simulation import euler_sird
-
-    # Partitioned by country even though one country is selected: the
-    # generalized path must not plan a single-partition exchange
-    # (tests/test_plans.py); with the equality filter the partition
-    # key is constant and the plan stays hash-partitioned.
-    w = Window.partitionBy("country_region").orderBy("date")
-    params = (
-        estimate_params(
-            cleaned.filter(F.col("country_region") == param_country), population, gamma
-        )
-        .select(
-            (F.row_number().over(w) - 1).alias("t"),
-            "alpha_t",
-            "beta_t",
-            "mu_t",
-        )
-        .withColumn("kind", F.lit("param"))
+    pairs = cleaned.sparkSession.createDataFrame(
+        [(param_country, sim_country)],
+        "param_country string, sim_country string",
     )
-    actual = (
-        cleaned.filter(F.col("country_region") == sim_country)
-        .select("date", "active", "recovered", "deaths")
-        .join(
-            F.broadcast(
-                population.filter(F.col("country_region") == sim_country).select(
-                    F.col("population").alias("n_pop")
-                )
-            )
-        )
-        .withColumn("kind", F.lit("actual"))
-    )
-    tagged = params.unionByName(actual, allowMissingColumns=True)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = pdf[pdf["kind"] == "param"].sort_values("t")
-        a = pdf[pdf["kind"] == "actual"].sort_values("date").reset_index(drop=True)
-        if not len(a) or not len(p):
-            return pd.DataFrame(columns=["t", "date", "s", "i", "r", "d"])
-        n_pop = float(a["n_pop"].iloc[0])
-        n_steps = int(min(len(p), len(a) - 1))
-        a = a.iloc[-(n_steps + 1) :].reset_index(drop=True)
-        init = a.iloc[0]
-        rows = euler_sird(
-            float(init["active"]),
-            float(init["recovered"]),
-            float(init["deaths"]),
-            n_pop,
-            n_steps,
-            list(p["alpha_t"].iloc[:n_steps]),
-            list(p["beta_t"].iloc[:n_steps]),
-            list(p["mu_t"].iloc[:n_steps]),
-            gamma,
-        )
-        return pd.DataFrame(
-            [(t, a["date"].iloc[t], s, i, r, d) for (t, s, i, r, d) in rows],
-            columns=["t", "date", "s", "i", "r", "d"],
-        )
-
-    return (
-        tagged.withColumn("_pair", F.lit(1))
-        .groupBy("_pair")
-        .applyInPandas(kernel, TRANSFER_SCHEMA)
-    )
+    return transfer_simulation_pairs(
+        cleaned, population, pairs, gamma
+    ).select("t", "date", "s", "i", "r", "d")
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ Scale design notes (the point of each implementation):
   rows and the job dies at scale. The unguarded form (max_df=None)
   remains available as the verification oracle for the sketch paths.
 * MinHash+LSH: the linear-ish scale path — constant-size signature per
-  doc (k seeded xxhash64 mins), banded into buckets; only same-bucket
+  doc (k md5-derived mins), banded into buckets; only same-bucket
   pairs are candidates, then exact Jaccard verifies. Tune (k, bands)
   for the recall/cost point; here k=16, 4 bands of 4 rows. Bucket
   membership is CAPPED (``SKETCH_BUCKET_CAP``): a mega-cluster of
@@ -246,9 +246,8 @@ def portable_hash64(col, seed: int):
     15 hex chars = 60 bits, always non-negative, fits signed int64 in
     both engines (verified byte-identical incl. unicode inputs).
     ~3-4x the cost of xxhash64 per call but still whole-stage codegen;
-    used by the REGISTERED sketch queries so the driver can hash-check
-    the full MinHash/SimHash paths against a generated SQL twin. The
-    xxhash64 family remains the default production path.
+    the MinHash/SimHash/LSH sketches hash with it so the driver can
+    hash-check their full paths against a generated SQL twin.
     """
     return (
         F.conv(
@@ -266,15 +265,12 @@ MINHASH_K = 16
 MINHASH_BANDS = 4
 
 
-def _minhash_signatures(
-    sh: DataFrame, k: int = MINHASH_K, portable: bool = False
-) -> DataFrame:
+def _minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """k seeded min-hash aggregates -> one constant-size signature row
-    per doc, in a single partial+final aggregation pass. Hash family:
-    seeded xxhash64 (fast, engine-specific) or the md5-derived portable
-    family (oracle-reproducible), same plan shape either way.
+    per doc, in a single partial+final aggregation pass, over the
+    md5-derived (oracle-reproducible) hash family.
 
-    The portable family uses Kirsch-Mitzenmacher double hashing:
+    The family uses Kirsch-Mitzenmacher double hashing:
     ONE md5 per shingle split into two 56-bit halves (h1, h2), then
     g_i = h1 + i*h2 — k independent-enough min-hash functions for the
     cost of a single digest (k md5 calls per shingle benched 3x slower
@@ -288,25 +284,17 @@ def _minhash_signatures(
     separate aggregation would re-scan the whole shingle frame once
     more per execution.
     """
-    if portable:
-        md = F.md5(F.col("s"))
-        hashed = sh.select(
-            "doc_id",
-            F.conv(F.substring(md, 1, 14), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(md, 15, 14), 16, 10).cast("long").alias("h2"),
-        )
-        aggs = [
-            F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"m{i}")
-            for i in range(k)
-        ]
-        return hashed.groupBy("doc_id").agg(
-            *aggs, F.count("*").alias("_n_sh")
-        )
+    md = F.md5(F.col("s"))
+    hashed = sh.select(
+        "doc_id",
+        F.conv(F.substring(md, 1, 14), 16, 10).cast("long").alias("h1"),
+        F.conv(F.substring(md, 15, 14), 16, 10).cast("long").alias("h2"),
+    )
     aggs = [
-        F.min(F.xxhash64(F.col("s"), F.lit(i))).alias(f"m{i}")
+        F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"m{i}")
         for i in range(k)
     ]
-    return sh.groupBy("doc_id").agg(*aggs, F.count("*").alias("_n_sh"))
+    return hashed.groupBy("doc_id").agg(*aggs, F.count("*").alias("_n_sh"))
 
 
 def _capped_bucket_pairs(
@@ -385,24 +373,21 @@ def _capped_bucket_pairs(
     return all_pairs.unionByName(chain_pairs).distinct()
 
 
-def _band_frame(
-    sig: DataFrame, portable: bool, carry: tuple = ()
-) -> DataFrame:
-    """(doc_id, band, bh) bucket membership — one row per (doc, band):
+def _band_frame(sig: DataFrame, carry: tuple = ()) -> DataFrame:
+    """(doc_id, band, bh) bucket membership — one row per (doc, band),
+    ``bh`` the md5 of the band's signature rows:
     the LSH index frame both the candidate join and the bucket-stats
     pre-flight consume. ``carry`` propagates per-doc signature columns
     (e.g. ``_n_sh``) through the band explode for callers that want
-    them riding the bucket index; default output is unchanged (the
-    standing-index writers depend on the 3-column shape)."""
+    them riding the bucket index; without ``carry`` the output is the
+    3-column shape the standing-index writers persist."""
     rows_per_band = MINHASH_K // MINHASH_BANDS
 
     def band_hash(bnd: int):
         members = [
             F.col(f"m{rows_per_band * bnd + j}") for j in range(rows_per_band)
         ]
-        if portable:
-            return F.md5(F.concat_ws(",", *members, F.lit(str(bnd))))
-        return F.xxhash64(*members, F.lit(bnd))
+        return F.md5(F.concat_ws(",", *members, F.lit(str(bnd))))
 
     return sig.select(
         "doc_id",
@@ -422,9 +407,7 @@ def _band_frame(
 
 
 def lsh_bucket_stats(
-    docs: DataFrame,
-    portable: bool = False,
-    cap: int = SKETCH_BUCKET_CAP,
+    docs: DataFrame, cap: int = SKETCH_BUCKET_CAP
 ) -> DataFrame:
     """No silent caps: the pre-flight report for ``minhash_lsh_pairs``'
     bucket cap. One row — bucket count, max membership, how many
@@ -437,9 +420,7 @@ def lsh_bucket_stats(
     """
     sh = shingles_of(docs)
     per = (
-        _band_frame(
-            _minhash_signatures(sh, MINHASH_K, portable=portable), portable
-        )
+        _band_frame(_minhash_signatures(sh, MINHASH_K))
         .groupBy("band", "bh")
         .agg(F.count("*").alias("n"))
     )
@@ -456,23 +437,19 @@ def lsh_bucket_stats(
 
 
 def minhash_lsh_pairs(
-    docs: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    portable: bool = False,
+    docs: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: signature -> band buckets ->
     same-bucket candidates -> exact Jaccard verification (>= τ).
     The shingle self-join runs only over candidate pairs, so the
     quadratic blowup of ngram_jaccard_pairs never materializes.
 
-    ``portable=True`` (the registered form) swaps xxhash64 for the
-    md5-derived :func:`portable_hash64` family and md5-string band
-    buckets, making every intermediate — signatures, buckets,
-    candidates, verified pairs — bit-reproducible in ANSI SQL, so the
-    generated DuckDB twin (``_minhash_oracle_sql``) hash-checks the
-    ENTIRE sketch path, not just its recall. Recall itself is still
-    probabilistic in both families and measured against the exact
-    n-gram path in tests.
+    The md5-derived signatures and md5-string band buckets make every
+    intermediate — signatures, buckets, candidates, verified pairs —
+    bit-reproducible in ANSI SQL, so the generated DuckDB twin
+    (``_minhash_oracle_sql``) hash-checks the ENTIRE sketch path, not
+    just its recall. Recall itself is still probabilistic and measured
+    against the exact n-gram path in tests.
     """
     # evicting: bench warmup + timed re-invocations must not stack one
     # cached shingle copy per call in a long-lived session
@@ -483,11 +460,8 @@ def minhash_lsh_pairs(
     # TWO consumers — the band/bucket path and the verification's size
     # lookup — so it gets the same evicting-cache discipline; bounded
     # at one row per document at any corpus size.
-    sig = evicting_cache(
-        _minhash_signatures(sh, MINHASH_K, portable=portable),
-        "minhash_sig",
-    )
-    bands = _band_frame(sig, portable, carry=("_n_sh",))
+    sig = evicting_cache(_minhash_signatures(sh, MINHASH_K), "minhash_sig")
+    bands = _band_frame(sig, carry=("_n_sh",))
     # per-doc set sizes ride the signature aggregation (_n_sh)
     # and then the bucket-pair join itself (carry) — the verification
     # needs (na, nb) per pair, and getting them from the pair join
@@ -521,15 +495,11 @@ def minhash_lsh_pairs(
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_lsh_pairs(
-        read_table(spark, sf_dir, "documents", fan=True), portable=True
-    )
+    return minhash_lsh_pairs(read_table(spark, sf_dir, "documents", fan=True))
 
 
 def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = SIMHASH_MAX_HAMMING,
-    portable: bool = False,
+    docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING
 ) -> DataFrame:
     """SimHash sketches + near-dup pairs (hamming <= k over 32 bits).
     Per-bit weighted sums are 32 plain aggregate expressions over the
@@ -537,20 +507,16 @@ def simhash_pairs(
     pairs come from 8-bit chunk equality (hamming <= 3 over 4 chunks
     guarantees one equal chunk), verified with bit_count(xor).
 
-    ``portable=True`` (the registered form) hashes tokens with
-    :func:`portable_hash64` instead of xxhash64, so the generated
-    DuckDB twin (``_simhash_oracle_sql``) reproduces the exact sketch
-    bits and the driver hash-checks sketches, candidates, and verified
+    Tokens hash with :func:`portable_hash64`, so the generated DuckDB
+    twin (``_simhash_oracle_sql``) reproduces the exact sketch bits
+    and the driver hash-checks sketches, candidates, and verified
     pairs end-to-end.
     """
-    tok_hash = (
-        portable_hash64(F.col("w"), 0) if portable else F.xxhash64("w")
-    )
     tok = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count("*").alias("cnt"))
-        .withColumn("h", tok_hash)
+        .withColumn("h", portable_hash64(F.col("w"), 0))
     )
     bit_aggs = [
         F.sum(
@@ -615,9 +581,7 @@ def simhash_pairs(
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash_pairs(
-        read_table(spark, sf_dir, "documents"), portable=True
-    )
+    return simhash_pairs(read_table(spark, sf_dir, "documents"))
 
 
 def cosine_expr(a, b):
@@ -688,34 +652,24 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 SUBSTR_K = 8
 
 
-def substring_dup_span_frame(
-    docs: DataFrame, k: int = SUBSTR_K, hashed: bool = True
-) -> DataFrame:
+def substring_dup_span_frame(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     """The merged duplicated-span frame under the ExactSubstr family:
     one row per maximal duplicated token span — ``(doc_id, island,
     s, e, ng)`` with ``[s, e)`` 0-based token bounds and ``ng`` the
     duplicated k-grams merged into the span. Shared by the analysis
     (:func:`substring_dup_spans`) and the removal form
     (:func:`substring_strip`); plan shape documented on the analysis.
-
-    ``hashed=True`` collapses each gram to ``xxhash64(gram)`` inside
-    the gram-building projection (map-side — the ~50-byte gram string
-    never leaves the scan task), so both gram shuffles carry 8-byte
-    BIGINT keys; see :func:`substring_dup_spans` for the collision
-    arithmetic.
+    Gram keys are the exact token strings, so the DuckDB twins replay
+    them byte-for-byte.
     """
     ws = F.split(F.col("text"), " ")
-
-    def _gram(i):
-        s = F.concat_ws(" ", F.slice(ws, i + 1, k))
-        return F.xxhash64(s) if hashed else s
-
     grams_arr = F.when(
         F.array_size(ws) >= k,
-        F.transform(F.sequence(F.lit(0), F.size(ws) - k), _gram),
-    ).otherwise(
-        F.array().cast("array<bigint>" if hashed else "array<string>")
-    )
+        F.transform(
+            F.sequence(F.lit(0), F.size(ws) - k),
+            lambda i: F.concat_ws(" ", F.slice(ws, i + 1, k)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
     g = docs.select("doc_id", F.posexplode(grams_arr).alias("pos", "gram"))
     # Cache the positional gram frame (the decon/minhash shingle-cache
     # discipline): it feeds TWO consumers — the duplicated-gram set's
@@ -729,17 +683,16 @@ def substring_dup_span_frame(
     # spill (MEMORY_AND_DISK, not the default deserialized cache): at
     # 100 TB the frame is a shuffle-file-sized disk artifact, never a
     # resident deserialized heap. It buys back one full corpus scan +
-    # gram build per execution. The key carries the variant parameters
-    # (hash family, gram length) so the hashed production form and the
-    # exact-string registered form hold separate slots instead of
-    # thrashing one on alternating callers.
+    # gram build per execution. The key carries the gram length so
+    # callers with different ``k`` hold separate slots instead of
+    # thrashing one.
     from pyspark import StorageLevel
 
     from covid_engineering_spark.functions import evicting_cache
 
     g = evicting_cache(
         g,
-        f"substr_grams:h{int(hashed)}:k{k}",
+        f"substr_grams:k{k}",
         storage_level=StorageLevel.MEMORY_AND_DISK,
     )
     dup_grams = (
@@ -770,9 +723,7 @@ def substring_dup_span_frame(
     )
 
 
-def substring_dup_spans(
-    docs: DataFrame, k: int = SUBSTR_K, hashed: bool = True
-) -> DataFrame:
+def substring_dup_spans(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     """EXACT-SUBSTRING duplication analysis (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better" §4.1 —
     the ExactSubstr method): per document, the merged token spans
@@ -806,23 +757,8 @@ def substring_dup_spans(
     NULL ``text`` (the text-tier convention): ``n_tokens`` NULL, all
     duplication counters literal 0, ``has_dup`` literal FALSE — a
     payload-less document carries no duplicated content.
-
-    ``hashed=True`` — the DEFAULT, the production path at corpus
-    scale: each gram collapses to
-    ``xxhash64(gram)`` MAP-SIDE (inside the same projection that
-    builds it — the string never leaves the scan task), so the
-    dup-set groupBy and the semi-join shuffle 8-byte BIGINT keys
-    instead of ~50-byte strings (measured 1000× exponent 0.755 vs
-    0.806 exact-string). The cost is a birthday-collision
-    false-dup rate of ~n²/2⁶⁵ over n distinct grams (~3·10⁻⁶ at
-    10¹² grams ≈ 100 TB) — the same exact-vs-hashed trade the DSIR
-    feature hash and the minhash ``portable`` flag document. The
-    REGISTERED form pins ``hashed=False`` so the analysis is exact
-    and the DuckDB twin replays it byte-for-byte. Span-set
-    equivalence of the two forms on the synthetic corpus is pinned in
-    tests/test_round10_ops.py.
     """
-    spans = substring_dup_span_frame(docs, k, hashed)
+    spans = substring_dup_span_frame(docs, k)
     ws = F.split(F.col("text"), " ")
     per_doc = spans.groupBy("doc_id").agg(
         F.count("*").alias("_spans"),
@@ -855,17 +791,10 @@ def substring_dup_spans(
 
 
 def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # registered form: exact-string grams, so the DuckDB twin replays
-    # the gram keys byte-for-byte (the library default is hashed=True,
-    # the production path — see substring_dup_spans).
-    return substring_dup_spans(
-        read_table(spark, sf_dir, "documents", fan=True), hashed=False
-    )
+    return substring_dup_spans(read_table(spark, sf_dir, "documents", fan=True))
 
 
-def substring_strip(
-    docs: DataFrame, k: int = SUBSTR_K, hashed: bool = True
-) -> DataFrame:
+def substring_strip(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     """ExactSubstr span REMOVAL — the pipeline step Lee et al. 2022
     §4.1 actually applies (the analysis form only reports the spans):
     per document, the text with every merged duplicated span excised,
@@ -902,7 +831,7 @@ def substring_strip(
     NULL, ``removed_tokens`` literal 0 (the text-tier convention —
     counters non-null, payload-derived fields propagate).
     """
-    spans = substring_dup_span_frame(docs, k, hashed)
+    spans = substring_dup_span_frame(docs, k)
     sp_doc = spans.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(
@@ -941,11 +870,7 @@ def substring_strip(
 
 
 def q_dedup_substring_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # registered form: exact-string grams for twin replay (library
-    # default is hashed=True — see substring_dup_spans).
-    return substring_strip(
-        read_table(spark, sf_dir, "documents", fan=True), hashed=False
-    )
+    return substring_strip(read_table(spark, sf_dir, "documents", fan=True))
 
 
 QUERIES = {

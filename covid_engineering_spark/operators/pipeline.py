@@ -1408,76 +1408,23 @@ def _dsir_weights(docs: DataFrame, target) -> DataFrame:
     )
 
 
-def dsir_gumbel_topk(
-    docs: DataFrame,
-    target,
-    k: int = DSIR_K,
-    temperature: float = 1.0,
-    seed: int = 7,
-) -> DataFrame:
-    """The paper's actual resampling rule (Xie et al. 2023 §2.3;
-    Gumbel-top-k, Vieira 2014): sample ``k`` raw documents WITHOUT
-    replacement with P(doc) ∝ exp(w/T) by taking the top-k of
-    ``w/T + G_i`` where ``G_i = −ln(−ln(u_i))`` is a standard Gumbel
-    draw. The noise is HASH-derived — ``u_i`` from the md5
-    ``portable_hash64(doc_id, seed)`` mapped into (0,1) — so the draw
-    is deterministic and reproducible given (corpus, seed), the same
-    salted-hash discipline as the split/mixture samplers; re-running
-    the pipeline reproduces the sample bit-for-bit, changing ``seed``
-    redraws it. ``temperature → 0`` recovers :func:`dsir_select`'s
-    deterministic argmax top-k (pinned in tests).
-
-    Library form (not a registered query): the score mixes libm
-    doubles, which is fine for a sampler whose CONSUMER contract is
-    the selected id set, not a hash-stable score column — the
-    registered, oracle-twinned path is :func:`dsir_select`.
-
-    Scale shape: identical to ``dsir_select`` (same weight frame; the
-    noise is one map-side expression) — TakeOrderedAndProject top-k,
-    ≤k-row broadcast flag.
-    """
-    from covid_engineering_spark.operators.dedup import portable_hash64
-
-    w = _dsir_weights(docs, target)
-    # u in (0,1): (h + 1) / (2^60 + 1), h uniform in [0, 2^60)
-    u = (
-        portable_hash64(F.col("doc_id").cast("string"), seed) + F.lit(1.0)
-    ) / F.lit(float(2**60 + 1))
-    gumbel = -F.log(-F.log(u))
-    score = (
-        F.col("dsir_micros").cast("double")
-        / F.lit(1e6)
-        / F.lit(float(temperature))
-        + gumbel
-    )
-    scored = w.withColumn("gumbel_score", score)
-    topk = (
-        scored.orderBy(F.desc("gumbel_score"), F.asc("doc_id"))
-        .limit(int(k))
-        .select("doc_id", F.lit(True).alias("_sel"))
-    )
-    return scored.join(F.broadcast(topk), "doc_id", "left").select(
-        "doc_id",
-        "source",
-        "n_feat_tokens",
-        "dsir_micros",
-        "gumbel_score",
-        F.coalesce(F.col("_sel"), F.lit(False)).alias("selected"),
-    )
-
-
 def dsir_gumbel_topk_exact(
     docs: DataFrame, target, k: int = DSIR_K, seed: int = 7
 ) -> DataFrame:
-    """:func:`dsir_gumbel_topk` in INTEGER MICRO-UNITS — the paper's
-    Gumbel-top-k resampling rule with a hash-stable score column, so
-    the whole selection (not just the id set) is checkable against an
-    ANSI-SQL twin (:func:`dsir_gumbel_sql`; differential test in
+    """The paper's actual resampling rule (Xie et al. 2023 §2.3;
+    Gumbel-top-k, Vieira 2014) in INTEGER MICRO-UNITS: sample ``k``
+    raw documents WITHOUT replacement with P(doc) ∝ exp(w) by taking
+    the top-k of ``w + G_i``, ``G_i = −ln(−ln(u_i))`` a standard
+    Gumbel draw. The score column is hash-stable, so the whole
+    selection (not just the id set) is checkable against an ANSI-SQL
+    twin (:func:`dsir_gumbel_sql`; differential test in
     tests/test_round9_ops.py). Registered as ``pipe_dsir_gumbel``.
 
-    The draw: ``u = (h + 1) / 2^60`` from the md5-derived
-    ``portable_hash64(doc_id, seed)`` — one exact int→double convert
-    and one IEEE division, bit-identical in both engines. The Gumbel
+    The draw is HASH-derived, so it is reproducible given (corpus,
+    seed) and changing ``seed`` redraws it: ``u = (h + 1) / 2^60``
+    from the md5-derived ``portable_hash64(doc_id, seed)`` — one
+    exact int→double convert and one IEEE division, bit-identical in
+    both engines. The Gumbel
     ``−ln(−ln u)`` takes the repo's 8dp-round convention after EACH
     libm call (a last-ulp ln divergence cannot move an 8dp-rounded
     value; the tfidf/perplexity/BM25 precedent), then snaps to BIGINT
@@ -1488,9 +1435,8 @@ def dsir_gumbel_topk_exact(
     caps draws above the 1−e^{-1e-8} quantile, statistically
     invisible and deterministic in both engines.
 
-    Fixed temperature T = 1 (the exact-integer form: score =
-    dsir_micros + gumbel_micros, associative BIGINT addition); the
-    float :func:`dsir_gumbel_topk` keeps the temperature dial.
+    Temperature is fixed at T = 1: score = dsir_micros +
+    gumbel_micros, associative BIGINT addition.
 
     Scale shape: identical to ``dsir_select`` — the noise is one
     map-side expression over the ≤corpus-row weight frame,
@@ -2086,26 +2032,25 @@ def q_pipe_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def build_near_dup_index(
-    corpus: DataFrame,
-    portable: bool = False,
-    cap: int | None = None,
+    corpus: DataFrame, cap: int | None = None
 ) -> dict[str, DataFrame]:
-    """The STANDING side of ``near_dup_incremental_lsh``, built once
-    per corpus refresh instead of once per batch. Three frames:
+    """The corpus side of ``near_dup_incremental_lsh`` — derived
+    in-query by the registered form, or built once per corpus refresh
+    and persisted (``write_near_dup_index``) so each batch probes a
+    STANDING index. Three frames:
 
     * ``bands`` — (doc_id, band, bh) capped band-bucket membership:
       the probe target. The cap (deterministic doc_id rank inside
-      each (band, bh) bucket) is applied HERE, at build time — the
-      row_number window over the (band, bh) shuffle is the one
-      corpus-sized stage of the whole incremental path, and baking it
-      into the index is what makes the per-batch job O(batch + probe)
-      (the in-query form's measured 1000x exponent rises to 0.792 as
-      the corpus dwarfs the batch: that is exactly this re-rank being
-      recomputed per refresh).
+      each (band, bh) bucket) is applied HERE — the row_number window
+      over the (band, bh) shuffle is the one corpus-sized stage of the
+      whole incremental path, and baking it into a standing index is
+      what makes the per-batch job O(batch + probe);
     * ``shingles`` — (doc_id, s) distinct word-3-grams: the exact-
-      Jaccard verification side.
+      Jaccard verification side;
     * ``sizes`` — (doc_id, n) per-doc shingle counts: the union-size
-      term of the Jaccard denominator.
+      term of the Jaccard denominator. They ride the signature
+      groupBy as ``_n_sh`` instead of a second aggregation pass over
+      the shingle frame.
 
     Pass the dict to ``near_dup_incremental_lsh(index=...)``, or
     persist it with ``write_near_dup_index`` and reload with
@@ -2113,33 +2058,35 @@ def build_near_dup_index(
     """
     from pyspark.sql import Window
 
+    from covid_engineering_spark.functions import evicting_cache
     from covid_engineering_spark.operators.dedup import (
         MINHASH_K,
         SKETCH_BUCKET_CAP,
         _band_frame,
         _minhash_signatures,
-        shingles_of,
     )
 
     cap = SKETCH_BUCKET_CAP if cap is None else cap
-    shc = shingles_of(corpus)
-    bands = _band_frame(
-        _minhash_signatures(shc, MINHASH_K, portable=portable), portable
+    # two consumers each (band build + verification sizes/join)
+    shc = evicting_cache(shingles_of(corpus), "inc_lsh_sh_corpus")
+    # one constant-width row per doc at any corpus size
+    sig = evicting_cache(
+        _minhash_signatures(shc, MINHASH_K), "inc_lsh_sig_corpus"
     )
     wr = Window.partitionBy("band", "bh").orderBy("doc_id")
     bands = (
-        bands.withColumn("_rn", F.row_number().over(wr))
+        _band_frame(sig)
+        .withColumn("_rn", F.row_number().over(wr))
         .filter(F.col("_rn") <= cap)
         .drop("_rn")
     )
-    sizes = shc.groupBy("doc_id").agg(F.count("*").alias("n"))
+    sizes = sig.select("doc_id", F.col("_n_sh").alias("n"))
     return {"bands": bands, "shingles": shc, "sizes": sizes}
 
 
 def write_near_dup_index(
     corpus: DataFrame,
     path: str,
-    portable: bool = False,
     cap: int | None = None,
     n_files: int = 32,
 ) -> None:
@@ -2158,7 +2105,7 @@ def write_near_dup_index(
     ``n_files`` is a layout decision like ``write_bucketed``'s bucket
     count: pick it for the target cluster's parallelism.
     """
-    idx = build_near_dup_index(corpus, portable=portable, cap=cap)
+    idx = build_near_dup_index(corpus, cap=cap)
     (
         idx["bands"]
         .repartitionByRange(n_files, "band", "bh")
@@ -2198,7 +2145,6 @@ def probe_near_dup_index(
     path: str,
     batch: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
-    portable: bool = False,
     max_keys: int = PROBE_PUSHDOWN_MAX_KEYS,
 ) -> DataFrame:
     """Batch probe of a persisted ``write_near_dup_index`` layout
@@ -2249,17 +2195,14 @@ def probe_near_dup_index(
     idx = read_near_dup_index(spark, path)
     shb = evicting_cache(shingles_of(batch), "probe_push_sh_batch")
     bands_b = evicting_cache(
-        _band_frame(
-            _minhash_signatures(shb, MINHASH_K, portable=portable),
-            portable,
-        ),
+        _band_frame(_minhash_signatures(shb, MINHASH_K)),
         "probe_push_bands_batch",
     )
     keys = bands_b.select("band", "bh").distinct().limit(max_keys + 1)
     key_rows = keys.collect()
     if len(key_rows) > max_keys:
         return near_dup_incremental_lsh(
-            None, batch, threshold=threshold, portable=portable, index=idx
+            None, batch, threshold=threshold, index=idx
         )
     bands_pruned = idx["bands"].filter(
         F.col("band").isin([r["band"] for r in key_rows])
@@ -2276,7 +2219,7 @@ def probe_near_dup_index(
     ]
     if len(cand_ids) > max_keys:
         return near_dup_incremental_lsh(
-            None, batch, threshold=threshold, portable=portable, index=idx
+            None, batch, threshold=threshold, index=idx
         )
     pruned = {
         "bands": bands_pruned,
@@ -2284,7 +2227,7 @@ def probe_near_dup_index(
         "sizes": idx["sizes"].filter(F.col("doc_id").isin(cand_ids)),
     }
     return near_dup_incremental_lsh(
-        None, batch, threshold=threshold, portable=portable, index=pruned
+        None, batch, threshold=threshold, index=pruned
     )
 
 
@@ -2292,7 +2235,6 @@ def near_dup_incremental_lsh(
     corpus: DataFrame | None,
     batch: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
-    portable: bool = False,
     cap: int | None = None,
     index: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
@@ -2308,17 +2250,13 @@ def near_dup_incremental_lsh(
 
     Plan shape:
 
-    * corpus index: shingles → k min-hash aggregates → band buckets —
-      in production this frame IS the standing index a pipeline
-      materializes between runs (``_band_frame``'s output, one row per
-      (doc, band)); derived in-query here exactly like the exact
-      form derives its df index;
-    * corpus bucket membership capped at ``cap`` by deterministic
-      doc_id rank — the row_number window rides the same (band, bh)
-      shuffle the probe join needs; past the cap a bucket is a
-      boilerplate mega-cluster where the first ``cap`` members
-      already witness the duplication (the ``SKETCH_BUCKET_CAP``
-      recall trade, bipartite flavor);
+    * corpus index (:func:`build_near_dup_index`): shingles → k
+      min-hash aggregates → band buckets, bucket membership capped at
+      ``cap`` by deterministic doc_id rank — the row_number window
+      rides the same (band, bh) shuffle the probe join needs; past
+      the cap a bucket is a boilerplate mega-cluster where the first
+      ``cap`` members already witness the duplication (the
+      ``SKETCH_BUCKET_CAP`` recall trade, bipartite flavor);
     * probe: batch bands ⋈ capped corpus bands on (band, bh) —
       batch-side × corpus-side only, NEVER corpus × corpus;
     * exact-Jaccard verification restricted to candidates, over the
@@ -2327,69 +2265,40 @@ def near_dup_incremental_lsh(
       ``jaccard`` is the true document similarity, not the guarded
       variant the exact form reports.
 
-    ``portable=True`` (the registered form) uses the md5-derived hash
-    family end to end, so the generated DuckDB twin replays
-    signatures, buckets, the capped probe, and verification — the
-    driver hash-checks the whole incremental sketch path. Recall vs
-    the exact form is measured in tests (same discipline as
-    ``minhash_lsh_pairs`` vs ``ngram_jaccard_pairs``).
+    The md5-derived hash family runs end to end, so the generated
+    DuckDB twin replays signatures, buckets, the capped probe, and
+    verification — the driver hash-checks the whole incremental
+    sketch path. Recall vs the exact form is measured in tests (same
+    discipline as ``minhash_lsh_pairs`` vs ``ngram_jaccard_pairs``).
 
     ``index``: a ``build_near_dup_index`` / ``read_near_dup_index``
     dict. When given, ``corpus`` may be None and NO corpus-side
     derivation runs in this job — the batch probes the standing
     capped buckets and verifies against the standing shingle frames,
     so per-batch cost is O(batch + probe) regardless of corpus size.
-    This is the production shape: the in-query derivation below
-    re-shingles, re-hashes, and re-caps the full corpus on every
-    batch, which grows toward the corpus scan (measured 1000x
-    exponent 0.792) once the corpus dwarfs the batch. Tests pin
-    both paths to identical output on the same corpus.
+    Without it the corpus index is derived in-query, which re-shingles,
+    re-hashes, and re-caps the full corpus on every batch (measured
+    1000x exponent 0.792) once the corpus dwarfs the batch.
     """
-    from pyspark.sql import Window
-
     from covid_engineering_spark.functions import evicting_cache
     from covid_engineering_spark.operators.dedup import (
         MINHASH_K,
-        SKETCH_BUCKET_CAP,
         _band_frame,
         _minhash_signatures,
     )
 
-    cap = SKETCH_BUCKET_CAP if cap is None else cap
-    if index is not None:
-        shc = index["shingles"]
-        bc = index["bands"]
-        nc_sizes = index["sizes"]
-    else:
+    if index is None:
         if corpus is None:
             raise ValueError(
                 "near_dup_incremental_lsh needs a corpus or an index"
             )
-        # two consumers each (band build + verification sizes/join)
-        shc = evicting_cache(shingles_of(corpus), "inc_lsh_sh_corpus")
-        # Signature frame cached: it feeds the band/bucket build
-        # AND the verification's size lookup (per-doc shingle counts
-        # ride the signature groupBy as ``_n_sh`` instead of a second
-        # full aggregation pass over the shingle frame); one
-        # constant-width row per doc at any corpus size.
-        sig_c = evicting_cache(
-            _minhash_signatures(shc, MINHASH_K, portable=portable),
-            "inc_lsh_sig_corpus",
-        )
-        bands_c = _band_frame(sig_c, portable)
-        wr = Window.partitionBy("band", "bh").orderBy("doc_id")
-        bc = (
-            bands_c.withColumn("_rn", F.row_number().over(wr))
-            .filter(F.col("_rn") <= cap)
-            .drop("_rn")
-        )
-        nc_sizes = sig_c.select("doc_id", F.col("_n_sh").alias("n"))
+        index = build_near_dup_index(corpus, cap=cap)
+    shc, bc, nc = index["shingles"], index["bands"], index["sizes"]
     shb = evicting_cache(shingles_of(batch), "inc_lsh_sh_batch")
     sig_b = evicting_cache(
-        _minhash_signatures(shb, MINHASH_K, portable=portable),
-        "inc_lsh_sig_batch",
+        _minhash_signatures(shb, MINHASH_K), "inc_lsh_sig_batch"
     )
-    bands_b = _band_frame(sig_b, portable)
+    bands_b = _band_frame(sig_b)
     cand = (
         bands_b.alias("b")
         .join(bc.alias("c"), ["band", "bh"])
@@ -2400,7 +2309,6 @@ def near_dup_incremental_lsh(
         .distinct()
     )
     nb = sig_b.select("doc_id", F.col("_n_sh").alias("n"))
-    nc = nc_sizes
     common = (
         cand.join(shb.alias("sb"), F.col("sb.doc_id") == F.col("d_batch"))
         .join(
@@ -2435,7 +2343,6 @@ def q_pipe_near_dup_incremental_lsh(
     return near_dup_incremental_lsh(
         docs.filter(F.col("doc_id") % 5 != 0),
         docs.filter(F.col("doc_id") % 5 == 0),
-        portable=True,
     )
 
 

@@ -1280,25 +1280,18 @@ GREEDY_HOPS = 4
 GREEDY_BEAM = 4
 
 
-def _navigable_graph(emb: DataFrame, nq: int, with_payload: bool = False):
-    """The navigable graph ``graph_greedy_search`` walks and
-    ``write_graph_index`` materializes — factored so the in-query and
-    standing-index forms can never drift apart. Returns
+def _navigable_graph(emb: DataFrame, nq: int):
+    """The navigable graph ``graph_greedy_search`` walks. Returns
     ``(edges, entry)``: the UNDIRECTED blocked kNN edges plus the
     fully connected hub navigation layer (one md5-drawn hub per label
     block, drawn from vec_id ≥ nq so a fixture query never navigates
     to its own identity), and the 1-row md5-minimal entry vertex.
 
-    ``with_payload=True`` co-locates each neighbor's embedding on the
-    edge row — the HNSW trade (adjacency stored with vectors): each
-    beam hop then scores candidates FROM the adjacency scan itself
-    instead of paying a second corpus join + broadcast build per hop.
-    A/B'd and NOT taken for the registered walk: the payload
-    attach join at index-build time costs what the per-hop joins save
-    (4.81s vs 4.96s at sf0.1), and the cached index grows by one
-    vector per edge — k× the corpus's embedding bytes at any scale.
-    Kept as an option because the trade flips when one index build
-    amortizes over many query waves.
+    Edges carry ids only, not the neighbor's embedding (the HNSW
+    adjacency-with-vectors layout): attaching the payload at build
+    time cost what the per-hop scoring joins save (4.81s vs 4.96s at
+    sf0.1), and the cached edge frame would grow by one vector per
+    edge — k× the corpus's embedding bytes.
 
     UNDIRECTED kNN edges: x being in y's top-k does not put y in
     x's, and the reverse arcs are routes a navigable-small-world
@@ -1337,17 +1330,7 @@ def _navigable_graph(emb: DataFrame, nq: int, with_payload: bool = False):
         .unionByName(hub_edges)
         .distinct()
     )
-    if with_payload:
-        adj = adj.join(
-            _kmeans_vectors(emb).select(
-                F.col("vec_id").alias("n_id"),
-                F.col("embedding").alias("n_emb"),
-            ),
-            "n_id",
-        )
-    edges = evicting_cache(
-        adj, "greedy_edges:emb" if with_payload else "greedy_edges"
-    )
+    edges = evicting_cache(adj, "greedy_edges")
     entry = (
         hubs.orderBy(key, "vec_id")
         .limit(1)
@@ -1551,156 +1534,6 @@ def graph_greedy_search(
 
 def q_ann_graph_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph_greedy_search(read_table(spark, sf_dir, "embeddings"))
-
-
-#: Literal-In pushdown ceiling for the serving walk's per-hop scans
-#: (frontier ids, candidate ids — both ≤ |Q|·beam·max_degree).
-SERVE_PUSHDOWN_MAX_KEYS = 200_000
-
-
-def write_graph_index(
-    emb: DataFrame,
-    path: str,
-    n_files: int = 32,
-    reserve_queries: int | None = None,
-) -> None:
-    """Materialize the navigable graph as a STANDING index under
-    ``path`` — the production split `q_ann_graph_greedy` folds into
-    one query: graph CONSTRUCTION (the kNN self-join — the expensive
-    part, per-refresh) vs SERVING (the beam walk, per-query).
-
-    Layout, chosen for the serving walk's access paths: ``edges``
-    range-clustered on src_id (a hop fetches the adjacency of a
-    bounded frontier id set → ``In(src_id, …)`` row-group skipping),
-    ``vectors`` range-clustered on vec_id (candidate scoring fetches
-    a bounded id set), ``entry`` one row. ``reserve_queries`` mirrors
-    the fixture convention of querying with corpus members (hubs are
-    drawn outside the reserved prefix); production queries are
-    external vectors and reserve 0.
-    """
-    nq = N_QUERIES if reserve_queries is None else reserve_queries
-    edges, entry = _navigable_graph(emb, nq)
-    (
-        edges.repartitionByRange(n_files, "src_id", "n_id")
-        .sortWithinPartitions("src_id", "n_id")
-        .write.mode("overwrite")
-        .parquet(f"{path}/edges")
-    )
-    (
-        _kmeans_vectors(emb)
-        .select("vec_id", "embedding")
-        .repartitionByRange(n_files, "vec_id")
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite")
-        .parquet(f"{path}/vectors")
-    )
-    entry.write.mode("overwrite").parquet(f"{path}/entry")
-
-
-def graph_greedy_serve(
-    spark: SparkSession,
-    path: str,
-    queries: DataFrame,
-    hops: int = GREEDY_HOPS,
-    beam: int = GREEDY_BEAM,
-    max_keys: int = SERVE_PUSHDOWN_MAX_KEYS,
-) -> list:
-    """The SERVING loop over a ``write_graph_index`` layout — the
-    HNSW-style deployment shape: beam state lives on the driver
-    (bounded by |Q|·beam rows, the queue an ANN server keeps in
-    memory), and each hop issues two PRUNED scans against the
-    standing index:
-
-    1. adjacency fetch — ``edges`` filtered by the frontier id set
-       (``In(src_id, …)`` reaches parquet PushedFilters on the
-       src_id-clustered layout, so a hop reads row groups
-       proportional to the frontier, not the graph);
-    2. candidate scoring — ``vectors`` filtered by the candidate id
-       set, joined to the broadcast query frame, 6dp cosine in the
-       JVM (the identical ``cosine_expr`` the lazy walk uses, so the
-       two forms return bit-identical results — pinned in tests).
-
-    Returns the found list [(q_id, found_id, found_cs)] sorted by
-    q_id — driver-side output for a driver-side serving loop (the
-    lazy ``graph_greedy_search(with_eval=False)`` form remains the
-    all-lazy DataFrame path).
-
-    Regime bound: every collected set is ≤ |Q|·beam·max_degree; past
-    ``max_keys`` (≈10⁵ — thousands of concurrent queries at this
-    beam/degree) raise batching on the query axis or fall back to
-    the lazy broadcast plan, whose per-hop joins need no driver
-    round-trips.
-    """
-    from covid_engineering_spark.operators.dedup import cosine_expr
-
-    edges = spark.read.parquet(f"{path}/edges")
-    vectors = spark.read.parquet(f"{path}/vectors")
-    entry_id = spark.read.parquet(f"{path}/entry").head()["id"]
-    qrows = queries.select("q_id", "q_emb").collect()
-    if len(qrows) * beam > max_keys:
-        raise ValueError(
-            f"frontier bound {len(qrows) * beam} exceeds max_keys="
-            f"{max_keys}: batch the query set or use the lazy plan"
-        )
-    qframe = spark.createDataFrame(qrows).select("q_id", "q_emb")
-
-    def score(pairs: set) -> dict:
-        """(q_id, id) -> 6dp cosine via one pruned vectors scan."""
-        if not pairs:
-            return {}
-        ids = sorted({i for _, i in pairs})
-        pf = spark.createDataFrame(
-            sorted(pairs), "q_id long, id long"
-        )
-        scored = (
-            vectors.filter(F.col("vec_id").isin(ids))
-            .join(F.broadcast(pf), F.col("vec_id") == F.col("id"))
-            .join(F.broadcast(qframe), "q_id")
-            .select(
-                "q_id",
-                "id",
-                cosine_expr(F.col("q_emb"), F.col("embedding")).alias(
-                    "cs"
-                ),
-            )
-        )
-        return {(r["q_id"], r["id"]): r["cs"] for r in scored.collect()}
-
-    # state per query: dict id -> cs (the beam)
-    state = {r["q_id"]: {} for r in qrows}
-    init = score({(q, entry_id) for q in state})
-    for (q, i), cs in init.items():
-        state[q][i] = cs
-    for _ in range(hops):
-        frontier = sorted({i for s in state.values() for i in s})
-        adj = {}
-        for r in (
-            edges.filter(F.col("src_id").isin(frontier))
-            .select("src_id", "n_id")
-            .collect()
-        ):
-            adj.setdefault(r["src_id"], []).append(r["n_id"])
-        want = {
-            (q, n)
-            for q, s in state.items()
-            for i in s
-            for n in adj.get(i, [])
-            if n != q and n not in s
-        }
-        for (q, i), cs in score(want).items():
-            state[q][i] = cs
-        for q, s in state.items():
-            top = sorted(s.items(), key=lambda kv: (-kv[1], kv[0]))[
-                :beam
-            ]
-            state[q] = dict(top)
-    out = []
-    for q in sorted(state):
-        best_id, best_cs = min(
-            state[q].items(), key=lambda kv: (-kv[1], kv[0])
-        )
-        out.append((q, best_id, best_cs))
-    return out
 
 
 #: Product-quantization geometry: DIM=64 splits into PQ_M=8 subspaces

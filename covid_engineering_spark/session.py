@@ -73,9 +73,6 @@ _DEFAULTS: dict[str, str] = {
     # The driver-generated events table stores TIMESTAMP(NANOS) parquet,
     # which vanilla Spark refuses; read as long and convert (sources/io.py).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Don't let tiny local test files fragment into 32 near-empty tasks,
-    # but keep the default 128m split size for real data.
-    "spark.sql.files.maxPartitionBytes": "134217728",
     # RocksDB state store for stateful streaming: state spills to local
     # disk instead of living on the executor heap, so watermark-bounded
     # session/window state survives key cardinalities the default

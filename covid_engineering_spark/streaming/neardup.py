@@ -43,7 +43,6 @@ def stream_near_dup(
     source_dir: str,
     index_path: str,
     sink_fn: Callable[[DataFrame, int], None],
-    portable: bool = False,
 ):
     """Build (unstarted) the foreachBatch streaming query: arriving
     parquet document batches under ``source_dir`` probe the standing
@@ -55,12 +54,7 @@ def stream_near_dup(
     idx = read_near_dup_index(spark, index_path)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        sink_fn(
-            near_dup_incremental_lsh(
-                None, batch_df, portable=portable, index=idx
-            ),
-            batch_id,
-        )
+        sink_fn(near_dup_incremental_lsh(None, batch_df, index=idx), batch_id)
 
     return (
         spark.readStream.schema(schemas.STAR["documents"])

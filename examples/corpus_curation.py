@@ -89,9 +89,6 @@ def main(
     # dropping docs — the report rides along from the same frame
     from covid_engineering_spark.operators.dedup import substring_strip
 
-    # library default hashed=True: the funnel composes the production
-    # xxhash64-gram path (8-byte keys on both gram shuffles; the
-    # registered query keeps exact strings for oracle replay)
     stripped = substring_strip(docs)
     sub = stripped.agg(
         F.sum((F.col("removed_tokens") > 0).cast("int")).alias("n_docs"),

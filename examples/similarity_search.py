@@ -257,7 +257,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     )
 
     docs = read_table(spark, sf_dir, "documents")
-    stats = lsh_bucket_stats(docs, portable=True).head()
+    stats = lsh_bucket_stats(docs).head()
     print(
         "minhash bucket pre-flight: "
         f"{stats['n_buckets']} buckets, max membership {stats['max_bucket']}, "

@@ -171,9 +171,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001", out_dir: str | None = None):
 
     docs = read_table(spark, sf_dir, "documents")
     idx_dir = os.path.join(scratch, "nd_index")
-    write_near_dup_index(
-        docs.filter(F.col("doc_id") % 5 != 0), idx_dir, portable=True
-    )
+    write_near_dup_index(docs.filter(F.col("doc_id") % 5 != 0), idx_dir)
     doc_src = os.path.join(scratch, "doc_arrivals")
     shutil.rmtree(doc_src, ignore_errors=True)
     arriving = docs.filter(F.col("doc_id") % 5 == 0)
@@ -190,7 +188,6 @@ def main(sf_dir: str = "/root/testdata/sf0.001", out_dir: str | None = None):
             doc_src,
             idx_dir,
             lambda df, bid: pairs.extend(df.collect()),
-            portable=True,
         )
         .trigger(availableNow=True)
         .start()

@@ -16,6 +16,7 @@ double range).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -27,7 +28,12 @@ def main() -> int:
     only = set(sys.argv[2:])
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.master("local[16]").getOrCreate()
+    # A vanilla builder, not get_spark(): callers of __spark_entry__
+    # bring their own session, so the sweep must pass without the
+    # engine's session defaults. One thread per usable CPU, as
+    # get_spark() sizes it.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry

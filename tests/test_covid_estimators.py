@@ -168,43 +168,6 @@ def test_country_fractions_on_real_day_wise(spark):
         assert abs(fr - cr / N_NL) < 1e-12
 
 
-def test_pairs_kernel_matches_single_pair(spark):
-    """The many-pairs kernel must reproduce the single-pair function
-    exactly for every pair it runs — here both directions NL<->BE in
-    one job on the real data.
-    """
-    from covid_engineering_spark.operators.covid import (
-        transfer_simulation,
-        transfer_simulation_pairs,
-    )
-
-    n_be = 11589623.0
-    complete = read_covid_csv(
-        spark, f"{REF}/complete.csv", schemas.COMPLETE, schemas.COMPLETE_RENAMES
-    )
-    cleaned = clean_complete(complete).cache()
-    pop = spark.createDataFrame(
-        [("Netherlands", N_NL), ("Belgium", n_be)],
-        "country_region string, population double",
-    )
-    pairs = spark.createDataFrame(
-        [("Netherlands", "Belgium"), ("Belgium", "Netherlands")],
-        "param_country string, sim_country string",
-    )
-    got = {
-        (r.param_country, r.sim_country, r.t): (r.s, r.i, r.r, r.d)
-        for r in transfer_simulation_pairs(cleaned, pop, pairs).collect()
-    }
-    assert got  # both pairs produced rows
-    for pc, sc in (("Netherlands", "Belgium"), ("Belgium", "Netherlands")):
-        single = {
-            r.t: (r.s, r.i, r.r, r.d)
-            for r in transfer_simulation(cleaned, pop, pc, sc).collect()
-        }
-        pair_rows = {t: v for (p, s, t), v in got.items() if (p, s) == (pc, sc)}
-        assert pair_rows == single, (pc, sc)
-
-
 def test_estimators_match_golden_on_real_netherlands(spark):
     complete = read_covid_csv(
         spark, f"{REF}/complete.csv", schemas.COMPLETE, schemas.COMPLETE_RENAMES

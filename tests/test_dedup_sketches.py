@@ -56,13 +56,16 @@ def test_simhash_equals_bruteforce_hamming(spark, docs):
     out = {(r.d1, r.d2): r.hamming for r in simhash_pairs(docs).collect()}
 
     # Recompute signatures once, brute-force all pairs driver-side.
-    from covid_engineering_spark.operators.dedup import SIMHASH_BITS  # noqa: F401
+    from covid_engineering_spark.operators.dedup import (
+        SIMHASH_BITS,
+        portable_hash64,
+    )
 
     sigs = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count("*").alias("cnt"))
-        .withColumn("h", F.xxhash64("w"))
+        .withColumn("h", portable_hash64(F.col("w"), 0))
         .groupBy("doc_id")
         .agg(
             *[
@@ -72,7 +75,7 @@ def test_simhash_equals_bruteforce_hamming(spark, docs):
                         F.col("cnt"),
                     ).otherwise(-F.col("cnt"))
                 ).alias(f"b{i}")
-                for i in range(32)
+                for i in range(SIMHASH_BITS)
             ]
         )
         .collect()
@@ -80,7 +83,7 @@ def test_simhash_equals_bruteforce_hamming(spark, docs):
     sig_of = {}
     for r in sigs:
         v = 0
-        for i in range(32):
+        for i in range(SIMHASH_BITS):
             if r[f"b{i}"] > 0:
                 v |= 1 << i
         sig_of[r.doc_id] = v
@@ -182,72 +185,6 @@ def test_portable_hash64_matches_duckdb(spark):
         assert all(v >= 0 for v in got)  # 60-bit: never negative
 
 
-def test_portable_minhash_precision_against_exact(spark, docs):
-    """The portable (registered) MinHash family keeps the family
-    contract: every emitted pair is exact-verified with the jaccard
-    the exact path computes, and recall stays at the xxhash level."""
-    exact = {
-        (r.d1, r.d2): r.jaccard
-        for r in ngram_jaccard_pairs(docs, max_df=None).collect()
-    }
-    lsh = {
-        (r.d1, r.d2): r.jaccard
-        for r in minhash_lsh_pairs(docs, portable=True).collect()
-    }
-    for pair, j in lsh.items():
-        assert pair in exact and exact[pair] == j
-    assert len(set(lsh) & set(exact)) / len(exact) >= 0.8
-
-
-def test_portable_simhash_is_pigeonhole_complete(spark, docs):
-    """Chunked candidate generation must stay complete for the
-    portable token-hash family too: pairs at hamming <= 3 over the
-    portable signatures exactly match a brute-force scan."""
-    from covid_engineering_spark.operators.dedup import (
-        SIMHASH_BITS,
-        portable_hash64,
-    )
-
-    out = {
-        (r.d1, r.d2): r.hamming
-        for r in simhash_pairs(docs, portable=True).collect()
-    }
-    sigs = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("h", portable_hash64(F.col("w"), 0))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1,
-                        F.col("cnt"),
-                    ).otherwise(-F.col("cnt"))
-                ).alias(f"b{i}")
-                for i in range(SIMHASH_BITS)
-            ]
-        )
-        .collect()
-    )
-    sig_of = {}
-    for r in sigs:
-        v = 0
-        for i in range(SIMHASH_BITS):
-            if r[f"b{i}"] > 0:
-                v |= 1 << i
-        sig_of[r.doc_id] = v
-    ids = sorted(sig_of)
-    want = {}
-    for i, d1 in enumerate(ids):
-        for d2 in ids[i + 1 :]:
-            ham = bin(sig_of[d1] ^ sig_of[d2]).count("1")
-            if ham <= SIMHASH_MAX_HAMMING:
-                want[(d1, d2)] = ham
-    assert out == want
-
-
 def test_portable_hash64_matches_duckdb_on_generated_unicode(spark):
     """Property form of the cross-engine pin: arbitrary unicode inputs
     (one Spark job over the whole corpus of examples, not one per
@@ -303,7 +240,7 @@ def test_mega_bucket_cap_bounds_pairs_and_preserves_connectivity(spark):
     docs = spark.range(n).select(
         F.col("id").alias("doc_id"), F.lit(base).alias("text")
     )
-    mh = minhash_lsh_pairs(docs, portable=True)
+    mh = minhash_lsh_pairs(docs)
     mh_rows = mh.count()
     # chain, not clique: linear in the bucket, far under all-pairs
     assert mh_rows == n - 1, mh_rows
@@ -324,7 +261,7 @@ def test_small_buckets_still_take_all_pairs(spark):
     docs = spark.range(k).select(
         F.col("id").alias("doc_id"), F.lit(base).alias("text")
     )
-    assert minhash_lsh_pairs(docs, portable=True).count() == k * (k - 1) // 2
+    assert minhash_lsh_pairs(docs).count() == k * (k - 1) // 2
 
 
 def test_embedding_pairs_salted_split_is_exact_and_cartesian_free(spark):
@@ -358,7 +295,7 @@ def test_lsh_bucket_stats_reports_the_cap(spark, docs):
         lsh_bucket_stats,
     )
 
-    normal = lsh_bucket_stats(docs, portable=True).head()
+    normal = lsh_bucket_stats(docs).head()
     assert normal["capped_buckets"] == 0
     assert normal["max_bucket"] <= SKETCH_BUCKET_CAP
 
@@ -367,7 +304,7 @@ def test_lsh_bucket_stats_reports_the_cap(spark, docs):
     mega = spark.range(n).select(
         F.col("id").alias("doc_id"), F.lit(base).alias("text")
     )
-    row = lsh_bucket_stats(mega, portable=True).head()
+    row = lsh_bucket_stats(mega).head()
     # all 4 bands collapse to one bucket each, every doc inside
     assert row["capped_buckets"] == 4
     assert row["max_bucket"] == n

@@ -126,6 +126,47 @@ def test_caching_reset_survives_a_concurrent_eviction():
     assert a.unpersisted != b.unpersisted
 
 
+def test_evicting_cache_first_callers_orphan_no_frame():
+    # Two first callers for one key: the first is still inside cache()
+    # when the second arrives. Unguarded, both see no previous holder,
+    # both cache, and the later write to _LAST drops a frame that is
+    # then never unpersisted.
+    import threading
+
+    from covid_engineering_spark.functions import evicting_cache
+    from covid_engineering_spark.functions.caching import reset
+
+    entered, second_cached = threading.Event(), threading.Event()
+
+    class _Frame:
+        def __init__(self, first):
+            self.first, self.cached, self.unpersisted = first, False, False
+
+        def cache(self):
+            self.cached = True
+            if self.first:
+                entered.set()
+                # bounded, so a serialised run cannot hang here
+                second_cached.wait(timeout=0.5)
+            else:
+                second_cached.set()
+            return self
+
+        def unpersist(self, blocking=False):
+            self.unpersisted = True
+
+    a, b = _Frame(first=True), _Frame(first=False)
+    t = threading.Thread(target=evicting_cache, args=(a, "k_first_race"))
+    t.start()
+    assert entered.wait(timeout=5)
+    evicting_cache(b, "k_first_race")
+    t.join(timeout=5)
+    reset()
+    assert a.cached and b.cached
+    # every frame that was cached was unpersisted, by eviction or reset
+    assert a.unpersisted and b.unpersisted
+
+
 def test_read_table_fan_out(spark):
     # A tiny single-row-group file scans as fewer splits than cores;
     # fan=True spreads it to the default parallelism, fan=False keeps

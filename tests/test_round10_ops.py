@@ -5,11 +5,6 @@
   excised, plus token accounting. Registered as
   ``dedup_substring_strip`` with a generated DuckDB twin that replays
   the span chain + positional token anti-join + ordered string_agg.
-- substring_dup_span_frame(hashed=True) — the xxhash64 gram-key
-  production path for the whole ExactSubstr family: 8-byte BIGINT
-  shuffle keys instead of ~50-byte gram strings; the span sets must be
-  IDENTICAL to the exact-string form on the fixture corpus (collision
-  probability ~n²/2⁶⁵ — zero at any testable n).
 - curate_corpus(strip_substrings=True) — the funnel composition: span
   stripping runs before normalize/dedup/cluster/split.
 """
@@ -153,65 +148,6 @@ def test_substring_strip_plan_shape(spark):
             assert "concat_ws" in line, line
 
 
-# --- hashed gram keys: the production-path equivalence --------------
-
-
-def test_hashed_gram_spans_equal_exact_string_spans(spark):
-    """The xxhash64 production path must produce the IDENTICAL span
-    frame as the exact-string registered form on the fixture corpus —
-    the only semantic difference is birthday collisions (~n²/2⁶⁵),
-    which cannot occur at any testable scale."""
-    from covid_engineering_spark.operators.dedup import (
-        substring_dup_span_frame,
-    )
-    from covid_engineering_spark.sources import read_table
-
-    docs = read_table(spark, SF_SMOKE, "documents")
-    key = ["doc_id", "island", "s", "e", "ng"]
-    exact = sorted(
-        tuple(r) for r in substring_dup_span_frame(docs).select(key).collect()
-    )
-    hashed = sorted(
-        tuple(r)
-        for r in substring_dup_span_frame(docs, hashed=True)
-        .select(key)
-        .collect()
-    )
-    assert exact == hashed
-    assert len(exact) > 0  # non-vacuous: the fixture has dup spans
-
-
-def test_hashed_gram_shuffle_keys_are_bigint(spark):
-    """The point of the hashed path: the dup-set aggregation and the
-    semi-join must key on BIGINT, not the gram string — assert the
-    gram column's type through the plan's schema."""
-    from covid_engineering_spark.operators.dedup import (
-        substring_dup_span_frame,
-    )
-    from covid_engineering_spark.sources import read_table
-
-    docs = read_table(spark, SF_SMOKE, "documents")
-    # the internal gram column only exists mid-plan; probe it by
-    # rebuilding the first stage the same way the operator does
-    from covid_engineering_spark.operators.dedup import SUBSTR_K
-
-    ws = F.split(F.col("text"), " ")
-    g = docs.select(
-        F.posexplode(
-            F.when(
-                F.array_size(ws) >= SUBSTR_K,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(ws) - SUBSTR_K),
-                    lambda i: F.xxhash64(
-                        F.concat_ws(" ", F.slice(ws, i + 1, SUBSTR_K))
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<bigint>"))
-        ).alias("pos", "gram")
-    )
-    assert dict(g.dtypes)["gram"] == "bigint"
-
-
 # --- pipe_near_dup_incremental_lsh: standing-index incremental -------
 
 
@@ -298,10 +234,10 @@ def test_near_dup_lsh_candidates_are_bounded_per_batch_doc(spark):
 
 
 def test_near_dup_lsh_prebuilt_index_is_identical(spark, tmp_path):
-    """The production path (VERDICT r10 #3): the standing index —
-    built once per corpus refresh, persisted, reloaded — must yield
-    the EXACT result set of the registered in-query derivation, both
-    from the in-memory ``build_near_dup_index`` frames and through the
+    """The standing index — built once per corpus refresh, persisted,
+    reloaded — must yield the EXACT result set of the registered
+    in-query derivation, both from the in-memory
+    ``build_near_dup_index`` frames and through the
     ``write_near_dup_index`` / ``read_near_dup_index`` parquet
     roundtrip (layout must not change semantics: caps, hash family,
     verification all baked into the index identically)."""
@@ -323,18 +259,14 @@ def test_near_dup_lsh_prebuilt_index_is_identical(spark, tmp_path):
             for r in df.collect()
         )
 
-    derived = rows(near_dup_incremental_lsh(corpus, batch, portable=True))
-    built = build_near_dup_index(corpus, portable=True)
-    assert rows(
-        near_dup_incremental_lsh(None, batch, portable=True, index=built)
-    ) == derived
+    derived = rows(near_dup_incremental_lsh(corpus, batch))
+    built = build_near_dup_index(corpus)
+    assert rows(near_dup_incremental_lsh(None, batch, index=built)) == derived
 
     path = str(tmp_path / "nd_index")
-    write_near_dup_index(corpus, path, portable=True, n_files=4)
+    write_near_dup_index(corpus, path, n_files=4)
     loaded = read_near_dup_index(spark, path)
-    assert rows(
-        near_dup_incremental_lsh(None, batch, portable=True, index=loaded)
-    ) == derived
+    assert rows(near_dup_incremental_lsh(None, batch, index=loaded)) == derived
     assert len(derived) > 0
 
 

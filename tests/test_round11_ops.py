@@ -425,12 +425,11 @@ def test_pushdown_probe_is_identical_and_prunes_scans(spark, tmp_path):
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     path = str(tmp_path / "ndidx")
-    write_near_dup_index(corpus, path, portable=True)
+    write_near_dup_index(corpus, path)
     plain = near_dup_incremental_lsh(
-        None, batch, portable=True,
-        index=read_near_dup_index(spark, path),
+        None, batch, index=read_near_dup_index(spark, path)
     )
-    push = probe_near_dup_index(spark, path, batch, portable=True)
+    push = probe_near_dup_index(spark, path, batch)
     assert sorted(map(tuple, plain.collect())) == sorted(
         map(tuple, push.collect())
     )
@@ -457,10 +456,8 @@ def test_pushdown_probe_falls_back_past_the_key_ceiling(spark, tmp_path):
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     path = str(tmp_path / "ndidx")
-    write_near_dup_index(corpus, path, portable=True)
-    out = probe_near_dup_index(
-        spark, path, batch, portable=True, max_keys=3
-    )
+    write_near_dup_index(corpus, path)
+    out = probe_near_dup_index(spark, path, batch, max_keys=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "INSET" not in plan
     assert out.count() >= 0
@@ -522,71 +519,6 @@ def test_quantile_hist_agrees_with_sketch_when_bound_is_zero(spark):
         for r in quantile_histogram(ev, "event_type").collect()
     }
     assert sk == hs
-
-
-# --- write_graph_index / graph_greedy_serve ----------------------------
-
-
-def test_graph_serve_is_bit_identical_to_the_lazy_walk(spark, tmp_path):
-    from covid_engineering_spark.operators.similarity import (
-        N_QUERIES,
-        graph_greedy_search,
-        graph_greedy_serve,
-        write_graph_index,
-    )
-    from covid_engineering_spark.sources import read_table
-
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    lazy = {
-        r.q_id: (r.found_id, r.found_cs)
-        for r in graph_greedy_search(emb, with_eval=False).collect()
-    }
-    path = str(tmp_path / "gidx")
-    write_graph_index(emb, path)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    served = {
-        q_id: (fid, cs)
-        for q_id, fid, cs in graph_greedy_serve(spark, path, q)
-    }
-    assert served == lazy
-
-
-def test_graph_index_scans_prune_on_the_serving_keys(spark, tmp_path):
-    # the layout contract: an In() over src_id / vec_id must reach
-    # parquet PushedFilters on the clustered index files
-    from covid_engineering_spark.operators.similarity import (
-        write_graph_index,
-    )
-    from covid_engineering_spark.sources import read_table
-
-    path = str(tmp_path / "gidx")
-    write_graph_index(read_table(spark, SF_SMOKE, "embeddings"), path)
-    for sub, col in (("edges", "src_id"), ("vectors", "vec_id")):
-        df = spark.read.parquet(f"{path}/{sub}").filter(
-            F.col(col).isin([1, 2, 3, 40, 41])
-        )
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert f"PushedFilters: [In({col}" in plan, plan[:500]
-
-
-def test_graph_serve_enforces_the_frontier_bound(spark, tmp_path):
-    from covid_engineering_spark.operators.similarity import (
-        N_QUERIES,
-        graph_greedy_serve,
-        write_graph_index,
-    )
-    from covid_engineering_spark.sources import read_table
-
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    path = str(tmp_path / "gidx")
-    write_graph_index(emb, path)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    with pytest.raises(ValueError, match="frontier bound"):
-        graph_greedy_serve(spark, path, q, max_keys=3)
 
 
 # --- emb_outliers -----------------------------------------------------

@@ -454,7 +454,7 @@ def test_stream_near_dup_probes_the_standing_index(spark, tmp_path):
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     arriving = docs.filter(F.col("doc_id") % 5 == 0)
     idx_path = str(tmp_path / "ndidx")
-    write_near_dup_index(corpus, idx_path, portable=True)
+    write_near_dup_index(corpus, idx_path)
 
     # two 'arrivals' of the batch stream
     src = str(tmp_path / "doc_stream")
@@ -471,7 +471,7 @@ def test_stream_near_dup_probes_the_standing_index(spark, tmp_path):
         got.extend(tuple(r) for r in pairs.collect())
 
     q = (
-        stream_near_dup(spark, src, idx_path, sink, portable=True)
+        stream_near_dup(spark, src, idx_path, sink)
         .trigger(availableNow=True)
         .start()
     )
@@ -482,7 +482,6 @@ def test_stream_near_dup_probes_the_standing_index(spark, tmp_path):
         for r in near_dup_incremental_lsh(
             None,
             arriving,
-            portable=True,
             index=read_near_dup_index(spark, idx_path),
         ).collect()
     )
