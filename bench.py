@@ -45,34 +45,34 @@ HEADLINE = [
     "dedup_minhash_lsh",
     "ann_cosine_topk",
     "text_token_stats",
-    # Round-4 additions (append-only so the first 17 stay comparable
-    # round-over-round): the flagship LLM-tier composites, the
+    # Append-only from here (so the entries above stay comparable
+    # across artifacts): the flagship LLM-tier composites, the
     # one-shuffle funnel fold, and the blocked kNN graph.
     "pipe_curate_corpus",
     "pipe_dedup_incremental",
     "ts_funnel_steps",
     "emb_knn_graph",
-    # Round-5 additions: semantic dedup over embeddings; in-batch
+    # Semantic dedup over embeddings; in-batch
     # hard-negative mining (the linear N x batch_cap pair pipeline).
     "emb_semdedup",
     "emb_hard_negatives",
-    # Round-6 additions: the widest new TPC-H shapes (double nation
+    # The widest new TPC-H shapes (double nation
     # join; outer-join histogram), the integer EWMA window, and the
     # map-side int8 quantization encode.
     "q7_nation_volume",
     "q13_cust_distribution",
     "ts_ewma",
     "emb_sq8",
-    # Round-6 late additions: the heaviest of the TPC-H completion
+    # The heaviest of the TPC-H completion
     # batch — Q9's five-table profit rollup and Q21's distinct-heavy
     # per-order EXISTS/NOT-EXISTS collapse.
     "q9_product_profit",
     "q21_suppliers_waiting",
-    # Round-6 batch-2 representatives: the corpus-scan-heavy LM
+    # The corpus-scan-heavy LM
     # quality gate and the CMS sketch build + point-query pass.
     "text_perplexity",
     "a24_cms_heavy",
-    # Round-7 additions: the rewritten distributed-ntile segmentation
+    # The rewritten distributed-ntile segmentation
     # (global_ntile: range-exchange + pid-window + broadcast offsets),
     # its one-pass approx cut-point audit, the JL projection recall
     # eval (two brute-force passes), and the k-anonymity release gate.
@@ -83,20 +83,20 @@ HEADLINE = [
     "pipe_weighted_sample",
     "text_gopher_rules",
     "ts_holt",
-    # Round-8 additions: the Misra-Gries bounded-state frequency
+    # The Misra-Gries bounded-state frequency
     # summary (two WindowGroupLimit-pruned window stages) and DSIR
     # importance-weighted data selection (corpus-wide token explode
     # collapsed to a 512-bucket broadcast model).
     "a26_mg_heavy",
     "pipe_dsir_select",
-    # Round-9 additions: the paper's Gumbel-top-k DSIR resampling rule
+    # The paper's Gumbel-top-k DSIR resampling rule
     # (same weight plan as pipe_dsir_select + one map-side hash+libm
     # noise expression) and the ExactSubstr duplicated-span analysis
     # (positional k-grams -> map-side-combined dup set -> semi-join ->
     # gaps-and-islands merge).
     "pipe_dsir_gumbel",
     "dedup_substring",
-    # Round-10 additions: the ExactSubstr span-REMOVAL form (span frame
+    # The ExactSubstr span-REMOVAL form (span frame
     # + per-doc span collapse + corpus join + map-side token excision)
     # and the standing-index incremental near-dup (batch signatures
     # probe the corpus band buckets; candidates <= |batch|*bands*cap).
@@ -107,7 +107,7 @@ HEADLINE = [
     # index trained on its codebook.
     "emb_kmeans_lloyd",
     "ann_ivf_kmeans_topk",
-    # Round-10 late additions: the Bloom-prescreened decontamination
+    # The Bloom-prescreened decontamination
     # (bit-set build + k broadcast probes + exact verify on survivors),
     # the degree-ordered triangle census over the kNN graph (the
     # O(m^1.5)-bounded wedge join), the char-entropy quality gate
@@ -130,11 +130,10 @@ HEADLINE = [
     # plus the windowed top-k (counts agg + hour-cardinality rank).
     # graph_kcore stays OFF the headline by design: its convergence
     # loop runs ~10 checkpointed rounds at sf0.1 (an iterative
-    # algorithm, like dedup_clusters' CC which is also unbenched) —
-    # the scale probe covers it instead.
+    # algorithm, like dedup_clusters' CC which is also unbenched).
     "pipe_tokenizer_fertility",
     "stream_topk",
-    # Round-11 additions: the two-stage retrieval rerank (ADC
+    # The two-stage retrieval rerank (ADC
     # shortlist + exact re-rank of |Q|·25 candidates), the 4-round
     # synchronous LPA communities over the symmetrized kNN graph,
     # the per-source JS mixture audit (vocabulary-bounded after one
@@ -178,10 +177,10 @@ def main() -> None:
     from covid_engineering_spark.session import get_spark
     from covid_engineering_spark.queries import registry
 
-    # Machine-state stamp (VERDICT r07 "What's wrong" #2): the r06/r07
-    # closing benches were load-contaminated with no way to prove it
-    # from the artifact. loadavg before/after makes contamination
-    # visible IN the JSON — a 1-minute loadavg near/above the CPU
+    # Machine-state stamp: a load-contaminated bench is otherwise
+    # impossible to tell from a clean one by its artifact. loadavg
+    # before/after makes contamination visible IN the JSON — a
+    # 1-minute loadavg near/above the CPU
     # count at start means other work shared the box and the wall
     # numbers measure contention, not plans.
     def _loadavg() -> list[float]:
@@ -191,9 +190,9 @@ def main() -> None:
             return []
 
     def _cpu_ticks() -> dict[str, int]:
-        """user/steal ticks from /proc/stat (r12): this sandbox runs on
-        a host that steals 2-3x in bad windows (VERDICT r11), and
-        loadavg cannot see steal — a run whose steal delta is a large
+        """user/steal ticks from /proc/stat: a shared host can steal
+        2-3x of the CPU in bad windows, and loadavg cannot see
+        steal — a run whose steal delta is a large
         fraction of its user delta measured host weather, not plans.
         Recorded before/after so contamination is provable IN the
         artifact."""
@@ -208,7 +207,7 @@ def main() -> None:
 
     spark = get_spark(app_name="bench", master=f"local[{cpus}]")
 
-    # Keep the artifact tail readable (VERDICT r07 "What's wrong" #3):
+    # Keep the artifact tail readable:
     # nine registered plans contain Window specs with no partitionBy,
     # every one over a frame bounded by construction (<=P partition
     # totals, <=K codebook seeds, one date spine) — the allowlist test
@@ -241,7 +240,7 @@ def main() -> None:
     # throughput with single-run jitter squeezed out; min/max spread is
     # reported per query so an unstable timing is visible, not hidden.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    # Measurement-bug fix (r12, VERDICT r11 #1): evicting_cache keeps a
+    # Measurement-bug guard: evicting_cache keeps a
     # sameResult fast path that let every TIMED run reuse the frame the
     # UNTIMED warmup materialized — so cache-bearing queries were timing
     # cache reads, not per-execution cost. caching.reset() (unpersist +
@@ -283,7 +282,7 @@ def main() -> None:
     # nonzero capped-bucket count on this data means the band-cap
     # chain-edge approximation (SKETCH_BUCKET_CAP) is ACTIVE for
     # dedup_minhash_lsh, which a reader of the timing should know —
-    # surfaced automatically rather than opt-in (round-3 advice).
+    # surfaced automatically rather than opt-in.
     try:
         from covid_engineering_spark.operators.dedup import lsh_bucket_stats
         from covid_engineering_spark.sources import read_table
@@ -332,7 +331,7 @@ def main() -> None:
     # contract is: full record (with per-query spread + preflight) goes
     # to BENCH_LOCAL.json next to this script, and the LAST stdout line
     # is the compact headline (total + per-query medians only, ~1 KB) —
-    # the number can no longer be truncated away (VERDICT r06 #2/#4).
+    # the number can no longer be truncated away.
     try:
         local_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"

@@ -5,10 +5,8 @@ from covid_engineering_spark.functions.diagnostics import (
 )
 from covid_engineering_spark.functions.scalar import (
     clamp_eps,
-    davg,
     dsum,
     missing_count,
-    safe_div,
 )
 from covid_engineering_spark.functions.skew import (
     BLOCK_CAP,
@@ -20,12 +18,10 @@ __all__ = [
     "BLOCK_CAP",
     "SALTED_JOIN_KEYS",
     "clamp_eps",
-    "davg",
     "dsum",
     "evicting_cache",
     "key_skew_stats",
     "missing_count",
     "non_finite_counts",
-    "safe_div",
     "salted_block_sides",
 ]

@@ -42,25 +42,12 @@ def dsum(c: Column | str, scale: int = 2) -> Column:
     return F.round(F.sum(c.cast("decimal(18,6)")).cast("double"), scale)
 
 
-def davg(c: Column | str, scale: int = 6) -> Column:
-    """Deterministic mean built from the exact decimal sum (see dsum)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.round(
-        (F.sum(c.cast("decimal(18,6)")).cast("double") / F.count(c)), scale
-    )
-
-
 def clamp_eps(c: Column | str, eps: float = 1e-6) -> Column:
     """Division-by-zero guard: ``np.maximum(x, eps)`` in the reference
     (main.py:549-552) → ``GREATEST(x, eps)``.
     """
     c = F.col(c) if isinstance(c, str) else c
     return F.greatest(c, F.lit(eps))
-
-
-def safe_div(num: Column, den: Column | str, eps: float = 1e-6) -> Column:
-    """``num / max(den, eps)`` — the reference's guarded ratio (F4)."""
-    return num / clamp_eps(den, eps)
 
 
 def missing_count(*cols: str) -> Column:

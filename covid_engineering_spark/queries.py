@@ -9,15 +9,11 @@ SQL twin (the last holdout, the IVF ANN index, switched its registered
 codebook to a deterministic SQL-replayable form; the MLlib-KMeans
 codebook stays available as a lib function).
 
-Registration ORDER is part of the driver contract: the driver hashes
-exactly the first 50 registry entries, so ``PRIORITY`` pins the
-verification window explicitly. The window rotates between driver
-runs: entries without a driver CORRECTNESS row yet go first, then the
-stalest ``last checked`` rows in LEDGER.md. Everything after slot 50
-holds a green driver row from an earlier run (see LEDGER.md, regenerated
-from the CORRECTNESS_r*.json artifacts) or sits in the explicit
-``WINDOW_OVERFLOW`` queue, and keeps its local DuckDB-differential
-coverage either way (tests/test_oracle.py).
+Registry order is module order (``_MODULES``, then each module's
+``QUERIES`` order); callers look queries up by name. Every registered
+query is checked against its oracle by the tier-1 suite
+(tests/test_oracle.py) and, over the whole registry at any scale, by
+``scripts/full_sweep.py``.
 """
 
 from __future__ import annotations
@@ -58,84 +54,6 @@ _MODULES = [
     streaming,
 ]
 
-#: The first 50 registry entries — the driver's verification window.
-#: The rotation policy is ledger-driven (LEDGER.md, regenerated by
-#: scripts/verification_ledger.py from CORRECTNESS_r*.json):
-#:   1. entries with NO green driver row ever go first;
-#:   2. entries whose code or registered output changed after their
-#:      last green row re-enter (tests/test_registry_order.py
-#:      CHANGED_SINCE_LAST_GREEN);
-#:   3. newly added operators claim slots as they land;
-#:   4. remaining slots re-verify the STALEST `last checked` rows in
-#:      LEDGER.md.
-#:
-#: Entries left out with an in-window sibling on the identical code
-#: path: pipe_keep_best (pipe_curate_corpus/dedup_clusters — same CC +
-#: retention path), graph_pagerank/graph_kcore (graph_triangle_count —
-#: same kNN-graph build), x1_sird_sim (the two wrangling entries cover
-#: the SQL-string expression assembly), p4_null_drop (p2_filter_eq +
-#: p5_masked_assign — the same projection/filter/null family).
-PRIORITY = [
-    # 1: never green.
-    "text_js_divergence",
-    "ts_decompose",
-    "pipe_quality_classifier",
-    "pipe_curriculum_order",
-    "graph_label_propagation",
-    "ann_rerank_topk",
-    "emb_outliers",
-    "a27_quantile_sketch",
-    "a28_quantile_hist",
-    # 2: changed after their last green rows.
-    "pipe_curate_corpus",
-    "dedup_clusters",
-    "ann_graph_greedy",
-    "graph_triangle_count",
-    "dedup_minhash_lsh",
-    "pipe_bloom_decontaminate",
-    "pipe_near_dup_incremental_lsh",
-    "q21_suppliers_waiting",
-    "wrangle_clean_complete",
-    "w6_interpolate",
-    # 4: the stalest `last checked` rows, unchanged since.
-    "a25_quantile_cuts",
-    "a2_groupby_sum",
-    "a3_groupby_avg",
-    "a4_global_sums",
-    "a5_global_avg",
-    "a6_minmax",
-    "a7_distinct",
-    "f2_round",
-    "f3_replace",
-    "f4_clamp_div",
-    "f6_null_count",
-    "f8_format",
-    "p2_filter_eq",
-    "p3_date_range",
-    "p5_masked_assign",
-    "pipe_decontaminate",
-    "pipe_quota_source",
-    "s6_jsonl_scan",
-    "s7_orc_roundtrip",
-    "s8_sink_compact",
-    "s9_sink_range_sorted",
-    "set_intersect",
-    "stream_static_enrich",
-    "stream_tumble",
-    "text_langid",
-    "text_repetition",
-    "text_tfidf",
-    "text_top_terms",
-    "ts_downtime_detect",
-    "ts_resample",
-    "w7_rank",
-]
-
-#: The overflow queue: pinned to the FRONT of the post-window tail
-#: (slots 51+, asserted in tests/test_registry_order.py) and FIRST in
-#: line for the next window.
-WINDOW_OVERFLOW: list[str] = []
-
 
 def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -144,14 +62,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if overlap:
             raise ValueError(f"duplicate query names: {sorted(overlap)}")
         out.update(mod.QUERIES)
-    missing = [
-        n for n in PRIORITY + WINDOW_OVERFLOW if n not in out
-    ]
-    if missing:
-        raise ValueError(f"PRIORITY names without implementations: {missing}")
-    ordered = {n: out[n] for n in PRIORITY + WINDOW_OVERFLOW}
-    ordered.update({n: fn for n, fn in out.items() if n not in ordered})
-    return ordered
+    return out
 
 
 #: Queries whose DataFrame CONSTRUCTION performs staging writes (CSV/

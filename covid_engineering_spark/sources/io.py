@@ -109,14 +109,13 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     vectorized reader rejects outright. With
     ``spark.sql.legacy.parquet.nanosAsLong=true`` the column arrives as
     LongType nanos; integer-divide to micros (exact — a double division
-    would lose precision past 2^53) and rebuild a timestamp_ntz. Falls
-    back to a driver-side pyarrow read only if the session config is
-    immutable (never on our own sessions).
+    would lose precision past 2^53) and rebuild a timestamp_ntz. The
+    key is set once per session by ``get_spark()`` or
+    ``configure_existing``, never here: this read does not write to a
+    session that several clients may share. A foreign session whose
+    config is immutable (so the key could not be set) falls back to a
+    driver-side pyarrow read.
     """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     try:
         raw = spark.read.parquet(path)
         if isinstance(raw.schema["ts"].dataType, T.LongType):

@@ -4,9 +4,8 @@ adversarial fixture WITH NULL ``documents.text`` and NULL
 operators diverge cross-engine (hash mismatch), which break outright
 (exception), and which already hash-match through the NULLs.
 
-Round-8 scouting established the failure set informally; this script
-made it reproducible, and the round-9 hardening was driven through it
-fix-by-fix (18 operators, all green). The adversarial fixture now
+The NULL-payload hardening was driven through this script fix-by-fix
+(18 operators, all green). The adversarial fixture now
 carries the same NULL cadence natively (text/n_chars every 6th doc,
 embedding every 5th vector — this script's injection is idempotent on
 it), so the committed suite guards the behavior; the script remains

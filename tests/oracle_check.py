@@ -43,7 +43,7 @@ def _canon(v):
         # hashes a DuckDB HUGEINT/decimal128 column differently from
         # Spark's BIGINT, so the local harness must fail on the same
         # divergence instead of masking it via str(Decimal('1')) == '1'
-        # (the r03/r04 ts_anomaly incident — see TESTDATA.md, oracle
+        # (the ts_anomaly incident — see TESTDATA.md, oracle
         # result type contract).
         return f"dec:{v}"
     if isinstance(v, float):

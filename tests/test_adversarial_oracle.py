@@ -6,7 +6,7 @@ vectors, and a multi-thousand-word document. The well-behaved driver
 testdata never exercises these paths; this net caught two real oracle
 defects on first run (the f8 money formatter broke on negative cents,
 and a18's pure-relative error bound was undefined at an exact
-percentile of 0), and the round-9 NULL-payload hardening was driven
+percentile of 0), and the NULL-payload hardening was driven
 through it (18 operators: NULL text diverged 11 text/pipe oracles
 cross-engine, NULL embeddings broke 7 ANN/emb oracles).
 
@@ -47,10 +47,10 @@ PRECONDITION_VIOLATED = {
     "pipe_cdc_upsert",
 }
 
-#: NULL payloads (round 9): NULL `documents.text` and NULL
+#: NULL payloads: NULL `documents.text` and NULL
 #: `embeddings.embedding` rows are baked into the fixture below, and
 #: every twinned oracle must hash-match through them. The per-operator
-#: semantics (decided r09, documented at each operator): per-document
+#: semantics (documented at each operator): per-document
 #: text metrics propagate NULL; gate/keep verdicts are literal FALSE
 #: for a payload-less document; corpus aggregates count payload-less
 #: docs but NULL-skip their token sums; index/train/eval embedding ops
@@ -141,7 +141,7 @@ def _pathological_rows():
             # every document oracle must hash-match through them.
             # NULL text (and n_chars) every 6th doc — co-prime with
             # the lang/source cycles, so payload-less rows carry both
-            # present and NULL metadata (the r09 hardening set).
+            # present and NULL metadata (the NULL-payload hardening set).
             (i,
              None if i % 6 == 0 else texts[i % len(texts)],
              None if i % 7 == 0 else "xx",

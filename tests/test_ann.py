@@ -60,7 +60,7 @@ def test_ivf_probes_bound_the_scan(spark):
 
 
 def test_kmeans_codebook_beats_or_matches_stride(spark, brute_force):
-    # The learned codebook must not lose to the round-1 naive baseline
+    # The learned codebook must not lose to the naive stride baseline
     # (every (n//K)-th vector) at the SAME probe budget.
     from pyspark.sql import functions as F
 

@@ -205,7 +205,7 @@ def test_estimators_match_golden_on_real_netherlands(spark):
 
 
 def test_transfer_simulation_missing_country_returns_empty(spark):
-    # ADVICE guard: an absent country must yield an empty frame, not a
+    # Guard: an absent country must yield an empty frame, not a
     # driver TypeError (head() on nothing) or an executor IndexError.
     from covid_engineering_spark.operators.covid import (
         synthetic_population,

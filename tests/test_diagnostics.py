@@ -84,10 +84,10 @@ def test_evicting_cache_reuses_warm_cache_on_same_plan(spark):
 
 
 def test_caching_reset_unpersists_and_forgets(spark):
-    # bench.py calls reset() before every timed run (r12, VERDICT r11
-    # #1): every registered frame must be unpersisted and the registry
-    # emptied, so the next invocation re-materializes from source —
-    # cross-run warm-cache reuse can never reach a timed region.
+    # bench.py calls reset() before every timed run: every registered
+    # frame must be unpersisted and the registry emptied, so the next
+    # invocation re-materializes from source — cross-run warm-cache
+    # reuse can never reach a timed region.
     from covid_engineering_spark.functions import evicting_cache
     from covid_engineering_spark.functions.caching import _LAST, reset
 

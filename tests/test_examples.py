@@ -41,7 +41,7 @@ def test_corpus_curation_runs(spark, tmp_path, capsys):
         "weight floor -425592 micros" in out
     )
     assert "pps review sample: 100 docs" in out
-    # round-11 stages: deterministic (md5 weights/shuffle keys, fixed
+    # deterministic stages (md5 weights/shuffle keys, fixed
     # data), pinned exactly
     assert "linear quality model: 135/500 docs past the gate" in out
     assert "mixture audit: most divergent source = src18" in out
@@ -110,7 +110,7 @@ def test_similarity_search_runs(spark, capsys):
     line = next(l for l in out.splitlines() if l.startswith("graph beam search"))
     assert int(line.split(":")[1].strip().split(" ")[0]) >= 1
     assert "embedding near-dup pairs at cosine >= 0.4: 5" in out
-    # round-11 stages: the rerank recall and the LPA/outlier counts are
+    # the rerank recall and the LPA/outlier counts are
     # threshold/rank crossings over 6dp cosines on fixed data — pinned
     assert "two-stage rerank recall vs brute force: 0.375" in out
     assert "lpa communities: 48 (largest 47 vectors)" in out
@@ -122,7 +122,7 @@ def test_similarity_search_runs(spark, capsys):
     # Recall figures assert a tolerance band, not the exact decimal:
     # a Spark version change in hash/sort-null ordering would shift
     # the last digit and should read as environment drift, not a
-    # recall regression (round-3 advice). The hash-checked driver
+    # recall regression. The hash-checked driver
     # path still pins these computations exactly.
     def recall_of(prefix: str) -> float:
         line = next(l for l in out.splitlines() if l.startswith(prefix))
@@ -187,7 +187,7 @@ def test_streaming_pipeline_runs(spark, tmp_path, capsys):
     assert "streaming dedup: 1143 arrivals -> 1000 unique events" in out
     assert "stream-static enrich ≡ batch: 4 segments" in out
     assert "stateful totals: 15 users, 1143 events folded" in out
-    # r11: ingestion-time near-dup via foreachBatch against the
+    # ingestion-time near-dup via foreachBatch against the
     # standing index (portable hashes, fixed data — deterministic)
     assert (
         "streaming near-dup vs standing index: 11 pairs across "

@@ -35,3 +35,15 @@ def test_all_queries_run(spark):
         df = fn(spark, SF_SMOKE)
         assert df.columns, name
         assert df.count() >= 0, name
+
+
+def test_entry_smoke_and_wrapper_names(spark):
+    # The driver's first call: the flagship top-5 customers by revenue.
+    import __spark_entry__
+
+    rows = __spark_entry__.entry(spark).collect()
+    assert len(rows) == 5
+    assert list(rows[0].asDict()) == ["c_custkey", "c_name", "revenue"]
+    revenue = [r["revenue"] for r in rows]
+    assert revenue == sorted(revenue, reverse=True)
+    assert list(__spark_entry__.queries()) == list(_REG)

@@ -4,8 +4,8 @@ The driver value-hashes the Spark result against the DuckDB oracle's
 arrow output; the hash is type-sensitive, so an oracle column that
 arrives as decimal128(38,0) (DuckDB's HUGEINT rendering of an uncast
 ``SUM(BIGINT)``) mismatches a Spark BIGINT even when every value is
-numerically identical.  That exact class cost two rounds on
-``ts_anomaly`` (r03/r04) and was copy-inherited by
+numerically identical.  That exact class kept ``ts_anomaly``
+red against the driver and was copy-inherited by
 ``ts_seasonal_anomaly`` — this lint makes it structurally impossible
 to ship again: every registered oracle is executed against sf0.001
 and its arrow schema must contain no decimal column (no Spark twin

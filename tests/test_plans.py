@@ -278,11 +278,11 @@ BOUNDED_GLOBAL_WINDOWS = {
     "ann_ivfpq_topk": 4,
     # mixture plan: ranks the <=|sources| summary frame.
     "pipe_mixture_plan": 2,
-    # r11 curriculum: the global_ntile offsets window (<=P rows); the
+    # curriculum: the global_ntile offsets window (<=P rows); the
     # chained prefix sum's own offsets window sits behind the lazy
     # localCheckpoint boundary, exactly like rfm's later stages.
     "pipe_curriculum_order": 1,
-    # r11 two-stage rerank: inherits the ADC stage's md5-rank PQ seed
+    # two-stage rerank: inherits the ADC stage's md5-rank PQ seed
     # draw (<=K rows after TakeOrdered), same pair as ann_pq_adc_topk.
     "ann_rerank_topk": 2,
     # SIRD transfer: the single shared 30-day date spine.
@@ -311,7 +311,7 @@ def test_every_unpartitioned_window_is_on_the_bounded_allowlist(spark):
 
     def window_nodes(obj, out):
         # one toJSON round trip per query instead of one py4j call per
-        # plan node (the r11 traversal spent ~45s of pure socket
+        # plan node (a per-node traversal spent ~45s of pure socket
         # round-trips across the registry); the JSON tree embeds
         # subquery plans as ordinary fields, so the walk still covers
         # windows inside subquery expressions (none today, but a

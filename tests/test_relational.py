@@ -1,7 +1,7 @@
 """Pins for the relational tier's scale-path operators.
 
-``global_ntile`` (operators/relational.py) is the round-7 replacement
-for the r06 ``rfm_segments`` plan whose three global
+``global_ntile`` (operators/relational.py) is the replacement
+for the earlier ``rfm_segments`` plan whose three global
 ``Window.orderBy()`` windows funneled the whole per-customer frame
 through ONE task.  The replacement must be *bit-identical* to the
 window form — the window form is the exactness oracle here (the same

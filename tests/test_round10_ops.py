@@ -1,4 +1,4 @@
-"""Round-10 library additions.
+"""Library operators: semantic pins beyond the oracle differential.
 
 - substring_strip — the removal half of ExactSubstr (Lee et al. 2022
   §4.1): per document the text with every merged duplicated span
@@ -121,8 +121,8 @@ def test_substring_strip_accounting_invariant(spark):
 def test_substring_strip_plan_shape(spark):
     """No cartesian anywhere; the token excision is a higher-order
     expression over the joined frame — the only explode in the plan
-    is the span frame's gram explode, derived ONCE (since the r11
-    optimization round the positional gram frame is cached, so the
+    is the span frame's gram explode, derived ONCE (the positional
+    gram frame is cached, so the
     dup-set branch and the position branch read the same cache
     instead of each re-deriving the explode), and never a token-level
     explode for the strip itself."""
@@ -133,7 +133,7 @@ def test_substring_strip_plan_shape(spark):
     df = registry()["dedup_substring_strip"](spark, SF_SMOKE)
     assert not has_cartesian(df)
     plan = simple_plan(df)
-    # Since the r11 optimization round the positional gram frame is
+    # The positional gram frame is
     # cached, so the consumers read InMemoryTableScan and the ONE
     # gram posexplode lives in the cache-build subplan (which the
     # plan string may print once per consuming scan — counting
@@ -351,8 +351,8 @@ def test_kmeans_lloyd_corpus_never_shuffles_for_assignment(spark):
     # no exchange partitioned on vec_id (a corpus repartition)
     assert "hashpartitioning(vec_id" not in plan, plan
     # The md5-rank seed draw must plan TakeOrderedAndProject (per-
-    # partition top-K + K-row merge, never a global sort). Since r11
-    # the Lloyd rounds localCheckpoint the ≤k-row codebook (the
+    # partition top-K + K-row merge, never a global sort). The
+    # Lloyd rounds localCheckpoint the ≤k-row codebook (the
     # CC-loop lineage-truncation discipline), so the seed draw lives
     # in the pre-checkpoint round plans, not the registered query's
     # final plan — assert it on the seed frame the rounds consume.
@@ -1112,7 +1112,7 @@ def test_graph_greedy_beats_single_path_and_stays_in_topk_band(spark):
 
 
 def test_graph_greedy_query_axis_serving_path(spark):
-    """The query-axis levers (VERDICT r10 #5): ``n_queries`` widens
+    """The query-axis levers: ``n_queries`` widens
     the query set against the SAME standing graph, ``with_eval=False``
     returns the serving shape (one row per query, no brute-force
     columns). The serving path must agree with the eval form's found

@@ -1,4 +1,4 @@
-"""Round-11 library additions.
+"""Library operators: semantic pins beyond the oracle differential.
 
 - text_js_divergence — per-source Jensen–Shannon divergence vs the
   corpus unigram distribution (mixture-audit signal); absent-token

@@ -1,4 +1,4 @@
-"""Behavior tests for the round-4 operators: containment dedup,
+"""Behavior tests for these operators: containment dedup,
 corpus duplicated-n-gram rate, integer PageRank, dataset-card rollup,
 and the PQ encode / ADC search pair. (Value-level correctness against
 DuckDB is covered for all of them by the parametrized oracle

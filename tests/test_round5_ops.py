@@ -1,4 +1,4 @@
-"""Behavior tests for the round-5 extension operators that don't fit
+"""Behavior tests for the extension operators that don't fit
 an existing family file: the arg-max aggregate (a20_max_by).
 """
 

@@ -1,4 +1,4 @@
-"""Semantic tests for the round-6 operators, beyond the oracle
+"""Semantic tests for these operators, beyond the oracle
 differential (tests/test_oracle.py already hash-checks every
 registered query against DuckDB): bound and invariant properties the
 differential can't express — quantization-error bounds, recall
@@ -314,7 +314,7 @@ def test_q22_every_result_customer_lacks_urgent_orders(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-6 late tier: Hamming ANN, bigram LM, blocklist gate, autocorr
+# Hamming ANN, bigram LM, blocklist gate, autocorr
 # ---------------------------------------------------------------------------
 
 

@@ -1,4 +1,4 @@
-"""Local pins for the round-7 operators (beyond the sf0.001 DuckDB
+"""Local pins for these operators (beyond the sf0.001 DuckDB
 differential every oracle gets in tests/test_oracle.py):
 
 - a25_quantile_cuts — the one-pass approx cut-point audit must stay
@@ -102,7 +102,7 @@ def test_weighted_sample_is_pps_exact(spark):
 
 def test_weighted_sample_exact_past_int64_product(spark):
     """The crossing test widens w_cum to DECIMAL(38,0) before the
-    multiply (ADVICE r07): with BIGINT arithmetic, w_cum * k wraps
+    multiply: with BIGINT arithmetic, w_cum * k wraps
     past 2^63 and the verdicts silently corrupt. Weights of ~4.6e17
     chars push w_cum * 100 to ~9.2e19 > 2^63 ≈ 9.2e18; the verdicts
     must still match exact Python big-int division.
@@ -228,7 +228,7 @@ def test_k_anonymity_gate_is_exact_and_non_degenerate(spark):
 
 def test_k_anonymity_counts_null_quasi_identifiers(spark):
     """NULL quasi-identifier values form a group, never a gap: the
-    null-safe join (ADVICE r07, medium) must emit every document —
+    null-safe join must emit every document —
     NULL-metadata docs get counted, then suppressed or released like
     any other tuple, not silently dropped from the audit.
     """

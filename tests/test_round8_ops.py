@@ -1,4 +1,4 @@
-"""Round-8 births.
+"""Semantic pins for these operators.
 
 - a26_mg_heavy — distributed Misra-Gries summary: the theorem's two
   guarantees (underestimate within N/(k+1); every item over N/(k+1)

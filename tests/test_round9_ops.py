@@ -1,14 +1,11 @@
-"""Round-9 library additions.
+"""Library operators: semantic pins beyond the oracle differential.
 
 - dsir_gumbel_topk_exact — the paper's Gumbel-top-k resampling rule
   (Xie et al. 2023 §2.3) in integer micro-units: the whole selection,
   score column included, must hash-match its generated DuckDB twin
   (dsir_gumbel_sql) on the driver fixture AND on the NULL-payload
-  adversarial corpus. Registered as ``pipe_dsir_gumbel``,
-  overflow-pinned (the r09 window is fully spoken for by the
-  NULL-hardening re-green set — VERDICT r08 #3/#6's "overflow-pinned
-  otherwise" path); these differentials prove the pairing while the
-  entry waits at the front of the tail for the r10 window.
+  adversarial corpus. Registered as ``pipe_dsir_gumbel``; these
+  differentials prove the pairing on both inputs.
 """
 
 import pyspark.sql.functions as F

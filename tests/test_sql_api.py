@@ -38,7 +38,7 @@ def test_views_cover_all_star_tables(spark):
 
 
 # ---------------------------------------------------------------------------
-# Full SQL-surface contract (round-4): every registered query must be
+# Full SQL-surface contract: every registered query must be
 # reachable via spark.sql, two ways —
 #   1. its oracle twin, where written in portable ANSI SQL, runs
 #      unchanged on Spark over the same views and matches the
@@ -63,25 +63,25 @@ _ORC = oracles()
 
 DUCKDB_ONLY = {
     "a11_percentile",
-    # r07: quantile_cont / list_dot_product / the md5(CAST(... AS
+    # quantile_cont / list_dot_product / the md5(CAST(... AS
     # VARCHAR)) idiom are DuckDB dialect
     "a25_quantile_cuts",
     "emb_rp_recall",
     "pipe_weighted_sample",
     "text_gopher_rules",
     "ts_holt",
-    # r08: the '0x'||substr(md5..)::BIGINT portable-hash idiom (a26)
+    # the '0x'||substr(md5..)::BIGINT portable-hash idiom (a26)
     # and string_split/unnest token explosion (dsir) are DuckDB
     # dialect
     "a26_mg_heavy",
     "pipe_dsir_select",
-    # r09: same string_split/unnest weights chain + portable-hash
+    # same string_split/unnest weights chain + portable-hash
     # idiom as pipe_dsir_select
     "pipe_dsir_gumbel",
-    # r09: string_split / generate_series-unnest / list-slice
+    # string_split / generate_series-unnest / list-slice
     # positional grams are DuckDB dialect
     "dedup_substring",
-    # r10: same positional-gram chain + string_agg-ORDER-BY token
+    # same positional-gram chain + string_agg-ORDER-BY token
     # reassembly (strip); string_split/list_transform band chain +
     # '0x'||md5 hashes (near-dup LSH probe); list_dot_product /
     # list_transform / md5(CAST..VARCHAR) k-means chain (both k-means
@@ -90,25 +90,25 @@ DUCKDB_ONLY = {
     "pipe_near_dup_incremental_lsh",
     "emb_kmeans_lloyd",
     "ann_ivf_kmeans_topk",
-    # r10: the _SH4_SQL string_split/list_transform shingle chain
+    # the _SH4_SQL string_split/list_transform shingle chain
     "pipe_contamination_report",
-    # r10: same shingle chain + '0x'||md5 bit positions + unnest(range)
+    # same shingle chain + '0x'||md5 bit positions + unnest(range)
     "pipe_bloom_decontaminate",
-    # r10: list_dot_product kNN edge chain + unnest([..]) corner fanout
+    # list_dot_product kNN edge chain + unnest([..]) corner fanout
     "graph_triangle_count",
-    # r10: string_split/unnest char explosion + '//' integer division
+    # string_split/unnest char explosion + '//' integer division
     "text_entropy",
-    # r10: list_transform/list_dot_product power rounds + '//' division
+    # list_transform/list_dot_product power rounds + '//' division
     "emb_pca_power",
-    # r10: string_split/list_transform bigram chain + split_part
+    # string_split/list_transform bigram chain + split_part
     "text_collocations",
-    # r10: list_dot_product kNN/beam chain + md5(CAST..VARCHAR) hubs
+    # list_dot_product kNN/beam chain + md5(CAST..VARCHAR) hubs
     "ann_graph_greedy",
-    # r10: string_split/len token counters + '//' integer division
+    # string_split/len token counters + '//' integer division
     "pipe_tokenizer_fertility",
-    # r10: list_dot_product kNN chain + AS MATERIALIZED round frames
+    # list_dot_product kNN chain + AS MATERIALIZED round frames
     "graph_kcore",
-    # r11: string_split/unnest token explosion (js_divergence,
+    # string_split/unnest token explosion (js_divergence,
     # quality_classifier) + the '0x'||md5 hash idiom and unnest(range)
     # weights table (quality_classifier, curriculum_order); '//'
     # integer division + DuckDB date-minus-date arithmetic
@@ -125,7 +125,7 @@ DUCKDB_ONLY = {
     "ann_rerank_topk",
     "emb_outliers",
     "a27_quantile_sketch",
-    # r11: '//' ceil division + VALUES table alias (a28)
+    # '//' ceil division + VALUES table alias (a28)
     "a28_quantile_hist",
     "a24_cms_heavy",
     "ann_hamming_topk",
@@ -188,7 +188,7 @@ DUCKDB_ONLY = {
     "pipe_stratified_sample",
     "stream_slide",
     "stream_tumble",
-    # r10: time_bucket window bucketing (like tumble/slide)
+    # time_bucket window bucketing (like tumble/slide)
     "stream_topk",
     "text_fingerprint",
     "text_langid",
@@ -237,7 +237,7 @@ def test_every_registered_query_is_reachable_as_sql_view(spark):
     from covid_engineering_spark.queries import SIDE_EFFECTING
 
     # Default registration must NOT run the ingest family's staging
-    # writes (r04 advice): it registers every pure query only...
+    # writes: it registers every pure query only...
     views = register_query_views(spark, SF_SMOKE)
     assert len(views) == len(registry()) - len(SIDE_EFFECTING)
     assert not {f"q_{n}" for n in SIDE_EFFECTING} & set(views)

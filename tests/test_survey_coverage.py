@@ -132,7 +132,7 @@ SURVEY_MAP = {
     "PIPE-KEEP": "pipe_keep_best",
     "PIPE-HIST": "pipe_length_hist",
     "PIPE-CDC": "pipe_cdc_upsert",
-    # round-5 extension: SCD Type-2 dimension history
+    # SCD Type-2 dimension history
     "PIPE-SCD2": "pipe_scd2_history",
     "PIPE-PII": "pipe_pii_scrub",
     "PIPE-DUPRATE": "pipe_dup_rate",
@@ -149,7 +149,7 @@ SURVEY_MAP = {
     "TS-ACTIVE": "ts_active_users",
     "TS-PROFILE": "ts_hourly_profile",
     "TXT-UNIGRAM": "text_unigram_lm",
-    # round-4 extensions: containment dedup, corpus dup-ngram rate,
+    # containment dedup, corpus dup-ngram rate,
     # kNN-graph PageRank, dataset-card rollup, PQ encode + ADC search
     "DD-CONTAIN": "dedup_containment",
     "TXT-DUPNGRAM": "text_dup_ngram_rate",
@@ -158,17 +158,17 @@ SURVEY_MAP = {
     "ANN-PQ": "emb_pq_codes",
     "ANN-PQADC": "ann_pq_adc_topk",
     "ANN-IVFPQ": "ann_ivfpq_topk",
-    # round-5 extension: SemDeDup-style semantic dedup over embeddings
+    # SemDeDup-style semantic dedup over embeddings
     "DD-SEMDEDUP": "emb_semdedup",
-    # round-5 extension: in-batch hard-negative mining
+    # in-batch hard-negative mining
     "ANN-HARDNEG": "emb_hard_negatives",
-    # round-6 extensions: per-dimension corpus profile, int8 scalar
+    # per-dimension corpus profile, int8 scalar
     # quantization with queryable reconstruction loss, in-engine
     # recall@k of the IVF index against brute-force ground truth
     "ANN-DIMSTATS": "emb_dim_stats",
     "ANN-SQ8": "emb_sq8",
     "ANN-RECALL": "ann_recall_eval",
-    # round-6 extensions: integer EWMA smoother, CUSUM changepoint,
+    # integer EWMA smoother, CUSUM changepoint,
     # RFM segmentation, ranking-window completion, explicit skew-salted
     # join (bit-equal to its plain twin)
     "TS-EWMA": "ts_ewma",
@@ -183,39 +183,39 @@ SURVEY_MAP = {
     "Q4": "q4_order_priority",
     "TS-SEASONAL": "ts_seasonal_anomaly",
     "TS-TRENDING": "ts_trending",
-    # round-6 late extensions: 1-bit binary quantization + Hamming
+    # 1-bit binary quantization + Hamming
     # top-k, bigram-LM phrase novelty, blocklist density gate, lag-1
     # autocorrelation in exact moment space
     "ANN-HAMMING": "ann_hamming_topk",
     "TXT-BIGRAM": "text_bigram_lm",
     "PIPE-BLOCK": "pipe_blocklist_filter",
     "TS-AUTOCORR": "ts_autocorr",
-    # round-6 final extensions: BM25 ranked retrieval, LSH range
+    # BM25 ranked retrieval, LSH range
     # search, MAD robust anomaly, per-group heavy hitters
     "TXT-BM25": "text_bm25",
     "ANN-RANGE": "ann_range_search",
     "TS-MAD": "ts_mad_anomaly",
     "A23": "a23_heavy_hitters",
-    # round-6 batch 2: CMS sketch-vs-exact, Matryoshka prefix recall,
+    # CMS sketch-vs-exact, Matryoshka prefix recall,
     # unigram-LM perplexity gate, hour-of-day percentile bands
     "A24": "a24_cms_heavy",
     "ANN-MRL": "emb_mrl_recall",
     "TXT-PPL": "text_perplexity",
     "TS-PCTL": "ts_percentile_profile",
-    # round-6 overflow queue (window full; first in line for r07)
+    # stream-static enrichment rollup, feed-freshness gaps
     "STR-STATIC": "stream_static_enrich",
     "TS-GAPS": "ts_downtime_detect",
-    # round-7 extensions: one-pass quantile cut-point audit, JL
+    # one-pass quantile cut-point audit, JL
     # random-projection recall eval, k-anonymity release gate
     "A25": "a25_quantile_cuts",
     "A26": "a26_mg_heavy",
     "PIPE-DSIR": "pipe_dsir_select",
-    # round-9 extensions: the paper's Gumbel-top-k resampling rule in
+    # the paper's Gumbel-top-k resampling rule in
     # integer micro-units, and the ExactSubstr duplicated-span
-    # analysis — overflow-pinned in r09, window-front in r10.
+    # analysis.
     "PIPE-DSIR-G": "pipe_dsir_gumbel",
     "DEDUP-SUBSTR": "dedup_substring",
-    # round-10 extensions: the span REMOVAL form (strip every merged
+    # the span REMOVAL form (strip every merged
     # duplicated span from the text, with per-doc token accounting),
     # and the standing-index incremental near-dup (batch probes the
     # MinHash band buckets; candidates <= |batch| * bands * cap).
@@ -225,7 +225,7 @@ SURVEY_MAP = {
     # the IVF index trained on it (recall 0.75 vs the one-step 0.725)
     "EMB-KMEANS": "emb_kmeans_lloyd",
     "ANN-IVF-KMEANS": "ann_ivf_kmeans_topk",
-    # graded eval-overlap contamination report (overflow-pinned r10)
+    # graded eval-overlap contamination report
     "PIPE-CONTAM": "pipe_contamination_report",
     # Bloom-prescreened decontamination: the eval suite collapses to a
     # <= m-row set-bit frame, corpus shingles probe k broadcast joins,
@@ -264,7 +264,7 @@ SURVEY_MAP = {
     # the rank applied at read — the lambda-free serving split,
     # demonstrated end-to-end in tests/test_streaming.py
     "STREAM-TOPK": "stream_topk",
-    # round-11 extensions: per-source JS mixture audit, classical
+    # per-source JS mixture audit, classical
     # additive decomposition, broadcast linear quality model,
     # curriculum ordering on the distributed ntile/prefix-sum
     # primitives, synchronous LPA communities, two-stage ADC+exact
@@ -291,11 +291,11 @@ SURVEY_MAP = {
     "ING-COMPACT": "s8_sink_compact",
     "ING-RANGE": "s9_sink_range_sorted",
     "ING-EVOLVE": "s10_schema_evolution",
-    # round-5 extension: multi-column Z-order clustering layout
+    # multi-column Z-order clustering layout
     "ING-ZORDER": "s11_zorder_layout",
     "J7": "j7_bucketed_join",
     "A19": "a19_hll_union",
-    # round-5 extension: arg-max aggregate (max_by, composite-key ties)
+    # arg-max aggregate (max_by, composite-key ties)
     "A20": "a20_max_by",
     # real-data covid composites, fixture-backed registry forms
     "COVID-PARAMS": "covid_param_series",
@@ -307,7 +307,7 @@ SURVEY_MAP = {
     "Q3": "q3_top_orders",
     "Q5": "q5_region_revenue",
     "Q6": "q6_forecast_revenue",
-    # round-6 extension: TPC-H query-shape completion (double nation
+    # TPC-H query-shape completion (double nation
     # join, outer-join histogram, conditional-ratio, scalar-max view,
     # correlated-AVG decorrelation, HAVING-IN, disjunctive pushdown,
     # scalar-avg + anti-join)
@@ -361,3 +361,13 @@ def test_every_registered_query_is_in_survey_map():
 def test_oracle_coverage_is_exactly_rows_only_exceptions():
     reg, orc = set(registry()), set(oracles())
     assert reg - orc == ROWS_ONLY
+
+
+def test_bench_headline_names_all_resolve():
+    """bench.py skips unknown names silently (reg.get) — a typo'd or
+    renamed HEADLINE entry would quietly drop a query from every
+    bench artifact. Pin the whole list to the registry."""
+    import bench
+
+    missing = [n for n in bench.HEADLINE if n not in registry()]
+    assert not missing, missing

@@ -1,6 +1,6 @@
 """Language-ID robustness: the char-n-gram profile must carry
 classification where stopword voting degenerates (no function words at
-all — the adversarial case VERDICT r01 flagged), and plain stopword
+all — the adversarial case), and plain stopword
 text must still win on the stopword signal.
 """
 

@@ -293,7 +293,7 @@ def test_hourly_profile_totals_and_dow_anchor(spark):
 
 
 def test_cents_derivation_is_environment_proof_at_driver_scale(spark):
-    # r03's one red driver row: round(value*100) tie-breaking differs
+    # A driver mismatch this pins: round(value*100) tie-breaking differs
     # between Spark (HALF_UP on a decimal rendering) and DuckDB
     # (C-library rounding on the binary value) on a half-cent boundary
     # that sf0.01 hits. The floor(v*100+0.5) derivation uses only
