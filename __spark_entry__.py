@@ -70,7 +70,7 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twins of ``queries()`` entries — one
     per registered query, no rows-only exceptions: even the IVF ANN
     index replays in SQL (deterministic md5-sampled + one-Lloyd-step
-    codebook; the MLlib k-means codebook remains a lib-level option).
+    codebook).
     """
     from covid_engineering_spark.queries import oracles
 

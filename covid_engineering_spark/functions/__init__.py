@@ -4,7 +4,6 @@ from covid_engineering_spark.functions.diagnostics import (
     non_finite_counts,
 )
 from covid_engineering_spark.functions.scalar import (
-    clamp_eps,
     dsum,
     missing_count,
 )
@@ -17,7 +16,6 @@ from covid_engineering_spark.functions.skew import (
 __all__ = [
     "BLOCK_CAP",
     "SALTED_JOIN_KEYS",
-    "clamp_eps",
     "dsum",
     "evicting_cache",
     "key_skew_stats",

@@ -42,14 +42,6 @@ def dsum(c: Column | str, scale: int = 2) -> Column:
     return F.round(F.sum(c.cast("decimal(18,6)")).cast("double"), scale)
 
 
-def clamp_eps(c: Column | str, eps: float = 1e-6) -> Column:
-    """Division-by-zero guard: ``np.maximum(x, eps)`` in the reference
-    (main.py:549-552) → ``GREATEST(x, eps)``.
-    """
-    c = F.col(c) if isinstance(c, str) else c
-    return F.greatest(c, F.lit(eps))
-
-
 def missing_count(*cols: str) -> Column:
     """Row-wise count of nulls across columns — the reference's
     ``row[cols].isna().sum()`` (main.py:424, F6) as a codegen expression.

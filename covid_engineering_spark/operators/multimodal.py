@@ -4,11 +4,11 @@ and run decode / feature-extraction / resize / frame-sampling as
 Arrow-batched ``mapInPandas`` stages.
 
 The decode libraries (PIL/ffmpeg/librosa) are not available in this
-environment, so the *codec* step is stubbed behind a deterministic
-fake (and ``NotImplementedError`` for the real path) — but everything
-Spark-level is real and tested: the binary+metadata schema, the
-mapInPandas batch iteration (constant memory per batch), the UDF
-signatures, and the partition-preserving plan shape.
+environment, so the *codec* step is a deterministic fake passed in
+through the ``decoder=`` parameter — but everything Spark-level is
+real and tested: the binary+metadata schema, the mapInPandas batch
+iteration (constant memory per batch), the UDF signatures, and the
+partition-preserving plan shape.
 
 At 100 TB the rules this module encodes: keep payloads in their own
 column so column pruning skips them unless needed; never collect
@@ -32,33 +32,6 @@ FEATURE_SCHEMA = (
     "doc_id long, media_type string, n_bytes long, checksum long, "
     "width int, height int, feat0 double, feat1 double, error string"
 )
-
-
-def real_decode(payload: bytes, media_type: str):
-    """The production decode hook. A deployment with media libraries
-    installed replaces this with a dispatch on ``media_type``:
-
-    - ``image/*`` → ``PIL.Image.open(io.BytesIO(payload))``; emit
-      ``width``/``height`` from ``img.size`` and features from the
-      pixel array (or a vision-model embedding).
-    - ``audio/*`` → ``soundfile.read(io.BytesIO(payload))`` (or
-      librosa); emit sample count / channels as the dims and e.g.
-      RMS energy / spectral centroid as the features.
-    - ``video/*`` → ``ffmpeg``/PyAV demux; emit frame dims and
-      per-keyframe features (pair with ``sample_frames`` upstream so
-      one row is one frame, not one file).
-
-    The hook contract: return the ``fake_decode``-shaped dict
-    (n_bytes, checksum, width, height, feat0, feat1 — widen the
-    schema constant alongside), and RAISE on undecodable bytes —
-    ``extract_features`` catches per record and routes the failure to
-    the ``error`` column, so one corrupt file never fails a task.
-    Deliberately unimplemented in this environment (no codec libs).
-    """
-    raise NotImplementedError(
-        "media codecs are not installed in this environment; "
-        "fake_decode provides the deterministic test double"
-    )
 
 
 #: Minimum payload a 'well-formed' fake media file needs — stands in
@@ -131,6 +104,10 @@ def extract_features(media: DataFrame, decoder=fake_decode) -> DataFrame:
     """mapInPandas feature extraction: iterate Arrow batches, decode
     each payload, emit a fixed-schema feature row. Batch-at-a-time
     keeps peak memory at one Arrow batch regardless of table size.
+
+    ``decoder(payload, media_type)`` returns the ``fake_decode``-shaped
+    dict and raises on undecodable bytes; a deployment with codec
+    libraries passes its own.
 
     Per-record error isolation: a decoder exception becomes a null
     feature row with the exception text in ``error`` (null on

@@ -361,40 +361,6 @@ def q_a13_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-proof equi-join: spread each hot ``key`` on the (large)
-    left side over ``n_salts`` reducers by joining on (key, salt),
-    with the right side replicated once per salt value.
-
-    AQE's skew-join split handles most cases at runtime; the explicit
-    salt is for the planned-for-skew case — a key you KNOW is hot
-    (null-bucket, default id, celebrity user) on a join AQE cannot
-    split (e.g. followed by a same-key aggregation that would re-skew).
-    Cost model: right side is duplicated n_salts×, so use it when
-    |right| × n_salts ≪ the hot key's row count. Row-for-row equal to
-    the plain join (asserted in tests) — salting changes the shuffle
-    layout, never the result.
-    """
-    if "_salt" in left.columns or "_salt" in right.columns:
-        raise ValueError("salted_join reserves the column name '_salt'")
-    # the salt must vary WITHIN a key (that is what spreads a hot key
-    # across reducers); the join result is salt-invariant because the
-    # right side carries every salt value for every key.
-    salted_l = left.withColumn(
-        "_salt", (F.monotonically_increasing_id() % n_salts).cast("int")
-    )
-    salts = F.explode(
-        F.array(*[F.lit(i) for i in range(n_salts)])
-    ).alias("_salt")
-    salted_r = right.select("*", salts)
-    return salted_l.join(salted_r, [key, "_salt"]).drop("_salt")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -1769,7 +1735,6 @@ def global_prefix_sum(
     weight,
     out_col: str,
     total_col: str | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Distributed INCLUSIVE prefix sum of ``weight`` in a global sort
     order, with NO single-partition pass over the data — the shared
@@ -1796,9 +1761,10 @@ def global_prefix_sum(
        sized), and it cannot be silenced in the plan: partitioning
        by a constant gets folded away by ``EliminateWindowPartitions``
        before execution. bench.py scopes that logger down so the
-       artifact tail stays readable; the real guard is the PLANS.md
-       audit, which verifies every unpartitioned window in every
-       registered plan sits over a bounded frame.
+       artifact tail stays readable; the real guard is the window
+       allowlist in ``tests/test_plans.py``, which verifies every
+       unpartitioned window in every registered plan sits over a
+       bounded frame.
 
     ``sort_exprs`` must be a TOTAL order (unique tiebreak column
     last): a running sum inside a range partition is only
@@ -1814,42 +1780,13 @@ def global_prefix_sum(
     job-free (the driver contract); the frame materializes once
     inside the first action, the same discipline as
     connected_components' CC rounds.
-
-    ``checkpoint=False`` keeps the fully-lazy single-plan form (used
-    by the plan-shape test) — but it is ONLY correct when the
-    upstream is deterministic or already materialized: without the
-    checkpoint, the totals branch and the window branch each
-    re-execute the ``repartitionByRange`` (SPARK_PARTITION_ID blocks
-    exchange reuse), and if the upstream row order is
-    nondeterministic (e.g. fresh off a shuffle) the reservoir-sampled
-    range boundaries can DIFFER between the two executions,
-    misaligning ``_gps_pid`` between offsets and rows and silently
-    corrupting the prefix sums. A larger pipeline that wants the lazy
-    form must checkpoint/cache upstream itself; when in doubt keep
-    the default. Because the failure is SILENT, opting out emits a
-    ``RuntimeWarning`` naming the precondition — cheap, and it turns
-    "corrupted sums six stages later" into a visible breadcrumb at
-    the call site (all registered call sites use the safe default).
     """
-    if not checkpoint:
-        import warnings
-
-        warnings.warn(
-            "global_prefix_sum(checkpoint=False): caller must guarantee "
-            "the input is deterministic or already materialized — the "
-            "totals and window branches re-execute repartitionByRange, "
-            "and nondeterministic upstream order can draw different "
-            "range boundaries and silently corrupt the prefix sums",
-            RuntimeWarning,
-            stacklevel=2,
-        )
     part = (
         df.withColumn("_gps_w", weight)
         .repartitionByRange(*sort_exprs)
         .withColumn("_gps_pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        part = part.localCheckpoint(eager=False)
     totals = part.groupBy("_gps_pid").agg(
         F.sum("_gps_w").alias("_gps_cnt")
     )
@@ -1892,7 +1829,6 @@ def global_ntile(
     sort_exprs: list,
     n_buckets: int,
     out_col: str,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact global NTILE(k) with NO single-partition sort — the scale
     path for quantile segmentation over frames too large to funnel
@@ -1907,10 +1843,7 @@ def global_ntile(
     tests/test_relational.py::test_global_ntile_matches_window_ntile).
 
     ``sort_exprs`` must be a TOTAL order (unique tiebreak column
-    last), exactly as with the window form. ``checkpoint`` forwards to
-    ``global_prefix_sum`` — ``False`` carries its determinism
-    precondition (see that docstring: only correct over a
-    deterministic or already-materialized upstream).
+    last), exactly as with the window form.
     """
     ranked = global_prefix_sum(
         df,
@@ -1918,7 +1851,6 @@ def global_ntile(
         F.lit(1).cast("long"),
         "_gnt_r",
         total_col="_gnt_n",
-        checkpoint=checkpoint,
     )
     k = int(n_buckets)
     # Exact BIGINT arithmetic throughout (integral DIV, no doubles):

@@ -160,61 +160,6 @@ N_CENTROIDS = 16
 N_PROBE = 8
 
 
-#: Deterministic hash-sample modulus for codebook training: 1/4 of the
-#: corpus trains the codebook — plenty for K=16 centroids, and at
-#: 100 TB the same filter is how you'd bound the training set (k-means
-#:  needs a representative sample, not the corpus).
-_TRAIN_SAMPLE_MOD = 4
-
-
-def _centroids(emb: DataFrame) -> DataFrame:
-    """Learned IVF codebook: k-means (pyspark.ml, k-means|| init,
-    fixed seed) over a deterministic hash-sample of the corpus.
-
-    Training is the one legitimately eager step of an IVF index — the
-    codebook IS a fitted model; the query plan built on top of it
-    stays lazy. The sample filter is a pure column predicate
-    (xxhash64 % mod), so the training scan prunes to the embedding
-    column and needs no prior count or max (a stride codebook pulls
-    max(vec_id) eagerly AND never learns the space).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    filtered = emb.filter(F.xxhash64("vec_id") % _TRAIN_SAMPLE_MOD == 0)
-    sample = filtered.select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
-    )
-    # MLlib's k-means|| init throws ArrayIndexOutOfBounds when the
-    # sample holds fewer DISTINCT points than k (found by the skew
-    # sweep: duplicate/zero vectors). Clamp k to the distinct-vector
-    # count — measured via a hash of the serialized vector from the
-    # SAME filtered frame the fit consumes (one predicate, one source
-    # of truth), which is collision-SAFE: a collision only lowers the
-    # clamp, never raises it above the true distinct count. The count
-    # doubles as the empty-corpus probe (0 distinct -> empty codebook,
-    # no fit), so the training path runs exactly two jobs: this
-    # distinct-agg and the fit itself.
-    n_distinct = (
-        filtered.select(
-            F.xxhash64(F.col("embedding").cast("string")).alias("h")
-        )
-        .distinct()
-        .count()
-    )
-    if n_distinct == 0:
-        return emb.sparkSession.createDataFrame(
-            [], "c_id int, c_emb array<double>"
-        )
-    model = KMeans(
-        k=min(N_CENTROIDS, n_distinct), seed=42, maxIter=10
-    ).fit(sample)
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return emb.sparkSession.createDataFrame(rows, "c_id int, c_emb array<double>")
-
-
 def _assign(vectors: DataFrame, cent: DataFrame, id_col: str, emb_col: str, n: int) -> DataFrame:
     """Attach the n nearest centroid ids to each vector, entirely
     map-side: the (tiny, ≤K-row) codebook collapses to ONE array row,
@@ -270,12 +215,10 @@ def deterministic_codebook(emb: DataFrame) -> DataFrame:
     any partitioning). Every arithmetic step — the md5 sample, the
     6dp-rounded seed cosines, the decimal means — is replayable in
     ANSI SQL, which is what lets ``ann_ivf_topk`` carry a full SQL
-    twin (``_ivf_oracle_sql``) instead of a rows-only check. Recall on
-    the near-uniform synthetic corpus matches the MLlib-KMeans
-    codebook (~0.7 at the same probe budget; measured in tests);
-    ``_centroids`` remains the production path when iterated k-means
-    is worth an eager fit — this codebook is a LAZY plan (the
-    registered query runs no job until the driver acts on it).
+    twin (``_ivf_oracle_sql``) instead of a rows-only check. When
+    iterated k-means is worth more rounds, :func:`kmeans_centroids`
+    is the full fit. This codebook is a LAZY plan (the registered
+    query runs no job until the driver acts on it).
 
     Scale shape: the seed draw is ``orderBy(md5).limit(K)`` — Catalyst
     plans TakeOrderedAndProject (per-partition top-K then a K-row
@@ -406,9 +349,7 @@ def kmeans_lloyd(
     DECIMAL(18,9) rounded 6dp — every step accumulation-order
     independent and ANSI-SQL replayable, so the DuckDB twin
     (``_kmeans_oracle_sql``) replays the seed draw and ALL ``iters``
-    rounds and the driver hash-checks the full trajectory, where
-    MLlib's KMeans (``_centroids``, the eager production path) is
-    seed- and partitioning-dependent.
+    rounds and the driver hash-checks the full trajectory.
 
     Per-round scale shape (×``iters``, unrolled into one lazy plan):
 
@@ -752,8 +693,9 @@ def knn_graph(
     product (asserted in the plan audit) — so cost is Σ block_size².
     Exact-within-block is the production trade: a global exact graph
     is inherently quadratic; when no natural block exists, the IVF
-    codebook (``_centroids``) or LSH buckets supply one at the cost
-    of cross-block recall (measured for the ANN paths in tests).
+    codebook (:func:`kmeans_centroids`) or LSH buckets supply one at
+    the cost of cross-block recall (measured for the ANN paths in
+    tests).
 
     Skew guard: with ``label`` alone as the join key, one dominant
     block degenerates toward quadratic INSIDE ONE TASK. So each block

@@ -1,11 +1,9 @@
 """Physical-plan introspection & audit (see plans/audit.py)."""
 
 from covid_engineering_spark.plans.audit import (  # noqa: F401
-    audit,
     broadcast_join_count,
     codegen_stage_count,
     formatted_plan,
-    has_broadcast_join,
     has_broadcast_nested_loop,
     has_cartesian,
     partition_filters,

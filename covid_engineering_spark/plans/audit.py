@@ -9,16 +9,14 @@ assertions the test suite runs on every change:
 
 * ``pushed_filters(df)`` — predicates that reached the Parquet reader;
 * ``read_schema(df)`` — columns the scan actually decodes (pruning);
-* ``has_broadcast_join(df)`` / ``broadcast_join_count`` — dimension
-  joins must not shuffle the fact side;
+* ``broadcast_join_count(df)`` — dimension joins must not shuffle the
+  fact side;
 * ``has_cartesian(df)`` — a join that degenerated to a cross product;
 * ``codegen_stage_count(df)`` — whole-stage-codegen spans (0 means the
   plan fell out of Tungsten, e.g. an expression tree too big for
   janino — exactly the regression fixed in operators/wrangling.py);
 * ``shuffle_count(df)`` — exchanges in the plan; the audit for "did I
   add an accidental extra shuffle".
-
-``audit(df)`` bundles them into one dict for debugging / logging.
 """
 
 from __future__ import annotations
@@ -74,10 +72,6 @@ def broadcast_join_count(df: DataFrame) -> int:
     return len(re.findall(r"BroadcastHashJoin", simple_plan(df)))
 
 
-def has_broadcast_join(df: DataFrame) -> bool:
-    return broadcast_join_count(df) > 0
-
-
 def has_cartesian(df: DataFrame) -> bool:
     """A true cross product (both sides materialized against each
     other). BroadcastNestedLoopJoin is deliberately NOT counted: over a
@@ -129,14 +123,3 @@ def shuffle_count(df: DataFrame) -> int:
 def sort_merge_join_count(df: DataFrame) -> int:
     return len(re.findall(r"SortMergeJoin", simple_plan(df)))
 
-
-def audit(df: DataFrame) -> dict:
-    return {
-        "pushed_filters": pushed_filters(df),
-        "read_schemas": read_schemas(df),
-        "broadcast_joins": broadcast_join_count(df),
-        "sort_merge_joins": sort_merge_join_count(df),
-        "shuffles": shuffle_count(df),
-        "codegen_stages": codegen_stage_count(df),
-        "cartesian": has_cartesian(df),
-    }

@@ -6,8 +6,7 @@ Modules register themselves via ``QUERIES`` / ``ORACLES`` dicts; a
 query without an oracle entry would get the driver's weaker rows-only
 check — there are NONE: every registered query carries a
 SQL twin (the last holdout, the IVF ANN index, switched its registered
-codebook to a deterministic SQL-replayable form; the MLlib-KMeans
-codebook stays available as a lib function).
+codebook to a deterministic SQL-replayable form).
 
 Registry order is module order (``_MODULES``, then each module's
 ``QUERIES`` order); callers look queries up by name. Every registered

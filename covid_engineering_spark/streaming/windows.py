@@ -86,28 +86,6 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowed_topk(read_table(spark, sf_dir, "events"))
 
 
-def stream_type_counts(
-    spark: SparkSession,
-    source_dir: str,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming face of :func:`windowed_type_counts`: parquet file
-    source → watermarked (window, type) counts. Rank at read. Same
-    NTZ→TIMESTAMP event-time cast as ``stream_events`` (watermarks
-    are defined on TIMESTAMP only; the UTC session makes it
-    deterministic)."""
-    from covid_engineering_spark import schemas
-
-    return (
-        spark.readStream.schema(schemas.STAR["events"])
-        .parquet(source_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-    )
-
-
 def sliding_agg(ev: DataFrame) -> DataFrame:
     """1-hour windows sliding every 30 minutes — each event lands in
     two windows.

@@ -110,25 +110,21 @@ def compare_frames(a_pandas, b_pandas) -> dict:
     return result
 
 
+#: ``compare_frames`` keys renamed for the Spark-vs-DuckDB sides
+#: (perfbench's output check reads ``spark_rows``).
+_DUCK_SIDES = {
+    "a_rows": "spark_rows",
+    "b_rows": "duck_rows",
+    "a_cols": "spark_cols",
+    "b_cols": "duck_cols",
+    "sample_a": "sample_spark",
+    "sample_b": "sample_duck",
+}
+
+
 def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> dict:
+    """Collect a Spark result and its DuckDB oracle and compare them
+    with :func:`compare_frames`."""
     sp = spark_df.toPandas()
     du = con.execute(sql).arrow().to_pandas()  # date32 -> datetime.date, like Spark
-    result: dict = {
-        "spark_rows": len(sp),
-        "duck_rows": len(du),
-        "spark_cols": sorted(sp.columns),
-        "duck_cols": sorted(du.columns),
-    }
-    result["cols_match"] = result["spark_cols"] == result["duck_cols"]
-    result["count_match"] = len(sp) == len(du)
-    if not (result["cols_match"] and result["count_match"]):
-        result["match"] = False
-        return result
-    a, b = _rows(sp), _rows(du)
-    result["match"] = a == b
-    if not result["match"]:
-        diff_a = [x for x, y in zip(a, b) if x != y][:3]
-        diff_b = [y for x, y in zip(a, b) if x != y][:3]
-        result["sample_spark"] = diff_a
-        result["sample_duck"] = diff_b
-    return result
+    return {_DUCK_SIDES.get(k, k): v for k, v in compare_frames(sp, du).items()}

@@ -56,8 +56,7 @@ PRECONDITION_VIOLATED = {
 #: docs but NULL-skip their token sums; index/train/eval embedding ops
 #: (PQ/IVF-PQ codebooks, centroids, assignment, RP recall) exclude
 #: NULL vectors on both sides — a vector row without a vector is not
-#: retrievable. scripts/null_scout.py reproduces the original failure
-#: sweep against any regression.
+#: retrievable.
 
 
 def _arrow_type(t):
@@ -157,10 +156,8 @@ def _pathological_rows():
     }
 
 
-@pytest.fixture(scope="module")
-def patho_dir(tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("patho_star"))
-    rows = _pathological_rows()
+def _write_star(root, rows):
+    """One parquet file per star table, typed by ``schemas.STAR``."""
     for name, schema in schemas.STAR.items():
         arrays, fields = [], []
         for i, f in enumerate(schema.fields):
@@ -172,6 +169,13 @@ def patho_dir(tmp_path_factory):
             os.path.join(root, f"{name}.parquet"),
         )
     return root
+
+
+@pytest.fixture(scope="module")
+def patho_dir(tmp_path_factory):
+    return _write_star(
+        str(tmp_path_factory.mktemp("patho_star")), _pathological_rows()
+    )
 
 
 def test_oracles_match_on_pathological_data(spark, patho_dir):
@@ -215,9 +219,7 @@ def test_precondition_violations_still_execute(spark, patho_dir):
 def skew_dir(tmp_path_factory):
     """Degenerate-key variant: ONE user owns every event, ONE label
     owns every embedding (with duplicate zero vectors), timestamps
-    unique. Found the MLlib k-means|| crash on fewer distinct sample
-    points than k."""
-    root = str(tmp_path_factory.mktemp("skew_star"))
+    unique, and fewer distinct vectors than codebook entries."""
     rows = _pathological_rows()
     rows["events"] = [
         (i, datetime.datetime(2024, 1, 1, 0, 0, i % 60, i), 0,
@@ -226,17 +228,7 @@ def skew_dir(tmp_path_factory):
         for i in range(30)
     ]
     rows["embeddings"] = [(i, _vec(i), 0) for i in range(16)]
-    for name, schema in schemas.STAR.items():
-        arrays, fields = [], []
-        for i, f in enumerate(schema.fields):
-            at = _arrow_type(f.dataType)
-            fields.append(pa.field(f.name, at))
-            arrays.append(pa.array([r[i] for r in rows[name]], type=at))
-        pq.write_table(
-            pa.Table.from_arrays(arrays, schema=pa.schema(fields)),
-            os.path.join(root, f"{name}.parquet"),
-        )
-    return root
+    return _write_star(str(tmp_path_factory.mktemp("skew_star")), rows)
 
 
 def test_every_query_executes_under_total_key_skew(spark, skew_dir):

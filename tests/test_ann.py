@@ -60,14 +60,14 @@ def test_ivf_probes_bound_the_scan(spark):
 
 
 def test_kmeans_codebook_beats_or_matches_stride(spark, brute_force):
-    # The learned codebook must not lose to the naive stride baseline
-    # (every (n//K)-th vector) at the SAME probe budget.
+    # The iterated k-means codebook must not lose to the naive stride
+    # baseline (every (n//K)-th vector) at the SAME probe budget.
     from pyspark.sql import functions as F
 
     from covid_engineering_spark.operators.similarity import (
         N_CENTROIDS,
-        _centroids,
         ivf_topk,
+        kmeans_centroids,
     )
     from covid_engineering_spark.sources import read_table
 
@@ -77,7 +77,7 @@ def test_kmeans_codebook_beats_or_matches_stride(spark, brute_force):
         (F.col("vec_id") / stride).cast("int").alias("c_id"),
         F.col("embedding").cast("array<double>").alias("c_emb"),
     )
-    learned = _check(ivf_topk(emb, _centroids(emb)).collect(), brute_force, 0.0)
+    learned = _check(ivf_topk(emb, kmeans_centroids(emb)).collect(), brute_force, 0.0)
     baseline = _check(ivf_topk(emb, stride_cent).collect(), brute_force, 0.0)
     assert learned >= baseline, (learned, baseline)
 

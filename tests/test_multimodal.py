@@ -1,7 +1,7 @@
 """Multimodal-plumbing tests: the codec is a deterministic fake (the
-real libraries are not in this environment — real_decode raises), but
-everything Spark-level is asserted for real: schemas, the mapInPandas
-batch contract, flat-map fanout, and that the binary payload column is
+real libraries are not in this environment), but everything
+Spark-level is asserted for real: schemas, the mapInPandas batch
+contract, flat-map fanout, and that the binary payload column is
 pruned from scans that don't touch it.
 """
 
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from covid_engineering_spark.operators.multimodal import (
     extract_features,
     fake_decode,
-    real_decode,
     resize_images,
     sample_frames,
     with_media_columns,
@@ -25,11 +24,6 @@ from tests.conftest import SF_SMOKE
 @pytest.fixture(scope="module")
 def media(spark):
     return with_media_columns(read_table(spark, SF_SMOKE, "documents")).cache()
-
-
-def test_real_decode_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        real_decode(b"\x89PNG", "image/png")
 
 
 def test_feature_extract_matches_fake_decoder(spark, media):

@@ -27,16 +27,6 @@ def test_oracle_match(spark, con, name):
     assert res["match"], res
 
 
-def test_all_queries_run(spark):
-    # queries without oracles still must execute and return a schema
-    for name, fn in _REG.items():
-        if name in _ORC:
-            continue
-        df = fn(spark, SF_SMOKE)
-        assert df.columns, name
-        assert df.count() >= 0, name
-
-
 def test_entry_smoke_and_wrapper_names(spark):
     # The driver's first call: the flagship top-5 customers by revenue.
     import __spark_entry__

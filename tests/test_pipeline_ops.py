@@ -225,29 +225,6 @@ def test_quota_default_matches_constant(spark):
     assert mx <= QUOTA_PER_SOURCE
 
 
-def test_salted_join_equals_plain_join_with_planted_skew(spark):
-    from covid_engineering_spark.operators.relational import salted_join
-
-    # 90% of left rows share one hot key
-    left = spark.range(2000).select(
-        F.when(F.col("id") % 10 != 0, F.lit(7))
-        .otherwise(F.col("id") % 50)
-        .alias("k"),
-        F.col("id").alias("lid"),
-    )
-    right = spark.range(50).select(
-        F.col("id").alias("k"), (F.col("id") * 100).alias("rv")
-    )
-    got = sorted(
-        (r["k"], r["lid"], r["rv"])
-        for r in salted_join(left, right, "k", n_salts=8).collect()
-    )
-    want = sorted(
-        (r["k"], r["lid"], r["rv"]) for r in left.join(right, "k").collect()
-    )
-    assert got == want and len(got) == 2000
-
-
 def test_connected_components_closes_a_very_long_chain_in_log_rounds(spark):
     # 79 edges -> diameter 79; neighbor-min alone would need 79 rounds,
     # pointer jumping must close it inside the default budget.

@@ -9,7 +9,6 @@ sketch-vs-exact discipline as a14/a18), and the driver's DuckDB NTILE
 oracle stays unchanged.
 """
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -63,60 +62,24 @@ def test_global_ntile_handles_n_smaller_than_k(spark):
 
 
 def test_global_ntile_plan_has_no_full_frame_global_sort(spark):
-    # The data path must be range-exchange + hash(_pid) window — the
-    # only SinglePartition exchange allowed is the <=P-row offsets
-    # frame. Assert on the checkpoint=False form (the registered form
-    # truncates the plan at the lazy localCheckpoint): the RANGE
-    # partitioning is present and the offsets frame broadcasts.
+    # The data path must be the hash(_pid) window over the checkpointed
+    # range partitions — the only SinglePartition exchange allowed is
+    # the <=P-row offsets frame, which broadcasts. The lazy
+    # localCheckpoint shows the range exchange as a Scan ExistingRDD.
     df = spark.range(1000).withColumn("m", F.col("id") % 17)
     plan = (
-        global_ntile(df, [F.asc("m"), F.asc("id")], 5, "b",
-                     checkpoint=False)
+        global_ntile(df, [F.asc("m"), F.asc("id")], 5, "b")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert "rangepartitioning" in plan.lower()
-    assert "broadcastexchange" in plan.lower()
-
-
-def test_global_ntile_checkpointed_form_matches_lazy_form(spark):
-    # The registered form (lazy localCheckpoint at the branch point)
-    # must be bit-identical to the fully-lazy plan — the checkpoint is
-    # a physical materialization decision, never a semantics change.
-    df = spark.createDataFrame(
-        [(i, (i * 11) % 7) for i in range(83)], "id long, m int"
-    )
-    exprs = [F.desc("m"), F.asc("id")]
-    a = {r["id"]: r["b"] for r in global_ntile(df, exprs, 5, "b").collect()}
-    b = {
-        r["id"]: r["b"]
-        for r in global_ntile(df, exprs, 5, "b", checkpoint=False).collect()
-    }
-    assert a == b
-
-
-def test_global_prefix_sum_lazy_optout_warns(spark):
-    # checkpoint=False's precondition (deterministic or materialized
-    # input) is un-checkable from inside the operator, and violating
-    # it corrupts sums SILENTLY — so opting out must at least leave a
-    # loud breadcrumb at the call site (relational.py docstring).
-    import warnings
-
-    from covid_engineering_spark.operators.relational import (
-        global_prefix_sum,
-    )
-
-    df = spark.range(100).withColumn("m", F.col("id") % 7)
-    with pytest.warns(RuntimeWarning, match="checkpoint=False"):
-        global_prefix_sum(
-            df, [F.asc("m"), F.asc("id")], F.lit(1), "ps",
-            checkpoint=False,
-        )
-    # and the safe default stays silent
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        global_prefix_sum(df, [F.asc("m"), F.asc("id")], F.lit(1), "ps")
+    assert plan.count("BroadcastExchange") == 1, plan
+    # The broadcast build side is the join's last child, so its
+    # subtree is the tail of the plan text.
+    data_path, broadcast = plan.split("BroadcastExchange")
+    assert "Exchange SinglePartition" in broadcast, plan
+    assert "Exchange SinglePartition" not in data_path, plan
+    assert "Exchange hashpartitioning(_gps_pid" in data_path, plan
 
 
 def test_rfm_matches_window_ntile_form(spark):

@@ -388,54 +388,6 @@ def test_segment_rollup_streaming_equals_batch(spark, source_dir):
     assert len(got) > 0
 
 
-def test_windowed_topk_counts_stream_then_rank_at_read(spark, source_dir):
-    """stream_topk's production split, demonstrated: the (window,
-    type) COUNTS run as a real incremental streaming query (the rank
-    itself is unsupported on update-mode streams), and ranking the
-    streamed counts at read reproduces the batch top-k exactly."""
-    from pyspark.sql import Window
-
-    from covid_engineering_spark.streaming.windows import (
-        TOPK_PER_WINDOW,
-        stream_type_counts,
-        windowed_topk,
-    )
-
-    q = (
-        stream_type_counts(spark, source_dir)
-        .writeStream.format("memory")
-        .queryName("topk_counts_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    streamed = spark.sql("SELECT * FROM topk_counts_stream")
-    wnd = Window.partitionBy("w").orderBy(
-        F.desc("n_events"), F.asc("event_type")
-    )
-    read_rank = (
-        streamed.withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= TOPK_PER_WINDOW)
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "rank",
-        )
-    )
-    got = {
-        (str(r.window_start), r.event_type): (r.n_events, r.rank)
-        for r in read_rank.collect()
-    }
-    want = {
-        (str(r.window_start), r.event_type): (r.n_events, r.rank)
-        for r in windowed_topk(spark.read.parquet(source_dir)).collect()
-    }
-    assert got == want
-    assert len(got) > 0
-
-
 def test_stream_near_dup_probes_the_standing_index(spark, tmp_path):
     """The ingestion-time composition: arriving document batches probe
     the STANDING near-dup index via foreachBatch, and the union of the

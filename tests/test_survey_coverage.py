@@ -330,15 +330,13 @@ SURVEY_MAP = {
 }
 
 # Rows-only by design: EMPTY — every registered query now carries a
-# SQL twin. The last holdout (ann_ivf_topk, formerly keyed on a fitted
-# MLlib k-means codebook) switched its registered form to the
-# deterministic sampled-init + one-Lloyd-step codebook, whose every
-# arithmetic step replays in SQL; the MLlib path survives as the
-# production lib function (`_centroids`), recall-tested through the
-# identical probe/score plan. Also oracle-matched: the LSH ANN index
-# (deterministic LCG planes), the MinHash/SimHash sketches (portable
-# md5-derived hash family in the registered forms), the mapInPandas
-# decode, both simulation recursions, and the full cleaning pipeline.
+# SQL twin. The last holdout (ann_ivf_topk) switched its registered
+# form to the deterministic sampled-init + one-Lloyd-step codebook,
+# whose every arithmetic step replays in SQL. Also oracle-matched:
+# the LSH ANN index (deterministic LCG planes), the MinHash/SimHash
+# sketches (portable md5-derived hash family in the registered
+# forms), the mapInPandas decode, both simulation recursions, and the
+# full cleaning pipeline.
 ROWS_ONLY: set[str] = set()
 
 
