@@ -10,7 +10,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dsum(c: Column | str, scale: int = 2) -> Column:
+def dsum(c: Column | str) -> Column:
     """Deterministic sum of a money-like double column.
 
     Plain ``SUM(double)`` is accumulation-order dependent, which breaks
@@ -39,7 +39,7 @@ def dsum(c: Column | str, scale: int = 2) -> Column:
     approaching it.
     """
     c = F.col(c) if isinstance(c, str) else c
-    return F.round(F.sum(c.cast("decimal(18,6)")).cast("double"), scale)
+    return F.round(F.sum(c.cast("decimal(18,6)")).cast("double"), 2)
 
 
 def missing_count(*cols: str) -> Column:

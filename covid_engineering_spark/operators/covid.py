@@ -28,9 +28,7 @@ GAMMA = 1 / 4.5  # main.py:546
 EPS = 0.00001  # main.py:549
 
 
-def estimate_params(
-    cleaned: DataFrame, population: DataFrame, gamma: float = GAMMA, eps: float = EPS
-) -> DataFrame:
+def estimate_params(cleaned: DataFrame, population: DataFrame) -> DataFrame:
     """Per-(country, date) μₜ/αₜ/βₜ/R₀ₜ series for every country at
     once. ``cleaned`` is clean_complete() output; ``population`` is a
     (country_region, population) dimension — tiny, so it broadcasts
@@ -47,15 +45,15 @@ def estimate_params(
     s_t = F.col("population") - (
         F.col("active") + F.col("recovered") + F.col("deaths")
     )
-    mu_t = F.col("deaths_change") / F.greatest(F.col("active"), F.lit(eps))
-    alpha_t = (gamma * F.col("active") - F.col("recovered_change")) / F.greatest(
-        F.col("recovered_change"), F.lit(eps)
+    mu_t = F.col("deaths_change") / F.greatest(F.col("active"), F.lit(EPS))
+    alpha_t = (GAMMA * F.col("active") - F.col("recovered_change")) / F.greatest(
+        F.col("recovered_change"), F.lit(EPS)
     )
     beta_t = (
         F.col("active_change") / F.greatest(F.col("active"), F.lit(1.0))
         + mu_t
-        + F.lit(gamma)
-    ) / F.greatest(s_t, F.lit(eps))
+        + F.lit(GAMMA)
+    ) / F.greatest(s_t, F.lit(EPS))
     return (
         df.select(
             "country_region",
@@ -64,19 +62,17 @@ def estimate_params(
             mu_t.alias("mu_t"),
             alpha_t.alias("alpha_t"),
             beta_t.alias("beta_t"),
-            (beta_t / F.lit(gamma)).alias("r0_t"),
+            (beta_t / F.lit(GAMMA)).alias("r0_t"),
         )
         # mirror iloc[1:]: the diff of each country's first row is null
         .filter(F.col("mu_t").isNotNull())
     )
 
 
-def r0_trajectory(
-    cleaned: DataFrame, population: DataFrame, gamma: float = GAMMA
-) -> DataFrame:
+def r0_trajectory(cleaned: DataFrame, population: DataFrame) -> DataFrame:
     """M4 (main.py:319-331 / the R₀ dashboard page): the per-country
     (date, R₀ₜ) series alone."""
-    return estimate_params(cleaned, population, gamma).select(
+    return estimate_params(cleaned, population).select(
         "country_region", "date", "r0_t"
     )
 
@@ -147,7 +143,6 @@ def transfer_simulation_pairs(
     cleaned: DataFrame,
     population: DataFrame,
     pairs: DataFrame,
-    gamma: float = GAMMA,
 ) -> DataFrame:
     """All (param_country → sim_country) transfer simulations in ONE
     job: ``pairs`` is a (param_country, sim_country) frame — up to the
@@ -167,7 +162,7 @@ def transfer_simulation_pairs(
 
     w = Window.partitionBy("country_region").orderBy("date")
     params = (
-        estimate_params(cleaned, population, gamma)
+        estimate_params(cleaned, population)
         .select(
             F.col("country_region").alias("param_country"),
             (F.row_number().over(w) - 1).alias("t"),
@@ -223,7 +218,7 @@ def transfer_simulation_pairs(
             list(p["alpha_t"].iloc[:n_steps]),
             list(p["beta_t"].iloc[:n_steps]),
             list(p["mu_t"].iloc[:n_steps]),
-            gamma,
+            GAMMA,
         )
         return pd.DataFrame(
             [
@@ -243,7 +238,6 @@ def transfer_simulation(
     population: DataFrame,
     param_country: str,
     sim_country: str,
-    gamma: float = GAMMA,
 ) -> DataFrame:
     """X2 on the real data model (test_SIR_Model, main.py:629-726):
     estimate daily (αₜ, βₜ, μₜ) from ``param_country``, then integrate
@@ -266,9 +260,9 @@ def transfer_simulation(
         [(param_country, sim_country)],
         "param_country string, sim_country string",
     )
-    return transfer_simulation_pairs(
-        cleaned, population, pairs, gamma
-    ).select("t", "date", "s", "i", "r", "d")
+    return transfer_simulation_pairs(cleaned, population, pairs).select(
+        "t", "date", "s", "i", "r", "d"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -315,7 +309,7 @@ def q_covid_param_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRANSFER_WINDOW = 10
 
 
-def _cumulative_series(cleaned: DataFrame, k: int = TRANSFER_WINDOW) -> DataFrame:
+def _cumulative_series(cleaned: DataFrame) -> DataFrame:
     """First-k-dates cumulative rebase of a cleaned frame: per-country
     decimal running sums of each compartment (order-independent, exact)
     — the monotone shape of the reference's real cumulative counts.
@@ -324,7 +318,7 @@ def _cumulative_series(cleaned: DataFrame, k: int = TRANSFER_WINDOW) -> DataFram
     wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     lim = (
         cleaned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
+        .filter(F.col("_rn") <= TRANSFER_WINDOW)
         .drop("_rn")
     )
     return lim.select(

@@ -265,7 +265,7 @@ MINHASH_K = 16
 MINHASH_BANDS = 4
 
 
-def _minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
+def _minhash_signatures(sh: DataFrame) -> DataFrame:
     """k seeded min-hash aggregates -> one constant-size signature row
     per doc, in a single partial+final aggregation pass, over the
     md5-derived (oracle-reproducible) hash family.
@@ -292,7 +292,7 @@ def _minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
     )
     aggs = [
         F.min(F.col("h1") + F.lit(i) * F.col("h2")).alias(f"m{i}")
-        for i in range(k)
+        for i in range(MINHASH_K)
     ]
     return hashed.groupBy("doc_id").agg(*aggs, F.count("*").alias("_n_sh"))
 
@@ -300,16 +300,15 @@ def _minhash_signatures(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
 def _capped_bucket_pairs(
     buckets: DataFrame,
     key_cols: list[str],
-    cap: int = SKETCH_BUCKET_CAP,
     cache_key: str | None = None,
     carry: tuple = (),
 ) -> DataFrame:
     """Candidate (d1, d2) pairs from equal-bucket membership with
-    BOUNDED per-bucket work: buckets of <= ``cap`` members take the
-    all-pairs join (<= cap²/2 pairs), larger buckets take consecutive
-    doc_id-chain pairs (B-1 edges — candidate-graph connectivity
-    preserved; see the ``SKETCH_BUCKET_CAP`` note for the verified-pair
-    recall trade this makes inside mixed mega-buckets).
+    BOUNDED per-bucket work: buckets of <= ``SKETCH_BUCKET_CAP``
+    members take the all-pairs join (<= cap²/2 pairs), larger buckets
+    take consecutive doc_id-chain pairs (B-1 edges — candidate-graph
+    connectivity preserved; see the ``SKETCH_BUCKET_CAP`` note for the
+    verified-pair recall trade this makes inside mixed mega-buckets).
 
     The bucket count/rank windows ride the same (key) shuffle the
     candidate join needs anyway; their output bounds the join instead
@@ -340,8 +339,8 @@ def _capped_bucket_pairs(
         from covid_engineering_spark.functions import evicting_cache
 
         bx = evicting_cache(bx, cache_key)
-    small = bx.filter(F.col("_bn") <= cap)
-    big = bx.filter(F.col("_bn") > cap)
+    small = bx.filter(F.col("_bn") <= SKETCH_BUCKET_CAP)
+    big = bx.filter(F.col("_bn") > SKETCH_BUCKET_CAP)
 
     def _sel(joined: DataFrame) -> DataFrame:
         return joined.select(
@@ -406,9 +405,7 @@ def _band_frame(sig: DataFrame, carry: tuple = ()) -> DataFrame:
     ).select("doc_id", *carry, "bk.band", "bk.bh")
 
 
-def lsh_bucket_stats(
-    docs: DataFrame, cap: int = SKETCH_BUCKET_CAP
-) -> DataFrame:
+def lsh_bucket_stats(docs: DataFrame) -> DataFrame:
     """No silent caps: the pre-flight report for ``minhash_lsh_pairs``'
     bucket cap. One row — bucket count, max membership, how many
     buckets exceed the cap, and how many documents sit inside those
@@ -420,25 +417,23 @@ def lsh_bucket_stats(
     """
     sh = shingles_of(docs)
     per = (
-        _band_frame(_minhash_signatures(sh, MINHASH_K))
+        _band_frame(_minhash_signatures(sh))
         .groupBy("band", "bh")
         .agg(F.count("*").alias("n"))
     )
     return per.agg(
         F.count("*").alias("n_buckets"),
         F.max("n").alias("max_bucket"),
-        F.sum(F.when(F.col("n") > cap, 1).otherwise(0)).alias(
+        F.sum(F.when(F.col("n") > SKETCH_BUCKET_CAP, 1).otherwise(0)).alias(
             "capped_buckets"
         ),
-        F.sum(F.when(F.col("n") > cap, F.col("n")).otherwise(0)).alias(
+        F.sum(F.when(F.col("n") > SKETCH_BUCKET_CAP, F.col("n")).otherwise(0)).alias(
             "docs_in_capped_buckets"
         ),
     )
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """MinHash+LSH near-dup pairs: signature -> band buckets ->
     same-bucket candidates -> exact Jaccard verification (>= τ).
     The shingle self-join runs only over candidate pairs, so the
@@ -460,7 +455,7 @@ def minhash_lsh_pairs(
     # TWO consumers — the band/bucket path and the verification's size
     # lookup — so it gets the same evicting-cache discipline; bounded
     # at one row per document at any corpus size.
-    sig = evicting_cache(_minhash_signatures(sh, MINHASH_K), "minhash_sig")
+    sig = evicting_cache(_minhash_signatures(sh), "minhash_sig")
     bands = _band_frame(sig, carry=("_n_sh",))
     # per-doc set sizes ride the signature aggregation (_n_sh)
     # and then the bucket-pair join itself (carry) — the verification
@@ -491,16 +486,14 @@ def minhash_lsh_pairs(
     jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
     return common.select(
         "d1", "d2", F.round(jac, 6).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
+    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(read_table(spark, sf_dir, "documents", fan=True))
 
 
-def simhash_pairs(
-    docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """SimHash sketches + near-dup pairs (hamming <= k over 32 bits).
     Per-bit weighted sums are 32 plain aggregate expressions over the
     token frequency table — one shuffle, no bit explosion; candidate
@@ -576,7 +569,7 @@ def simhash_pairs(
             ham.alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
@@ -652,7 +645,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 SUBSTR_K = 8
 
 
-def substring_dup_span_frame(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
+def substring_dup_span_frame(docs: DataFrame) -> DataFrame:
     """The merged duplicated-span frame under the ExactSubstr family:
     one row per maximal duplicated token span — ``(doc_id, island,
     s, e, ng)`` with ``[s, e)`` 0-based token bounds and ``ng`` the
@@ -664,10 +657,10 @@ def substring_dup_span_frame(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     """
     ws = F.split(F.col("text"), " ")
     grams_arr = F.when(
-        F.array_size(ws) >= k,
+        F.array_size(ws) >= SUBSTR_K,
         F.transform(
-            F.sequence(F.lit(0), F.size(ws) - k),
-            lambda i: F.concat_ws(" ", F.slice(ws, i + 1, k)),
+            F.sequence(F.lit(0), F.size(ws) - SUBSTR_K),
+            lambda i: F.concat_ws(" ", F.slice(ws, i + 1, SUBSTR_K)),
         ),
     ).otherwise(F.array().cast("array<string>"))
     g = docs.select("doc_id", F.posexplode(grams_arr).alias("pos", "gram"))
@@ -692,7 +685,7 @@ def substring_dup_span_frame(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
 
     g = evicting_cache(
         g,
-        f"substr_grams:k{k}",
+        f"substr_grams:k{SUBSTR_K}",
         storage_level=StorageLevel.MEMORY_AND_DISK,
     )
     dup_grams = (
@@ -709,7 +702,7 @@ def substring_dup_span_frame(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     )
     w_run = Window.partitionBy("doc_id").orderBy("pos")
     isl = (
-        dpos.withColumn("prev_end", F.max(F.col("pos") + k).over(w_prev))
+        dpos.withColumn("prev_end", F.max(F.col("pos") + SUBSTR_K).over(w_prev))
         .withColumn(
             "new_island",
             (F.col("pos") > F.coalesce("prev_end", F.lit(-1))).cast("int"),
@@ -718,16 +711,16 @@ def substring_dup_span_frame(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     )
     return isl.groupBy("doc_id", "island").agg(
         F.min("pos").alias("s"),
-        (F.max("pos") + k).alias("e"),
+        (F.max("pos") + SUBSTR_K).alias("e"),
         F.count("*").alias("ng"),
     )
 
 
-def substring_dup_spans(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
+def substring_dup_spans(docs: DataFrame) -> DataFrame:
     """EXACT-SUBSTRING duplication analysis (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better" §4.1 —
     the ExactSubstr method): per document, the merged token spans
-    covered by any length-``k`` token run that occurs elsewhere in the
+    covered by any length-``SUBSTR_K`` token run that occurs elsewhere in the
     corpus (or again in the same document). The paper builds one giant
     suffix array; the distributed re-expression is positional k-gram
     matching — every duplicated substring of length ≥ k is exactly a
@@ -758,7 +751,7 @@ def substring_dup_spans(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     duplication counters literal 0, ``has_dup`` literal FALSE — a
     payload-less document carries no duplicated content.
     """
-    spans = substring_dup_span_frame(docs, k)
+    spans = substring_dup_span_frame(docs)
     ws = F.split(F.col("text"), " ")
     per_doc = spans.groupBy("doc_id").agg(
         F.count("*").alias("_spans"),
@@ -794,7 +787,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_dup_spans(read_table(spark, sf_dir, "documents", fan=True))
 
 
-def substring_strip(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
+def substring_strip(docs: DataFrame) -> DataFrame:
     """ExactSubstr span REMOVAL — the pipeline step Lee et al. 2022
     §4.1 actually applies (the analysis form only reports the spans):
     per document, the text with every merged duplicated span excised,
@@ -831,7 +824,7 @@ def substring_strip(docs: DataFrame, k: int = SUBSTR_K) -> DataFrame:
     NULL, ``removed_tokens`` literal 0 (the text-tier convention —
     counters non-null, payload-derived fields propagate).
     """
-    spans = substring_dup_span_frame(docs, k)
+    spans = substring_dup_span_frame(docs)
     sp_doc = spans.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(

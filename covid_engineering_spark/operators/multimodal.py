@@ -135,6 +135,10 @@ def extract_features(media: DataFrame, decoder=fake_decode) -> DataFrame:
 
 RESIZE_SCHEMA = "doc_id long, payload binary, width int, height int"
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_payload binary"
+#: Frame sampling: the byte stride (and window) of each fake frame, and
+#: the most frames one video yields.
+FRAME_BYTES = 64
+MAX_FRAMES = 4
 
 
 def resize_images(media: DataFrame, width: int = 32, height: int = 32, decoder=fake_decode) -> DataFrame:
@@ -168,10 +172,11 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32, decoder=f
     ).mapInPandas(run, RESIZE_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 4) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame-sampling stage: one input video row fans out to N frame
-    rows (mapInPandas as a flat-map). The fake 'frame' is a byte window
-    at a deterministic stride; a real decoder would seek keyframes.
+    rows (mapInPandas as a flat-map). The fake 'frame' is a
+    ``FRAME_BYTES`` window at that stride, at most ``MAX_FRAMES`` per
+    video; a real decoder would seek keyframes.
 
     NULL payloads are excluded scan-side: a missing video has no
     frames to sample.
@@ -182,10 +187,10 @@ def sample_frames(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 4
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 n = len(payload)
-                for i in range(min(max_frames, max(1, n // every_n_bytes))):
-                    start = i * every_n_bytes
+                for i in range(min(MAX_FRAMES, max(1, n // FRAME_BYTES))):
+                    start = i * FRAME_BYTES
                     rows.append(
-                        (doc_id, i, bytes(payload[start : start + every_n_bytes]))
+                        (doc_id, i, bytes(payload[start : start + FRAME_BYTES]))
                     )
             yield pd.DataFrame(
                 rows, columns=["doc_id", "frame_idx", "frame_payload"]

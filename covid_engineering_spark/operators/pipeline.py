@@ -74,11 +74,11 @@ DECON_EVAL_MOD = 13
 CC_MAX_ROUNDS = 20
 
 
-def split_assign(docs: DataFrame, key: str = "doc_id") -> DataFrame:
+def split_assign(docs: DataFrame) -> DataFrame:
     """Assign each row a deterministic train/val/test split from the
     md5 of its key — content-stable, partition-independent.
     """
-    h2 = F.substring(F.md5(F.col(key).cast("string")), 1, 2)
+    h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     return docs.withColumn(
         "split",
         F.when(h2 < SPLIT_TRAIN_UPPER, F.lit("train"))
@@ -235,7 +235,7 @@ BLOOM_BITS = 16384
 BLOOM_K = 2
 
 
-def _bloom_positions(k: int = BLOOM_K, m: int = BLOOM_BITS) -> list:
+def _bloom_positions() -> list:
     """The k Bloom bit positions of shingle column ``s``, via the same
     Kirsch-Mitzenmacher double-hash family as the portable MinHash
     signatures (dedup.py `_minhash_signatures`): one md5 split into two
@@ -245,15 +245,13 @@ def _bloom_positions(k: int = BLOOM_K, m: int = BLOOM_BITS) -> list:
     md = F.md5(F.col("s"))
     h1 = F.conv(F.substring(md, 1, 14), 16, 10).cast("long")
     h2 = F.conv(F.substring(md, 15, 14), 16, 10).cast("long")
-    return [(h1 + F.lit(i) * h2) % F.lit(m) for i in range(k)]
+    return [(h1 + F.lit(i) * h2) % F.lit(BLOOM_BITS) for i in range(BLOOM_K)]
 
 
 def bloom_decontaminate(
     corpus_shingles: DataFrame,
     eval_shingles: DataFrame,
     corpus_docs: DataFrame,
-    m: int = BLOOM_BITS,
-    k: int = BLOOM_K,
 ) -> DataFrame:
     """Bloom-prescreened decontamination: the scale form of
     :func:`decontaminate` for when the eval suite is too large to
@@ -275,7 +273,7 @@ def bloom_decontaminate(
     """
     from covid_engineering_spark.functions import evicting_cache
 
-    pos = _bloom_positions(k, m)
+    pos = _bloom_positions()
     # The distinct eval shingle set feeds BOTH the filter build and the
     # exact-verify join; cached (lazily — it materializes inside the
     # bits checkpoint job below, costing no extra action) so the
@@ -302,7 +300,7 @@ def bloom_decontaminate(
         "s", *[p.alias(f"p{i}") for i, p in enumerate(pos)]
     )
     passed = probe
-    for i in range(k):
+    for i in range(BLOOM_K):
         side = F.broadcast(
             bits.select(
                 F.col("bit").alias(f"p{i}"), F.lit(True).alias(f"ok{i}")
@@ -310,7 +308,9 @@ def bloom_decontaminate(
         )
         passed = passed.join(side, f"p{i}", "left")
     passed = passed.filter(
-        reduce(lambda a, b: a & b, [F.col(f"ok{i}") for i in range(k)])
+        reduce(
+            lambda a, b: a & b, [F.col(f"ok{i}") for i in range(BLOOM_K)]
+        )
     ).select("s")
     ev = ev_set.withColumn("x", F.lit(True))
     verdict = passed.join(ev, "s", "left").select(
@@ -428,11 +428,10 @@ MIX_THRESHOLDS = ["40", "80", "c0", "g0"]
 def pack_chunks(
     docs: DataFrame,
     group: str | list[str] = "source",
-    order: str = "doc_id",
     budget: int = PACK_BUDGET,
 ) -> DataFrame:
     """Deterministic greedy sequence packing: within each ``group``
-    (one column or several, ordered by ``order``), assign documents to
+    (one column or several, ordered by ``doc_id``), assign documents to
     fixed-token-budget chunks by exclusive-prefix token count — the
     streaming analogue of packing docs into training sequences. One
     window shuffle on the group key; packing is inherently
@@ -455,7 +454,7 @@ def pack_chunks(
     n_tokens = F.array_size(F.split(F.col("text"), " "))
     w = (
         Window.partitionBy(*group_cols)
-        .orderBy(order)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     prefix = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
@@ -799,12 +798,10 @@ def q_pipe_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 STRATUM_N = 20
 
 
-def stratified_sample(
-    df: DataFrame, strata: list[str], key: str = "doc_id", n: int = STRATUM_N
-) -> DataFrame:
+def stratified_sample(df: DataFrame, strata: list[str]) -> DataFrame:
     """Exact-N uniform sample per stratum, reproducibly: rank rows
     within each stratum by md5(key) — a uniform, content-stable order
-    — and keep the first ``n``. Unlike ``sampleBy`` (per-row coin
+    — and keep the first ``STRATUM_N``. Unlike ``sampleBy`` (per-row coin
     flips: approximate counts, partition-order dependent), this
     yields EXACTLY min(n, stratum size) rows and the same rows on
     every engine, every layout. One ranked window on the strata key;
@@ -814,11 +811,11 @@ def stratified_sample(
     from pyspark.sql import Window
 
     w = Window.partitionBy(*strata).orderBy(
-        F.md5(F.col(key).cast("string")), F.col(key)
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
         df.withColumn("sample_rk", F.row_number().over(w))
-        .filter(F.col("sample_rk") <= n)
+        .filter(F.col("sample_rk") <= STRATUM_N)
     )
 
 
@@ -833,7 +830,7 @@ def q_pipe_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cdc_upsert(changelog: DataFrame, keys: list[str], ts: str = "ts") -> DataFrame:
+def cdc_upsert(changelog: DataFrame, keys: list[str]) -> DataFrame:
     """Latest-wins changelog compaction — the batch form of ``MERGE
     INTO`` that keeps, per key, only the most recent version. The
     maintenance query behind every snapshot refresh of a mutable
@@ -847,10 +844,10 @@ def cdc_upsert(changelog: DataFrame, keys: list[str], ts: str = "ts") -> DataFra
     ``ts`` within a key (the synthetic feed's timestamps are globally
     unique; production changelogs use a (ts, sequence) struct).
     """
-    others = [c for c in changelog.columns if c not in keys and c != ts]
+    others = [c for c in changelog.columns if c not in keys and c != "ts"]
     return changelog.groupBy(*keys).agg(
-        F.max(ts).alias(ts),
-        *[F.max_by(c, ts).alias(c) for c in others],
+        F.max("ts").alias("ts"),
+        *[F.max_by(c, "ts").alias(c) for c in others],
     )
 
 
@@ -866,7 +863,7 @@ def q_pipe_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def scd2_history(
-    changelog: DataFrame, keys: list[str], ts: str = "ts", seq: str | None = None
+    changelog: DataFrame, keys: list[str], seq: str | None = None
 ) -> DataFrame:
     """Slowly-changing-dimension TYPE 2 history: turn a changelog into
     one row per VERSION per key with a half-open validity interval
@@ -886,13 +883,13 @@ def scd2_history(
     """
     from pyspark.sql import Window
 
-    order = [F.col(ts)] + ([F.col(seq)] if seq else [])
+    order = [F.col("ts")] + ([F.col(seq)] if seq else [])
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
-        changelog.withColumn("valid_from", F.col(ts))
-        .withColumn("valid_to", F.lead(ts).over(w))
+        changelog.withColumn("valid_from", F.col("ts"))
+        .withColumn("valid_to", F.lead("ts").over(w))
         .withColumn("version", F.row_number().over(w).cast("int"))
-        .withColumn("is_current", F.lead(ts).over(w).isNull())
+        .withColumn("is_current", F.lead("ts").over(w).isNull())
     )
 
 
@@ -1006,7 +1003,7 @@ def source_gate(docs: DataFrame) -> DataFrame:
     """
     from covid_engineering_spark.operators.text import quality_score_col
 
-    q_micro = F.floor(quality_score_col("text") * 1000000 + F.lit(0.5)).cast(
+    q_micro = F.floor(quality_score_col() * 1000000 + F.lit(0.5)).cast(
         "long"
     )
     hashed = docs.select(
@@ -1497,20 +1494,10 @@ def q_pipe_dsir_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def curate_corpus(
-    docs: DataFrame, strip_substrings: bool = False
-) -> DataFrame:
+def curate_corpus(docs: DataFrame) -> DataFrame:
     """The flagship end-to-end curation composite — the full sequence
     a pretraining corpus actually runs, as ONE lazy plan:
 
-    0. (optional, ``strip_substrings=True``) ExactSubstr span removal
-       — every merged duplicated token span excised from the text
-       (``substring_strip``, Lee et al. 2022 §4.1) BEFORE any other
-       stage, so cross-document boilerplate neither survives into
-       training text nor glues unrelated docs into near-dup clusters.
-       Costs the span frame's two gram shuffles plus one doc_id join
-       back onto the corpus; off by default (the registered query
-       replays the 5-stage funnel).
     1. normalize (lowercase/collapse punctuation, content hash)
     2. exact dedup on the NORMALIZED hash (byte-different rewrites of
        the same content collapse; min doc_id is the canonical copy)
@@ -1518,6 +1505,12 @@ def curate_corpus(
        Jaccard pairs -> connected components)
     4. best-of-cluster retention by quality score
     5. deterministic train/val/test split of the survivors
+
+    ExactSubstr span removal (``substring_strip``, Lee et al. 2022
+    §4.1) is not a stage: a caller that wants cross-document
+    boilerplate excised first composes it, replacing ``text`` with
+    ``stripped_text`` before this call (``examples/corpus_curation.py``
+    strips its corpus that way).
 
     Scale shape (the costs at depth are Catalyst re-deriving the
     normalize→dedup subchain once per consumer and corpus-wide
@@ -1548,14 +1541,6 @@ def curate_corpus(
         quality_score_col,
     )
 
-    if strip_substrings:
-        from covid_engineering_spark.operators.dedup import substring_strip
-
-        stripped = substring_strip(docs).select(
-            "doc_id", F.col("stripped_text").alias("text")
-        )
-        docs = docs.drop("text").join(stripped, "doc_id")
-
     nd = normalize(docs)
     # quality is scored on the ORIGINAL text (pre-normalization), on
     # every row — dup rows score wastefully but map-side, which is
@@ -1566,7 +1551,7 @@ def curate_corpus(
             "doc_id",
             "content_hash",
             "norm_text",
-            quality_score_col("text").alias("quality_score"),
+            quality_score_col().alias("quality_score"),
         )
         .withColumn("_canon_id", min_id)
         .filter(F.col("doc_id") == F.col("_canon_id"))
@@ -1748,7 +1733,6 @@ def default_quality_weights(spark: SparkSession) -> DataFrame:
 def quality_classifier(
     docs: DataFrame,
     weights: DataFrame | None = None,
-    keep_mean_micros: int = QC_KEEP_MEAN_MICROS,
 ) -> DataFrame:
     """Linear text-quality classifier via the hashing trick (the
     fastText / CCNet-style learned gate, Joulin et al. 2017): hash
@@ -1804,7 +1788,7 @@ def quality_classifier(
     )
     keep = (
         F.col("score_micros")
-        >= F.lit(keep_mean_micros) * F.col("n_tokens")
+        >= F.lit(QC_KEEP_MEAN_MICROS) * F.col("n_tokens")
     )
     return docs.select("doc_id", "source").join(
         scored, "doc_id", "left"
@@ -1829,12 +1813,10 @@ CURR_STAGES = 4
 CURR_SHUFFLE_SEED = 73
 
 
-def curriculum_order(
-    docs: DataFrame, stages: int = CURR_STAGES
-) -> DataFrame:
+def curriculum_order(docs: DataFrame) -> DataFrame:
     """Curriculum training order (Bengio et al. 2009 easy→hard
     scheduling, as data pipelines materialize it): bucket the corpus
-    into ``stages`` difficulty tiers — difficulty here the document
+    into ``CURR_STAGES`` difficulty tiers — difficulty here the document
     LENGTH, the standard no-model proxy; swap in any score column for
     a learned curriculum — then assign every document its global
     serving position: tiers in order, documents WITHIN a tier in
@@ -1868,7 +1850,7 @@ def curriculum_order(
     staged = global_ntile(
         docs.select("doc_id", "source", "n_chars"),
         [F.col("n_chars").asc_nulls_first(), F.col("doc_id").asc()],
-        stages,
+        CURR_STAGES,
         "stage",
     ).withColumn(
         "shuffle_key",
@@ -1956,12 +1938,7 @@ def q_pipe_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_incremental(corpus, batch)
 
 
-def near_dup_incremental(
-    corpus: DataFrame,
-    batch: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    max_df: int | None = NGRAM_MAX_DF,
-) -> DataFrame:
+def near_dup_incremental(corpus: DataFrame, batch: DataFrame) -> DataFrame:
     """Incremental NEAR-dup detection: exact word-3-gram Jaccard of
     each arriving-batch document against the standing corpus — the
     sibling of ``dedup_incremental`` for rewrites that exact hashing
@@ -1970,7 +1947,7 @@ def near_dup_incremental(
 
     Scale shape: the join is batch-side × corpus-side shingles on the
     shingle key — NEVER corpus × corpus. With the stop-shingle guard
-    (document frequency over corpus ∪ batch ≤ ``max_df``) each kept
+    (document frequency over corpus ∪ batch ≤ ``NGRAM_MAX_DF``) each kept
     shingle contributes at most df_batch · df_corpus ≤ max_df² pair
     rows, so the candidate set is bounded by |batch shingles| · max_df
     — linear in the BATCH, which is the whole point of incremental
@@ -1985,16 +1962,15 @@ def near_dup_incremental(
     # Catalyst clones the scan+tokenize subtree per branch.
     shc = evicting_cache(shingles_of(corpus), "inc_near_shingles_corpus")
     shb = evicting_cache(shingles_of(batch), "inc_near_shingles_batch")
-    if max_df is not None:
-        df_ = (
-            shc.unionByName(shb)
-            .groupBy("s")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("s")
-        )
-        shc = shc.join(df_, "s")
-        shb = shb.join(df_, "s")
+    df_ = (
+        shc.unionByName(shb)
+        .groupBy("s")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") <= NGRAM_MAX_DF)
+        .select("s")
+    )
+    shc = shc.join(df_, "s")
+    shb = shb.join(df_, "s")
     nc = shc.groupBy("doc_id").agg(F.count("*").alias("n"))
     nb = shb.groupBy("doc_id").agg(F.count("*").alias("n"))
     common = (
@@ -2019,7 +1995,7 @@ def near_dup_incremental(
             "d_corpus",
         )
         .select("d_batch", "d_corpus", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
@@ -2031,9 +2007,7 @@ def q_pipe_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_near_dup_index(
-    corpus: DataFrame, cap: int | None = None
-) -> dict[str, DataFrame]:
+def build_near_dup_index(corpus: DataFrame) -> dict[str, DataFrame]:
     """The corpus side of ``near_dup_incremental_lsh`` — derived
     in-query by the registered form, or built once per corpus refresh
     and persisted (``write_near_dup_index``) so each batch probes a
@@ -2066,18 +2040,17 @@ def build_near_dup_index(
         _minhash_signatures,
     )
 
-    cap = SKETCH_BUCKET_CAP if cap is None else cap
     # two consumers each (band build + verification sizes/join)
     shc = evicting_cache(shingles_of(corpus), "inc_lsh_sh_corpus")
     # one constant-width row per doc at any corpus size
     sig = evicting_cache(
-        _minhash_signatures(shc, MINHASH_K), "inc_lsh_sig_corpus"
+        _minhash_signatures(shc), "inc_lsh_sig_corpus"
     )
     wr = Window.partitionBy("band", "bh").orderBy("doc_id")
     bands = (
         _band_frame(sig)
         .withColumn("_rn", F.row_number().over(wr))
-        .filter(F.col("_rn") <= cap)
+        .filter(F.col("_rn") <= SKETCH_BUCKET_CAP)
         .drop("_rn")
     )
     sizes = sig.select("doc_id", F.col("_n_sh").alias("n"))
@@ -2087,7 +2060,6 @@ def build_near_dup_index(
 def write_near_dup_index(
     corpus: DataFrame,
     path: str,
-    cap: int | None = None,
     n_files: int = 32,
 ) -> None:
     """Materialize the standing near-dup index under ``path`` (three
@@ -2105,7 +2077,7 @@ def write_near_dup_index(
     ``n_files`` is a layout decision like ``write_bucketed``'s bucket
     count: pick it for the target cluster's parallelism.
     """
-    idx = build_near_dup_index(corpus, cap=cap)
+    idx = build_near_dup_index(corpus)
     (
         idx["bands"]
         .repartitionByRange(n_files, "band", "bh")
@@ -2134,108 +2106,9 @@ def read_near_dup_index(
     }
 
 
-#: Literal-IN pushdown ceiling for :func:`probe_near_dup_index`: past
-#: this many collected keys the filter list itself becomes the cost
-#: and the plain probe join is the right plan.
-PROBE_PUSHDOWN_MAX_KEYS = 200_000
-
-
-def probe_near_dup_index(
-    spark: SparkSession,
-    path: str,
-    batch: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    max_keys: int = PROBE_PUSHDOWN_MAX_KEYS,
-) -> DataFrame:
-    """Batch probe of a persisted ``write_near_dup_index`` layout
-    with SCAN PRUNING — the missing half of the standing-index story
-    (measured at 1000x): the prebuilt index drops the per-batch
-    exponent from 0.792 to 0.659, but the residual growth is the
-    index SCAN itself (the probe is a JOIN, which parquet cannot
-    prune against). Here the batch's bucket keys and then its
-    candidate doc ids — both bounded by the BATCH, the defining
-    small side of the incremental regime — are collected and pushed
-    into the scans as literal ``In`` filters, so the range-clustered
-    layout's row-group min/max stats skip everything a selective
-    batch never touches (manual dynamic partition pruning, the same
-    move DPP makes automatically on partition columns):
-
-    1. batch band keys (≤ |batch|·MINHASH_BANDS values) → ``In``
-       filter on the ``bands`` scan, which ``write_near_dup_index``
-       range-clustered on (band, bh);
-    2. the probe's candidate corpus ids (≤ |batch|·BANDS·cap values)
-       → ``In`` filter on the ``shingles`` and ``sizes`` scans,
-       clustered on doc_id.
-
-    Measured pushdown (Spark 4, asserted in tests): ``In(doc_id, …)``
-    and ``In(band, …)`` reach parquet ``PushedFilters`` (row-group
-    stat skipping on the clustered layouts); the string ``bh`` set
-    stays a scan-operator ``INSET`` DataFilter — rows still drop at
-    the scan, before any join or shuffle, just without IO skipping
-    on that column.
-
-    Two bounded driver-side collects per batch — the explicit
-    trade: each is O(batch), never O(corpus), and each buys
-    row-group skipping on a corpus-sized scan. ``max_keys`` guards
-    the regime boundary: a batch so large its key list stops being
-    "small" falls back to the plain standing-index probe
-    (``near_dup_incremental_lsh(index=...)``), same output.
-
-    Output is IDENTICAL to the unpruned probe (pinned in tests):
-    filtering the index to the batch's own keys removes only rows
-    the joins drop anyway.
-    """
-    from covid_engineering_spark.functions import evicting_cache
-    from covid_engineering_spark.operators.dedup import (
-        MINHASH_K,
-        _band_frame,
-        _minhash_signatures,
-    )
-
-    idx = read_near_dup_index(spark, path)
-    shb = evicting_cache(shingles_of(batch), "probe_push_sh_batch")
-    bands_b = evicting_cache(
-        _band_frame(_minhash_signatures(shb, MINHASH_K)),
-        "probe_push_bands_batch",
-    )
-    keys = bands_b.select("band", "bh").distinct().limit(max_keys + 1)
-    key_rows = keys.collect()
-    if len(key_rows) > max_keys:
-        return near_dup_incremental_lsh(
-            None, batch, threshold=threshold, index=idx
-        )
-    bands_pruned = idx["bands"].filter(
-        F.col("band").isin([r["band"] for r in key_rows])
-        & F.col("bh").isin([r["bh"] for r in key_rows])
-    )
-    cand_ids = [
-        r["d_corpus"]
-        for r in bands_b.alias("b")
-        .join(bands_pruned.alias("c"), ["band", "bh"])
-        .select(F.col("c.doc_id").alias("d_corpus"))
-        .distinct()
-        .limit(max_keys + 1)
-        .collect()
-    ]
-    if len(cand_ids) > max_keys:
-        return near_dup_incremental_lsh(
-            None, batch, threshold=threshold, index=idx
-        )
-    pruned = {
-        "bands": bands_pruned,
-        "shingles": idx["shingles"].filter(F.col("doc_id").isin(cand_ids)),
-        "sizes": idx["sizes"].filter(F.col("doc_id").isin(cand_ids)),
-    }
-    return near_dup_incremental_lsh(
-        None, batch, threshold=threshold, index=pruned
-    )
-
-
 def near_dup_incremental_lsh(
     corpus: DataFrame | None,
     batch: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    cap: int | None = None,
     index: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
     """Incremental near-dup detection through the STANDING MinHash/LSH
@@ -2244,18 +2117,19 @@ def near_dup_incremental_lsh(
     shingle of every batch doc probes every corpus doc sharing it —
     its 10x probe exponent 0.529 is that product growing on both
     sides); here each batch doc probes ``MINHASH_BANDS`` band buckets
-    and meets at most ``cap`` corpus members per bucket, so candidates
-    are ≤ |batch| · BANDS · cap — O(batch) with a CONSTANT per-doc
-    bound, independent of how common the doc's shingles are.
+    and meets at most ``SKETCH_BUCKET_CAP`` corpus members per bucket,
+    so candidates are ≤ |batch| · BANDS · cap — O(batch) with a
+    CONSTANT per-doc bound, independent of how common the doc's
+    shingles are.
 
     Plan shape:
 
     * corpus index (:func:`build_near_dup_index`): shingles → k
       min-hash aggregates → band buckets, bucket membership capped at
-      ``cap`` by deterministic doc_id rank — the row_number window
-      rides the same (band, bh) shuffle the probe join needs; past
-      the cap a bucket is a boilerplate mega-cluster where the first
-      ``cap`` members already witness the duplication (the
+      ``SKETCH_BUCKET_CAP`` by deterministic doc_id rank — the
+      row_number window rides the same (band, bh) shuffle the probe
+      join needs; past the cap a bucket is a boilerplate mega-cluster
+      where the first members already witness the duplication (the
       ``SKETCH_BUCKET_CAP`` recall trade, bipartite flavor);
     * probe: batch bands ⋈ capped corpus bands on (band, bh) —
       batch-side × corpus-side only, NEVER corpus × corpus;
@@ -2292,11 +2166,11 @@ def near_dup_incremental_lsh(
             raise ValueError(
                 "near_dup_incremental_lsh needs a corpus or an index"
             )
-        index = build_near_dup_index(corpus, cap=cap)
+        index = build_near_dup_index(corpus)
     shc, bc, nc = index["shingles"], index["bands"], index["sizes"]
     shb = evicting_cache(shingles_of(batch), "inc_lsh_sh_batch")
     sig_b = evicting_cache(
-        _minhash_signatures(shb, MINHASH_K), "inc_lsh_sig_batch"
+        _minhash_signatures(shb), "inc_lsh_sig_batch"
     )
     bands_b = _band_frame(sig_b)
     cand = (
@@ -2332,7 +2206,7 @@ def near_dup_incremental_lsh(
             "d_corpus",
         )
         .select("d_batch", "d_corpus", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
 
 
@@ -2703,7 +2577,7 @@ _DSIR_W_CTES = f"""toks AS (
         )"""
 
 
-def dsir_gumbel_sql(k: int = DSIR_K, seed: int = 7) -> str:
+def dsir_gumbel_sql() -> str:
     """DuckDB twin of :func:`dsir_gumbel_topk_exact` — the paper's
     Gumbel-top-k resampling rule in the same integer micro-unit
     discipline as every other twinned score here (hash-derived u,
@@ -2714,7 +2588,7 @@ def dsir_gumbel_sql(k: int = DSIR_K, seed: int = 7) -> str:
     """
     from covid_engineering_spark.operators.dedup import _portable_hash_sql
 
-    h = _portable_hash_sql("CAST(doc_id AS VARCHAR)", seed)
+    h = _portable_hash_sql("CAST(doc_id AS VARCHAR)", 7)
     return f"""
         WITH {_DSIR_W_CTES},
         g AS (
@@ -2731,7 +2605,7 @@ def dsir_gumbel_sql(k: int = DSIR_K, seed: int = 7) -> str:
         ),
         topk AS (
             SELECT doc_id FROM s
-            ORDER BY score_micros DESC, doc_id LIMIT {k}
+            ORDER BY score_micros DESC, doc_id LIMIT {DSIR_K}
         )
         SELECT doc_id, source, n_feat_tokens, dsir_micros, gumbel_micros,
                score_micros,

@@ -367,7 +367,6 @@ def asof_join(
     key: str,
     ts: str,
     value_col: str,
-    out_col: str = "asof_value",
 ) -> DataFrame:
     """As-of join: attach to each left row the ``value_col`` of the
     latest right row with the same ``key`` and right.ts <= left.ts.
@@ -379,10 +378,10 @@ def asof_join(
     handling is explicit.
     """
     l_tag = left.withColumns(
-        {"_side": F.lit(1), out_col: F.lit(None).cast(right.schema[value_col].dataType)}
+        {"_side": F.lit(1), "asof_value": F.lit(None).cast(right.schema[value_col].dataType)}
     )
     r_tag = right.select(
-        key, ts, F.lit(0).alias("_side"), F.col(value_col).alias(out_col)
+        key, ts, F.lit(0).alias("_side"), F.col(value_col).alias("asof_value")
     )
     # right rows with _side=0 sort before same-ts left rows, making the
     # match inclusive (right.ts <= left.ts).
@@ -400,7 +399,7 @@ def asof_join(
     )
     return (
         l_tag.unionByName(r_full)
-        .withColumn(out_col, F.last(out_col, ignorenulls=True).over(w))
+        .withColumn("asof_value", F.last("asof_value", ignorenulls=True).over(w))
         .filter(F.col("_side") == 1)
         .drop("_side")
     )
@@ -2315,17 +2314,10 @@ def q_a26_mg_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mg_summary(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    k: int = MG_K,
-    shards: int = MG_SHARDS,
-    seed: int = 26,
-):
+def mg_summary(df: DataFrame, group_col: str, key_col: str):
     """The distributed Misra–Gries reduction on an arbitrary frame —
     returns ``(summary, counts)`` where ``summary`` holds per
-    ``group_col`` at most ``k`` rows ``(group, key, cnt, mg_est)``
+    ``group_col`` at most ``MG_K`` rows ``(group, key, cnt, mg_est)``
     with the merged-summary guarantee (see ``q_a26_mg_heavy``), and
     ``counts`` is the exact per-(group, key) count frame both stages
     derive from (callers reuse it for totals). Library form so
@@ -2334,8 +2326,8 @@ def mg_summary(
     from covid_engineering_spark.operators.dedup import portable_hash64
 
     shard = F.pmod(
-        portable_hash64(F.col(key_col).cast("string"), seed),
-        F.lit(shards),
+        portable_hash64(F.col(key_col).cast("string"), 26),
+        F.lit(MG_SHARDS),
     )
     counts = df.groupBy(
         group_col, shard.alias("shard"), key_col
@@ -2345,16 +2337,16 @@ def mg_summary(
         F.desc("cnt"), F.asc(key_col)
     )
     top1 = counts.withColumn("rn", F.row_number().over(w1)).filter(
-        F.col("rn") <= k + 1
+        F.col("rn") <= MG_K + 1
     )
     g1 = Window.partitionBy(group_col, "shard")
     t1 = F.coalesce(
-        F.max(F.when(F.col("rn") == k + 1, F.col("cnt"))).over(g1),
+        F.max(F.when(F.col("rn") == MG_K + 1, F.col("cnt"))).over(g1),
         F.lit(0),
     )
     s1 = (
         top1.withColumn("t1", t1)
-        .filter((F.col("rn") <= k) & (F.col("cnt") > F.col("t1")))
+        .filter((F.col("rn") <= MG_K) & (F.col("cnt") > F.col("t1")))
         .select(
             group_col,
             key_col,
@@ -2368,16 +2360,16 @@ def mg_summary(
         F.desc("dec1"), F.asc(key_col)
     )
     top2 = s1.withColumn("rn2", F.row_number().over(w2)).filter(
-        F.col("rn2") <= k + 1
+        F.col("rn2") <= MG_K + 1
     )
     g2 = Window.partitionBy(group_col)
     t2 = F.coalesce(
-        F.max(F.when(F.col("rn2") == k + 1, F.col("dec1"))).over(g2),
+        F.max(F.when(F.col("rn2") == MG_K + 1, F.col("dec1"))).over(g2),
         F.lit(0),
     )
     summary = (
         top2.withColumn("t2", t2)
-        .filter((F.col("rn2") <= k) & (F.col("dec1") > F.col("t2")))
+        .filter((F.col("rn2") <= MG_K) & (F.col("dec1") > F.col("t2")))
         .select(
             group_col,
             key_col,
@@ -2397,16 +2389,7 @@ QS_PCTS = (25, 50, 75, 90)
 QS_SEED = 27
 
 
-def quantile_sketch(
-    df: DataFrame,
-    group_col: str,
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    shards: int = QS_SHARDS,
-    b: int = QS_B,
-    pcts: tuple = QS_PCTS,
-    seed: int = QS_SEED,
-) -> DataFrame:
+def quantile_sketch(df: DataFrame, group_col: str, b: int = QS_B) -> DataFrame:
     """Deterministic mergeable quantile summary — the quantile member
     of the bounded-state sketch family (a23 exact / a24 CMS /
     a26 Misra–Gries counters / THIS): per (group, shard) keep every
@@ -2442,16 +2425,16 @@ def quantile_sketch(
     from covid_engineering_spark.functions import evicting_cache
     from covid_engineering_spark.operators.dedup import portable_hash64
 
-    cents = F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("long")
+    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     base = evicting_cache(
-        df.filter(F.col(value_col).isNotNull()).select(
+        df.filter(F.col("value").isNotNull()).select(
             F.col(group_col).alias("g"),
             F.pmod(
-                portable_hash64(F.col(tiebreak_col).cast("string"), seed),
-                F.lit(shards),
+                portable_hash64(F.col("event_id").cast("string"), QS_SEED),
+                F.lit(QS_SHARDS),
             ).alias("shard"),
             cents.alias("x"),
-            F.col(tiebreak_col).alias("tb"),
+            F.col("event_id").alias("tb"),
         ),
         "qsketch_base",
     )
@@ -2489,7 +2472,7 @@ def quantile_sketch(
     )
     cand = merged.select(
         "*",
-        F.explode(F.array(*[F.lit(int(p)) for p in pcts])).alias("pct"),
+        F.explode(F.array(*[F.lit(int(p)) for p in QS_PCTS])).alias("pct"),
     )
     hits = cand.filter(
         F.col("cw") >= F.expr("(pct * n_total + 99) div 100")
@@ -2551,12 +2534,7 @@ def q_a27_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantile_sketch(read_table(spark, sf_dir, "events"), "event_type")
 
 
-def quantile_histogram(
-    df: DataFrame,
-    group_col: str,
-    value_col: str = "value",
-    pcts: tuple = QS_PCTS,
-) -> DataFrame:
+def quantile_histogram(df: DataFrame, group_col: str) -> DataFrame:
     """EXACT percentiles via value-histogram collapse — the
     bounded-value-domain scale path for quantiles, and the lever the
     a27 depth probe names: when the value domain is bounded (cents,
@@ -2582,9 +2560,9 @@ def quantile_histogram(
 
     NULL values carry no count and are excluded, the a27 convention.
     """
-    cents = F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("long")
+    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     hist = (
-        df.filter(F.col(value_col).isNotNull())
+        df.filter(F.col("value").isNotNull())
         .select(F.col(group_col).alias("g"), cents.alias("x"))
         .groupBy("g", "x")
         .agg(F.count("*").alias("w"))
@@ -2596,7 +2574,7 @@ def quantile_histogram(
     )
     cand = m.select(
         "*",
-        F.explode(F.array(*[F.lit(int(p)) for p in pcts])).alias("pct"),
+        F.explode(F.array(*[F.lit(int(p)) for p in QS_PCTS])).alias("pct"),
     ).filter(F.col("cw") >= F.expr("(pct * n_total + 99) div 100"))
     w_pick = Window.partitionBy("g", "pct").orderBy("x")
     return (

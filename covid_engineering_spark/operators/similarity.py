@@ -272,9 +272,7 @@ def _kmeans_vectors(emb: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_centroids(
-    emb: DataFrame, k: int = N_CENTROIDS, iters: int = KMEANS_ITERS
-) -> DataFrame:
+def kmeans_centroids(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     """The final ``(c_id, c_emb)`` codebook after ``iters`` Lloyd
     rounds — the trained-index input ``ivf_topk`` takes (see
     :func:`kmeans_lloyd` for semantics and the per-round scale
@@ -284,7 +282,7 @@ def kmeans_centroids(
     w = Window.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
     cent = (
         e.orderBy(key, "vec_id")
-        .limit(k)
+        .limit(N_CENTROIDS)
         .select(
             (F.row_number().over(w) - 1).alias("c_id"),
             F.col("embedding").alias("c_emb"),
@@ -338,9 +336,7 @@ def _cell_means(assigned: DataFrame, cell_col: str) -> DataFrame:
     )
 
 
-def kmeans_lloyd(
-    emb: DataFrame, k: int = N_CENTROIDS, iters: int = KMEANS_ITERS
-) -> DataFrame:
+def kmeans_lloyd(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     """Deterministic ITERATED Lloyd k-means in-engine — the clustering
     primitive itself, not just the one-step IVF codebook
     (:func:`deterministic_codebook` stops after a single refinement).
@@ -370,7 +366,7 @@ def kmeans_lloyd(
     consumers derive sizes/inertia with one groupBy.
     """
     e = _kmeans_vectors(emb)
-    cent = kmeans_centroids(emb, k, iters)
+    cent = kmeans_centroids(emb, iters)
     final = _assign(e, cent, "vec_id", "embedding", 1)
     dot = F.aggregate(
         F.zip_with(
@@ -411,7 +407,7 @@ def _nat_micro(col):
     ).cast("long")
 
 
-def pca_power(emb: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
+def pca_power(emb: DataFrame) -> DataFrame:
     """Top principal component of the embedding corpus by unrolled
     power iteration — the dimensionality-reduction / whitening
     primitive behind PCA'd indexes and OPQ-style rotations, and the
@@ -423,7 +419,7 @@ def pca_power(emb: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
 
     Math: center X by the per-dim mean μ (DECIMAL-exact sums, 6dp —
     the kmeans M-step discipline), seed v₀ = 1/√DIM = 0.125 exactly
-    (binary-representable, no libm), then ``iters`` rounds of
+    (binary-representable, no libm), then ``PCA_ITERS`` rounds of
     v ← normalize(XᵀXv). Per round:
 
     * per-row dot x'·v — a fixed-order array fold (deterministic
@@ -505,7 +501,7 @@ def pca_power(emb: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
     varr = F.array(*([F.lit(0.125)] * DIM))  # 1/sqrt(DIM), exact
     va_frame = None  # after round 1, v rides a broadcast 1-row frame
     zero = F.lit(0).cast("long")
-    for _ in range(iters):
+    for _ in range(PCA_ITERS):
         if va_frame is None:
             d = centered.select("cx", _dot(varr).alias("dot"))
         else:
@@ -677,13 +673,8 @@ from covid_engineering_spark.functions.skew import (  # noqa: E402
 )
 
 
-def knn_graph(
-    emb: DataFrame,
-    block: str = "label",
-    k: int = KNN_K,
-    cap: int = KNN_BLOCK_CAP,
-) -> DataFrame:
-    """Blocked exact k-nearest-neighbor graph: within each ``block``
+def knn_graph(emb: DataFrame, cap: int = KNN_BLOCK_CAP) -> DataFrame:
+    """Blocked exact k-nearest-neighbor graph: within each ``label``
     (here the label column, standing in for an IVF cell / shard
     assignment), every vector's k nearest others by cosine. The
     all-pairs primitive behind semantic-dedup clustering, diversity
@@ -722,7 +713,7 @@ def knn_graph(
         salted_block_sides,
     )
 
-    a, b = salted_block_sides(emb, block, "vec_id", "embedding", cap)
+    a, b = salted_block_sides(emb, "label", "vec_id", "embedding", cap)
     cos = cosine_expr(F.col("pay_a"), F.col("pay_b"))
     # Cosine is symmetric, so score each UNORDERED pair once
     # (id_a < id_b — half the dominant dot-product evaluations) and
@@ -755,9 +746,9 @@ def knn_graph(
     w = Window.partitionBy("src_id").orderBy(F.desc("cosine"), "n_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select(
-            F.col("blk").alias(block), "src_id", "n_id", "cosine", "rank"
+            F.col("blk").alias("label"), "src_id", "n_id", "cosine", "rank"
         )
     )
 
@@ -779,7 +770,7 @@ PAGERANK_SCALE = 1_000_000
 PAGERANK_DAMP_NUM = 85
 
 
-def pagerank(edges: DataFrame, iters: int = PAGERANK_ITERS) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Fixed-iteration integer PageRank over a directed edge list
     (``src_id`` -> ``n_id``): the graph-centrality companion to the
     kNN graph — on a near-dup/retrieval graph, high-rank nodes are
@@ -832,7 +823,7 @@ def pagerank(edges: DataFrame, iters: int = PAGERANK_ITERS) -> DataFrame:
     ranks = nodes.select(
         "node", F.lit(PAGERANK_SCALE).cast("long").alias("rank")
     )
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contrib = e.join(ranks, e["src_id"] == ranks["node"]).select(
             F.col("n_id").alias("node"),
             F.expr("rank div out_deg").alias("contrib"),
@@ -969,9 +960,7 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 LPA_ITERS = 4
 
 
-def label_propagation(
-    edges: DataFrame, iters: int = LPA_ITERS
-) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over a
     directed edge list taken as UNDIRECTED — community detection on
     the retrieval graph: where connected components answer "which
@@ -1051,7 +1040,7 @@ def label_propagation(
       END,
       acc -> CASE WHEN acc.cc > acc.bc THEN acc.cv ELSE acc.bv END
     )"""
-    for _ in range(iters):
+    for _ in range(LPA_ITERS):
         nbr = und.join(
             labels.select(F.col("node").alias("_n"), "lab"),
             F.col("n_id") == F.col("_n"),
@@ -1094,7 +1083,7 @@ KCORE_K = 3
 KCORE_ROUNDS = 16
 
 
-def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
+def kcore(edges: DataFrame, k: int = KCORE_K) -> DataFrame:
     """Fixed-round k-core decomposition of a directed edge list taken
     as undirected — the graph-curation density gate: the k-core is the
     maximal subgraph where every vertex keeps ≥ k neighbors, the
@@ -1105,7 +1094,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
     degree is below k — removing a vertex lowers its neighbors'
     degrees, so the cascade must recompute degrees per round.
 
-    Fixed ``rounds`` unrolled into one lazy plan (the PageRank/kmeans
+    Fixed ``KCORE_ROUNDS`` unrolled into one lazy plan (the PageRank/kmeans
     convention — convergence-loop use materializes per round with
     localCheckpoint exactly as ``connected_components`` does). Per
     round: one partial-aggregated degree count (shuffle carries
@@ -1152,7 +1141,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> Dat
     und = und0
     verts = deg0.select("v")
     peeled = None  # (v, peel_round) accumulator
-    for r in range(1, rounds + 1):
+    for r in range(1, KCORE_ROUNDS + 1):
         # eager localCheckpoint per round (the connected_components
         # convention): each round's edge set references the previous
         # round's ~3 times (two degree branches + the restriction),
@@ -1222,11 +1211,11 @@ GREEDY_HOPS = 4
 GREEDY_BEAM = 4
 
 
-def _navigable_graph(emb: DataFrame, nq: int):
+def _navigable_graph(emb: DataFrame):
     """The navigable graph ``graph_greedy_search`` walks. Returns
     ``(edges, entry)``: the UNDIRECTED blocked kNN edges plus the
     fully connected hub navigation layer (one md5-drawn hub per label
-    block, drawn from vec_id ≥ nq so a fixture query never navigates
+    block, drawn from vec_id ≥ N_QUERIES so a fixture query never navigates
     to its own identity), and the 1-row md5-minimal entry vertex.
 
     Edges carry ids only, not the neighbor's embedding (the HNSW
@@ -1249,7 +1238,7 @@ def _navigable_graph(emb: DataFrame, nq: int):
     )
     hubs = evicting_cache(
         emb.filter(
-            F.col("embedding").isNotNull() & (F.col("vec_id") >= nq)
+            F.col("embedding").isNotNull() & (F.col("vec_id") >= N_QUERIES)
         )
         .select("label", "vec_id")
         .withColumn("rk", F.row_number().over(wlab))
@@ -1281,13 +1270,7 @@ def _navigable_graph(emb: DataFrame, nq: int):
     return edges, entry
 
 
-def graph_greedy_search(
-    emb: DataFrame,
-    hops: int = GREEDY_HOPS,
-    beam: int = GREEDY_BEAM,
-    n_queries: int | None = None,
-    with_eval: bool = True,
-) -> DataFrame:
+def graph_greedy_search(emb: DataFrame, beam: int = GREEDY_BEAM) -> DataFrame:
     """Navigable-graph ANN in-engine — the beam (best-first) search
     that underlies HNSW/NSW-style indexes, re-expressed as an
     unrolled lazy plan: from a fixed entry vertex, repeatedly score
@@ -1321,25 +1304,18 @@ def graph_greedy_search(
     walk; hop count is fixed, so the plan is bounded like the
     kmeans/pagerank unrolls. The brute-force column is the evaluation
     harness, not the index path — at production scale it runs on a
-    sampled query set exactly as ``ann_recall_eval`` does.
-
-    Query-axis scaling (the production shape — many queries, one
-    graph): ``n_queries`` widens the query set (default the module's
-    ``N_QUERIES``), and ``with_eval=False`` drops the brute-force
-    evaluation columns, returning just (q_id, found_id, found_cs) —
-    the serving path, whose per-hop joins stay broadcast until the
-    first bound: the broadcast state/candidate frames grow ∝
-    queries × beam (× max_degree for candidates), so past ~10⁷
-    query-rows per wave the move is batching query waves, not a
-    different plan.
+    sampled query set exactly as ``ann_recall_eval`` does. The
+    per-hop joins stay broadcast while the state/candidate frames,
+    which grow ∝ queries × beam (× max_degree for candidates), fit:
+    past ~10⁷ query-rows per wave the move is batching query waves,
+    not a different plan.
     """
     from covid_engineering_spark.functions import evicting_cache
 
-    nq = N_QUERIES if n_queries is None else n_queries
     e = _kmeans_vectors(emb)
-    edges, entry = _navigable_graph(emb, nq)
+    edges, entry = _navigable_graph(emb)
     q = evicting_cache(
-        e.filter(F.col("vec_id") < nq).select(
+        e.filter(F.col("vec_id") < N_QUERIES).select(
             F.col("vec_id").alias("q_id"),
             F.col("embedding").alias("q_emb"),
         ),
@@ -1406,7 +1382,7 @@ def graph_greedy_search(
             )
         )
 
-    for _ in range(hops):
+    for _ in range(GREEDY_HOPS):
         cand = (
             edges.join(
                 F.broadcast(state), edges["src_id"] == state["id"]
@@ -1435,7 +1411,7 @@ def graph_greedy_search(
     # top-1 per query: max over the (cs, -id) struct — lexicographic
     # max ≡ cs DESC then id ASC; reuses the final hop's q_id
     # partitioning, so no exchange and no rank window.
-    found_only = (
+    found = (
         state.groupBy("q_id")
         .agg(
             F.max(
@@ -1448,15 +1424,12 @@ def graph_greedy_search(
             F.col("b.cs").alias("found_cs"),
         )
     )
-    if not with_eval:
-        return found_only
-    topk = evicting_cache(q_cosine_frame(emb, nq), "greedy_exact_topk")
+    topk = evicting_cache(q_cosine_frame(emb), "greedy_exact_topk")
     best = topk.filter(F.col("rank") == 1).select(
         "q_id",
         F.col("n_id").alias("best_id"),
         F.col("cosine").alias("best_cs"),
     )
-    found = found_only
     in_topk = topk.select(
         "q_id", F.col("n_id").alias("found_id"), F.lit(True).alias("_in")
     )
@@ -1671,14 +1644,14 @@ RERANK_SHORTLIST = 25
 
 
 def rerank_topk(
-    emb: DataFrame, k: int = TOP_K, shortlist: int = RERANK_SHORTLIST
+    emb: DataFrame, shortlist: int = RERANK_SHORTLIST
 ) -> DataFrame:
     """Two-stage retrieval (the universal production ANN serving
     shape — FAISS/ScaNN "search then refine"): stage 1 over-fetches a
     ``shortlist`` of candidates per query through the compressed-code
     ADC scan (``pq_adc_topk`` — corpus side touches only 4-byte
     codes), stage 2 re-ranks ONLY those candidates with the exact
-    float cosine and keeps the top ``k``. Compression error decides
+    float cosine and keeps the top ``TOP_K``. Compression error decides
     at most which candidates enter the shortlist, never their final
     order — measured here: exact-rerank recall@5 strictly dominates
     the raw ADC ranking at equal corpus cost (pinned in tests).
@@ -1711,7 +1684,7 @@ def rerank_topk(
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "n_id")
     return (
         rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("q_id", "n_id", "cosine", "rank")
     )
 
@@ -1727,7 +1700,7 @@ IVFPQ_COARSE_K = 8
 IVFPQ_PROBE = 4
 
 
-def ivfpq_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
+def ivfpq_topk(emb: DataFrame) -> DataFrame:
     """IVF-PQ: the billion-scale ANN architecture — a coarse
     quantizer routes each corpus vector into one inverted list, and
     search runs ADC over PQ codes ONLY inside the query's probed
@@ -1817,7 +1790,7 @@ def ivfpq_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy("adc_micro", "n_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "q_id",
             "n_id",
@@ -1911,7 +1884,7 @@ def q_emb_assign_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 OUTLIER_Z = 2
 
 
-def embedding_outliers(emb: DataFrame, z: int = OUTLIER_Z) -> DataFrame:
+def embedding_outliers(emb: DataFrame) -> DataFrame:
     """Per-cluster embedding outlier flags — the mislabeled-example /
     contaminated-cluster sweep an embedding corpus runs before the
     vectors feed semantic dedup or retrieval training: a vector far
@@ -1979,7 +1952,7 @@ def embedding_outliers(emb: DataFrame, z: int = OUTLIER_Z) -> DataFrame:
     )
     mean = F.col("_s").cast("double") / F.col("_n")
     var = F.col("_q").cast("double") / F.col("_n") - mean * mean
-    thr = mean + F.lit(z) * F.sqrt(F.greatest(var, F.lit(0.0)))
+    thr = mean + F.lit(OUTLIER_Z) * F.sqrt(F.greatest(var, F.lit(0.0)))
     thr_stats = stats.select(
         "label",
         F.floor(F.round(thr, 8) + F.lit(0.5))
@@ -2004,29 +1977,24 @@ def q_emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_TAU = 0.3
 
 
-def semdedup(
-    emb: DataFrame,
-    tau: float = SEMDEDUP_TAU,
-    cell_col: str = "label",
-    cap: int | None = None,
-) -> DataFrame:
+def semdedup(emb: DataFrame, cap: int | None = None) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540 — public): inside each cluster cell, drop every
-    vector that lies within cosine ``tau`` of a LOWER-id vector of
-    the same cell, keeping one representative per epsilon-ball.
+    vector that lies within cosine ``SEMDEDUP_TAU`` of a LOWER-id
+    vector of the same cell, keeping one representative per
+    epsilon-ball.
     Semantics are domination-by-any-lower-id (not the paper's
     iterative greedy): deterministic, order-free, and expressible as
     one relational plan with an exact SQL twin. Returns the WHOLE
     corpus as (vec_id, cell, kept).
 
-    Cells come from ``cell_col`` — the materialized cluster-id column
-    a production SemDeDup run stores once when embeddings land (here
-    the corpus ``label``). To derive cells in-engine instead, feed
-    ``assign_nearest_centroid``'s output through ``cell_col``; its
-    corpus × k broadcast scoring is then the dominant term — that is
-    the paper's (one-off) clustering cost, priced separately from the
-    dedup by design. The registered form uses the stored column, the
-    same blocking contract as ``knn_graph``/``embedding_pairs``.
+    Cells come from ``label`` — the materialized cluster-id column a
+    production SemDeDup run stores once when embeddings land, the same
+    blocking contract as ``knn_graph``/``embedding_pairs``. Deriving
+    cells in-engine (``assign_nearest_centroid``) would make its
+    corpus × k broadcast scoring the dominant term — the paper's
+    one-off clustering cost, priced separately from the dedup by
+    design.
 
     Scale shape: the intra-cell pairwise join rides
     ``salted_block_sides`` — the shared skew-guarded sub-block grid,
@@ -2043,9 +2011,9 @@ def semdedup(
         salted_block_sides,
     )
 
-    cells = emb.select("vec_id", F.col(cell_col).alias("cell"))
+    cells = emb.select("vec_id", F.col("label").alias("cell"))
     e = emb.select(
-        "vec_id", F.col(cell_col).alias("cell"), "embedding"
+        "vec_id", F.col("label").alias("cell"), "embedding"
     )
     a, b = salted_block_sides(
         e, "cell", "vec_id", "embedding", BLOCK_CAP if cap is None else cap
@@ -2053,7 +2021,7 @@ def semdedup(
     dropped = (
         a.join(b, SALTED_JOIN_KEYS)
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cosine_expr(F.col("pay_a"), F.col("pay_b")) >= tau)
+        .filter(cosine_expr(F.col("pay_a"), F.col("pay_b")) >= SEMDEDUP_TAU)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("_dropped", F.lit(1))
@@ -2075,7 +2043,6 @@ HN_BATCH_CAP = 128
 
 def hard_negatives(
     emb: DataFrame,
-    k: int = HN_K,
     batch_cap: int = HN_BATCH_CAP,
     salt_cap: int | None = None,
 ) -> DataFrame:
@@ -2160,7 +2127,7 @@ def hard_negatives(
     w = Window.partitionBy("src_id").orderBy(F.desc("cosine"), "neg_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= HN_K)
         .select("src_id", "src_label", "neg_id", "neg_label", "cosine", "rank")
     )
 
@@ -2330,12 +2297,10 @@ def recall_eval(emb: DataFrame) -> DataFrame:
     )
 
 
-def q_cosine_frame(
-    emb: DataFrame, n_queries: int = N_QUERIES
-) -> DataFrame:
+def q_cosine_frame(emb: DataFrame) -> DataFrame:
     """The brute-force cosine top-k over an explicit frame (factored
     from ``q_ann_cosine_topk`` so ``recall_eval`` composes it)."""
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     c = emb.select(
@@ -2389,7 +2354,7 @@ def bq_encode(emb: DataFrame) -> DataFrame:
     )
 
 
-def hamming_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
+def hamming_topk(emb: DataFrame) -> DataFrame:
     """Brute-force Hamming top-k over the binary-quantized corpus —
     the BQ retrieval pattern: distance is two XOR+popcount pairs on
     BIGINT words (pure whole-stage-codegen integer ops, no float
@@ -2423,7 +2388,7 @@ def hamming_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy("hamming", "n_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
     )
 
 
@@ -2437,9 +2402,9 @@ def q_ann_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 RANGE_TAU = 0.30
 
 
-def range_search(emb: DataFrame, tau: float = RANGE_TAU) -> DataFrame:
+def range_search(emb: DataFrame) -> DataFrame:
     """LSH-indexed RANGE search (epsilon-ball retrieval): every corpus
-    vector within cosine ``tau`` of each query — the "find everything
+    vector within cosine ``RANGE_TAU`` of each query — the "find everything
     this similar" primitive behind radius dedup, near-duplicate audit,
     and contamination sweeps, where top-k's fixed k either truncates
     dense neighborhoods or pads sparse ones.
@@ -2477,7 +2442,7 @@ def range_search(emb: DataFrame, tau: float = RANGE_TAU) -> DataFrame:
         .filter(F.col("q_id") != F.col("n_id"))
         .select("q_id", "n_id", cos.alias("cosine"))
         .distinct()  # the same pair can share buckets in several tables
-        .filter(F.col("cosine") >= F.lit(tau))
+        .filter(F.col("cosine") >= F.lit(RANGE_TAU))
     )
 
 
@@ -2492,20 +2457,20 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 MRL_DIM = 16
 
 
-def prefix_topk(emb: DataFrame, width: int = MRL_DIM) -> DataFrame:
-    """Brute-force top-k over the first ``width`` dimensions only —
+def prefix_topk(emb: DataFrame) -> DataFrame:
+    """Brute-force top-k over the first ``MRL_DIM`` dimensions only —
     the Matryoshka coarse pass. Ranking is by prefix DOT PRODUCT
     (prefixes of unit vectors are not unit; dot ranking is what a
     truncated-vector index computes), same fold/round/tiebreak
     discipline as the full-width baseline.
     """
     pre = emb.select(
-        "vec_id", F.slice("embedding", 1, width).alias("embedding")
+        "vec_id", F.slice("embedding", 1, MRL_DIM).alias("embedding")
     )
     return q_cosine_frame(pre)
 
 
-def mrl_recall(emb: DataFrame, width: int = MRL_DIM) -> DataFrame:
+def mrl_recall(emb: DataFrame) -> DataFrame:
     """Recall@k of prefix-only retrieval against full-width ground
     truth, in-engine — the evaluation that decides how far an MRL
     deployment can truncate before quality pays: per query,
@@ -2520,7 +2485,7 @@ def mrl_recall(emb: DataFrame, width: int = MRL_DIM) -> DataFrame:
     exact = q_cosine_frame(emb).select(
         F.col("q_id").alias("e_qid"), F.col("n_id").alias("e_nid")
     )
-    approx = prefix_topk(emb, width).select(
+    approx = prefix_topk(emb).select(
         F.col("q_id").alias("a_qid"), F.col("n_id").alias("a_nid")
     )
     hits = exact.join(
@@ -2574,7 +2539,7 @@ def _rp_matrix() -> list[list[float]]:
     return rows
 
 
-def rp_project(emb: DataFrame, emb_col: str = "embedding") -> DataFrame:
+def rp_project(emb: DataFrame) -> DataFrame:
     """Dense Johnson–Lindenstrauss random projection DIM → RP_DIM:
     p_j = Σ_i v_i · R_ji, each component the same sequential
     zip_with/aggregate fold as ``cosine_expr`` (so the DuckDB twin's
@@ -2602,7 +2567,7 @@ def rp_project(emb: DataFrame, emb_col: str = "embedding") -> DataFrame:
         "aggregate(zip_with({col}, array({row}), "
         "(x, y) -> cast(x as double) * y), "
         "cast(0.0 as double), (acc, x) -> acc + x)".format(
-            col=emb_col,
+            col="embedding",
             row=", ".join(f"cast({x!r} as double)" for x in row),
         )
         for row in _rp_matrix()
@@ -2840,7 +2805,7 @@ def _pagerank_oracle_sql() -> str:
         SELECT node, rank FROM r{PAGERANK_ITERS}
     """
 
-def _pca_oracle_sql(iters: int = PCA_ITERS) -> str:
+def _pca_oracle_sql() -> str:
     """Generated DuckDB twin of ``q_emb_pca_power``: replays the
     DECIMAL-exact centering, the 0.125 seed, and every unrolled power
     round — micro-integer w sums, truncating ``//`` division (parity
@@ -2855,7 +2820,7 @@ def _pca_oracle_sql(iters: int = PCA_ITERS) -> str:
 
     blocks = []
     prev = "v0"
-    for t in range(1, iters + 1):
+    for t in range(1, PCA_ITERS + 1):
         blocks.append(f"""
         d{t} AS (SELECT c.vec_id, c.cx,
                         list_dot_product(c.cx, {prev}.v) AS dot
@@ -2917,28 +2882,26 @@ def _pca_oracle_sql(iters: int = PCA_ITERS) -> str:
         SELECT CAST(mu.pos AS INTEGER) AS dim,
                mu.mv AS mu,
                var.var_micros,
-               vv{iters}.vv AS loading,
+               vv{PCA_ITERS}.vv AS loading,
                eig.eig_micros,
                ROUND(eig.eig_micros / tot.tv, 6) AS explained_ratio
         FROM mu
-        JOIN vv{iters} ON vv{iters}.pos = mu.pos
+        JOIN vv{PCA_ITERS} ON vv{PCA_ITERS}.pos = mu.pos
         JOIN var ON var.pos = mu.pos
         CROSS JOIN eig CROSS JOIN tot
     """
 
 
-def _greedy_oracle_sql(
-    hops: int = GREEDY_HOPS, beam: int = GREEDY_BEAM
-) -> str:
+def _greedy_oracle_sql() -> str:
     """Twin of ``graph_greedy_search``: the identical kNN edge CTE as
     the PageRank/triangle twins, the per-label md5 hub draw, the
     fully-connected hub layer, the LIMIT-1 entry, every unrolled beam
     hop (score the frontier's out-neighbors, dedup, incumbents
-    compete, rank by (cs DESC, id), keep ``beam``), and the
+    compete, rank by (cs DESC, id), keep ``GREEDY_BEAM``), and the
     self-excluded brute-force top-1."""
     blocks = []
     prev = "s0"
-    for t in range(1, hops + 1):
+    for t in range(1, GREEDY_HOPS + 1):
         blocks.append(f"""
         c{t} AS (
             SELECT DISTINCT s.q_id, ed.n_id AS id
@@ -2964,7 +2927,7 @@ def _greedy_oracle_sql(
                 SELECT *, ROW_NUMBER() OVER (
                     PARTITION BY q_id ORDER BY cs DESC, id) AS rk
                 FROM u{t}
-            ) t WHERE rk <= {beam}
+            ) t WHERE rk <= {GREEDY_BEAM}
         )""")
         prev = f"s{t}"
     return f"""
@@ -3050,9 +3013,7 @@ def _greedy_oracle_sql(
     """
 
 
-def _kcore_oracle_sql(
-    k: int = KCORE_K, rounds: int = KCORE_ROUNDS
-) -> str:
+def _kcore_oracle_sql() -> str:
     """Twin of ``kcore`` over the kNN edges: the identical edge CTE,
     then every unrolled peel round — zero-filled degree recount,
     sub-k drop with its round stamp, survivor semi-restriction of the
@@ -3072,14 +3033,14 @@ def _kcore_oracle_sql(
     # ~3^rounds blowup the Spark side truncates with localCheckpoint.
     blocks = []
     prev_v, prev_u = "v0", "und"
-    for r in range(1, rounds + 1):
+    for r in range(1, KCORE_ROUNDS + 1):
         blocks.append(f"""
         d{r} AS MATERIALIZED (
             SELECT vv.v, CAST(COALESCE(cnt.deg, 0) AS BIGINT) AS deg
             FROM {prev_v} vv LEFT JOIN {deg_of(prev_u)} cnt USING (v)
         ),
-        p{r} AS (SELECT v, {r} AS peel_round FROM d{r} WHERE deg < {k}),
-        v{r} AS (SELECT v FROM d{r} WHERE deg >= {k}),
+        p{r} AS (SELECT v, {r} AS peel_round FROM d{r} WHERE deg < {KCORE_K}),
+        v{r} AS (SELECT v FROM d{r} WHERE deg >= {KCORE_K}),
         u{r} AS MATERIALIZED (
             SELECT u.a, u.b FROM {prev_u} u
             JOIN v{r} x ON x.v = u.a
@@ -3087,7 +3048,7 @@ def _kcore_oracle_sql(
         )""")
         prev_v, prev_u = f"v{r}", f"u{r}"
     peeled_union = "\n            UNION ALL ".join(
-        f"SELECT v, peel_round FROM p{r}" for r in range(1, rounds + 1)
+        f"SELECT v, peel_round FROM p{r}" for r in range(1, KCORE_ROUNDS + 1)
     )
     return f"""
         WITH scored AS (
@@ -3138,7 +3099,7 @@ def _kcore_oracle_sql(
     """
 
 
-def _lpa_oracle_sql(iters: int = LPA_ITERS) -> str:
+def _lpa_oracle_sql() -> str:
     """Twin of ``label_propagation`` over the kNN edges: the identical
     edge CTE, UNION-symmetrized, then every unrolled synchronous round
     — neighbor-label counts, mode with (count DESC, label ASC)
@@ -3146,7 +3107,7 @@ def _lpa_oracle_sql(iters: int = LPA_ITERS) -> str:
     per round for the same fan-out reason as the k-core twin."""
     blocks = []
     prev = "l0"
-    for i in range(1, iters + 1):
+    for i in range(1, LPA_ITERS + 1):
         blocks.append(f"""
         c{i} AS MATERIALIZED (
             SELECT e.src_id AS node, l.lab AS nlab,
@@ -3429,9 +3390,7 @@ def _ivf_oracle_sql() -> str:
     """
 
 
-def _kmeans_cte_chain(
-    k: int = N_CENTROIDS, iters: int = KMEANS_ITERS
-) -> tuple[str, str]:
+def _kmeans_cte_chain() -> tuple[str, str]:
     """The shared k-means CTE chain (NULL-filtered ``e``, md5-ranked
     ``cent0``, one asg/cm/cent block per unrolled round). Returns
     ``(cte_text, final_cent_name)`` — consumed by the k-means twin and
@@ -3439,7 +3398,7 @@ def _kmeans_cte_chain(
     different codebook."""
     blocks = []
     prev = "cent0"
-    for t in range(1, iters + 1):
+    for t in range(1, KMEANS_ITERS + 1):
         blocks.append(f"""
         asg{t} AS (
             SELECT vec_id, v, c_id AS cell FROM (
@@ -3475,22 +3434,20 @@ def _kmeans_cte_chain(
                    v AS c
             FROM e
             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-            LIMIT {k}
+            LIMIT {N_CENTROIDS}
         ),
         {",".join(blocks)}"""
     return chain, prev
 
 
-def _kmeans_oracle_sql(
-    k: int = N_CENTROIDS, iters: int = KMEANS_ITERS
-) -> str:
+def _kmeans_oracle_sql() -> str:
     """Generated DuckDB twin of ``q_emb_kmeans_lloyd``: replays the
     md5-ranked seed draw and every unrolled Lloyd round — 6dp-rounded
     dot assignment (ties to the smaller centroid id), DECIMAL(18,9)
     means rounded 6dp — then the final assignment with its 6dp score.
     The same step-for-step pairing ``_ivf_oracle_sql`` uses, iterated.
     """
-    chain, cent = _kmeans_cte_chain(k, iters)
+    chain, cent = _kmeans_cte_chain()
     return f"""
         WITH {chain}
         SELECT vec_id, CAST(cluster AS INTEGER) AS cluster, cs FROM (
@@ -3505,14 +3462,12 @@ def _kmeans_oracle_sql(
     """
 
 
-def _ivf_kmeans_oracle_sql(
-    k: int = N_CENTROIDS, iters: int = KMEANS_ITERS
-) -> str:
+def _ivf_kmeans_oracle_sql() -> str:
     """Generated DuckDB twin of ``q_ann_ivf_kmeans_topk``: the shared
     k-means CTE chain feeding the IVF probe/score tail — list
     assignment, probe selection, candidate scoring, per-query top-k —
     all over the NULL-filtered vector frame."""
-    chain, cent = _kmeans_cte_chain(k, iters)
+    chain, cent = _kmeans_cte_chain()
     return f"""
         WITH {chain},
         corpus AS (

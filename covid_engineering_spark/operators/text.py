@@ -66,11 +66,11 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quality_parts(col: str = "text"):
+def _quality_parts():
     """The three per-document quality ratios as column expressions
-    over ``col`` — each pre-rounded to the 6-decimal grid (see the
+    over ``text`` — each pre-rounded to the 6-decimal grid (see the
     rounding note in ``quality_frame``)."""
-    ws = F.split(F.col(col), " ")
+    ws = F.split(F.col("text"), " ")
     n_words = F.size(ws)
     sum_len = F.aggregate(
         F.transform(ws, lambda w: F.length(w).cast("long")),
@@ -79,21 +79,21 @@ def _quality_parts(col: str = "text"):
     )
     avg_word_len = F.round(sum_len / n_words, 6)
     stop_ratio = F.round(_count_in(ws, EN_STOP) / n_words, 6)
-    stripped = F.regexp_replace(col, "[^a-z0-9 ]", "")
+    stripped = F.regexp_replace("text", "[^a-z0-9 ]", "")
     punct_ratio = F.round(
-        (F.length(col) - F.length(stripped)) / F.length(col), 6
+        (F.length("text") - F.length(stripped)) / F.length("text"), 6
     )
     return avg_word_len, stop_ratio, punct_ratio
 
 
-def quality_score_col(col: str = "text"):
+def quality_score_col():
     """``quality_score`` as a single scan-side column expression —
     lets composites (``pipe_curate_corpus``) score documents inline on
     an already-loaded frame instead of building ``quality_frame`` and
     paying a corpus×corpus doc_id join to attach it. Bit-identical to
     ``quality_frame``'s column: same pre-rounded parts, same final
     rounding."""
-    _, stop_ratio, punct_ratio = _quality_parts(col)
+    _, stop_ratio, punct_ratio = _quality_parts()
     return F.round(stop_ratio + (F.lit(1.0) - punct_ratio), 6)
 
 
@@ -110,7 +110,7 @@ def quality_frame(docs: DataFrame) -> DataFrame:
     composite callers' scores are NULL-for-NULL on both engines
     already via the ``punct_ratio`` term.)
     """
-    avg_word_len, stop_ratio, punct_ratio = _quality_parts("text")
+    avg_word_len, stop_ratio, punct_ratio = _quality_parts()
     stop_ratio = F.when(F.col("text").isNotNull(), stop_ratio)
     # sum (not average) of the pre-rounded ratios: the exact result
     # stays on the 6-decimal grid, so the final round never sits on a
@@ -297,7 +297,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def normalize(docs: DataFrame, col: str = "text") -> DataFrame:
+def normalize(docs: DataFrame) -> DataFrame:
     """Canonical text normalization before hashing/dedup: lowercase,
     collapse every punctuation/whitespace run to one space, trim —
     then fingerprint the canonical form (md5) so byte-different
@@ -308,7 +308,7 @@ def normalize(docs: DataFrame, col: str = "text") -> DataFrame:
     the 100 TB cost at exactly one pass over the text column.
     """
     norm = F.trim(
-        F.regexp_replace(F.lower(F.col(col)), "[^a-z0-9]+", " ")
+        F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " ")
     )
     return docs.withColumns(
         {
@@ -493,9 +493,7 @@ COLLOC_MIN = 5
 COLLOC_K = 50
 
 
-def collocations(
-    docs: DataFrame, min_count: int = COLLOC_MIN, k: int = COLLOC_K
-) -> DataFrame:
+def collocations(docs: DataFrame) -> DataFrame:
     """Corpus-level collocation extraction: the top-k word pairs by
     pointwise mutual information — PMI = ln(p(ab)/(p(a)·p(b))) with
     p(ab) over bigram positions and p(a) over tokens — subject to a
@@ -551,7 +549,7 @@ def collocations(
         "colloc_bg",
     )
     b_tot = counts.agg(F.sum("c_ab").alias("b_tot"))
-    cand = counts.filter(F.col("c_ab") >= min_count)
+    cand = counts.filter(F.col("c_ab") >= COLLOC_MIN)
     ca = uni.select(F.col("tok").alias("a"), F.col("cf").alias("c_a"))
     cb = uni.select(F.col("tok").alias("b"), F.col("cf").alias("c_b"))
     pmi_micros = F.floor(
@@ -578,7 +576,7 @@ def collocations(
             pmi_micros.alias("pmi_micros"),
         )
         .orderBy(F.desc("pmi_micros"), "bg")
-        .limit(k)
+        .limit(COLLOC_K)
     )
 
 
@@ -821,10 +819,10 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_lm(read_table(spark, sf_dir, "documents"))
 
 
-def dup_ngram_rate(docs: DataFrame, min_df: int = 2) -> DataFrame:
+def dup_ngram_rate(docs: DataFrame) -> DataFrame:
     """Corpus-level duplicated-n-gram rate per document: the fraction
     of a document's distinct word-3-grams that occur in at least
-    ``min_df`` documents corpus-wide. The memorization-risk signal
+    two documents corpus-wide. The memorization-risk signal
     from the dedup literature (a document whose n-grams are mostly
     shared elsewhere is boilerplate or a near-copy even when no single
     pair-level match fires) — complements pair dedup exactly where
@@ -845,7 +843,7 @@ def dup_ngram_rate(docs: DataFrame, min_df: int = 2) -> DataFrame:
     # as the jaccard path's materialized shingle index).
     sh = evicting_cache(shingles_of(docs), "dup_rate_shingles")
     df_tab = sh.groupBy("s").agg(F.count("*").alias("df"))
-    dup = (F.col("df") >= min_df).cast("long")
+    dup = (F.col("df") >= 2).cast("long")
     agg = (
         sh.join(df_tab, "s")
         .groupBy("doc_id")
@@ -877,9 +875,7 @@ BM25_B = 0.75
 BM25_TOPN = 20
 
 
-def bm25_rank(
-    docs: DataFrame, terms: tuple[str, ...] = BM25_TERMS
-) -> DataFrame:
+def bm25_rank(docs: DataFrame) -> DataFrame:
     """BM25 document ranking against a fixed query term set — the
     retrieval-relevance primitive (Robertson–Spärck Jones; the scoring
     function behind Lucene/Elasticsearch and the lexical half of
@@ -909,7 +905,7 @@ def bm25_rank(
     from covid_engineering_spark.functions import evicting_cache
 
     ws = F.split(F.col("text"), " ")
-    term_arr = F.array(*[F.lit(t) for t in terms])
+    term_arr = F.array(*[F.lit(t) for t in BM25_TERMS])
     lengths = evicting_cache(
         docs.select(
             "doc_id",
@@ -1091,10 +1087,7 @@ def _gopher_rule_cols(
     return _gopher_verdicts(_gopher_metric_cols(required_words), min_kinds)
 
 
-def gopher_gate_col(
-    required_words: tuple[str, ...] = GOPHER_REQUIRED_FIXTURE,
-    min_kinds: int = GOPHER_MIN_REQUIRED_KINDS,
-):
+def gopher_gate_col():
     """The combined Gopher gate as ONE predicate Column over a
     ``text`` column — the zero-join form for gate-first funnels:
     ``docs.filter(gopher_gate_col())`` evaluates the whole rule suite
@@ -1104,14 +1097,12 @@ def gopher_gate_col(
     measured at sf0.1: the join form erased the entire downstream
     saving of a ~45% gate.
     """
-    return _gopher_rule_cols(required_words, min_kinds)["pass_gopher"]
+    return _gopher_rule_cols(
+        GOPHER_REQUIRED_FIXTURE, GOPHER_MIN_REQUIRED_KINDS
+    )["pass_gopher"]
 
 
-def gopher_rules(
-    docs: DataFrame,
-    required_words: tuple[str, ...] = GOPHER_REQUIRED_FIXTURE,
-    min_kinds: int = GOPHER_MIN_REQUIRED_KINDS,
-) -> DataFrame:
+def gopher_rules(docs: DataFrame) -> DataFrame:
     """The Gopher quality-filter rule suite (Rae et al. 2021 §A1.1) —
     the published heuristic gate most pretraining pipelines start
     from: per document, every rule's verdict plus the combined gate,
@@ -1148,7 +1139,7 @@ def gopher_rules(
     do. Folding the wraps into one select instead re-measured at 2.1x:
     each CASE WHEN branch re-derived its own copy of the arrays.
     """
-    metrics = _gopher_metric_cols(required_words)
+    metrics = _gopher_metric_cols(GOPHER_REQUIRED_FIXTURE)
     staged = docs.select(
         "doc_id",
         "source",
@@ -1156,7 +1147,8 @@ def gopher_rules(
         *[expr.alias(f"_m_{name}") for name, expr in metrics.items()],
     )
     cols = _gopher_verdicts(
-        {name: F.col(f"_m_{name}") for name in metrics}, min_kinds
+        {name: F.col(f"_m_{name}") for name in metrics},
+        GOPHER_MIN_REQUIRED_KINDS,
     )
     present = F.col("_has_text")
 

@@ -33,14 +33,14 @@ EVERY = "hour"
 SESSION_GAP = "INTERVAL 8 HOURS"
 
 
-def resample(ev: DataFrame, every: str = EVERY) -> DataFrame:
-    """Downsample events to ``every``-sized buckets per event_type:
+def resample(ev: DataFrame) -> DataFrame:
+    """Downsample events to ``EVERY``-sized buckets per event_type:
     count, exact (decimal) sum, first/last value by event time, min
     and max.
     """
     return (
         ev.groupBy(
-            F.date_trunc(every, "ts").alias("bucket"),
+            F.date_trunc(EVERY, "ts").alias("bucket"),
             F.col("event_type"),
         )
         .agg(
@@ -58,10 +58,10 @@ def q_ts_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resample(read_table(spark, sf_dir, "events"))
 
 
-def sessionize(ev: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
+def sessionize(ev: DataFrame) -> DataFrame:
     """Assign every event a per-user ``session_id``: a new session
     starts when the gap to the previous event of the SAME user exceeds
-    ``gap`` (a SQL interval literal). The batch complement of the
+    ``SESSION_GAP`` (a SQL interval literal). The batch complement of the
     ``stream_session`` windowed aggregate — this one labels the raw
     rows, which is what downstream per-session feature extraction
     joins against.
@@ -77,7 +77,7 @@ def sessionize(ev: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts")
     prev = F.lag("ts").over(w)
     new_s = (
-        prev.isNull() | (F.col("ts") > prev + F.expr(gap))
+        prev.isNull() | (F.col("ts") > prev + F.expr(SESSION_GAP))
     ).cast("long")
     run = Window.partitionBy("user_id").orderBy("ts").rowsBetween(
         Window.unboundedPreceding, 0
@@ -93,7 +93,7 @@ def q_ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(read_table(spark, sf_dir, "events"))
 
 
-def rollup_partial(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def rollup_partial(ev: DataFrame) -> DataFrame:
     """Mergeable partial rollup: the OHLC aggregate of ``resample``
     with the merge keys carried — exact decimal sums (additive),
     first/last event times (so open/close stay selectable after a
@@ -103,7 +103,7 @@ def rollup_partial(ev: DataFrame, every: str = EVERY) -> DataFrame:
     """
     return (
         ev.groupBy(
-            F.date_trunc(every, "ts").alias("bucket"),
+            F.date_trunc(EVERY, "ts").alias("bucket"),
             F.col("event_type"),
         )
         .agg(
@@ -176,79 +176,36 @@ def q_ts_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Ordered funnel steps: a later step only counts if it happens
 #: STRICTLY AFTER the user's earliest completion of the previous step.
 FUNNEL_STEPS = ["view", "click", "purchase"]
-
-
-def funnel(ev: DataFrame, steps: list[str] = FUNNEL_STEPS) -> DataFrame:
-    """Ordered-step conversion funnel: per user, the earliest time each
-    step completed GIVEN the previous step completed before it, plus
-    the reached depth. The standard product-analytics query a metrics
-    store runs over the raw event log.
-
-    Scale shape: one filtered min-aggregate per step, each joined on
-    ``user_id`` — every stage is a partial-aggregated groupBy whose
-    output is one row per qualifying user, and each successive stage
-    only scans the (shrinking) survivor set's events. All stages
-    shuffle on the same ``user_id`` key, so AQE coalesces them onto
-    one exchange layout; nothing is windowed, nothing is quadratic.
-    Determinism: event timestamps are unique (asserted for the
-    synthetic feed in tests), and ``min`` is order-independent.
-    """
-    base = ev.select("user_id", "ts", "event_type")
-    reached = (
-        base.filter(F.col("event_type") == steps[0])
-        .groupBy("user_id")
-        .agg(F.min("ts").alias(f"t_{steps[0]}"))
-    )
-    out = reached
-    prev = f"t_{steps[0]}"
-    for step in steps[1:]:
-        nxt = (
-            base.filter(F.col("event_type") == step)
-            .join(out.select("user_id", prev), "user_id")
-            .filter(F.col("ts") > F.col(prev))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias(f"t_{step}"))
-        )
-        out = out.join(nxt, "user_id", "left")
-        prev = f"t_{step}"
-    depth = sum(
-        (F.col(f"t_{s}").isNotNull().cast("int") for s in steps), F.lit(0)
-    )
-    return out.withColumn("funnel_depth", depth)
-
-
-def q_ts_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return funnel(read_table(spark, sf_dir, "events"))
-
-
-#: The 5-step funnel exercised by the single-pass form — every event
-#: type in the synthetic feed, in conversion order.
+#: The 5-step funnel of ``ts_funnel_steps`` — every event type in the
+#: synthetic feed, in conversion order.
 FUNNEL_STEPS_5 = ["signup", "view", "click", "purchase", "error"]
 
 
-def funnel_single_pass(
-    ev: DataFrame, steps: list[str] = FUNNEL_STEPS_5
-) -> DataFrame:
-    """The same ordered-funnel semantics as ``funnel`` in ONE shuffle
-    regardless of step count: collect each user's (ts, type) events,
-    sort, and fold left with an accumulator of per-step first-completion
-    times — step i fires on the first event of its type that is
-    STRICTLY AFTER the recorded step i-1 time. The fold is a pure JVM
-    ``aggregate`` over an ``array_sort(collect_list(...))``, so the
-    per-step joins of the chained form (one shuffle + join per added
-    step) collapse into a single groupBy on ``user_id``.
+def funnel(ev: DataFrame, steps: list[str]) -> DataFrame:
+    """Ordered-step conversion funnel: per user who completed
+    ``steps[0]``, the earliest time each step completed GIVEN the
+    previous step completed before it, plus the reached depth. The
+    standard product-analytics query a metrics store runs over the raw
+    event log.
 
-    Scale shape: one exchange, period — where the chained form costs
-    O(steps) joins, this is the form a 20-step product funnel runs.
-    The per-user array is bounded by that user's own event count (the
-    same bound sessionize already carries); a pathological single user
-    bounds one task, not the stage. Equivalence with the chained form
-    is asserted in tests over the same oracle.
+    One shuffle regardless of step count: collect each user's
+    (ts, type) events, sort, and fold left with an accumulator of
+    per-step first-completion times — step i fires on the first event
+    of its type that is STRICTLY AFTER the recorded step i-1 time. The
+    fold is a pure JVM ``aggregate`` over an
+    ``array_sort(collect_list(...))``, so a 20-step funnel costs one
+    groupBy on ``user_id``, not one join per step.
+
+    Scale shape: the fold holds each user's events in one array,
+    bounded by that user's own event count (the same bound sessionize
+    already carries); a pathological single user bounds one task, not
+    the stage. Determinism: event timestamps are unique (asserted for
+    the synthetic feed in tests), and the fold reads them in sorted
+    order.
     """
     # The accumulator literal must carry the INPUT ts type: a plain
     # cast("timestamp") would coerce timestamp_ntz events to LTZ,
-    # reinterpreting wall-clock times in any non-UTC session and
-    # changing the output type vs the chained form.
+    # reinterpreting wall-clock times in any non-UTC session.
     ts_type = ev.schema["ts"].dataType.simpleString()
     init = F.array(*[F.lit(None).cast(ts_type) for _ in steps])
 
@@ -290,8 +247,12 @@ def funnel_single_pass(
     ).filter(F.col(f"t_{steps[0]}").isNotNull())
 
 
+def q_ts_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return funnel(read_table(spark, sf_dir, "events"), FUNNEL_STEPS)
+
+
 def q_ts_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return funnel_single_pass(read_table(spark, sf_dir, "events"))
+    return funnel(read_table(spark, sf_dir, "events"), FUNNEL_STEPS_5)
 
 
 def cohort_retention(ev: DataFrame) -> DataFrame:
@@ -393,16 +354,10 @@ def _cents() -> F.Column:
     return F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
 
 
-def rolling_anomaly(
-    ev: DataFrame,
-    every: str = EVERY,
-    frame: int = ANOMALY_FRAME,
-    min_hist: int = ANOMALY_MIN_HIST,
-    z: int = ANOMALY_Z,
-) -> DataFrame:
+def rolling_anomaly(ev: DataFrame) -> DataFrame:
     """Rolling z-score anomaly flags over the resampled feed: each
     (event_type, bucket) hourly value is compared against the mean and
-    population variance of its own trailing ``frame`` buckets
+    population variance of its own trailing ``ANOMALY_FRAME`` buckets
     (current bucket EXCLUDED — the baseline must not contain the point
     it judges), flagged when ``(x - mean)² > z²·var``. The metrics-
     store alerting query.
@@ -425,12 +380,12 @@ def rolling_anomaly(
     """
     cents = _cents()
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(cents).alias("x_cents"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket")
-        .rowsBetween(-frame, -1)
+        .rowsBetween(-ANOMALY_FRAME, -1)
     )
     n = F.count("x_cents").over(w)
     s = F.coalesce(F.sum("x_cents").over(w), F.lit(0).cast("long"))
@@ -439,7 +394,9 @@ def rolling_anomaly(
         F.lit(0).cast("long"),
     )
     dev = n * F.col("x_cents") - s
-    flag = (n >= min_hist) & (dev * dev > F.lit(z * z) * (n * q - s * s))
+    flag = (n >= ANOMALY_MIN_HIST) & (
+        dev * dev > F.lit(ANOMALY_Z * ANOMALY_Z) * (n * q - s * s)
+    )
     return (
         bucketed.withColumn("n_hist", n)
         .withColumn("s_hist", s)
@@ -466,12 +423,7 @@ def q_ts_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEASONAL_MIN_HIST = 3
 
 
-def seasonal_anomaly(
-    ev: DataFrame,
-    every: str = EVERY,
-    min_hist: int = SEASONAL_MIN_HIST,
-    z: int = ANOMALY_Z,
-) -> DataFrame:
+def seasonal_anomaly(ev: DataFrame) -> DataFrame:
     """Seasonal z-score anomaly flags: each (event_type, bucket)
     hourly value is judged against the mean/variance of its OWN
     seasonal cell — all buckets sharing its (day-of-week,
@@ -495,7 +447,7 @@ def seasonal_anomaly(
 
     cents = _cents()
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(cents).alias("x_cents"))
     dow = F.pmod(
         F.datediff(F.to_date("bucket"), F.to_date(F.lit(DOW_ANCHOR))), 7
@@ -525,7 +477,9 @@ def seasonal_anomaly(
     s1 = F.col("s_cell") - F.col("x_cents")
     q1 = F.col("q_cell") - F.col("x_cents") * F.col("x_cents")
     dev = n1 * F.col("x_cents") - s1
-    flag = (n1 >= min_hist) & (dev * dev > F.lit(z * z) * (n1 * q1 - s1 * s1))
+    flag = (n1 >= SEASONAL_MIN_HIST) & (
+        dev * dev > F.lit(ANOMALY_Z * ANOMALY_Z) * (n1 * q1 - s1 * s1)
+    )
     return j.select(
         "event_type",
         "bucket",
@@ -547,8 +501,8 @@ def q_ts_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRENDING_K = 3
 
 
-def trending(ev: DataFrame, every: str = EVERY, k: int = TRENDING_K) -> DataFrame:
-    """Per-bucket top-k event types by event count (count-desc,
+def trending(ev: DataFrame) -> DataFrame:
+    """Per-bucket top-``TRENDING_K`` event types by event count (count-desc,
     type-asc tiebreak) — the "trending now" feed. In Structured
     Streaming the same plan runs as a windowed agg + rank over the
     closed window (complete/update mode); the batch face here is the
@@ -557,10 +511,10 @@ def trending(ev: DataFrame, every: str = EVERY, k: int = TRENDING_K) -> DataFram
     Scale shape: partial-aggregated groupBy to (bucket, type) rows,
     then the rank window partitioned by bucket — Catalyst plans a
     partial WindowGroupLimit below the exchange, so each map task
-    ships at most k rows per bucket.
+    ships at most ``TRENDING_K`` rows per bucket.
     """
     counts = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(
         F.count("*").alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
@@ -570,7 +524,7 @@ def trending(ev: DataFrame, every: str = EVERY, k: int = TRENDING_K) -> DataFram
     )
     return (
         counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TRENDING_K)
     )
 
 
@@ -583,16 +537,16 @@ def q_ts_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 WAU_DAYS = 7
 
 
-def active_users(ev: DataFrame, window_days: int = WAU_DAYS) -> DataFrame:
+def active_users(ev: DataFrame) -> DataFrame:
     """Daily + rolling weekly active users (DAU/WAU): per calendar
     day, the count of distinct users active that day and the count of
-    distinct users active in the trailing ``window_days`` days — the
+    distinct users active in the trailing ``WAU_DAYS`` days — the
     engagement rollup every product dashboard reads.
 
     Scale shape: raw events first collapse to distinct (day, user_id)
     pairs — one partial-aggregated distinct whose output is bounded by
     users × days, not raw rows. WAU avoids a range join entirely:
-    each pair EXPLODES to the ≤``window_days`` target days it
+    each pair EXPLODES to the ≤``WAU_DAYS`` target days it
     contributes to (``sequence`` + ``explode``, executor-side), then a
     count-distinct per target day — a fixed ×7 fan-out on the already-
     collapsed pairs, one shuffle, no O(days × pairs) join. The tiny
@@ -614,7 +568,7 @@ def active_users(ev: DataFrame, window_days: int = WAU_DAYS) -> DataFrame:
     dau = pairs.groupBy("day").agg(F.count("*").alias("dau"))
     contrib = pairs.select(
         F.explode(
-            F.sequence(F.col("day"), F.date_add("day", window_days - 1))
+            F.sequence(F.col("day"), F.date_add("day", WAU_DAYS - 1))
         ).alias("day_t"),
         "user_id",
     )
@@ -677,7 +631,7 @@ def q_ts_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 EWMA_W = 16
 
 
-def ewma(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def ewma(ev: DataFrame) -> DataFrame:
     """Truncated exponentially-weighted moving average per event_type
     over the resampled cents feed — the metrics-store smoother
     (Prometheus/Graphite `ewma`, pandas `ewm(alpha=.5)`) in EXACT
@@ -696,7 +650,7 @@ def ewma(ev: DataFrame, every: str = EVERY) -> DataFrame:
     """
     cents = _cents()
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(cents).alias("x_cents"))
     w = (
         Window.partitionBy("event_type")
@@ -776,7 +730,7 @@ def _floor_div(a: str, b: str) -> str:
     return f"(({a}) - (((({a}) % ({b})) + ({b})) % ({b}))) DIV ({b})"
 
 
-def holt(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def holt(ev: DataFrame) -> DataFrame:
     """Truncated Holt linear-trend smoother per event_type over the
     resampled cents feed (Holt 1957 double exponential smoothing,
     α = β = 1/2) in EXACT integer form — the ewma discipline extended
@@ -801,7 +755,7 @@ def holt(ev: DataFrame, every: str = EVERY) -> DataFrame:
     ) + ")"
     cents = _cents()
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(cents).alias("x_cents"))
     w = (
         Window.partitionBy("event_type")
@@ -846,7 +800,7 @@ def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 CUSUM_H_MEANS = 4
 
 
-def cusum_changepoint(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def cusum_changepoint(ev: DataFrame) -> DataFrame:
     """One-sided CUSUM drift detection per event_type — the classic
     changepoint statistic (Page 1954): s_t = max(0, s_{t-1} + (x_t −
     ref)). The textbook form is a sequential recursion; the engine
@@ -868,7 +822,7 @@ def cusum_changepoint(ev: DataFrame, every: str = EVERY) -> DataFrame:
     """
     cents = _cents()
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(cents).alias("x_cents"))
     wtype = Window.partitionBy("event_type")
     wcum = wtype.orderBy("bucket").rowsBetween(
@@ -904,7 +858,7 @@ def q_ts_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cusum_changepoint(read_table(spark, sf_dir, "events"))
 
 
-def snaive_backtest(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def snaive_backtest(ev: DataFrame) -> DataFrame:
     """Seasonal-naive forecast backtest — the capacity-planning
     baseline every forecasting pipeline is judged against (M4's
     sNaive): each (type, bucket) value is "forecast" by the value one
@@ -925,7 +879,7 @@ def snaive_backtest(ev: DataFrame, every: str = EVERY) -> DataFrame:
     """
     cents = _cents()
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(cents).alias("x_cents"))
     prior = bucketed.select(
         F.col("event_type").alias("p_type"),
@@ -956,7 +910,7 @@ def q_ts_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snaive_backtest(read_table(spark, sf_dir, "events"))
 
 
-def autocorr(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def autocorr(ev: DataFrame) -> DataFrame:
     """Lag-1 autocorrelation of the hourly feed per event type — the
     one-number answer to "is this metric momentum or noise": r near 1
     means load persists bucket-to-bucket (capacity planning regime),
@@ -981,7 +935,7 @@ def autocorr(ev: DataFrame, every: str = EVERY) -> DataFrame:
 
     cents = _cents()
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(cents).alias("x_cents"))
     w = Window.partitionBy("event_type").orderBy("bucket")
     pairs = bucketed.withColumn(
@@ -1024,7 +978,7 @@ MAD_NUM = 5
 MAD_DEN = 2
 
 
-def mad_anomaly(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def mad_anomaly(ev: DataFrame) -> DataFrame:
     """Median/MAD robust anomaly flags over the resampled feed — the
     distribution-free complement to ``ts_anomaly``'s rolling z-score:
     mean/variance baselines are themselves dragged by the outliers
@@ -1061,7 +1015,7 @@ def mad_anomaly(ev: DataFrame, every: str = EVERY) -> DataFrame:
     cents = _cents()
     bucketed = evicting_cache(
         ev.groupBy(
-            F.date_trunc(every, "ts").alias("bucket"), "event_type"
+            F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
         ).agg(F.sum(cents).alias("x_cents")),
         "mad_bucketed",
     )
@@ -1096,7 +1050,7 @@ def q_ts_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mad_anomaly(read_table(spark, sf_dir, "events"))
 
 
-def percentile_profile(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def percentile_profile(ev: DataFrame) -> DataFrame:
     """Hour-of-day percentile bands per event type — the SLO band
     chart: for each (type, hour 0–23), the p50/p90 of that hour's
     bucket totals across all days. The "what does a normal 3pm look
@@ -1115,7 +1069,7 @@ def percentile_profile(ev: DataFrame, every: str = EVERY) -> DataFrame:
     """
     cents = _cents()
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(cents).alias("x_cents"))
     return bucketed.groupBy(
         "event_type", F.hour("bucket").alias("hour")
@@ -1130,7 +1084,7 @@ def q_ts_percentile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return percentile_profile(read_table(spark, sf_dir, "events"))
 
 
-def downtime_gaps(ev: DataFrame, every: str = EVERY) -> DataFrame:
+def downtime_gaps(ev: DataFrame) -> DataFrame:
     """Feed-freshness monitor: contiguous runs of MISSING buckets per
     event type — each type's calendar spine (min..max observed bucket,
     hourly) anti-joined against the observed buckets, then adjacent
@@ -1149,7 +1103,7 @@ def downtime_gaps(ev: DataFrame, every: str = EVERY) -> DataFrame:
     ranking window both run at spine cardinality partitioned by type.
     """
     observed = ev.groupBy(
-        "event_type", F.date_trunc(every, "ts").alias("bucket")
+        "event_type", F.date_trunc(EVERY, "ts").alias("bucket")
     ).agg(F.count("*").alias("_n"))
     span = observed.groupBy("event_type").agg(
         F.min("bucket").alias("lo"), F.max("bucket").alias("hi")
@@ -1194,9 +1148,7 @@ DECOMP_HALF = 3
 DECOMP_EVERY = "day"
 
 
-def decompose(
-    ev: DataFrame, every: str = DECOMP_EVERY, half: int = DECOMP_HALF
-) -> DataFrame:
+def decompose(ev: DataFrame) -> DataFrame:
     """Classical additive decomposition (the moving-average method
     STL refines; Hyndman & Athanasopoulos, *FPP* §3.4) of the daily
     per-type cents series into trend + day-of-week seasonal index +
@@ -1205,7 +1157,7 @@ def decompose(
     seasonal answers "how big is the weekly cycle", and the residual
     is what the anomaly detectors should actually be judging.
 
-    Semantics: trend is the centered (2·half+1)-bucket moving average
+    Semantics: trend is the centered (2·DECOMP_HALF+1)-bucket moving average
     over each type's OBSERVED bucket sequence, NULL where the window
     is not full (series edges — the classical convention, and the
     one that keeps a partial window from faking a level shift);
@@ -1229,14 +1181,14 @@ def decompose(
     """
     from covid_engineering_spark.functions import evicting_cache
 
-    w = 2 * half + 1
+    w = 2 * DECOMP_HALF + 1
     bucketed = ev.groupBy(
-        F.date_trunc(every, "ts").alias("bucket"), "event_type"
+        F.date_trunc(DECOMP_EVERY, "ts").alias("bucket"), "event_type"
     ).agg(F.sum(_cents()).alias("x_cents"))
     win = (
         Window.partitionBy("event_type")
         .orderBy("bucket")
-        .rowsBetween(-half, half)
+        .rowsBetween(-DECOMP_HALF, DECOMP_HALF)
     )
     staged = bucketed.select(
         "event_type",

@@ -86,7 +86,6 @@ SIDE_EFFECTING = frozenset({
 def register_query_views(
     spark: SparkSession,
     sf_dir: str,
-    names: list[str] | None = None,
     include_staged: bool = False,
 ) -> list[str]:
     """SQL API surface: expose every registered query as a temp view
@@ -100,17 +99,11 @@ def register_query_views(
     (``SIDE_EFFECTING``): those queries stage data — eager CSV/JSONL/
     ORC/parquet writes or a bucketed ``saveAsTable`` — at DataFrame-
     construction time, so the default registration SKIPS them; pass
-    ``include_staged=True`` (or name them explicitly in ``names``) to
-    opt into running their staging jobs. Returns the view names
-    registered.
+    ``include_staged=True`` to opt into running their staging jobs.
+    Returns the view names registered.
     """
     reg = registry()
-    if names is None:
-        picked = [
-            n for n in reg if include_staged or n not in SIDE_EFFECTING
-        ]
-    else:
-        picked = names
+    picked = [n for n in reg if include_staged or n not in SIDE_EFFECTING]
     out = []
     for name in picked:
         reg[name](spark, sf_dir).createOrReplaceTempView(f"q_{name}")

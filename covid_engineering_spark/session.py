@@ -60,8 +60,9 @@ _DEFAULTS: dict[str, str] = {
     # the capture tripled plan-CONSTRUCTION time on the driver
     # (measured: q1 build 0.18s -> 0.11s, clean_complete 1.52s ->
     # 0.60s with it off, interleaved A/B). Queries are oracle-checked,
-    # so the lost error context costs nothing here; any debugging
-    # session can flip it back at runtime.
+    # so the lost error context costs nothing here. The config is
+    # static: a debugging session turns it back on at build time
+    # (``extra_conf``), and configure_existing cannot set it.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Deterministic timestamp semantics regardless of host timezone —
     # required for the DuckDB differential oracle to hash-match.
@@ -80,7 +81,8 @@ _DEFAULTS: dict[str, str] = {
     # size is bounded by (keys active inside the watermark horizon) ×
     # (row size) — RocksDB makes the bound a disk number, not a heap
     # number. Applied only to engine-owned sessions (a foreign
-    # driver's session keeps its own provider; semantics identical).
+    # driver's session keeps its own provider, see _FOREIGN_KEEPS;
+    # semantics identical).
     "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     ),
@@ -93,6 +95,8 @@ _DEFAULTS: dict[str, str] = {
     # (runtime-immutable).
     "spark.driver.memory": "8g",
 }
+#: Runtime-modifiable defaults a session the engine did not build keeps.
+_FOREIGN_KEEPS = frozenset({"spark.sql.streaming.stateStore.providerClass"})
 
 
 def get_spark(
@@ -132,25 +136,17 @@ def get_spark(
 
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply the engine's *runtime-mutable* configs to a session we did
-    not create (e.g. the verification driver's). Builder-only settings
-    (master, memory) are left alone; everything the oracle comparison
-    depends on (timezone, ANSI, nanos handling, AQE) is session-scoped
-    and settable here.
+    not create (e.g. the verification driver's): every ``_DEFAULTS``
+    key the session reports modifiable, except ``_FOREIGN_KEEPS``.
+    Static settings (master, memory, dataFrameDebugging) are left
+    alone; everything the oracle comparison depends on (timezone,
+    ANSI, nanos handling, AQE) is session-scoped and settable here.
     """
-    for k in (
-        "spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "spark.sql.execution.arrow.pyspark.enabled",
-        "spark.python.sql.dataFrameDebugging.enabled",
-        "spark.sql.session.timeZone",
-        "spark.sql.ansi.enabled",
-        "spark.sql.legacy.parquet.nanosAsLong",
-    ):
+    for k, v in _DEFAULTS.items():
+        if k in _FOREIGN_KEEPS or not spark.conf.isModifiable(k):
+            continue
         try:
-            spark.conf.set(k, _DEFAULTS[k])
+            spark.conf.set(k, v)
         except Exception:
             # A config may be marked static in some deployments; the
             # engine degrades gracefully (io.py has a pyarrow fallback

@@ -36,8 +36,6 @@ def read_covid_csv(
     path: str,
     schema: T.StructType,
     renames: dict[str, str] | None = None,
-    date_cols: tuple[str, ...] = ("date",),
-    date_fmt: str | None = None,
 ) -> DataFrame:
     """CSV scan with declared schema and the reference's null/date
     semantics (S1/S4, main.py:18,239-241,450,561):
@@ -66,7 +64,7 @@ def read_covid_csv(
             continue
         c = F.col(src)
         if isinstance(field.dataType, T.DateType):
-            c = F.to_date(c, date_fmt) if date_fmt else F.to_date(c)
+            c = F.to_date(c)
         else:
             c = c.cast(field.dataType)
         cols.append(c.alias(field.name))

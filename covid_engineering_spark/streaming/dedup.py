@@ -23,8 +23,6 @@ from covid_engineering_spark import schemas
 def stream_dedup(
     spark: SparkSession,
     source_dir: str,
-    watermark: str = "2 hours",
-    keys: tuple[str, ...] = ("event_id",),
     reader_options: dict[str, str] | None = None,
 ) -> DataFrame:
     """Watermark-bounded streaming dedup over the events file source:
@@ -37,9 +35,9 @@ def stream_dedup(
     stream = (
         reader.parquet(source_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "2 hours")
     )
-    return stream.dropDuplicatesWithinWatermark(list(keys))
+    return stream.dropDuplicatesWithinWatermark(["event_id"])
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

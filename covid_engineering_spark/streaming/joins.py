@@ -34,11 +34,9 @@ from covid_engineering_spark.sources import read_table
 ATTRIB_WINDOW = "INTERVAL 8 HOURS"
 
 
-def attributed_clicks(
-    views: DataFrame, clicks: DataFrame, window: str = ATTRIB_WINDOW
-) -> DataFrame:
+def attributed_clicks(views: DataFrame, clicks: DataFrame) -> DataFrame:
     """All (view, click) attribution pairs per user with
-    ``view_ts <= click_ts <= view_ts + window``. Pure interval
+    ``view_ts <= click_ts <= view_ts + ATTRIB_WINDOW``. Pure interval
     arithmetic on the event-time column — the exact same µs
     comparison runs in the SQL oracle.
     """
@@ -56,7 +54,7 @@ def attributed_clicks(
         v.join(c, "user_id")
         .filter(
             (F.col("click_ts") >= F.col("view_ts"))
-            & (F.col("click_ts") <= F.col("view_ts") + F.expr(window))
+            & (F.col("click_ts") <= F.col("view_ts") + F.expr(ATTRIB_WINDOW))
         )
         .select("user_id", "view_id", "view_ts", "click_id", "click_ts")
     )
@@ -74,8 +72,6 @@ def stream_attributed_clicks(
     spark: SparkSession,
     source_dir: str,
     watermark: str = "2 hours",
-    window: str = ATTRIB_WINDOW,
-    reader_options: dict[str, str] | None = None,
 ) -> DataFrame:
     """Incremental flavor: two watermarked readers over the same
     landing zone, filtered to each side's event type, joined with the
@@ -85,8 +81,6 @@ def stream_attributed_clicks(
 
     def side(event_type: str, alias_id: str, alias_ts: str) -> DataFrame:
         reader = spark.readStream.schema(schemas.STAR["events"])
-        for k, v in (reader_options or {}).items():
-            reader = reader.option(k, v)
         return (
             reader.parquet(source_dir)
             .withColumn("ts", F.col("ts").cast("timestamp"))
@@ -107,7 +101,7 @@ def stream_attributed_clicks(
             f"""
             v.user_id = c.user_id AND
             click_ts >= view_ts AND
-            click_ts <= view_ts + {window}
+            click_ts <= view_ts + {ATTRIB_WINDOW}
             """
         ),
     ).select(
@@ -157,7 +151,6 @@ def stream_segment_rollup(
     spark: SparkSession,
     source_dir: str,
     customer: DataFrame,
-    reader_options: dict[str, str] | None = None,
 ) -> DataFrame:
     """Incremental flavor of :func:`segment_rollup`: a streaming
     event reader joined to the STATIC customer frame (no watermark
@@ -166,8 +159,6 @@ def stream_segment_rollup(
     complete mode. Asserted equal to the batch face in tests.
     """
     reader = spark.readStream.schema(schemas.STAR["events"])
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
     ev = reader.parquet(source_dir).withColumn(
         "ts", F.col("ts").cast("timestamp")
     )

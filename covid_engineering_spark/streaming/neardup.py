@@ -20,9 +20,7 @@ set, because each arriving document's candidates come from the
 standing index, never from co-arriving documents).
 
 Scale shape per micro-batch: O(batch + probe) — the standing index is
-read, not rebuilt; candidates are ≤ |batch|·bands·cap. For bounded
-small batches compose with ``probe_near_dup_index`` (the In-pushdown
-form) inside ``sink_fn``'s process function instead.
+read, not rebuilt; candidates are ≤ |batch|·bands·cap.
 """
 
 from __future__ import annotations

@@ -54,9 +54,7 @@ def windowed_type_counts(ev: DataFrame) -> DataFrame:
     ).agg(F.count("*").alias("n_events"))
 
 
-def windowed_topk(
-    ev: DataFrame, k: int = TOPK_PER_WINDOW
-) -> DataFrame:
+def windowed_topk(ev: DataFrame) -> DataFrame:
     """Per-window top-k event types by count — the trending/leaderboard
     query every metrics store serves. Batch face of the
     counts-stream + rank-at-read split (see
@@ -71,7 +69,7 @@ def windowed_topk(
     )
     return (
         counts.withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOPK_PER_WINDOW)
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
@@ -124,8 +122,6 @@ def session_agg(ev: DataFrame) -> DataFrame:
 def stream_events(
     spark: SparkSession,
     source_dir: str,
-    watermark: str = "2 hours",
-    reader_options: dict[str, str] | None = None,
     slide: str | None = None,
 ) -> DataFrame:
     """Streaming flavor: parquet file source -> event-time windowed
@@ -142,12 +138,10 @@ def stream_events(
     # the cast deterministic) and cast the window bounds back so the
     # streaming schema equals the batch tumbling_agg schema.
     reader = spark.readStream.schema(schemas.STAR["events"])
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
     stream = (
         reader.parquet(source_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "2 hours")
     )
     return (
         stream.groupBy(F.window("ts", "1 hour", slide).alias("w"))

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from covid_engineering_spark.operators.timeseries import (
     FUNNEL_STEPS_5,
     active_users,
-    funnel_single_pass,
+    funnel,
     hourly_profile,
     incremental_rollup,
     resample,
@@ -72,7 +72,7 @@ def main(
     )
 
     # 2. one-shuffle funnel: conversion depth histogram
-    fun = funnel_single_pass(ev, FUNNEL_STEPS_5)
+    fun = funnel(ev, FUNNEL_STEPS_5)
     depth_hist = {
         r["funnel_depth"]: r["n"]
         for r in fun.groupBy("funnel_depth")

@@ -55,7 +55,7 @@ def main() -> None:
     from covid_engineering_spark.session import get_spark
     from tests.reference_semantics import clean_country
 
-    spark = get_spark(app_name="reference-throughput", master="local[32]")
+    spark = get_spark(app_name="reference-throughput")
     spark.sparkContext.setLogLevel("ERROR")
     base = _synthetic_complete(spark, SF_DIR)
     scratch = tempfile.mkdtemp(prefix="ces_throughput_")

@@ -52,7 +52,7 @@ def test_resize_respects_target_budget(spark, media):
 
 def test_frame_sampling_fans_out(spark, media):
     vids = media.filter(F.col("media_type") == "video/mp4")
-    frames = sample_frames(vids, every_n_bytes=64, max_frames=4)
+    frames = sample_frames(vids)
     per_doc = (
         frames.groupBy("doc_id").agg(F.count("*").alias("n"), F.max("frame_idx").alias("mx"))
     ).collect()

@@ -177,10 +177,10 @@ def test_asof_join_matches_bruteforce(spark, case):
 
 
 # ---------------------------------------------------------------------------
-# Funnel differential: the chained per-step-join form and the
-# single-pass fold must agree on ANY event log — hypothesis drives
+# Funnel differential: the one-shuffle fold must agree with a plain
+# model of the chained rule on ANY event log — hypothesis drives
 # adversarial orderings (pre-step events, repeats, missing steps,
-# interleaved users) through both plans and compares exact rows.
+# interleaved users) through the plan and compares exact rows.
 # ---------------------------------------------------------------------------
 
 _FUNNEL_EVENT = st.tuples(
@@ -193,14 +193,11 @@ _FUNNEL_EVENT = st.tuples(
 @settings(max_examples=12, deadline=None)
 @given(st.lists(_FUNNEL_EVENT, min_size=0, max_size=24))
 def test_funnel_forms_agree_on_generated_logs(spark, events):
-    from covid_engineering_spark.operators.timeseries import (
-        funnel,
-        funnel_single_pass,
-    )
+    from covid_engineering_spark.operators.timeseries import funnel
 
     steps = ["view", "click", "purchase"]
     # unique timestamps per user (the documented determinism contract:
-    # both forms assume a total order of ts within a user)
+    # the funnel assumes a total order of ts within a user)
     seen = set()
     rows = []
     for i, (uid, minute, etype) in enumerate(events):
@@ -211,9 +208,24 @@ def test_funnel_forms_agree_on_generated_logs(spark, events):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp_ntz, user_id long, event_type string"
     )
-    a = {tuple(r) for r in funnel(ev, steps).collect()}
-    b = {tuple(r) for r in funnel_single_pass(ev, steps).collect()}
-    assert a == b
+    # the chained rule: t0 is the user's first steps[0] event, and t_i
+    # the first steps[i] event strictly after t_{i-1}
+    want = set()
+    for uid in {r[2] for r in rows}:
+        mine = [(ts, e) for _, ts, u, e in rows if u == uid]
+        ts_by_step, prev = [], None
+        for i, step in enumerate(steps):
+            hits = [
+                ts for ts, e in mine
+                if e == step and (i == 0 or (prev is not None and ts > prev))
+            ]
+            prev = min(hits) if hits else None
+            ts_by_step.append(prev)
+        if ts_by_step[0] is not None:
+            depth = sum(t is not None for t in ts_by_step)
+            want.add((uid, *ts_by_step, depth))
+    got = {tuple(r) for r in funnel(ev, steps).collect()}
+    assert got == want
 
 
 @settings(max_examples=200, deadline=None)

@@ -5,8 +5,8 @@
   excised, plus token accounting. Registered as
   ``dedup_substring_strip`` with a generated DuckDB twin that replays
   the span chain + positional token anti-join + ordered string_agg.
-- curate_corpus(strip_substrings=True) — the funnel composition: span
-  stripping runs before normalize/dedup/cluster/split.
+- substring_strip -> curate_corpus — the funnel composition: span
+  stripping composed before normalize/dedup/cluster/split.
 """
 
 import pytest
@@ -494,10 +494,12 @@ def test_contamination_report_grades_consistently_with_the_gate(spark):
 
 
 def test_curate_corpus_strip_stage_composes(spark):
-    """strip_substrings=True: boilerplate shared across otherwise
-    unrelated docs is excised BEFORE near-dup clustering, so the docs
-    no longer cluster together and each survives curation on its own
-    content; the default funnel (no strip) clusters them."""
+    """substring_strip composed before curate_corpus, the way the
+    corpus-curation example composes it: boilerplate shared across
+    otherwise unrelated docs is excised BEFORE near-dup clustering, so
+    the docs no longer cluster together and each survives curation on
+    its own content; the plain funnel (no strip) clusters them."""
+    from covid_engineering_spark.operators.dedup import substring_strip
     from covid_engineering_spark.operators.pipeline import curate_corpus
 
     boiler = " ".join(f"x{i}" for i in range(30))  # 30-token boilerplate
@@ -511,7 +513,13 @@ def test_curate_corpus_strip_stage_composes(spark):
         "n_chars long"
     )
     plain = curate_corpus(docs).collect()
-    stripped = curate_corpus(docs, strip_substrings=True).collect()
+    stripped_docs = docs.drop("text").join(
+        substring_strip(docs).select(
+            "doc_id", F.col("stripped_text").alias("text")
+        ),
+        "doc_id",
+    )
+    stripped = curate_corpus(stripped_docs).collect()
     # without stripping, the 30-token boilerplate dominates the 3-gram
     # Jaccard and docs 1/2 collapse to one cluster survivor
     assert len(plain) == 2
@@ -1109,43 +1117,6 @@ def test_graph_greedy_beats_single_path_and_stays_in_topk_band(spark):
     ) > sum(single[q]["found_cs"] for q in single)
     for r in beam.values():
         assert r["found_cs"] <= r["best_cs"], r
-
-
-def test_graph_greedy_query_axis_serving_path(spark):
-    """The query-axis levers: ``n_queries`` widens
-    the query set against the SAME standing graph, ``with_eval=False``
-    returns the serving shape (one row per query, no brute-force
-    columns). The serving path must agree with the eval form's found
-    columns at the default width — the eval harness is a decoration,
-    never a behavior change."""
-    from covid_engineering_spark.operators.similarity import (
-        N_QUERIES,
-        graph_greedy_search,
-    )
-    from covid_engineering_spark.sources import read_table
-
-    emb = read_table(spark, SF_SMOKE, "embeddings")
-    serving = graph_greedy_search(emb, with_eval=False)
-    assert serving.columns == ["q_id", "found_id", "found_cs"]
-    got = {r["q_id"]: (r["found_id"], r["found_cs"]) for r in serving.collect()}
-    full = {
-        r["q_id"]: (r["found_id"], r["found_cs"])
-        for r in graph_greedy_search(emb).collect()
-    }
-    assert got == full and len(got) == N_QUERIES
-
-    # widening: one walk per query, every walk terminates with a
-    # found vertex outside the query set's own identity (n_queries
-    # also moves the hub-eligibility boundary, so the navigation
-    # layer legitimately differs from the narrow run's)
-    wide = graph_greedy_search(
-        emb, n_queries=4 * N_QUERIES, with_eval=False
-    )
-    rows = wide.collect()
-    assert len(rows) == 4 * N_QUERIES
-    assert len({r["q_id"] for r in rows}) == 4 * N_QUERIES
-    for r in rows:
-        assert r["found_id"] != r["q_id"], r
 
 
 def test_graph_greedy_corpus_never_shuffled_by_the_walk(spark):

@@ -409,60 +409,6 @@ def test_quantile_sketch_exact_when_budget_covers_the_shard(spark):
         assert all(r.err_bound == 0 for r in out)
 
 
-# --- probe_near_dup_index (scan-pruned standing-index probe) ----------
-
-
-def test_pushdown_probe_is_identical_and_prunes_scans(spark, tmp_path):
-    from covid_engineering_spark.operators.pipeline import (
-        near_dup_incremental_lsh,
-        probe_near_dup_index,
-        read_near_dup_index,
-        write_near_dup_index,
-    )
-    from covid_engineering_spark.sources import read_table
-
-    docs = read_table(spark, SF_SMOKE, "documents")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-    path = str(tmp_path / "ndidx")
-    write_near_dup_index(corpus, path)
-    plain = near_dup_incremental_lsh(
-        None, batch, index=read_near_dup_index(spark, path)
-    )
-    push = probe_near_dup_index(spark, path, batch)
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, push.collect())
-    )
-    # the batch's literal key sets must reach the index scans (row
-    # pruning before any join; IO skipping where stats allow)
-    plan = push._jdf.queryExecution().executedPlan().toString()
-    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
-    assert any("bh" in ln and ("INSET" in ln or "IN (" in ln) for ln in scans)
-    assert any(
-        "doc_id" in ln and ("INSET" in ln or "IN (" in ln) for ln in scans
-    )
-
-
-def test_pushdown_probe_falls_back_past_the_key_ceiling(spark, tmp_path):
-    # a batch whose key list exceeds max_keys must take the plain
-    # standing-index probe (same output, no literal filters)
-    from covid_engineering_spark.operators.pipeline import (
-        probe_near_dup_index,
-        write_near_dup_index,
-    )
-    from covid_engineering_spark.sources import read_table
-
-    docs = read_table(spark, SF_SMOKE, "documents")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    batch = docs.filter(F.col("doc_id") % 5 == 0)
-    path = str(tmp_path / "ndidx")
-    write_near_dup_index(corpus, path)
-    out = probe_near_dup_index(spark, path, batch, max_keys=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "INSET" not in plan
-    assert out.count() >= 0
-
-
 # --- a28_quantile_hist ------------------------------------------------
 
 

@@ -105,7 +105,7 @@ def test_watermark_drops_late_data_across_restart(spark, tmp_path):
 
     def run():
         q = (
-            stream_events(spark, d, watermark="2 hours")
+            stream_events(spark, d)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", cp)

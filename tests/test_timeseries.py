@@ -68,7 +68,10 @@ def test_sessionize_is_partition_invariant_and_total(spark):
 
 
 def test_funnel_requires_step_order(spark):
-    from covid_engineering_spark.operators.timeseries import funnel
+    from covid_engineering_spark.operators.timeseries import (
+        FUNNEL_STEPS,
+        funnel,
+    )
 
     ev = spark.createDataFrame(
         [
@@ -87,7 +90,7 @@ def test_funnel_requires_step_order(spark):
         ],
         "event_id long, ts string, user_id long, event_type string",
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    rows = {r["user_id"]: r for r in funnel(ev).collect()}
+    rows = {r["user_id"]: r for r in funnel(ev, FUNNEL_STEPS).collect()}
     assert set(rows) == {1, 2, 3}
     assert rows[1]["funnel_depth"] == 3
     assert rows[2]["funnel_depth"] == 1 and rows[2]["t_click"] is None
@@ -95,7 +98,10 @@ def test_funnel_requires_step_order(spark):
 
 
 def test_funnel_counts_only_post_view_clicks(spark):
-    from covid_engineering_spark.operators.timeseries import funnel
+    from covid_engineering_spark.operators.timeseries import (
+        FUNNEL_STEPS,
+        funnel,
+    )
 
     # the user clicks twice: once before the first view (ignored) and
     # once after (the one the funnel must report)
@@ -107,7 +113,7 @@ def test_funnel_counts_only_post_view_clicks(spark):
         ],
         "event_id long, ts string, user_id long, event_type string",
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    row = funnel(ev).collect()[0]
+    row = funnel(ev, FUNNEL_STEPS).collect()[0]
     assert str(row["t_click"]).startswith("2024-01-01 02:00:00")
 
 
@@ -155,34 +161,11 @@ def test_gapfill_total_preserved(spark):
     assert out.count() == out.select("user_id", "day").distinct().count()
 
 
-def test_funnel_single_pass_matches_chained_form(spark):
-    # Both funnel forms — O(steps) chained joins vs the one-shuffle
-    # fold — must produce IDENTICAL rows for the same step list, on
-    # real data (all 5 event types) and on the tricky hand cases the
-    # chained tests pin.
-    from covid_engineering_spark.operators.timeseries import (
-        FUNNEL_STEPS_5,
-        funnel,
-        funnel_single_pass,
-    )
-
-    ev = read_table(spark, SF_SMOKE, "events")
-    a = funnel(ev, FUNNEL_STEPS_5)
-    b = funnel_single_pass(ev, FUNNEL_STEPS_5)
-    assert a.columns == b.columns
-    # identical TYPES too: the fold accumulator must carry the input
-    # ts type — a bare cast("timestamp") silently coerced ntz->ltz,
-    # shifting wall-clock times in non-UTC sessions (regression)
-    assert [f.dataType for f in a.schema.fields] == [
-        f.dataType for f in b.schema.fields
-    ]
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    assert b.count() > 0
-
-
 def test_funnel_single_pass_out_of_order_and_pre_step_events(spark):
-    from covid_engineering_spark.operators.timeseries import funnel_single_pass
+    from covid_engineering_spark.operators.timeseries import (
+        FUNNEL_STEPS,
+        funnel,
+    )
 
     ev = spark.createDataFrame(
         [
@@ -198,25 +181,45 @@ def test_funnel_single_pass_out_of_order_and_pre_step_events(spark):
         ],
         "event_id long, ts string, user_id long, event_type string",
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    rows = {
-        r["user_id"]: r
-        for r in funnel_single_pass(ev, ["view", "click", "purchase"]).collect()
+    out = funnel(ev, FUNNEL_STEPS)
+    # the fold accumulator carries the INPUT ts type: a bare
+    # cast("timestamp") would coerce ntz to ltz, shifting wall-clock
+    # times in non-UTC sessions
+    assert {f.dataType.simpleString() for f in out.schema.fields[1:4]} == {
+        "timestamp_ntz"
     }
+    rows = {r["user_id"]: r for r in out.collect()}
     assert set(rows) == {2, 9}
     assert rows[2]["funnel_depth"] == 1 and rows[2]["t_click"] is None
     assert str(rows[9]["t_click"]).startswith("2024-01-01 02:00:00")
 
 
 def test_funnel_single_pass_is_one_exchange_for_five_steps(spark):
-    # The point of the single-pass form: shuffle count must not grow
-    # with the step count (the chained form pays one join per step).
+    # The fold's shuffle count must not grow with the step count (a
+    # per-step join form pays one join per step).
     from covid_engineering_spark.plans import has_cartesian, shuffle_count
-    from covid_engineering_spark.operators.timeseries import funnel_single_pass
+    from covid_engineering_spark.operators.timeseries import (
+        FUNNEL_STEPS_5,
+        funnel,
+    )
 
     ev = read_table(spark, SF_SMOKE, "events")
-    df = funnel_single_pass(ev)
+    df = funnel(ev, FUNNEL_STEPS_5)
     assert shuffle_count(df) <= 2
     assert not has_cartesian(df)
+
+
+def test_funnel_queries_plan_one_user_exchange_and_no_join(spark):
+    # Both registered funnels, 3 and 5 steps, plan as one groupBy on
+    # user_id: exactly one user_id exchange and no join of any kind.
+    from covid_engineering_spark.plans import simple_plan
+    from covid_engineering_spark.queries import registry
+
+    reg = registry()
+    for name in ("ts_funnel", "ts_funnel_steps"):
+        plan = simple_plan(reg[name](spark, SF_SMOKE))
+        assert plan.count("Exchange hashpartitioning(user_id") == 1, name
+        assert "Join" not in plan, name
 
 
 def test_anomaly_baseline_excludes_judged_point(spark):
