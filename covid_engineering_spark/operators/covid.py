@@ -291,12 +291,9 @@ def q_covid_param_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast population join → per-country window diffs → eps-guarded
     estimator expressions end to end.
     """
-    from covid_engineering_spark.operators.wrangling import (
-        _synthetic_complete,
-        clean_complete,
-    )
+    from covid_engineering_spark.operators.wrangling import cleaned_complete
 
-    cleaned = clean_complete(_synthetic_complete(spark, sf_dir))
+    cleaned = cleaned_complete(spark, sf_dir)
     return estimate_params(cleaned, synthetic_population(spark))
 
 
@@ -337,14 +334,9 @@ def q_covid_transfer_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cleaned-then-cumulated synthetic frame. The oracle replays the
     identical param estimation and Euler recurrence as a recursive CTE.
     """
-    from covid_engineering_spark.operators.wrangling import (
-        _synthetic_complete,
-        clean_complete,
-    )
+    from covid_engineering_spark.operators.wrangling import cleaned_complete
 
-    series = _cumulative_series(
-        clean_complete(_synthetic_complete(spark, sf_dir))
-    )
+    series = _cumulative_series(cleaned_complete(spark, sf_dir))
     pairs = spark.createDataFrame(
         [("C0", "C1"), ("C2", "C3")],
         "param_country string, sim_country string",
@@ -573,12 +565,9 @@ def wave_peaks(cleaned: DataFrame) -> DataFrame:
 
 
 def q_covid_wave_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from covid_engineering_spark.operators.wrangling import (
-        _synthetic_complete,
-        clean_complete,
-    )
+    from covid_engineering_spark.operators.wrangling import cleaned_complete
 
-    return wave_peaks(clean_complete(_synthetic_complete(spark, sf_dir)))
+    return wave_peaks(cleaned_complete(spark, sf_dir))
 
 
 def _wave_oracle_sql() -> str:

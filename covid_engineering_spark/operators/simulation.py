@@ -218,7 +218,8 @@ def q_x3_sird_mse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid_engineering_spark.functions import evicting_cache
 
     daily = evicting_cache(
-        _daily_series(spark, sf_dir, drop_null_entity=True), "daily_series"
+        _daily_series(spark, sf_dir, drop_null_entity=True),
+        "daily_series:drop_null_entity",
     )
     from pyspark.sql import Window
 

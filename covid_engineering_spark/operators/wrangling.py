@@ -329,13 +329,27 @@ def _synthetic_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def cleaned_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cleaned synthetic series, cached once per session: the four
+    queries that derive from it (``wrangle_clean_complete``,
+    ``covid_wave_peaks``, ``covid_param_series``,
+    ``covid_transfer_sim``) then read the cached rows instead of
+    planning and running the 9-stage pipeline each time.
+    """
+    from covid_engineering_spark.functions import evicting_cache
+
+    return evicting_cache(
+        clean_complete(_synthetic_complete(spark, sf_dir)), "cleaned_complete"
+    )
+
+
 def q_wrangle_clean_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full cleaning pipeline (dedup → trim → special-case → impute
     → interpolate → re-impute → final drop) over the synthetic dirty
     frame — the reference's process_country_complete for all countries
     at once.
     """
-    return clean_complete(_synthetic_complete(spark, sf_dir))
+    return cleaned_complete(spark, sf_dir)
 
 
 QUERIES = {

@@ -133,7 +133,7 @@ COMPLETE_RENAMES = {
 
 # ---------------------------------------------------------------------------
 # Driver-generated star schema (/root/testdata/sf*/ — TESTDATA.md).
-# Declared so reads never pay schema inference/merging; events.ts is
+# Declared so reads never pay schema inference/merging; events.ts may be
 # TIMESTAMP(NANOS) parquet and is normalized in sources/io.py.
 # ---------------------------------------------------------------------------
 
@@ -204,7 +204,7 @@ STAR = {
         ]
     ),
     # events is declared with the post-normalization schema (ts as
-    # timestamp_ntz); the raw file carries INT64 TIMESTAMP(NANOS).
+    # timestamp_ntz); the raw file may carry INT64 TIMESTAMP(NANOS).
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType(), True),

@@ -10,6 +10,8 @@ so SQLite is converted once to Parquet and all analytics read Parquet.
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import re
 
@@ -102,8 +104,27 @@ def sqlite_to_parquet(db_path: str, out_dir: str) -> dict[str, str]:
     return out
 
 
+@functools.lru_cache(maxsize=64)
+def _footer_ts_type(path: str, mtime_ns: int) -> T.DataType:
+    """The type a schema-inferring Spark read gives ``ts`` in the
+    parquet file ``path``, from its footer (``mtime_ns`` keys the
+    memo): INT64 TIMESTAMP(NANOS) arrives as long under
+    ``nanosAsLong``, INT96 and UTC-adjusted timestamps as timestamp,
+    the rest as timestamp_ntz."""
+    import pyarrow.parquet as pq
+
+    schema = pq.read_metadata(path).schema
+    col = next(c for c in map(schema.column, range(len(schema))) if c.name == "ts")
+    if col.physical_type == "INT96":
+        return T.TimestampType()
+    ts = json.loads(col.logical_type.to_json())
+    if ts.get("timeUnit") == "nanoseconds":
+        return T.LongType()
+    return T.TimestampType() if ts.get("isAdjustedToUTC") else T.TimestampNTZType()
+
+
 def _read_events(spark: SparkSession, path: str) -> DataFrame:
-    """events.parquet carries INT64 TIMESTAMP(NANOS), which Spark's
+    """events.parquet may carry INT64 TIMESTAMP(NANOS), which Spark's
     vectorized reader rejects outright. With
     ``spark.sql.legacy.parquet.nanosAsLong=true`` the column arrives as
     LongType nanos; integer-divide to micros (exact — a double division
@@ -113,22 +134,42 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     session that several clients may share. A foreign session whose
     config is immutable (so the key could not be set) falls back to a
     driver-side pyarrow read.
+
+    The read schema is declared, with ``ts`` typed from the footer of
+    one data file, so building the frame runs no schema-inference job.
     """
-    try:
-        raw = spark.read.parquet(path)
-        if isinstance(raw.schema["ts"].dataType, T.LongType):
-            raw = raw.withColumn(
-                "ts",
-                F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
-            )
-        return raw.select([f.name for f in schemas.STAR["events"].fields])
-    except Exception:
+    sample = path
+    if os.path.isdir(path):
+        sample = min(
+            (os.path.join(path, n) for n in os.listdir(path) if n[0] not in "._"),
+            default=None,
+        )
+    ts = (
+        _footer_ts_type(sample, os.stat(sample).st_mtime_ns)
+        if sample
+        else schemas.STAR["events"]["ts"].dataType
+    )
+    nanos = isinstance(ts, T.LongType)
+    if nanos and spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") != "true":
         import pyarrow.parquet as pq
 
         tbl = pq.read_table(path)
         pdf = tbl.to_pandas()
         pdf["ts"] = pdf["ts"].dt.floor("us")
         return spark.createDataFrame(pdf, schema=schemas.STAR["events"])
+    schema = T.StructType(
+        [
+            T.StructField(f.name, ts, True) if f.name == "ts" else f
+            for f in schemas.STAR["events"].fields
+        ]
+    )
+    raw = spark.read.schema(schema).parquet(path)
+    if nanos:
+        raw = raw.withColumn(
+            "ts",
+            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
+        )
+    return raw
 
 
 def read_table(

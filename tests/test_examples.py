@@ -1,5 +1,5 @@
-"""The quickstart example must keep running end to end — examples rot
-unless executed."""
+"""Every example must keep running end to end — examples rot unless
+executed."""
 
 import os
 import runpy
@@ -8,10 +8,6 @@ import sys
 import pytest
 
 REF = "/root/reference/complete.csv"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(REF), reason="reference snapshot not mounted"
-)
 
 
 def test_corpus_curation_runs(spark, tmp_path, capsys):
@@ -48,6 +44,7 @@ def test_corpus_curation_runs(spark, tmp_path, capsys):
     assert "curriculum stages: {1: 125, 2: 125, 3: 125, 4: 125}" in out
 
 
+@pytest.mark.skipif(not os.path.exists(REF), reason="reference snapshot not mounted")
 def test_quickstart_runs(spark, tmp_path, capsys):
     sys.modules.pop("examples.quickstart", None)
     mod = runpy.run_path(
