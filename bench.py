@@ -2,8 +2,9 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries from ``covid_engineering_spark`` at
-``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints ONE JSON line:
+``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on the
+engine's ``get_spark()`` session — ``local[$SPARK_GRAFT_CPUS]``, or one
+thread per usable CPU when that is unset — and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -166,7 +167,6 @@ def _materialize(df) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Parse sf out of the dir name, e.g. .../sf0.1 -> 0.1
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -205,7 +205,7 @@ def main() -> None:
     load_before = _loadavg()
     ticks_before = _cpu_ticks()
 
-    spark = get_spark(app_name="bench", master=f"local[{cpus}]")
+    spark = get_spark(app_name="bench")
 
     # Keep the artifact tail readable:
     # nine registered plans contain Window specs with no partitionBy,

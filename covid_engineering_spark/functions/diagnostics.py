@@ -1,41 +1,11 @@
 """Operational diagnostics: the numbers you need BEFORE submitting a
 100 TB job, computed as cheap aggregate queries.
-
-Skew is the silent killer of shuffle stages: a groupBy/join on a key
-where one value holds 10% of the rows turns a 1000-task stage into a
-single straggler. ``key_skew_stats`` quantifies that in one partial-
-aggregated pass, so the decision (salt it / broadcast it / AQE skew
-join) is made from data, not from a post-mortem.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def key_skew_stats(df: DataFrame, key: str) -> DataFrame:
-    """One-row skew profile of ``key``: distinct key count, total
-    rows, max/median/p99 per-key row counts, and ``skew_ratio`` =
-    max/mean (1.0 = perfectly uniform). Two aggregations, both with
-    map-side partial combine — the heavy first one shuffles one row
-    per distinct key, the second is a tiny global agg.
-    """
-    per_key = df.groupBy(key).agg(F.count("*").alias("n"))
-    # approx_percentile, not exact percentile: the exact form buffers
-    # a value->count map that all merges into the single global-agg
-    # task — O(distinct per-key counts) memory on exactly the huge-key
-    # job this tool is the pre-flight check for. The sketch is
-    # mergeable and bounded; accuracy 10000 is exact below 10k
-    # distinct counts anyway.
-    return per_key.agg(
-        F.count("*").alias("n_keys"),
-        F.sum("n").alias("n_rows"),
-        F.max("n").alias("max_per_key"),
-        F.expr("approx_percentile(n, 0.5, 10000)").alias("p50_per_key"),
-        F.expr("approx_percentile(n, 0.99, 10000)").alias("p99_per_key"),
-        F.round(F.max("n") / F.avg("n"), 4).alias("skew_ratio"),
-    )
 
 
 #: Magnitude ceiling of the DECIMAL(18,6) accumulation type: values at

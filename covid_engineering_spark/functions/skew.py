@@ -35,14 +35,16 @@ SALTED_JOIN_KEYS = ["blk", "salt_a", "salt_b"]
 
 
 def salted_block_sides(
-    df: DataFrame, block: str, id_col: str, payload: str, cap: int = BLOCK_CAP
+    df: DataFrame, block: str, payload: str, cap: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Build the two sides of an exact salted intra-block self-join.
+    """Build the two sides of an exact salted intra-block self-join of
+    the ``vec_id`` rows of ``df``.
 
     ``cap`` must be >= 1: a degenerate cap would make n_sub zero (an
-    empty salt sequence drops every row silently). Both callers
-    (knn_graph, embedding_pairs) treat only None as "use the
-    default" — an explicit 0 is a caller bug and fails loudly here.
+    empty salt sequence drops every row silently). The four callers
+    (knn_graph, embedding_pairs, semdedup, hard_negatives) pass their
+    own cap, ``BLOCK_CAP`` unless a test shrinks it — an explicit 0 is
+    a caller bug and fails loudly here.
 
     Returns ``(a, b)`` with columns ``(blk, id_a, pay_a, salt_a,
     salt_b)`` / ``(blk, id_b, pay_b, salt_a, salt_b)``; join them on
@@ -51,7 +53,7 @@ def salted_block_sides(
     Per-block s comes from a count aggregate broadcast back onto both
     sides, so the plan stays fully lazy.
     """
-    if cap is None or cap < 1:
+    if cap < 1:
         raise ValueError(f"salted_block_sides cap must be >= 1, got {cap!r}")
     # NOTE: caching the projected input here (the size aggregate
     # and both join sides re-derive it) was implemented and A/B'd —
@@ -69,7 +71,7 @@ def salted_block_sides(
     salts = F.explode(F.sequence(F.lit(0), F.col("n_sub") - 1))
     base = df.select(
         F.col(block).alias("blk"),
-        F.col(id_col).alias("_id"),
+        F.col("vec_id").alias("_id"),
         F.col(payload).alias("_pay"),
     ).join(F.broadcast(sizes), "blk")
     own_salt = F.pmod(F.xxhash64("_id"), F.col("n_sub")).cast("int")

@@ -82,7 +82,6 @@ def country_fractions(
     population: DataFrame,
     start_date: str,
     end_date: str,
-    series_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """plot_totals_for_country's data pipeline (main.py:248-267),
     generalized: date-range filter on the daily global series, running
@@ -92,23 +91,15 @@ def country_fractions(
     scalar lookup. One row per (country, date); the reference's
     one-country figure is a filter away.
 
-    ``series_cols`` is the cumsum partition key. The reference's
-    day_wise is ONE global series, so the default (empty) runs a
-    single-partition window — semantically forced there, but a scale
-    trap for any multi-series caller: pass the series key (e.g.
-    ``("country_region",)`` for a per-country frame) and every series
-    cumsums in parallel instead of funnelling through one task
-    (asserted in tests/test_plans.py).
+    The reference's day_wise is ONE global series, so the cumsum is
+    one single-partition window — semantically forced, and bounded by
+    the series' day count.
     """
     filtered = day_wise.filter(F.col("date").between(start_date, end_date))
-    base = (
-        Window.partitionBy(*series_cols).orderBy("date")
-        if series_cols
-        else Window.orderBy("date")
+    w = Window.orderBy("date").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     totals = filtered.select(
-        *series_cols,
         "date",
         *[
             F.sum(F.col(c).cast("decimal(18,6)")).over(w).cast("double").alias(f"{c}_total")
@@ -116,14 +107,9 @@ def country_fractions(
         ],
     )
     pop = F.broadcast(population.select("country_region", "population"))
-    # Global series → every country's fraction of the same totals
-    # (cross with the tiny dim); per-country series → equi-join.
-    joined = (
-        totals.join(pop, "country_region")
-        if "country_region" in series_cols
-        else totals.crossJoin(pop)
-    )
-    return joined.select(
+    # every country's fraction of the same global totals: a cross with
+    # the tiny dim
+    return totals.crossJoin(pop).select(
         "country_region",
         "date",
         *[

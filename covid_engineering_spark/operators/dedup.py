@@ -36,6 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from covid_engineering_spark.functions.skew import (
+    BLOCK_CAP,
+    SALTED_JOIN_KEYS,
+    salted_block_sides,
+)
 from covid_engineering_spark.sources import read_table
 
 JACCARD_THRESHOLD = 0.5
@@ -297,48 +302,43 @@ def _minhash_signatures(sh: DataFrame) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*aggs, F.count("*").alias("_n_sh"))
 
 
-def _capped_bucket_pairs(
-    buckets: DataFrame,
-    key_cols: list[str],
-    cache_key: str | None = None,
-    carry: tuple = (),
-) -> DataFrame:
-    """Candidate (d1, d2) pairs from equal-bucket membership with
-    BOUNDED per-bucket work: buckets of <= ``SKETCH_BUCKET_CAP``
-    members take the all-pairs join (<= cap²/2 pairs), larger buckets
-    take consecutive doc_id-chain pairs (B-1 edges — candidate-graph
-    connectivity preserved; see the ``SKETCH_BUCKET_CAP`` note for the
-    verified-pair recall trade this makes inside mixed mega-buckets).
+def _capped_bucket_pairs(bands: DataFrame) -> DataFrame:
+    """Candidate (d1, d2) pairs from equal ``(band, bh)`` bucket
+    membership with BOUNDED per-bucket work: buckets of <=
+    ``SKETCH_BUCKET_CAP`` members take the all-pairs join (<= cap²/2
+    pairs), larger buckets take consecutive doc_id-chain pairs (B-1
+    edges — candidate-graph connectivity preserved; see the
+    ``SKETCH_BUCKET_CAP`` note for the verified-pair recall trade this
+    makes inside mixed mega-buckets).
 
     The bucket count/rank windows ride the same (key) shuffle the
     candidate join needs anyway; their output bounds the join instead
     of letting one mega-bucket emit B²/2 rows inside a single task.
 
-    ``carry``: per-doc payload columns of ``buckets`` to ride through
-    the pair join, emitted as ``<col>_1``/``<col>_2`` — a caller that
-    needs per-side metadata on each pair (the MinHash verification's
-    set sizes) gets it from the SAME join instead of re-joining the
-    pair frame against a per-doc table once per side (guide §2.4).
+    The per-doc set size ``_n_sh`` rides the pair join, emitted as
+    ``_n_sh_1``/``_n_sh_2`` — the MinHash verification gets both
+    sides' sizes from the SAME join instead of re-joining the pair
+    frame against a per-doc table once per side (guide §2.4).
     """
-    wc = Window.partitionBy(*key_cols)
-    wr = Window.partitionBy(*key_cols).orderBy("doc_id")
-    bx = buckets.select(
+    from covid_engineering_spark.functions import evicting_cache
+
+    wc = Window.partitionBy("band", "bh")
+    wr = Window.partitionBy("band", "bh").orderBy("doc_id")
+    bx = bands.select(
         "doc_id",
-        *key_cols,
-        *carry,
+        "band",
+        "bh",
+        "_n_sh",
         F.count("*").over(wc).alias("_bn"),
         F.row_number().over(wr).alias("_rn"),
     )
-    if cache_key is not None:
-        # four lineage branches (small×small, big×big) would otherwise
-        # recompute the upstream sketch four times; caching the bucket
-        # index is also the production shape — a real dedup pipeline
-        # MATERIALIZES its signature index rather than re-deriving it
-        # per probe (measured: uncached, the union form doubled the
-        # sf0.1 wall time of dedup_minhash_lsh)
-        from covid_engineering_spark.functions import evicting_cache
-
-        bx = evicting_cache(bx, cache_key)
+    # four lineage branches (small×small, big×big) would otherwise
+    # recompute the upstream sketch four times; caching the bucket
+    # index is also the production shape — a real dedup pipeline
+    # MATERIALIZES its signature index rather than re-deriving it
+    # per probe (measured: uncached, the union form doubled the
+    # sf0.1 wall time of dedup_minhash_lsh)
+    bx = evicting_cache(bx, "minhash_bands")
     small = bx.filter(F.col("_bn") <= SKETCH_BUCKET_CAP)
     big = bx.filter(F.col("_bn") > SKETCH_BUCKET_CAP)
 
@@ -346,27 +346,23 @@ def _capped_bucket_pairs(
         return joined.select(
             F.col("l.doc_id").alias("d1"),
             F.col("r.doc_id").alias("d2"),
-            *[F.col(f"l.{c}").alias(f"{c}_1") for c in carry],
-            *[F.col(f"r.{c}").alias(f"{c}_2") for c in carry],
+            F.col("l._n_sh").alias("_n_sh_1"),
+            F.col("r._n_sh").alias("_n_sh_2"),
         )
 
-    def _same(side_keys):
-        cond = None
-        for k in side_keys:
-            c = F.col(f"l.{k}") == F.col(f"r.{k}")
-            cond = c if cond is None else cond & c
-        return cond
-
+    same = (F.col("l.band") == F.col("r.band")) & (
+        F.col("l.bh") == F.col("r.bh")
+    )
     all_pairs = _sel(
         small.alias("l").join(
             small.alias("r"),
-            _same(key_cols) & (F.col("l.doc_id") < F.col("r.doc_id")),
+            same & (F.col("l.doc_id") < F.col("r.doc_id")),
         )
     )
     chain_pairs = _sel(
         big.alias("l").join(
             big.alias("r"),
-            _same(key_cols) & (F.col("l._rn") + 1 == F.col("r._rn")),
+            same & (F.col("l._rn") + 1 == F.col("r._rn")),
         )
     )
     return all_pairs.unionByName(chain_pairs).distinct()
@@ -462,12 +458,7 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     # needs (na, nb) per pair, and getting them from the pair join
     # replaces two joins of the verified frame against a per-doc size
     # table (guide §2.4: two ops keyed the same way share one pass).
-    cand = _capped_bucket_pairs(
-        bands,
-        ["band", "bh"],
-        cache_key="minhash_bands",
-        carry=("_n_sh",),
-    )
+    cand = _capped_bucket_pairs(bands)
     a, b = sh.alias("a"), sh.alias("b")
     common = (
         cand.join(a, F.col("a.doc_id") == F.col("d1"))
@@ -593,7 +584,7 @@ def cosine_expr(a, b):
 def embedding_pairs(
     emb: DataFrame,
     threshold: float = COSINE_THRESHOLD,
-    cap: int | None = None,
+    cap: int = BLOCK_CAP,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine >= threshold), blocked
     by cluster label so the self-join is per-block instead of global —
@@ -605,16 +596,7 @@ def embedding_pairs(
     in tests with a tiny cap), the largest task bounded at ~cap² pairs
     no matter how skewed the labels.
     """
-    from covid_engineering_spark.functions.skew import (
-        BLOCK_CAP,
-        SALTED_JOIN_KEYS,
-        salted_block_sides,
-    )
-
-    a, b = salted_block_sides(
-        emb, "label", "vec_id", "embedding",
-        BLOCK_CAP if cap is None else cap,
-    )
+    a, b = salted_block_sides(emb, "label", "embedding", cap)
     cos = cosine_expr(F.col("pay_a"), F.col("pay_b"))
     return (
         a.join(b, SALTED_JOIN_KEYS)

@@ -84,6 +84,7 @@ from covid_engineering_spark.sources import (
     sqlite_to_parquet,
     write_partitioned,
 )
+from covid_engineering_spark.sources.io import ZORDER_BITS
 
 _S1_SCHEMA = T.StructType(
     [
@@ -211,7 +212,7 @@ def q_s8_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_table(spark, sf_dir, "part").repartition(32).write.mode(
         "overwrite"
     ).parquet(small)
-    compact_parquet(spark, small, compacted, schemas.STAR["part"], target_files=4)
+    compact_parquet(spark, small, compacted, schemas.STAR["part"])
     return spark.read.schema(schemas.STAR["part"]).parquet(compacted)
 
 
@@ -227,7 +228,7 @@ def q_s9_sink_range_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from covid_engineering_spark.sources import write_range_sorted
 
     orders = read_table(spark, sf_dir, "orders")
-    write_range_sorted(orders, out, "o_orderdate", n_files=8)
+    write_range_sorted(orders, out, "o_orderdate")
     return spark.read.schema(schemas.STAR["orders"]).parquet(out)
 
 
@@ -258,10 +259,9 @@ def q_s10_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Z-order layout parameters: bits per dimension and the date epoch
-#: (synthetic orders start 1995-01-01, span ~2,400 days — comfortably
-#: inside 16 bits; custkey wraps modulo 2^16, the documented policy).
-ZORDER_BITS = 16
+#: Z-order date epoch (synthetic orders start 1995-01-01, span ~2,400
+#: days — comfortably inside the key's ``ZORDER_BITS`` = 16 bits;
+#: custkey wraps modulo 2^16, the documented policy).
 ZORDER_EPOCH = "1995-01-01"
 
 
@@ -295,9 +295,9 @@ def q_s11_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         "o_orderdate",
-        zorder_value(x, y, ZORDER_BITS).alias("zval"),
+        zorder_value(x, y).alias("zval"),
     )
-    write_range_sorted(staged, out, "zval", n_files=8)
+    write_range_sorted(staged, out, "zval")
     zschema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -332,13 +332,9 @@ def q_j7_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").withColumnRenamed(
         "l_orderkey", "o_orderkey"
     )
+    write_bucketed(orders, "ces_j7_orders_b", os.path.join(base, "orders_b"))
     write_bucketed(
-        orders, "ces_j7_orders_b", "o_orderkey", 8,
-        os.path.join(base, "orders_b"),
-    )
-    write_bucketed(
-        li, "ces_j7_lineitem_b", "o_orderkey", 8,
-        os.path.join(base, "lineitem_b"),
+        li, "ces_j7_lineitem_b", os.path.join(base, "lineitem_b")
     )
     revenue = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (

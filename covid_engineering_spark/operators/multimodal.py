@@ -5,10 +5,10 @@ Arrow-batched ``mapInPandas`` stages.
 
 The decode libraries (PIL/ffmpeg/librosa) are not available in this
 environment, so the *codec* step is a deterministic fake passed in
-through the ``decoder=`` parameter — but everything Spark-level is
-real and tested: the binary+metadata schema, the mapInPandas batch
-iteration (constant memory per batch), the UDF signatures, and the
-partition-preserving plan shape.
+through ``extract_features``' ``decoder=`` parameter — but everything
+Spark-level is real and tested: the binary+metadata schema, the
+mapInPandas batch iteration (constant memory per batch), the UDF
+signatures, and the partition-preserving plan shape.
 
 At 100 TB the rules this module encodes: keep payloads in their own
 column so column pruning skips them unless needed; never collect
@@ -141,22 +141,27 @@ FRAME_BYTES = 64
 MAX_FRAMES = 4
 
 
-def resize_images(media: DataFrame, width: int = 32, height: int = 32, decoder=fake_decode) -> DataFrame:
-    """Resize stage: payload -> decoded dims -> re-encoded payload at
-    the target size. The real path re-encodes via the codec hook; the
-    fake path emits a deterministic byte slice so the Spark plumbing
-    (binary in, binary out, constant-memory batches) is fully tested.
+#: The resize target the registered query AND its SQL twin agree on:
+#: 32x32 -> a (32*32)//8 = 128-byte output budget in the fake codec.
+RESIZE_TARGET = (32, 32)
+
+
+def resize_images(media: DataFrame) -> DataFrame:
+    """Resize stage: payload -> re-encoded payload at ``RESIZE_TARGET``.
+    A real codec would decode and re-encode; this stage emits a
+    deterministic byte slice so the Spark plumbing (binary in, binary
+    out, constant-memory batches) is fully tested.
 
     NULL payloads are excluded scan-side: a missing image has no
     resized output row (the same no-rows semantics the explode-based
     text ops use for NULL text).
     """
+    width, height = RESIZE_TARGET
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = decoder(payload, "image/png")
                 # fake 'resample': proportional byte subsample, bounded
                 # by the target pixel budget — stands in for a real
                 # encoder's output buffer.
@@ -282,23 +287,17 @@ def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: The resize target the registered query AND its SQL twin agree on:
-#: 32x32 -> a (32*32)//8 = 128-byte output budget in the fake codec.
-RESIZE_TARGET = (32, 32)
-
-
 def q_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize pipeline, driver-checkable: image rows pass through the
-    ``resize_images`` mapInPandas stage (decode -> re-encode at the
-    ``RESIZE_TARGET`` pixel budget — pinned at the call site because
-    the SQL twin hard-codes the matching 32/32/128 bound), then each
+    ``resize_images`` mapInPandas stage (re-encode at the
+    ``RESIZE_TARGET`` pixel budget, which the SQL twin hard-codes as
+    the matching 32/32/128 bound), then each
     output payload is summarized by length + rolling checksum so the
     twin replays the proportional byte subsample and the driver
     hash-checks the resize plumbing end-to-end.
     """
     docs = read_table(spark, sf_dir, "documents")
-    w, h = RESIZE_TARGET
-    resized = resize_images(with_media_columns(docs), width=w, height=h)
+    resized = resize_images(with_media_columns(docs))
     return _summarize_payloads(
         resized,
         "payload",

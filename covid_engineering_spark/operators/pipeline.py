@@ -95,17 +95,16 @@ def q_pipe_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def quota_per_group(
     df: DataFrame,
-    group: str,
     order,
     n: int = QUOTA_PER_SOURCE,
 ) -> DataFrame:
-    """Keep at most ``n`` rows per ``group``, best-first by ``order``
+    """Keep at most ``n`` rows per ``source``, best-first by ``order``
     (a list of Column sort keys; make the last a unique tiebreak so
     the kept set is deterministic).
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(group).orderBy(*order)
+    w = Window.partitionBy("source").orderBy(*order)
     return (
         df.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= n)
@@ -118,9 +117,7 @@ def q_pipe_quota_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = read_table(spark, sf_dir, "documents")
     return quota_per_group(
-        docs,
-        "source",
-        [F.col("n_chars").desc(), F.col("doc_id")],
+        docs, [F.col("n_chars").desc(), F.col("doc_id")]
     ).select("doc_id", "source", "n_chars", "rk")
 
 
@@ -798,11 +795,12 @@ def q_pipe_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 STRATUM_N = 20
 
 
-def stratified_sample(df: DataFrame, strata: list[str]) -> DataFrame:
-    """Exact-N uniform sample per stratum, reproducibly: rank rows
-    within each stratum by md5(key) — a uniform, content-stable order
-    — and keep the first ``STRATUM_N``. Unlike ``sampleBy`` (per-row coin
-    flips: approximate counts, partition-order dependent), this
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Exact-N uniform sample per (lang, source) stratum,
+    reproducibly: rank rows within each stratum by md5(key) — a
+    uniform, content-stable order — and keep the first ``STRATUM_N``.
+    Unlike ``sampleBy`` (per-row coin flips: approximate counts,
+    partition-order dependent), this
     yields EXACTLY min(n, stratum size) rows and the same rows on
     every engine, every layout. One ranked window on the strata key;
     Spark's WindowGroupLimit pushes the rank filter below the full
@@ -810,7 +808,7 @@ def stratified_sample(df: DataFrame, strata: list[str]) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*strata).orderBy(
+    w = Window.partitionBy("lang", "source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
     )
     return (
@@ -825,16 +823,22 @@ def q_pipe_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional ones).
     """
     docs = read_table(spark, sf_dir, "documents")
-    return stratified_sample(docs, ["lang", "source"]).select(
+    return stratified_sample(docs).select(
         "doc_id", "lang", "source", "sample_rk"
     )
 
 
-def cdc_upsert(changelog: DataFrame, keys: list[str]) -> DataFrame:
+#: The changelog key of ``cdc_upsert``/``scd2_history``: one state
+#: stream per (user, event type).
+CDC_KEYS = ["user_id", "event_type"]
+
+
+def cdc_upsert(changelog: DataFrame) -> DataFrame:
     """Latest-wins changelog compaction — the batch form of ``MERGE
-    INTO`` that keeps, per key, only the most recent version. The
-    maintenance query behind every snapshot refresh of a mutable
-    corpus (re-crawled pages, re-scored documents, corrected labels).
+    INTO`` that keeps, per ``CDC_KEYS`` key, only the most recent
+    version. The maintenance query behind every snapshot refresh of a
+    mutable corpus (re-crawled pages, re-scored documents, corrected
+    labels).
 
     Spark-first shape: ``max_by`` aggregation, NOT a ranked window —
     partial aggregation compacts each map-side partition before the
@@ -844,8 +848,10 @@ def cdc_upsert(changelog: DataFrame, keys: list[str]) -> DataFrame:
     ``ts`` within a key (the synthetic feed's timestamps are globally
     unique; production changelogs use a (ts, sequence) struct).
     """
-    others = [c for c in changelog.columns if c not in keys and c != "ts"]
-    return changelog.groupBy(*keys).agg(
+    others = [
+        c for c in changelog.columns if c not in CDC_KEYS and c != "ts"
+    ]
+    return changelog.groupBy(*CDC_KEYS).agg(
         F.max("ts").alias("ts"),
         *[F.max_by(c, "ts").alias(c) for c in others],
     )
@@ -857,18 +863,15 @@ def q_pipe_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = read_table(spark, sf_dir, "events")
     return cdc_upsert(
-        ev.select("user_id", "event_type", "ts", "value", "props"),
-        keys=["user_id", "event_type"],
+        ev.select("user_id", "event_type", "ts", "value", "props")
     )
 
 
-def scd2_history(
-    changelog: DataFrame, keys: list[str], seq: str | None = None
-) -> DataFrame:
+def scd2_history(changelog: DataFrame) -> DataFrame:
     """Slowly-changing-dimension TYPE 2 history: turn a changelog into
-    one row per VERSION per key with a half-open validity interval
-    [valid_from, valid_to) — valid_to = the NEXT version's timestamp,
-    null while current — plus a version ordinal and ``is_current``
+    one row per VERSION per ``CDC_KEYS`` key with a half-open validity
+    interval [valid_from, valid_to) — valid_to = the NEXT version's
+    timestamp, null while current — plus a version ordinal and ``is_current``
     flag. The complement of ``cdc_upsert`` (which keeps only the
     latest state): SCD2 is what an as-of join probes and what every
     warehouse dimension audit ships.
@@ -877,14 +880,15 @@ def scd2_history(
     closing timestamp, row_number() for the ordinal, both riding the
     same (keys) hash partition and sort, so the only exchange is one
     shuffle on the key and per-partition state is bounded by versions
-    per key. Determinism requires a total order within a key: pass a
-    unique ``seq`` tiebreak column (event id, LSN) — relying on ``ts``
-    alone silently permutes same-timestamp versions.
+    per key. Determinism requires a total order within a key: the
+    unique ``event_id`` breaks ``ts`` ties — ``ts`` alone would
+    silently permute same-timestamp versions.
     """
     from pyspark.sql import Window
 
-    order = [F.col("ts")] + ([F.col(seq)] if seq else [])
-    w = Window.partitionBy(*keys).orderBy(*order)
+    w = Window.partitionBy(*CDC_KEYS).orderBy(
+        F.col("ts"), F.col("event_id")
+    )
     return (
         changelog.withColumn("valid_from", F.col("ts"))
         .withColumn("valid_to", F.lead("ts").over(w))
@@ -900,9 +904,7 @@ def q_pipe_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = read_table(spark, sf_dir, "events")
     return scd2_history(
-        ev.select("user_id", "event_type", "ts", "event_id", "value"),
-        keys=["user_id", "event_type"],
-        seq="event_id",
+        ev.select("user_id", "event_type", "ts", "event_id", "value")
     )
 
 
@@ -913,18 +915,17 @@ def q_pipe_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 PII_PATTERNS: list[tuple[str, str]] = [("[0-9]+", "<NUM>")]
 
 
-def pii_scrub(
-    df: DataFrame, col: str, patterns: list[tuple[str, str]] = PII_PATTERNS
-) -> DataFrame:
-    """Redact every match of each pattern in ``col`` and count the
-    redactions per row. Pure JVM ``regexp_replace``/``regexp_count``
-    expressions inside whole-stage codegen — a scan-side rewrite with
+def pii_scrub(df: DataFrame, col: str) -> DataFrame:
+    """Redact every match of each ``PII_PATTERNS`` pattern in ``col``
+    and count the redactions per row. Pure JVM
+    ``regexp_replace``/``regexp_count`` expressions inside whole-stage
+    codegen — a scan-side rewrite with
     no shuffle at any scale; the audit count rides along so a
     downstream gate can quarantine rows with excessive hits.
     """
     scrubbed = F.col(col)
     hits = F.lit(0)
-    for pat, token in patterns:
+    for pat, token in PII_PATTERNS:
         hits = hits + F.regexp_count(scrubbed, F.lit(pat))
         scrubbed = F.regexp_replace(scrubbed, pat, token)
     return df.withColumns(
@@ -1130,12 +1131,12 @@ def q_pipe_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 K_ANON = 5
 
 
-def k_anonymize(docs: DataFrame, k: int = K_ANON) -> DataFrame:
+def k_anonymize(docs: DataFrame) -> DataFrame:
     """k-anonymity release gate over the corpus metadata — before a
     dataset (or its datasheet) ships with per-document provenance
     columns, any quasi-identifier combination shared by fewer than
-    ``k`` documents is suppressed (masked to ``'*'``), so no released
-    row is metadata-unique below the k floor. Quasi-identifiers here
+    ``K_ANON`` documents is suppressed (masked to ``'*'``), so no
+    released row is metadata-unique below the k floor. Quasi-identifiers here
     are ``(lang, source)`` — the columns a release would carry;
     ``text`` content is PII-scrubbed separately (``pipe_pii``), this
     gate is about the JOINABLE attributes.
@@ -1164,7 +1165,7 @@ def k_anonymize(docs: DataFrame, k: int = K_ANON) -> DataFrame:
     groups = docs.groupBy("lang", "source").agg(
         F.count("*").alias("qi_group_n")
     )
-    ok = F.col("qi_group_n") >= k
+    ok = F.col("qi_group_n") >= K_ANON
     d, g = docs.alias("_ka_d"), groups.alias("_ka_g")
     return (
         d.join(
@@ -1196,7 +1197,7 @@ def q_pipe_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 PPS_SAMPLE_K = 100
 
 
-def weighted_sample(docs: DataFrame, k: int = PPS_SAMPLE_K) -> DataFrame:
+def weighted_sample(docs: DataFrame) -> DataFrame:
     """Systematic PPS (probability-proportional-to-size) sampling
     without replacement — the corpus-mixing draw that picks documents
     with probability ∝ length, the classic "sample by token mass, not
@@ -1208,8 +1209,9 @@ def weighted_sample(docs: DataFrame, k: int = PPS_SAMPLE_K) -> DataFrame:
     Mechanics: order the corpus by a content-stable md5 hash (the
     random permutation), take the inclusive prefix sum W_i of the
     weights along that order (``global_prefix_sum`` — distributed,
-    no single-partition pass), and select doc i iff the k evenly
-    spaced pointers cross its mass interval:
+    no single-partition pass), and select doc i iff the
+    k = ``PPS_SAMPLE_K`` evenly spaced pointers cross its mass
+    interval:
 
         floor(W_i · k / W) > floor(W_{i-1} · k / W)
 
@@ -1238,10 +1240,10 @@ def weighted_sample(docs: DataFrame, k: int = PPS_SAMPLE_K) -> DataFrame:
         total_col="_w_tot",
     )
     sampled = F.expr(
-        f"CAST(w_cum AS DECIMAL(38,0)) * {int(k)}"
+        f"CAST(w_cum AS DECIMAL(38,0)) * {PPS_SAMPLE_K}"
         " DIV GREATEST(_w_tot, 1)"
     ) > F.expr(
-        f"CAST(w_cum - weight AS DECIMAL(38,0)) * {int(k)}"
+        f"CAST(w_cum - weight AS DECIMAL(38,0)) * {PPS_SAMPLE_K}"
         " DIV GREATEST(_w_tot, 1)"
     )
     return pref.select(
@@ -1263,7 +1265,7 @@ DSIR_K = 50
 DSIR_HASH_SEED = 31
 
 
-def dsir_select(docs: DataFrame, target, k: int = DSIR_K) -> DataFrame:
+def dsir_select(docs: DataFrame, target) -> DataFrame:
     """Data Selection via Importance Resampling (Xie et al. 2023,
     arXiv:2302.03169) — the importance-weighting step that picks raw
     documents distributed like a TARGET corpus: hash token features
@@ -1278,8 +1280,8 @@ def dsir_select(docs: DataFrame, target, k: int = DSIR_K) -> DataFrame:
     "select raw data that reads like the English target", with
     NULL-lang docs plain raw-side docs in both engines; a nullable
     predicate here silently diverges between Spark's NULL-skipping
-    SUM and DuckDB's CASE ELSE); the registered selection is
-    the DETERMINISTIC top-k by weight (the paper's Gumbel-noise
+    SUM and DuckDB's CASE ELSE); the selection is the DETERMINISTIC
+    top-``DSIR_K`` by weight (the paper's Gumbel-noise
     resampling is one extra column on top — hash-derived noise would
     drop in the same way the split/mixture samplers draw md5 salt).
 
@@ -1303,7 +1305,7 @@ def dsir_select(docs: DataFrame, target, k: int = DSIR_K) -> DataFrame:
     w = _dsir_weights(docs, target)
     topk = (
         w.orderBy(F.desc("dsir_micros"), F.asc("doc_id"))
-        .limit(int(k))
+        .limit(DSIR_K)
         .select("doc_id", F.lit(True).alias("_sel"))
     )
     return (
@@ -1406,12 +1408,12 @@ def _dsir_weights(docs: DataFrame, target) -> DataFrame:
 
 
 def dsir_gumbel_topk_exact(
-    docs: DataFrame, target, k: int = DSIR_K, seed: int = 7
+    docs: DataFrame, target, seed: int = 7
 ) -> DataFrame:
     """The paper's actual resampling rule (Xie et al. 2023 §2.3;
-    Gumbel-top-k, Vieira 2014) in INTEGER MICRO-UNITS: sample ``k``
-    raw documents WITHOUT replacement with P(doc) ∝ exp(w) by taking
-    the top-k of ``w + G_i``, ``G_i = −ln(−ln(u_i))`` a standard
+    Gumbel-top-k, Vieira 2014) in INTEGER MICRO-UNITS: sample
+    ``DSIR_K`` raw documents WITHOUT replacement with P(doc) ∝ exp(w)
+    by taking the top-k of ``w + G_i``, ``G_i = −ln(−ln(u_i))`` a standard
     Gumbel draw. The score column is hash-stable, so the whole
     selection (not just the id set) is checkable against an ANSI-SQL
     twin (:func:`dsir_gumbel_sql`; differential test in
@@ -1458,7 +1460,7 @@ def dsir_gumbel_topk_exact(
     )
     topk = (
         scored.orderBy(F.desc("score_micros"), F.asc("doc_id"))
-        .limit(int(k))
+        .limit(DSIR_K)
         .select("doc_id", F.lit(True).alias("_sel"))
     )
     return scored.join(F.broadcast(topk), "doc_id", "left").select(
@@ -2057,11 +2059,11 @@ def build_near_dup_index(corpus: DataFrame) -> dict[str, DataFrame]:
     return {"bands": bands, "shingles": shc, "sizes": sizes}
 
 
-def write_near_dup_index(
-    corpus: DataFrame,
-    path: str,
-    n_files: int = 32,
-) -> None:
+#: Files per range-clustered dataset of the standing near-dup index.
+NEAR_DUP_INDEX_FILES = 32
+
+
+def write_near_dup_index(corpus: DataFrame, path: str) -> None:
     """Materialize the standing near-dup index under ``path`` (three
     parquet datasets). Layout is chosen for the probe's access paths:
 
@@ -2074,20 +2076,21 @@ def write_near_dup_index(
       give footer-stat skipping when a batch's candidates are few;
     * ``sizes`` is ≤1 row per doc — plain parquet.
 
-    ``n_files`` is a layout decision like ``write_bucketed``'s bucket
-    count: pick it for the target cluster's parallelism.
+    ``NEAR_DUP_INDEX_FILES`` is a layout decision like
+    ``write_bucketed``'s bucket count: pick it for the target
+    cluster's parallelism.
     """
     idx = build_near_dup_index(corpus)
     (
         idx["bands"]
-        .repartitionByRange(n_files, "band", "bh")
+        .repartitionByRange(NEAR_DUP_INDEX_FILES, "band", "bh")
         .sortWithinPartitions("band", "bh")
         .write.mode("overwrite")
         .parquet(f"{path}/bands")
     )
     (
         idx["shingles"]
-        .repartitionByRange(n_files, "doc_id")
+        .repartitionByRange(NEAR_DUP_INDEX_FILES, "doc_id")
         .sortWithinPartitions("doc_id", "s")
         .write.mode("overwrite")
         .parquet(f"{path}/shingles")

@@ -365,11 +365,11 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    ts: str,
     value_col: str,
 ) -> DataFrame:
     """As-of join: attach to each left row the ``value_col`` of the
-    latest right row with the same ``key`` and right.ts <= left.ts.
+    latest right row with the same ``key`` and right.ts <= left.ts
+    (both sides carry a ``ts`` column).
 
     Implemented as union + last(ignorenulls) over a (key, time) window:
     one shuffle, no range-join fanout, linear in input — the
@@ -381,7 +381,7 @@ def asof_join(
         {"_side": F.lit(1), "asof_value": F.lit(None).cast(right.schema[value_col].dataType)}
     )
     r_tag = right.select(
-        key, ts, F.lit(0).alias("_side"), F.col(value_col).alias("asof_value")
+        key, "ts", F.lit(0).alias("_side"), F.col(value_col).alias("asof_value")
     )
     # right rows with _side=0 sort before same-ts left rows, making the
     # match inclusive (right.ts <= left.ts).
@@ -394,7 +394,7 @@ def asof_join(
     )
     w = (
         Window.partitionBy(key)
-        .orderBy(ts, "_side")
+        .orderBy("ts", "_side")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
@@ -645,7 +645,7 @@ def q_j6_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max_by("value", "event_id").alias("p_value"))
     )
     return asof_join(
-        clicks, purchases, key="user_id", ts="ts", value_col="p_value"
+        clicks, purchases, key="user_id", value_col="p_value"
     ).select("event_id", "user_id", "ts", "value", "asof_value")
 
 
@@ -2295,7 +2295,7 @@ def q_a26_mg_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver hash-checks estimates, not just bounds.
     """
     ev = read_table(spark, sf_dir, "events")
-    s2, counts = mg_summary(ev, "event_type", "user_id")
+    s2, counts = mg_summary(ev)
     totals = counts.groupBy("event_type").agg(
         F.sum("cnt").alias("total"), F.count("*").alias("n_users")
     )
@@ -2314,10 +2314,11 @@ def q_a26_mg_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mg_summary(df: DataFrame, group_col: str, key_col: str):
-    """The distributed Misra–Gries reduction on an arbitrary frame —
-    returns ``(summary, counts)`` where ``summary`` holds per
-    ``group_col`` at most ``MG_K`` rows ``(group, key, cnt, mg_est)``
+def mg_summary(df: DataFrame):
+    """The distributed Misra–Gries reduction of ``user_id`` counts per
+    ``event_type`` — returns ``(summary, counts)`` where ``summary``
+    holds per type at most ``MG_K`` rows ``(event_type, user_id, cnt,
+    mg_est)``
     with the merged-summary guarantee (see ``q_a26_mg_heavy``), and
     ``counts`` is the exact per-(group, key) count frame both stages
     derive from (callers reuse it for totals). Library form so
@@ -2326,20 +2327,20 @@ def mg_summary(df: DataFrame, group_col: str, key_col: str):
     from covid_engineering_spark.operators.dedup import portable_hash64
 
     shard = F.pmod(
-        portable_hash64(F.col(key_col).cast("string"), 26),
+        portable_hash64(F.col("user_id").cast("string"), 26),
         F.lit(MG_SHARDS),
     )
     counts = df.groupBy(
-        group_col, shard.alias("shard"), key_col
+        "event_type", shard.alias("shard"), "user_id"
     ).agg(F.count("*").alias("cnt"))
     # stage 1: per-(group, shard) MG reduction to <=k counters
-    w1 = Window.partitionBy(group_col, "shard").orderBy(
-        F.desc("cnt"), F.asc(key_col)
+    w1 = Window.partitionBy("event_type", "shard").orderBy(
+        F.desc("cnt"), F.asc("user_id")
     )
     top1 = counts.withColumn("rn", F.row_number().over(w1)).filter(
         F.col("rn") <= MG_K + 1
     )
-    g1 = Window.partitionBy(group_col, "shard")
+    g1 = Window.partitionBy("event_type", "shard")
     t1 = F.coalesce(
         F.max(F.when(F.col("rn") == MG_K + 1, F.col("cnt"))).over(g1),
         F.lit(0),
@@ -2348,21 +2349,21 @@ def mg_summary(df: DataFrame, group_col: str, key_col: str):
         top1.withColumn("t1", t1)
         .filter((F.col("rn") <= MG_K) & (F.col("cnt") > F.col("t1")))
         .select(
-            group_col,
-            key_col,
+            "event_type",
+            "user_id",
             "cnt",
             (F.col("cnt") - F.col("t1")).alias("dec1"),
         )
     )
     # stage 2: shard keys are disjoint, so the merge is a union of
     # the <=shards*k survivors + one more canonical reduction
-    w2 = Window.partitionBy(group_col).orderBy(
-        F.desc("dec1"), F.asc(key_col)
+    w2 = Window.partitionBy("event_type").orderBy(
+        F.desc("dec1"), F.asc("user_id")
     )
     top2 = s1.withColumn("rn2", F.row_number().over(w2)).filter(
         F.col("rn2") <= MG_K + 1
     )
-    g2 = Window.partitionBy(group_col)
+    g2 = Window.partitionBy("event_type")
     t2 = F.coalesce(
         F.max(F.when(F.col("rn2") == MG_K + 1, F.col("dec1"))).over(g2),
         F.lit(0),
@@ -2371,8 +2372,8 @@ def mg_summary(df: DataFrame, group_col: str, key_col: str):
         top2.withColumn("t2", t2)
         .filter((F.col("rn2") <= MG_K) & (F.col("dec1") > F.col("t2")))
         .select(
-            group_col,
-            key_col,
+            "event_type",
+            "user_id",
             "cnt",
             (F.col("dec1") - F.col("t2")).alias("mg_est"),
         )
@@ -2389,10 +2390,11 @@ QS_PCTS = (25, 50, 75, 90)
 QS_SEED = 27
 
 
-def quantile_sketch(df: DataFrame, group_col: str, b: int = QS_B) -> DataFrame:
+def quantile_sketch(df: DataFrame, b: int = QS_B) -> DataFrame:
     """Deterministic mergeable quantile summary — the quantile member
     of the bounded-state sketch family (a23 exact / a24 CMS /
-    a26 Misra–Gries counters / THIS): per (group, shard) keep every
+    a26 Misra–Gries counters / THIS), over event ``value`` per
+    ``event_type`` group: per (group, shard) keep every
     ⌈n/B⌉-th element of the locally SORTED stream plus the shard
     maximum, each sample weighted by the ranks it covers; merge the
     ≤ shards·(B+1) samples per group in value order and read the
@@ -2428,7 +2430,7 @@ def quantile_sketch(df: DataFrame, group_col: str, b: int = QS_B) -> DataFrame:
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     base = evicting_cache(
         df.filter(F.col("value").isNotNull()).select(
-            F.col(group_col).alias("g"),
+            F.col("event_type").alias("g"),
             F.pmod(
                 portable_hash64(F.col("event_id").cast("string"), QS_SEED),
                 F.lit(QS_SHARDS),
@@ -2502,7 +2504,7 @@ def quantile_sketch(df: DataFrame, group_col: str, b: int = QS_B) -> DataFrame:
         F.when(F.col("c.x") <= F.col("e.est_cents"), 1).otherwise(0)
     )
     out = j.groupBy(
-        F.col("e.g").alias(group_col),
+        F.col("e.g").alias("event_type"),
         "e.pct",
         "e.est_cents",
         "e.n_total",
@@ -2516,7 +2518,7 @@ def quantile_sketch(df: DataFrame, group_col: str, b: int = QS_B) -> DataFrame:
         F.col("true_rank_hi") >= F.col("cw_at_est") - F.col("err_bound")
     ) & (F.col("true_rank_lo") <= F.col("cw_at_est") + F.col("err_bound"))
     return out.select(
-        group_col,
+        "event_type",
         "pct",
         "est_cents",
         "n_total",
@@ -2531,10 +2533,10 @@ def quantile_sketch(df: DataFrame, group_col: str, b: int = QS_B) -> DataFrame:
 def q_a27_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A27 — mergeable rank-stride quantile summary over event value
     cents per type, with its rank-error guarantee verified in-frame."""
-    return quantile_sketch(read_table(spark, sf_dir, "events"), "event_type")
+    return quantile_sketch(read_table(spark, sf_dir, "events"))
 
 
-def quantile_histogram(df: DataFrame, group_col: str) -> DataFrame:
+def quantile_histogram(df: DataFrame) -> DataFrame:
     """EXACT percentiles via value-histogram collapse — the
     bounded-value-domain scale path for quantiles, and the lever the
     a27 depth probe names: when the value domain is bounded (cents,
@@ -2563,7 +2565,7 @@ def quantile_histogram(df: DataFrame, group_col: str) -> DataFrame:
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     hist = (
         df.filter(F.col("value").isNotNull())
-        .select(F.col(group_col).alias("g"), cents.alias("x"))
+        .select(F.col("event_type").alias("g"), cents.alias("x"))
         .groupBy("g", "x")
         .agg(F.count("*").alias("w"))
     )
@@ -2581,7 +2583,7 @@ def quantile_histogram(df: DataFrame, group_col: str) -> DataFrame:
         cand.withColumn("_pr", F.row_number().over(w_pick))
         .filter(F.col("_pr") == 1)
         .select(
-            F.col("g").alias(group_col),
+            F.col("g").alias("event_type"),
             "pct",
             F.col("x").alias("est_cents"),
             "n_total",
@@ -2591,9 +2593,7 @@ def quantile_histogram(df: DataFrame, group_col: str) -> DataFrame:
 
 def q_a28_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A28 — exact per-type percentiles by value-histogram collapse."""
-    return quantile_histogram(
-        read_table(spark, sf_dir, "events"), "event_type"
-    )
+    return quantile_histogram(read_table(spark, sf_dir, "events"))
 
 
 #: Fan-out factor of the explicit salted join — the number of

@@ -27,6 +27,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from covid_engineering_spark.functions.skew import (
+    BLOCK_CAP,
+    SALTED_JOIN_KEYS,
+    salted_block_sides,
+)
 from covid_engineering_spark.operators.dedup import cosine_expr
 from covid_engineering_spark.sources import read_table
 
@@ -666,14 +671,9 @@ def ivf_topk(emb: DataFrame, cent: DataFrame) -> DataFrame:
 
 
 KNN_K = 5
-#: Max rows of a block that share one join task — the shared default
-#: from functions/skew.py (one constant for every salted self-join).
-from covid_engineering_spark.functions.skew import (  # noqa: E402
-    BLOCK_CAP as KNN_BLOCK_CAP,
-)
 
 
-def knn_graph(emb: DataFrame, cap: int = KNN_BLOCK_CAP) -> DataFrame:
+def knn_graph(emb: DataFrame, cap: int = BLOCK_CAP) -> DataFrame:
     """Blocked exact k-nearest-neighbor graph: within each ``label``
     (here the label column, standing in for an IVF cell / shard
     assignment), every vector's k nearest others by cosine. The
@@ -708,12 +708,7 @@ def knn_graph(emb: DataFrame, cap: int = KNN_BLOCK_CAP) -> DataFrame:
     rows per src_id into the final rank: the partial-then-final
     top-k merge comes from Catalyst, not hand-rolled plumbing.
     """
-    from covid_engineering_spark.functions.skew import (
-        SALTED_JOIN_KEYS,
-        salted_block_sides,
-    )
-
-    a, b = salted_block_sides(emb, "label", "vec_id", "embedding", cap)
+    a, b = salted_block_sides(emb, "label", "embedding", cap)
     cos = cosine_expr(F.col("pay_a"), F.col("pay_b"))
     # Cosine is symmetric, so score each UNORDERED pair once
     # (id_a < id_b — half the dominant dot-product evaluations) and
@@ -1083,13 +1078,13 @@ KCORE_K = 3
 KCORE_ROUNDS = 16
 
 
-def kcore(edges: DataFrame, k: int = KCORE_K) -> DataFrame:
+def kcore(edges: DataFrame) -> DataFrame:
     """Fixed-round k-core decomposition of a directed edge list taken
-    as undirected — the graph-curation density gate: the k-core is the
-    maximal subgraph where every vertex keeps ≥ k neighbors, the
-    standard definition of a "dense community" on near-dup/retrieval
-    graphs (template families and boilerplate farms sit in deep
-    cores; one-off documents peel immediately). Peeling is the
+    as undirected — the graph-curation density gate: the k-core
+    (k = ``KCORE_K``) is the maximal subgraph where every vertex keeps
+    ≥ k neighbors, the standard definition of a "dense community" on
+    near-dup/retrieval graphs (template families and boilerplate farms
+    sit in deep cores; one-off documents peel immediately). Peeling is the
     textbook algorithm: repeatedly remove every vertex whose CURRENT
     degree is below k — removing a vertex lowers its neighbors'
     degrees, so the cascade must recompute degrees per round.
@@ -1149,7 +1144,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K) -> DataFrame:
         # Catalyst's tree-walking analysis blows the driver heap at 4
         # rounds; truncation keeps every round's plan flat.
         degc = zero_filled(verts, und).localCheckpoint(eager=True)
-        drop = degc.filter(F.col("deg") < k).select(
+        drop = degc.filter(F.col("deg") < KCORE_K).select(
             "v", F.lit(r).alias("peel_round")
         )
         # convergence break on the checkpointed round frame — the
@@ -1163,7 +1158,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K) -> DataFrame:
         if drop.count() == 0:
             break
         peeled = peeled.unionByName(drop)
-        verts = degc.filter(F.col("deg") >= k).select("v")
+        verts = degc.filter(F.col("deg") >= KCORE_K).select("v")
         und = (
             und.join(
                 verts.select(F.col("v").alias("a")), "a", "left_semi"
@@ -1977,7 +1972,7 @@ def q_emb_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_TAU = 0.3
 
 
-def semdedup(emb: DataFrame, cap: int | None = None) -> DataFrame:
+def semdedup(emb: DataFrame, cap: int = BLOCK_CAP) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540 — public): inside each cluster cell, drop every
     vector that lies within cosine ``SEMDEDUP_TAU`` of a LOWER-id
@@ -2005,19 +2000,11 @@ def semdedup(emb: DataFrame, cap: int | None = None) -> DataFrame:
     AQE broadcasts while it is small; the keep-list itself is a
     map-side projection of the scan.
     """
-    from covid_engineering_spark.functions.skew import (
-        BLOCK_CAP,
-        SALTED_JOIN_KEYS,
-        salted_block_sides,
-    )
-
     cells = emb.select("vec_id", F.col("label").alias("cell"))
     e = emb.select(
         "vec_id", F.col("label").alias("cell"), "embedding"
     )
-    a, b = salted_block_sides(
-        e, "cell", "vec_id", "embedding", BLOCK_CAP if cap is None else cap
-    )
+    a, b = salted_block_sides(e, "cell", "embedding", cap)
     dropped = (
         a.join(b, SALTED_JOIN_KEYS)
         .filter(F.col("id_a") < F.col("id_b"))
@@ -2069,11 +2056,6 @@ def hard_negatives(
     The final per-anchor top-k plans a partial WindowGroupLimit
     below the exchange.
     """
-    from covid_engineering_spark.functions.skew import (
-        SALTED_JOIN_KEYS,
-        salted_block_sides,
-    )
-
     n_batch = emb.agg(
         F.ceil(F.count("*") / F.lit(batch_cap)).cast("bigint").alias("nb")
     )
@@ -2089,9 +2071,7 @@ def hard_negatives(
     # cap), but hash assignment is binomial, not exact — an overfull
     # batch still splits instead of concentrating in one task.
     # ``salt_cap`` exists so tests can force a non-trivial grid.
-    a, b = salted_block_sides(
-        batched, "batch", "vec_id", "lp", salt_cap or batch_cap
-    )
+    a, b = salted_block_sides(batched, "batch", "lp", salt_cap or batch_cap)
     cos = cosine_expr(F.col("pay_a.embedding"), F.col("pay_b.embedding"))
     half = (
         a.join(b, SALTED_JOIN_KEYS)

@@ -981,19 +981,16 @@ GOPHER_MAX_MEAN_LEN = 10
 GOPHER_SYMBOLS = ("#", "...")
 #: Gopher's published required-word set is English function words
 #: ("the","be","to","of","and","that","have","with" — ≥2 kinds). The
-#: rule is lexicon-parameterized here because the paper's set is
-#: explicitly English-specific; the registered query uses the
+#: paper's set is explicitly English-specific; the engine uses the
 #: fixture corpus's actual function words (it is synthetic
 #: pseudo-English whose only function words are "the"/"a") so the
-#: gate stays non-degenerate — swap the lexicon per corpus/language
-#: exactly as a multilingual deployment would.
-GOPHER_REQUIRED_EN = ("the", "be", "to", "of", "and", "that", "have",
-                      "with")
+#: gate stays non-degenerate — a corpus in another language swaps
+#: this lexicon.
 GOPHER_REQUIRED_FIXTURE = ("the", "a")
 GOPHER_MIN_REQUIRED_KINDS = 2
 
 
-def _gopher_metric_cols(required_words: tuple[str, ...]) -> dict:
+def _gopher_metric_cols() -> dict:
     """The per-document Gopher metrics (word/line array folds) as
     expressions over a ``text`` column. Kept separate from the verdict
     comparisons so :func:`gopher_rules` can PROJECT them once and
@@ -1029,13 +1026,14 @@ def _gopher_metric_cols(required_words: tuple[str, ...]) -> dict:
             F.filter(ws, lambda w: w.rlike("[a-zA-Z]"))
         ).cast("long"),
         "kinds": sum(
-            (F.array_contains(ws, w).cast("int") for w in required_words),
+            (F.array_contains(ws, w).cast("int")
+             for w in GOPHER_REQUIRED_FIXTURE),
             F.lit(0),
         ),
     }
 
 
-def _gopher_verdicts(m: dict, min_kinds: int) -> dict:
+def _gopher_verdicts(m: dict) -> dict:
     """The rule comparisons (integer cross-multiplications) over a
     metric dict — either :func:`_gopher_metric_cols`' raw expressions
     (the one-expression gate predicate) or their projected columns
@@ -1054,7 +1052,7 @@ def _gopher_verdicts(m: dict, min_kinds: int) -> dict:
     r_bullets = bullet_lines * 10 <= n_lines
     r_ellipsis = ellipsis_lines * 10 <= n_lines * 3
     r_alpha = alpha_words * 5 >= n_words * 4
-    r_required = kinds >= min_kinds
+    r_required = kinds >= GOPHER_MIN_REQUIRED_KINDS
     gate = (
         r_words
         & r_mean_len
@@ -1077,16 +1075,6 @@ def _gopher_verdicts(m: dict, min_kinds: int) -> dict:
     }
 
 
-def _gopher_rule_cols(
-    required_words: tuple[str, ...], min_kinds: int
-) -> dict:
-    """Named Gopher rule verdicts (plus ``n_words`` and the combined
-    ``pass_gopher``) as expressions over a ``text`` column — the
-    inline form behind the zero-join gate predicate
-    (:func:`gopher_gate_col`)."""
-    return _gopher_verdicts(_gopher_metric_cols(required_words), min_kinds)
-
-
 def gopher_gate_col():
     """The combined Gopher gate as ONE predicate Column over a
     ``text`` column — the zero-join form for gate-first funnels:
@@ -1097,9 +1085,7 @@ def gopher_gate_col():
     measured at sf0.1: the join form erased the entire downstream
     saving of a ~45% gate.
     """
-    return _gopher_rule_cols(
-        GOPHER_REQUIRED_FIXTURE, GOPHER_MIN_REQUIRED_KINDS
-    )["pass_gopher"]
+    return _gopher_verdicts(_gopher_metric_cols())["pass_gopher"]
 
 
 def gopher_rules(docs: DataFrame) -> DataFrame:
@@ -1139,17 +1125,14 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     do. Folding the wraps into one select instead re-measured at 2.1x:
     each CASE WHEN branch re-derived its own copy of the arrays.
     """
-    metrics = _gopher_metric_cols(GOPHER_REQUIRED_FIXTURE)
+    metrics = _gopher_metric_cols()
     staged = docs.select(
         "doc_id",
         "source",
         F.col("text").isNotNull().alias("_has_text"),
         *[expr.alias(f"_m_{name}") for name, expr in metrics.items()],
     )
-    cols = _gopher_verdicts(
-        {name: F.col(f"_m_{name}") for name in metrics},
-        GOPHER_MIN_REQUIRED_KINDS,
-    )
+    cols = _gopher_verdicts({name: F.col(f"_m_{name}") for name in metrics})
     present = F.col("_has_text")
 
     def _null_safe(name, expr):

@@ -172,15 +172,14 @@ def fill_single_missing(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def clean_complete(
-    complete: DataFrame, country: str | None = None
-) -> DataFrame:
+def clean_complete(complete: DataFrame) -> DataFrame:
     """Spark re-expression of ``process_country_complete``
-    (main.py:449-498), for every country in one pass (pass ``country``
-    to mirror the reference's single-country call exactly).
+    (main.py:449-498), for every country in one pass. Cleaning is
+    per-country, so the reference's single-country call is this one
+    over the input filtered to that country.
 
     Stages (each cites the reference line it reproduces):
-      1. optional equality filter (main.py:452)
+      1. the country filter (main.py:452) is the caller's
       2. per-(country,date) max-dedup of province rows (main.py:457-462)
       3. drop rows before the first date with any observation
          (main.py:465-472)
@@ -195,15 +194,12 @@ def clean_complete(
       8. remaining missing active from the invariant (main.py:491-493)
       9. drop rows still incomplete (main.py:496)
     """
-    df = complete
-    if country is not None:
-        df = df.filter(F.col("country_region") == country)
     # One hash partitioning on country serves the whole pipeline:
     # HashPartitioning(country) satisfies the clustered distribution of
     # both the (country, date) dedup aggregation and every
     # country-partitioned window below, so Catalyst plans no further
     # exchange — one shuffle for a 9-stage pipeline.
-    df = df.repartition("country_region")
+    df = complete.repartition("country_region")
     df = df.groupBy("country_region", "date").agg(
         F.max("confirmed").alias("confirmed"),
         F.max("active").alias("active"),

@@ -67,7 +67,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 #: Queries whose DataFrame CONSTRUCTION performs staging writes (CSV/
 #: JSONL/ORC/parquet sinks, SQLite extraction, bucketed saveAsTable) —
 #: the ingest family demonstrates sink semantics, so building the
-#: frame is itself a job. register_query_views skips these by default:
+#: frame is itself a job. register_query_views skips these:
 #: registering a "lazy view" must never silently run write jobs.
 SIDE_EFFECTING = frozenset({
     "s1_csv_scan",
@@ -83,11 +83,7 @@ SIDE_EFFECTING = frozenset({
 })
 
 
-def register_query_views(
-    spark: SparkSession,
-    sf_dir: str,
-    include_staged: bool = False,
-) -> list[str]:
+def register_query_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """SQL API surface: expose every registered query as a temp view
     (named ``q_<query_name>``) over ``sf_dir``, so a SQL-only user can
     ``SELECT * FROM q_dedup_minhash_lsh`` — or join/filter/re-aggregate
@@ -98,16 +94,14 @@ def register_query_views(
     costs only catalog metadata. The EXCEPTION is the ingest family
     (``SIDE_EFFECTING``): those queries stage data — eager CSV/JSONL/
     ORC/parquet writes or a bucketed ``saveAsTable`` — at DataFrame-
-    construction time, so the default registration SKIPS them; pass
-    ``include_staged=True`` to opt into running their staging jobs.
-    Returns the view names registered.
+    construction time, so registration SKIPS them. Returns the view
+    names registered.
     """
-    reg = registry()
-    picked = [n for n in reg if include_staged or n not in SIDE_EFFECTING]
     out = []
-    for name in picked:
-        reg[name](spark, sf_dir).createOrReplaceTempView(f"q_{name}")
-        out.append(f"q_{name}")
+    for name, query in registry().items():
+        if name not in SIDE_EFFECTING:
+            query(spark, sf_dir).createOrReplaceTempView(f"q_{name}")
+            out.append(f"q_{name}")
     return out
 
 

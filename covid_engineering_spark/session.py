@@ -102,7 +102,6 @@ _FOREIGN_KEEPS = frozenset({"spark.sql.streaming.stateStore.providerClass"})
 def get_spark(
     app_name: str = "covid-engineering-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -111,6 +110,8 @@ def get_spark(
     thread per CPU this process may run on when that is unset; on a
     real cluster set ``SPARK_MASTER`` and submit with
     ``--master yarn``/``k8s`` so the builder inherits it.
+    ``spark.sql.shuffle.partitions`` is ``$SPARK_SHUFFLE_PARTITIONS``
+    (default 32); ``extra_conf`` overrides any key.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
@@ -121,10 +122,9 @@ def get_spark(
     if master:
         builder = builder.master(master)
     conf = dict(_DEFAULTS)
-    n_shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32")
+    conf["spark.sql.shuffle.partitions"] = str(
+        int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
     )
-    conf["spark.sql.shuffle.partitions"] = str(n_shuffle)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

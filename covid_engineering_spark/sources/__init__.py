@@ -1,6 +1,5 @@
 from covid_engineering_spark.sources.io import (
     compact_parquet,
-    load_star,
     read_covid_csv,
     read_table,
     register_star,
@@ -13,7 +12,6 @@ from covid_engineering_spark.sources.io import (
 
 __all__ = [
     "compact_parquet",
-    "load_star",
     "read_covid_csv",
     "read_table",
     "register_star",

@@ -217,35 +217,38 @@ def write_partitioned(df: DataFrame, path: str, *keys: str) -> None:
     df.write.mode("overwrite").partitionBy(*keys).parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int,
-    path: str,
-) -> None:
-    """Persist a table bucketed + sorted on its join key. Two tables
-    bucketed the same way equi-join with ZERO exchanges — at 100 TB
-    this converts every recurring fact⨝fact join from a full shuffle
-    into a per-bucket merge. The bucket count is a layout decision:
-    pick it for the *target* cluster's parallelism, not the current
-    data size (buckets are split across executors but never merged).
+#: The bucketed layout: the order key both join sides carry, and the
+#: bucket count.
+BUCKET_KEY = "o_orderkey"
+N_BUCKETS = 8
+
+
+def write_bucketed(df: DataFrame, table: str, path: str) -> None:
+    """Persist a table bucketed + sorted on its ``BUCKET_KEY`` join
+    key. Two tables bucketed the same way equi-join with ZERO
+    exchanges — at 100 TB this converts every recurring fact⨝fact
+    join from a full shuffle into a per-bucket merge. The bucket count
+    is a layout decision: pick it for the *target* cluster's
+    parallelism, not the current data size (buckets are split across
+    executors but never merged).
     """
     (
         df.write.format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
+        .bucketBy(N_BUCKETS, BUCKET_KEY)
+        .sortBy(BUCKET_KEY)
         .option("path", path)
         .mode("overwrite")
         .saveAsTable(table)
     )
 
 
-def write_range_sorted(
-    df: DataFrame, path: str, key: str, n_files: int
-) -> None:
+#: Files of a range-clustered sink.
+RANGE_FILES = 8
+
+
+def write_range_sorted(df: DataFrame, path: str, key: str) -> None:
     """Persist parquet range-clustered on ``key``: rows are range
-    partitioned into ``n_files`` files and sorted within each, so
+    partitioned into ``RANGE_FILES`` files and sorted within each, so
     every file owns a disjoint key interval. At 100 TB this is the
     layout that makes range predicates (time slices, id ranges) skip
     whole files on footer min/max stats instead of scanning and
@@ -254,23 +257,27 @@ def write_range_sorted(
     ``partitionBy`` on a coarser key for two-level pruning.
     """
     (
-        df.repartitionByRange(n_files, key)
+        df.repartitionByRange(RANGE_FILES, key)
         .sortWithinPartitions(key)
         .write.mode("overwrite")
         .parquet(path)
     )
 
 
-def zorder_value(x, y, bits: int = 16):
+#: Bits per dimension of the Z-order key.
+ZORDER_BITS = 16
+
+
+def zorder_value(x, y):
     """Morton / Z-order interleaved sort key for two non-negative
-    integer columns of ``bits`` each: bit i of ``x`` lands at position
-    2i, bit i of ``y`` at 2i+1. Sorting on the interleaved key gives
+    integer columns of ``ZORDER_BITS`` each: bit i of ``x`` lands at
+    position 2i, bit i of ``y`` at 2i+1. Sorting on the interleaved key gives
     BOTH dimensions file-level locality at once — the multi-column
     clustering technique behind Delta/Iceberg ``OPTIMIZE ZORDER BY``,
     here as a plain column expression over integer shifts/masks: pure
     whole-stage codegen, no UDF, and bit-identical in any engine, so a
     z-ordered layout's sort key can be recomputed and audited
-    off-cluster. Callers must reduce inputs to [0, 2^bits) first
+    off-cluster. Callers must reduce inputs to [0, 2^ZORDER_BITS) first
     (modulo, epoch-day, quantile bucket — the reduction choice is the
     clustering policy). Combine with ``write_range_sorted`` on the
     returned key: range partitioning then gives every file a disjoint
@@ -278,7 +285,7 @@ def zorder_value(x, y, bits: int = 16):
     and predicates on EITHER column skip files on footer min/max.
     """
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i)
         ).bitwiseOR(
@@ -287,38 +294,35 @@ def zorder_value(x, y, bits: int = 16):
     return z
 
 
+#: Files a compaction rewrites a small-file directory into.
+COMPACT_FILES = 4
+
+
 def compact_parquet(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    schema,
-    target_files: int,
+    spark: SparkSession, in_path: str, out_path: str, schema
 ) -> None:
-    """Rewrite a small-file parquet directory into ``target_files``
+    """Rewrite a small-file parquet directory into ``COMPACT_FILES``
     files. Small files are the dominant operational failure of long
     running ingest at scale: a scan's task count (and the namenode /
     object-store request load) is driven by FILE COUNT, not bytes.
     Compaction is a single narrow-read + round-robin repartition +
     write; run it per partition directory so each rewrite is bounded.
-    On a cluster, pick ``target_files`` as bytes / 128 MB, never 1
+    On a cluster, pick the file count as bytes / 128 MB, never 1
     (one file serializes the next scan).
     """
     df = spark.read.schema(schema).parquet(in_path)
-    df.repartition(target_files).write.mode("overwrite").parquet(out_path)
-
-
-def load_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every star-schema table lazily; nothing is scanned until an
-    action runs, so loading all ten costs only catalog metadata.
-    """
-    return {name: read_table(spark, sf_dir, name) for name in schemas.STAR_TABLES}
+    df.repartition(COMPACT_FILES).write.mode("overwrite").parquet(out_path)
 
 
 def register_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load and register temp views so both the DataFrame API and
-    ``spark.sql`` see the same tables.
+    """Load every star-schema table and register it as a temp view, so
+    both the DataFrame API and ``spark.sql`` see the same tables. The
+    loads are lazy: nothing is scanned until an action runs, so all
+    ten cost only catalog metadata.
     """
-    tables = load_star(spark, sf_dir)
+    tables = {
+        name: read_table(spark, sf_dir, name) for name in schemas.STAR_TABLES
+    }
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables

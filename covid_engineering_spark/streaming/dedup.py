@@ -20,20 +20,14 @@ from pyspark.sql import functions as F
 from covid_engineering_spark import schemas
 
 
-def stream_dedup(
-    spark: SparkSession,
-    source_dir: str,
-    reader_options: dict[str, str] | None = None,
-) -> DataFrame:
+def stream_dedup(spark: SparkSession, source_dir: str) -> DataFrame:
     """Watermark-bounded streaming dedup over the events file source:
     emits each key's FIRST arrival, drops re-deliveries that land
     within the watermark horizon (append output mode).
     """
-    reader = spark.readStream.schema(schemas.STAR["events"])
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
     stream = (
-        reader.parquet(source_dir)
+        spark.readStream.schema(schemas.STAR["events"])
+        .parquet(source_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "2 hours")
     )

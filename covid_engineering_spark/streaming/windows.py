@@ -1,11 +1,11 @@
 """Structured Streaming tier (SURVEY.md §2.12 — beyond-reference
 extension; the reference has no streaming at all).
 
-Event-time windowed aggregation — tumbling, sliding, session — written
-once against the DataFrame API so the *same* transformation runs in
-batch (driver correctness checks, with SQL oracles) and as an
-incremental streaming query (``stream_events`` + watermark, exercised
-in tests with a file source and availableNow trigger).
+Event-time windowed aggregation — tumbling, sliding, session — in
+batch (driver correctness checks, with SQL oracles); the tumbling
+window also runs as an incremental streaming query (``stream_events``
++ watermark, exercised in tests with a file source and availableNow
+trigger).
 
 Scale notes: windowed aggs shuffle on (window, key); the watermark
 bounds state size — without it session/sliding state grows without
@@ -119,15 +119,10 @@ def session_agg(ev: DataFrame) -> DataFrame:
     )
 
 
-def stream_events(
-    spark: SparkSession,
-    source_dir: str,
-    slide: str | None = None,
-) -> DataFrame:
-    """Streaming flavor: parquet file source -> event-time windowed
-    aggregation with a watermark bounding late data and state. Pass
-    ``slide`` for the overlapping-window (sliding) face; default is
-    tumbling. Start with ``.writeStream.trigger(availableNow=True)``
+def stream_events(spark: SparkSession, source_dir: str) -> DataFrame:
+    """Streaming flavor of :func:`tumbling_agg`: parquet file source ->
+    1-hour event-time windows with a watermark bounding late data and
+    state. Start with ``.writeStream.trigger(availableNow=True)``
     for a catch-up run, or a processing-time trigger for continuous
     ingest.
     """
@@ -137,14 +132,14 @@ def stream_events(
     # timestamp_ntz, so cast for event-time tracking (UTC session makes
     # the cast deterministic) and cast the window bounds back so the
     # streaming schema equals the batch tumbling_agg schema.
-    reader = spark.readStream.schema(schemas.STAR["events"])
     stream = (
-        reader.parquet(source_dir)
+        spark.readStream.schema(schemas.STAR["events"])
+        .parquet(source_dir)
         .withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", "2 hours")
     )
     return (
-        stream.groupBy(F.window("ts", "1 hour", slide).alias("w"))
+        stream.groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),

@@ -124,7 +124,7 @@ def main(
 
     # 4. per-source quota: longest survivors first, deterministic tiebreak
     docs = quota_per_group(
-        docs, "source", [F.col("n_chars").desc(), F.col("doc_id")], n=quota
+        docs, [F.col("n_chars").desc(), F.col("doc_id")], n=quota
     ).drop("rk")
 
     # 5. + 6. split assignment, then token-budget packing WITHIN

@@ -166,11 +166,7 @@ def main(
     # exactly what the cdc_upsert compaction would keep
     from covid_engineering_spark.operators.pipeline import scd2_history
 
-    hist = scd2_history(
-        ev.select("user_id", "event_type", "ts", "event_id"),
-        keys=["user_id", "event_type"],
-        seq="event_id",
-    )
+    hist = scd2_history(ev.select("user_id", "event_type", "ts", "event_id"))
     scd = hist.agg(
         F.count("*").alias("n"),
         F.sum(F.col("is_current").cast("long")).alias("cur"),

@@ -13,8 +13,8 @@ Two layers of views:
    operators, or re-aggregate one, all in SQL. Views wrap unexecuted
    plans, so Catalyst still prunes columns and pushes filters THROUGH
    them — registering them costs only catalog metadata. The ingest
-   family (staging sinks) is skipped by default because constructing
-   those frames runs write jobs; opt in with ``include_staged=True``.
+   family (staging sinks) is skipped because constructing those frames
+   runs write jobs.
 
 The script demonstrates both layers plus the composition that makes
 the second one useful: joining one engine query's output
@@ -46,7 +46,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     # layer 2: every engine query as a view
     views = register_query_views(spark, sf_dir)
     print(f"query views: {len(views)} registered (all lazy; ingest-"
-          "family staging sinks skipped — include_staged=True to add)")
+          "family staging sinks skipped)")
 
     # a raw ANSI query over a base view
     top = spark.sql(

@@ -14,7 +14,7 @@ def spark():
     from covid_engineering_spark import get_spark
 
     spark = get_spark(app_name="covid-engineering-tests", master="local[8]",
-                      shuffle_partitions=8)
+                      extra_conf={"spark.sql.shuffle.partitions": "8"})
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()

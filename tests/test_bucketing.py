@@ -19,12 +19,10 @@ def bucketed(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("bucketed")
     orders = read_table(spark, SF_SMOKE, "orders")
     li = read_table(spark, SF_SMOKE, "lineitem")
-    write_bucketed(orders, "orders_b", "o_orderkey", 8, str(base / "orders_b"))
+    write_bucketed(orders, "orders_b", str(base / "orders_b"))
     write_bucketed(
         li.withColumnRenamed("l_orderkey", "o_orderkey"),
         "lineitem_b",
-        "o_orderkey",
-        8,
         str(base / "lineitem_b"),
     )
     yield "orders_b", "lineitem_b"

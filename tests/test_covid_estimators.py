@@ -172,7 +172,9 @@ def test_estimators_match_golden_on_real_netherlands(spark):
     complete = read_covid_csv(
         spark, f"{REF}/complete.csv", schemas.COMPLETE, schemas.COMPLETE_RENAMES
     )
-    cleaned = clean_complete(complete, "Netherlands")
+    cleaned = clean_complete(
+        complete.filter(F.col("country_region") == "Netherlands")
+    )
     pop = spark.createDataFrame(
         [("Netherlands", N_NL)], "country_region string, population double"
     )

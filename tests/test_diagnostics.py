@@ -1,33 +1,8 @@
-"""Skew diagnostics + schema-evolution reads: the operational checks
-a long-lived 100 TB dataset actually needs."""
+"""Schema-evolution reads: the operational checks a long-lived 100 TB
+dataset actually needs."""
 
-from pyspark.sql import functions as F
-
-from covid_engineering_spark.functions import key_skew_stats
 from covid_engineering_spark.sources import read_table
 from tests.conftest import SF_SMOKE
-
-
-def test_key_skew_stats_flags_a_planted_hot_key(spark):
-    uniform = spark.range(1000).select((F.col("id") % 100).alias("k"))
-    hot = spark.range(900).select(F.lit(7).alias("k"))
-    skewed = uniform.union(hot)
-
-    u = key_skew_stats(uniform, "k").collect()[0]
-    s = key_skew_stats(skewed, "k").collect()[0]
-    assert u["n_keys"] == 100 and u["skew_ratio"] == 1.0
-    assert s["max_per_key"] == 910
-    assert s["skew_ratio"] > 40  # 910 / 19 mean
-    assert s["p50_per_key"] == 10.0
-
-
-def test_key_skew_stats_on_star_data(spark):
-    li = read_table(spark, SF_SMOKE, "lineitem")
-    st = key_skew_stats(li, "l_orderkey").collect()[0]
-    assert st["n_rows"] == li.count()
-    assert st["n_keys"] == li.select("l_orderkey").distinct().count()
-    assert st["max_per_key"] >= st["p99_per_key"] >= st["p50_per_key"]
-    assert st["skew_ratio"] >= 1.0
 
 
 def test_merge_schema_reads_evolved_parquet(spark, tmp_path):

@@ -157,8 +157,8 @@ def test_sql_interface_runs(spark, capsys):
     mod["main"]("/root/testdata/sf0.001")
     out = capsys.readouterr().out
     assert "base views: 10 tables; lineitem rows: 6000" in out
-    # view count tracks the registry — derive, don't hard-code; the
-    # default registration excludes the ingest family's staging sinks
+    # view count tracks the registry — derive, don't hard-code;
+    # registration excludes the ingest family's staging sinks
     from covid_engineering_spark.queries import SIDE_EFFECTING, registry
 
     n_pure = len(registry()) - len(SIDE_EFFECTING)

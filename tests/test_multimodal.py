@@ -43,7 +43,7 @@ def test_feature_extract_matches_fake_decoder(spark, media):
 
 
 def test_resize_respects_target_budget(spark, media):
-    out = resize_images(media, width=32, height=32).collect()
+    out = resize_images(media).collect()
     assert out  # images exist in the modality mix
     for r in out:
         assert (r.width, r.height) == (32, 32)

@@ -66,7 +66,7 @@ def test_range_sorted_files_own_disjoint_key_intervals(spark, tmp_path):
 
     out = str(tmp_path / "orders_range")
     orders = read_table(spark, SF_SMOKE, "orders")
-    write_range_sorted(orders, out, "o_orderdate", n_files=8)
+    write_range_sorted(orders, out, "o_orderdate")
 
     spans = []
     for f in glob.glob(os.path.join(out, "*.parquet")):
@@ -122,9 +122,9 @@ def test_zorder_files_bound_both_dimensions(spark, tmp_path):
         "o_orderkey",
         x.alias("zx"),
         y.alias("zy"),
-        zorder_value(x, y, ZORDER_BITS).alias("zval"),
+        zorder_value(x, y).alias("zval"),
     )
-    write_range_sorted(staged, out, "zval", n_files=8)
+    write_range_sorted(staged, out, "zval")
 
     def spans(col_name):
         got = []

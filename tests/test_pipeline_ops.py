@@ -56,7 +56,7 @@ def test_split_is_total_and_roughly_proportioned(spark):
 def test_quota_caps_every_group_and_keeps_the_best(spark):
     docs = read_table(spark, SF_SMOKE, "documents")
     kept = quota_per_group(
-        docs, "source", [F.col("n_chars").desc(), F.col("doc_id")], n=2
+        docs, [F.col("n_chars").desc(), F.col("doc_id")], n=2
     )
     rows = kept.select("doc_id", "source", "n_chars").collect()
     by_src = {}
@@ -207,7 +207,7 @@ def test_compact_parquet_bounds_file_count(spark, tmp_path):
     part = read_table(spark, SF_SMOKE, "part")
     part.repartition(32).write.parquet(small)
     assert len(glob.glob(os.path.join(small, "*.parquet"))) == 32
-    compact_parquet(spark, small, out, schemas.STAR["part"], target_files=4)
+    compact_parquet(spark, small, out, schemas.STAR["part"])
     assert len(glob.glob(os.path.join(out, "*.parquet"))) <= 4
     back = spark.read.schema(schemas.STAR["part"]).parquet(out)
     assert back.count() == part.count()
@@ -218,7 +218,7 @@ def test_compact_parquet_bounds_file_count(spark, tmp_path):
 
 def test_quota_default_matches_constant(spark):
     docs = read_table(spark, SF_SMOKE, "documents")
-    kept = quota_per_group(docs, "source", [F.col("doc_id")])
+    kept = quota_per_group(docs, [F.col("doc_id")])
     mx = kept.groupBy("source").agg(F.count("*").alias("n")).agg(
         F.max("n").alias("m")
     ).collect()[0]["m"]
@@ -310,17 +310,17 @@ def test_cdc_upsert_latest_wins_and_partition_invariant(spark):
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     got = {
         (r["user_id"], r["event_type"]): r["value"]
-        for r in cdc_upsert(log, ["user_id", "event_type"]).collect()
+        for r in cdc_upsert(log).collect()
     }
     assert got == {(1, "a"): 30.0, (2, "a"): 5.0}
     reshuffled = {
         (r["user_id"], r["event_type"]): r["value"]
-        for r in cdc_upsert(log.repartition(7), ["user_id", "event_type"]).collect()
+        for r in cdc_upsert(log.repartition(7)).collect()
     }
     assert reshuffled == got
 
 
-def test_pii_scrub_counts_and_redacts_multiple_patterns(spark):
+def test_pii_scrub_counts_and_redacts_every_match(spark):
     from covid_engineering_spark.operators.pipeline import pii_scrub
 
     df = spark.createDataFrame(
@@ -331,10 +331,9 @@ def test_pii_scrub_counts_and_redacts_multiple_patterns(spark):
         ],
         "id long, s string",
     )
-    pats = [("[0-9]+", "<NUM>"), ("[a-z]+@[a-z]+\\.[a-z]+", "<EMAIL>")]
-    rows = {r["id"]: r for r in pii_scrub(df, "s", pats).collect()}
-    assert rows[1]["s_scrubbed"] == "call <NUM> <NUM> or mail <EMAIL>"
-    assert rows[1]["n_redactions"] == 3
+    rows = {r["id"]: r for r in pii_scrub(df, "s").collect()}
+    assert rows[1]["s_scrubbed"] == "call <NUM> <NUM> or mail a@b.com"
+    assert rows[1]["n_redactions"] == 2
     assert rows[2]["s_scrubbed"] == "no secrets here"
     assert rows[2]["n_redactions"] == 0
     assert rows[3]["s_scrubbed"] is None

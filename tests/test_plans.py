@@ -153,10 +153,9 @@ def test_salted_agg_two_stages(spark):
     assert shuffle_count(q(spark, "a13_salted_agg")) == 2
 
 
-def test_country_fractions_generalized_path_is_partition_parallel(spark):
-    # The generalized entry points must not funnel a multi-series
-    # frame through one task: with series_cols set, the cumsum window
-    # plans hashpartitioning, never an Exchange SinglePartition.
+def test_country_fractions_global_series_is_one_window(spark):
+    # The reference's global day_wise IS one series: the cumsum keeps
+    # the (semantically forced) single-partition window.
     from covid_engineering_spark.operators.covid import (
         country_fractions,
         synthetic_population,
@@ -166,14 +165,6 @@ def test_country_fractions_generalized_path_is_partition_parallel(spark):
 
     df = _synthetic_complete(spark, SF_SMOKE)
     pop = synthetic_population(spark)
-    plan = simple_plan(
-        country_fractions(
-            df, pop, "2024-01-01", "2024-12-31", series_cols=("country_region",)
-        )
-    )
-    assert "SinglePartition" not in plan, plan
-    # The reference's global day_wise IS one series — the default path
-    # keeps the (semantically forced) single-partition window.
     global_plan = simple_plan(
         country_fractions(df.drop("country_region"), pop, "2024-01-01", "2024-12-31")
     )
@@ -399,10 +390,7 @@ def test_gopher_metric_projection_boundary_survives(spark):
     re-derives its own copy of the split() arrays — codegen
     subexpression elimination cannot share across conditional
     branches; measured 2.1x at sf0.1 when this boundary was folded."""
-    from covid_engineering_spark.operators.text import (
-        GOPHER_REQUIRED_FIXTURE,
-        _gopher_metric_cols,
-    )
+    from covid_engineering_spark.operators.text import _gopher_metric_cols
     from covid_engineering_spark.sources import read_table
 
     def plan_nodes(node, out):
@@ -452,7 +440,7 @@ def test_gopher_metric_projection_boundary_survives(spark):
                 total += count_expr_class(exprs.apply(i), "StringSplit")
         return total
 
-    metrics = _gopher_metric_cols(GOPHER_REQUIRED_FIXTURE)
+    metrics = _gopher_metric_cols()
     staged = read_table(spark, SF_SMOKE, "documents").select(
         "doc_id",
         *[expr.alias(f"_m_{n}") for n, expr in metrics.items()],

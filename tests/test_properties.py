@@ -166,7 +166,7 @@ def test_asof_join_matches_bruteforce(spark, case):
 
     got = {
         r.lid: r.asof_value
-        for r in asof_join(left, right, key="k", ts="ts", value_col="v").collect()
+        for r in asof_join(left, right, key="k", value_col="v").collect()
     }
     assert set(got) == set(range(len(ls)))
     # brute force: the right row with max ts <= left ts for the key
@@ -580,7 +580,7 @@ def test_quantile_sketch_rank_error_on_random_streams(spark, vals):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     )
-    out = quantile_sketch(ev, "event_type", b=4).collect()
+    out = quantile_sketch(ev, b=4).collect()
     cents = sorted(int(math.floor(v * 100 + 0.5)) for v in vals)
     n = len(cents)
     # max stride over the 4 shards cannot exceed ceil(n/4) at B=4

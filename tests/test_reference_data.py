@@ -93,7 +93,9 @@ def test_clean_complete_netherlands_matches_golden(complete):
             float(r.deaths),
             float(r.recovered),
         )
-        for r in clean_complete(complete, "Netherlands").collect()
+        for r in clean_complete(
+            complete.filter(F.col("country_region") == "Netherlands")
+        ).collect()
     }
     raw = (
         complete.filter(F.col("country_region") == "Netherlands")

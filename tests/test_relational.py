@@ -28,7 +28,7 @@ def _window_ntile(df, sort_exprs, k, out_col):
 
 def test_global_ntile_matches_window_ntile(spark):
     # Ties in the metric, a NULL metric, n % k != 0, and more rows
-    # than one range partition will hold at shuffle_partitions=8 —
+    # than one range partition will hold at 8 shuffle partitions —
     # every branch of the NTILE arithmetic (including the uneven
     # first-rem-buckets split) is exercised.
     rows = [(i, (i * 7) % 13, float((i * 3) % 5)) for i in range(97)]

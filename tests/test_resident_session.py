@@ -150,8 +150,9 @@ from covid_engineering_spark.functions import caching
 from covid_engineering_spark.queries import registry
 
 def start():
-    s = get_spark(master="local[2]", shuffle_partitions=2,
-                  extra_conf={{"spark.driver.memory": "1g", "spark.ui.enabled": "false"}})
+    s = get_spark(master="local[2]",
+                  extra_conf={{"spark.sql.shuffle.partitions": "2",
+                               "spark.driver.memory": "1g", "spark.ui.enabled": "false"}})
     s.sparkContext.setLogLevel("ERROR")
     return s
 

@@ -264,7 +264,7 @@ def test_near_dup_lsh_prebuilt_index_is_identical(spark, tmp_path):
     assert rows(near_dup_incremental_lsh(None, batch, index=built)) == derived
 
     path = str(tmp_path / "nd_index")
-    write_near_dup_index(corpus, path, n_files=4)
+    write_near_dup_index(corpus, path)
     loaded = read_near_dup_index(spark, path)
     assert rows(near_dup_incremental_lsh(None, batch, index=loaded)) == derived
     assert len(derived) > 0
@@ -1283,9 +1283,7 @@ def test_kcore_hand_graph(spark):
     edges = spark.createDataFrame(
         k5 + tail + star, "src_id long, n_id long"
     )
-    got = {
-        r["vec_id"]: r for r in kcore(edges, k=3).collect()
-    }
+    got = {r["vec_id"]: r for r in kcore(edges).collect()}
     for v in (1, 2, 3, 4):
         assert got[v]["in_core"] and got[v]["peel_round"] is None
         assert got[v]["core_degree"] == 4

@@ -401,7 +401,7 @@ def test_quantile_sketch_exact_when_budget_covers_the_shard(spark):
         " value double, props string",
     )
     # b large enough that every shard keeps every element (stride 1)
-    out = quantile_sketch(ev, "event_type", b=1000).collect()
+    out = quantile_sketch(ev, b=1000).collect()
     got = {r.pct: r.est_cents for r in out}
     for pct in (25, 50, 75, 90):
         want = int(sorted(vals)[math.ceil(pct * 100 / 100) - 1] * 100)
@@ -458,11 +458,11 @@ def test_quantile_hist_agrees_with_sketch_when_bound_is_zero(spark):
     )
     sk = {
         (r.event_type, r.pct): r.est_cents
-        for r in quantile_sketch(ev, "event_type", b=1000).collect()
+        for r in quantile_sketch(ev, b=1000).collect()
     }
     hs = {
         (r.event_type, r.pct): r.est_cents
-        for r in quantile_histogram(ev, "event_type").collect()
+        for r in quantile_histogram(ev).collect()
     }
     assert sk == hs
 

@@ -116,7 +116,7 @@ def test_weighted_sample_exact_past_int64_product(spark):
     docs = spark.createDataFrame(
         rows, "doc_id BIGINT, source STRING, n_chars BIGINT"
     )
-    out = weighted_sample(docs, k=100).collect()
+    out = weighted_sample(docs).collect()
     assert len(out) == 20
     total = sum(w for _, _, w in rows)
     assert max(r["w_cum"] for r in out) == total
@@ -248,7 +248,7 @@ def test_k_anonymity_counts_null_quasi_identifiers(spark):
     docs = spark.createDataFrame(
         rows, "doc_id BIGINT, lang STRING, source STRING"
     )
-    out = {r["doc_id"]: r for r in k_anonymize(docs, k=5).collect()}
+    out = {r["doc_id"]: r for r in k_anonymize(docs).collect()}
     assert len(out) == len(rows)  # every document emitted, none vanish
     assert out[0]["released"] and out[0]["qi_group_n"] == 5
     assert out[0]["release_lang"] is None  # released keeps real (NULL) QI

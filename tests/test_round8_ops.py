@@ -79,7 +79,7 @@ def test_mg_heavy_guaranteed_coverage_on_skew(spark):
     total = len([r for r in raw if r[0] == "hot"])
     ev = spark.createDataFrame(raw, "event_type STRING, user_id BIGINT")
 
-    summary, _ = mg_summary(ev, "event_type", "user_id")
+    summary, _ = mg_summary(ev)
     got = {r["user_id"]: r for r in summary.collect()}
     exact = _exact_counts(raw)
     # guarantee 1: the three heads all clear cnt*(k+1) > N -> present
@@ -99,7 +99,10 @@ def test_dsir_separates_target_like_from_alien_vocabulary(spark):
     vocabulary must carry higher importance weights than raw docs
     from a disjoint vocabulary, and the deterministic top-k must pick
     exactly the target-like ones."""
-    from covid_engineering_spark.operators.pipeline import dsir_select
+    from covid_engineering_spark.operators.pipeline import (
+        DSIR_K,
+        dsir_select,
+    )
 
     tgt_vocab = ["alpha", "beta", "gamma", "delta"]
     alien_vocab = ["omega", "sigma", "kappa", "lambda"]
@@ -107,22 +110,21 @@ def test_dsir_separates_target_like_from_alien_vocabulary(spark):
     # 10 target docs (lang=en) over tgt_vocab
     for i in range(10):
         rows.append((i, " ".join(tgt_vocab * 5), "en", "s"))
-    # 5 raw docs in the target vocabulary, 5 in the alien one
-    for i in range(5):
+    # DSIR_K raw docs in the target vocabulary, 5 in the alien one
+    for i in range(DSIR_K):
         rows.append((100 + i, " ".join(tgt_vocab * 5), "de", "s"))
-        rows.append((200 + i, " ".join(alien_vocab * 5), "de", "s"))
+    for i in range(5):
+        rows.append((1000 + i, " ".join(alien_vocab * 5), "de", "s"))
     docs = spark.createDataFrame(
         rows, "doc_id BIGINT, text STRING, lang STRING, source STRING"
     )
     out = {
         r["doc_id"]: r
-        for r in dsir_select(
-            docs, F.col("lang") == "en", k=5
-        ).collect()
+        for r in dsir_select(docs, F.col("lang") == "en").collect()
     }
-    assert len(out) == 10  # only raw docs are scored
-    like = [out[100 + i] for i in range(5)]
-    alien = [out[200 + i] for i in range(5)]
+    assert len(out) == DSIR_K + 5  # only raw docs are scored
+    like = [out[100 + i] for i in range(DSIR_K)]
+    alien = [out[1000 + i] for i in range(5)]
     assert min(r["dsir_micros"] for r in like) > max(
         r["dsir_micros"] for r in alien
     )
@@ -216,7 +218,7 @@ def test_mg_summary_guarantees_on_random_streams(spark, raw):
     )
 
     ev = spark.createDataFrame(raw, "event_type STRING, user_id BIGINT")
-    summary, _ = mg_summary(ev, "event_type", "user_id")
+    summary, _ = mg_summary(ev)
     got = [tuple(r) for r in summary.collect()]
     exact = _exact_counts(raw)
     totals: dict = {}
@@ -251,7 +253,7 @@ def test_dsir_gumbel_topk_exact_is_seeded_and_weight_biased(spark):
     def draw(**kw):
         return {
             r["doc_id"]: r
-            for r in dsir_gumbel_topk_exact(docs, tgt, k=20, **kw).collect()
+            for r in dsir_gumbel_topk_exact(docs, tgt, **kw).collect()
         }
 
     g1 = draw()
@@ -259,7 +261,7 @@ def test_dsir_gumbel_topk_exact_is_seeded_and_weight_biased(spark):
     g3 = draw(seed=99)
     assert {d for d, r in g3.items() if r["selected"]} != {
         d for d, r in g1.items() if r["selected"]
-    }  # different seed -> different sample (20 of ~280: collision ~0)
+    }  # different seed -> different sample (50 of ~280: collision ~0)
 
     # (b) biased toward heavy weights
     sel = [r["dsir_micros"] for r in g1.values() if r["selected"]]
@@ -296,23 +298,33 @@ def test_dsir_counts_null_lang_docs_as_raw(spark):
     vanish: a NULL-lang doc is scored, and its tokens count into the
     raw model the same way in both engines (the nullable-predicate
     divergence the registered query's <=> closes)."""
-    from covid_engineering_spark.operators.pipeline import dsir_select
+    from covid_engineering_spark.operators.pipeline import (
+        DSIR_K,
+        dsir_select,
+    )
 
     rows = [
         (1, "alpha beta alpha beta", "en", "s"),  # target
         (2, "alpha beta gamma delta", "de", "s"),  # raw
         (3, "omega sigma kappa tau", None, "s"),  # NULL lang -> raw
     ]
+    # DSIR_K - 1 one-token raw fillers fill the top-k beside doc 2: a
+    # raw-only token weighs log((nr + B) / (2 (nt + B))) in any doc,
+    # negative while the raw side holds fewer than B = DSIR_BUCKETS
+    # tokens, so a filler's one token outweighs doc 3's four
+    fillers = {100 + i for i in range(DSIR_K - 1)}
+    rows += [(d, f"filler{d}", "de", "s") for d in fillers]
     docs = spark.createDataFrame(
         rows, "doc_id BIGINT, text STRING, lang STRING, source STRING"
     )
     out = {
         r["doc_id"]: r
         for r in dsir_select(
-            docs, F.col("lang").eqNullSafe(F.lit("en")), k=1
+            docs, F.col("lang").eqNullSafe(F.lit("en"))
         ).collect()
     }
-    assert set(out) == {2, 3}  # the NULL-lang doc is scored, not lost
+    # the NULL-lang doc is scored, not lost
+    assert set(out) == {2, 3} | fillers
     assert out[3]["n_feat_tokens"] == 4
     # and raw doc 2 (target-vocabulary) outranks the alien doc 3
     assert out[2]["dsir_micros"] > out[3]["dsir_micros"]

@@ -236,14 +236,11 @@ def test_duckdb_only_pins_are_really_dialect_bound(spark, name):
 def test_every_registered_query_is_reachable_as_sql_view(spark):
     from covid_engineering_spark.queries import SIDE_EFFECTING
 
-    # Default registration must NOT run the ingest family's staging
-    # writes: it registers every pure query only...
+    # Registration must NOT run the ingest family's staging writes: it
+    # registers every pure query only.
     views = register_query_views(spark, SF_SMOKE)
     assert len(views) == len(registry()) - len(SIDE_EFFECTING)
     assert not {f"q_{n}" for n in SIDE_EFFECTING} & set(views)
-    # ...while the opt-in covers the full registry.
-    staged = register_query_views(spark, SF_SMOKE, include_staged=True)
-    assert len(staged) == len(registry())
     # analysis (schema resolution) through every view must succeed —
     # independent driver-side analyses, overlapped per §2.6
     from tests.conftest import parallel_sweep

@@ -49,35 +49,6 @@ def test_streaming_equals_batch(spark, source_dir):
     assert len(got) > 0
 
 
-def test_sliding_streaming_equals_batch(spark, source_dir):
-    """The overlapping-window face must also hold under incremental
-    execution: every event lands in TWO windows, and the availableNow
-    run over chunked arrivals must equal the batch sliding aggregate
-    exactly (the last window face that only had batch verification)."""
-    from covid_engineering_spark.streaming.windows import sliding_agg
-
-    q = (
-        stream_events(spark, source_dir, slide="30 minutes")
-        .writeStream.format("memory")
-        .queryName("slide_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (str(r.window_start), str(r.window_end)): (r.n_events, r.sum_value)
-        for r in spark.sql("SELECT * FROM slide_stream").collect()
-    }
-    want = {
-        (str(r.window_start), str(r.window_end)): (r.n_events, r.sum_value)
-        for r in sliding_agg(spark.read.parquet(source_dir)).collect()
-    }
-    assert got == want
-    # genuinely sliding: half-hour-offset windows must exist
-    assert any(ws.endswith("30:00") for ws, _ in got)
-
-
 def test_watermark_drops_late_data_across_restart(spark, tmp_path):
     """Concrete late-data semantics, production-shaped: run 1 advances
     the watermark to 11:00 (max 13:00 − 2h) and checkpoints it; run 2
@@ -146,8 +117,9 @@ def test_streaming_plan_is_stateful(spark, source_dir):
 def test_stream_dedup_drops_redelivered_rows(spark, tmp_path):
     """dropDuplicatesWithinWatermark: the same file landed twice (an
     at-least-once redelivery) must come out once per event_id, and the
-    second micro-batch's duplicates must be dropped against the FIRST
-    batch's state — cross-batch dedup, not per-batch distinct."""
+    redelivery — read by a second availableNow run on the same
+    checkpoint, so in its own micro-batch — must be dropped against
+    the FIRST run's state: cross-batch dedup, not per-batch distinct."""
     import pyspark.sql.functions as F
 
     from covid_engineering_spark.sources import read_table
@@ -155,22 +127,30 @@ def test_stream_dedup_drops_redelivered_rows(spark, tmp_path):
     from tests.conftest import SF_SMOKE
 
     src = str(tmp_path / "dup_events")
+    cp = str(tmp_path / "cp")
+    out = str(tmp_path / "out")
     ev = read_table(spark, SF_SMOKE, "events").filter(F.col("event_id") < 500)
+
+    def run():
+        q = (
+            stream_dedup(spark, src)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", cp)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        return q
+
     ev.coalesce(1).write.mode("append").parquet(src)
+    run()
     ev.coalesce(1).write.mode("append").parquet(src)  # redelivery
+    second = run()
+    assert sum(p["numInputRows"] for p in second.recentProgress) > 0
 
-    q = (
-        stream_dedup(spark, src, reader_options={"maxFilesPerTrigger": "1"})
-        .writeStream.format("memory")
-        .queryName("deduped_events")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) >= 2
-
-    got = spark.sql("SELECT event_id FROM deduped_events").collect()
+    got = spark.read.parquet(out).select("event_id").collect()
     want = ev.select("event_id").distinct().count()
     assert len(got) == want
     assert len({r.event_id for r in got}) == want

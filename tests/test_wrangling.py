@@ -10,6 +10,7 @@ import math
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from covid_engineering_spark.operators.wrangling import (
     clean_complete,
@@ -182,6 +183,12 @@ def test_clean_complete_single_country_filter(spark):
         "country_region string, date date, confirmed long, active long, "
         "deaths long, recovered long",
     )
-    only_y = clean_complete(df, country="Y").collect()
+    is_y = F.col("country_region") == "Y"
+    only_y = clean_complete(df.filter(is_y)).collect()
     assert {r["country_region"] for r in only_y} == {"Y"}
     assert len(only_y) == 2
+    # cleaning is per-country: filtering the input equals filtering
+    # the output
+    assert sorted(map(tuple, only_y)) == sorted(
+        map(tuple, clean_complete(df).filter(is_y).collect())
+    )
