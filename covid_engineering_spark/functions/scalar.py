@@ -42,6 +42,26 @@ def dsum(c: Column | str) -> Column:
     return F.round(F.sum(c.cast("decimal(18,6)")).cast("double"), 2)
 
 
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two numeric arrays: elementwise double products,
+    then a sequential left-fold sum from 0.0 — the order the oracles'
+    ``list_dot_product`` over double-cast lists adds in, so both
+    engines produce the same double. Unrounded; see
+    :func:`cosine_expr` for the rounded score.
+    """
+    prods = F.zip_with(
+        a, b, lambda x, y: x.cast("double") * y.cast("double")
+    )
+    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+
+
+def cosine_expr(a: Column, b: Column) -> Column:
+    """Cosine of two unit-norm vectors: :func:`dot` rounded to 6dp,
+    the grid every similarity oracle ranks and hashes on.
+    """
+    return F.round(dot(a, b), 6)
+
+
 def missing_count(*cols: str) -> Column:
     """Row-wise count of nulls across columns — the reference's
     ``row[cols].isna().sum()`` (main.py:424, F6) as a codegen expression.

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from covid_engineering_spark.functions.scalar import cosine_expr
 from covid_engineering_spark.functions.skew import (
     BLOCK_CAP,
     SALTED_JOIN_KEYS,
@@ -566,19 +567,6 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(read_table(spark, sf_dir, "documents"))
-
-
-def cosine_expr(a, b):
-    """Deterministic cosine for unit-norm float vectors: elementwise
-    double products, sequential left-fold sum (mirrors the oracle's
-    list_dot_product over double-cast lists), rounded to 6dp.
-    """
-    prods = F.zip_with(
-        a, b, lambda x, y: x.cast("double") * y.cast("double")
-    )
-    return F.round(
-        F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x), 6
-    )
 
 
 def embedding_pairs(

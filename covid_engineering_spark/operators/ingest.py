@@ -212,7 +212,7 @@ def q_s8_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_table(spark, sf_dir, "part").repartition(32).write.mode(
         "overwrite"
     ).parquet(small)
-    compact_parquet(spark, small, compacted, schemas.STAR["part"])
+    compact_parquet(spark, small, compacted)
     return spark.read.schema(schemas.STAR["part"]).parquet(compacted)
 
 

@@ -1940,6 +1940,33 @@ def q_pipe_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_incremental(corpus, batch)
 
 
+def _jaccard_verified(
+    common: DataFrame, nb: DataFrame, nc: DataFrame
+) -> DataFrame:
+    """The verification tail of incremental near-dup detection: the
+    ``(d_batch, d_corpus, c)`` shared-shingle counts joined to each
+    side's ``(doc_id, n)`` shingle-set size, kept where the 6dp
+    Jaccard ``c / (n_batch + n_corpus − c)`` reaches
+    ``JACCARD_THRESHOLD`` — the rounding and threshold the oracles
+    apply.
+    """
+    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
+    return (
+        common.join(
+            nb.select(F.col("doc_id").alias("d_batch"), F.col("n").alias("na")),
+            "d_batch",
+        )
+        .join(
+            nc.select(
+                F.col("doc_id").alias("d_corpus"), F.col("n").alias("nb")
+            ),
+            "d_corpus",
+        )
+        .select("d_batch", "d_corpus", F.round(jac, 6).alias("jaccard"))
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
+
+
 def near_dup_incremental(corpus: DataFrame, batch: DataFrame) -> DataFrame:
     """Incremental NEAR-dup detection: exact word-3-gram Jaccard of
     each arriving-batch document against the standing corpus — the
@@ -1984,21 +2011,7 @@ def near_dup_incremental(corpus: DataFrame, batch: DataFrame) -> DataFrame:
         )
         .agg(F.count("*").alias("c"))
     )
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        common.join(
-            nb.select(F.col("doc_id").alias("d_batch"), F.col("n").alias("na")),
-            "d_batch",
-        )
-        .join(
-            nc.select(
-                F.col("doc_id").alias("d_corpus"), F.col("n").alias("nb")
-            ),
-            "d_corpus",
-        )
-        .select("d_batch", "d_corpus", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _jaccard_verified(common, nb, nc)
 
 
 def q_pipe_near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2196,21 +2209,7 @@ def near_dup_incremental_lsh(
         .groupBy("d_batch", "d_corpus")
         .agg(F.count("*").alias("c"))
     )
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        common.join(
-            nb.select(F.col("doc_id").alias("d_batch"), F.col("n").alias("na")),
-            "d_batch",
-        )
-        .join(
-            nc.select(
-                F.col("doc_id").alias("d_corpus"), F.col("n").alias("nb")
-            ),
-            "d_corpus",
-        )
-        .select("d_batch", "d_corpus", F.round(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return _jaccard_verified(common, nb, nc)
 
 
 def q_pipe_near_dup_incremental_lsh(

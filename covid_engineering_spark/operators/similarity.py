@@ -27,12 +27,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from covid_engineering_spark.functions.scalar import cosine_expr, dot
 from covid_engineering_spark.functions.skew import (
     BLOCK_CAP,
     SALTED_JOIN_KEYS,
     salted_block_sides,
 )
-from covid_engineering_spark.operators.dedup import cosine_expr
 from covid_engineering_spark.sources import read_table
 
 TOP_K = 5
@@ -52,6 +52,15 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     window per query partition with deterministic tie-breaks.
     """
     return q_cosine_frame(read_table(spark, sf_dir, "embeddings"))
+
+
+def _queries(emb: DataFrame) -> DataFrame:
+    """The query side of every ANN search: the first ``N_QUERIES``
+    vector ids as ``(q_id, q_emb)`` — the oracles' ``vec_id <
+    N_QUERIES`` query set."""
+    return emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
 
 
 def centroids_by_label(emb: DataFrame) -> DataFrame:
@@ -106,13 +115,21 @@ def bucket_expr(emb_col, table: int):
     bucket = F.lit(table << N_PLANES_PER_TABLE)
     for i, plane in enumerate(_hyperplanes(table)):
         arr = F.array(*[F.lit(x) for x in plane])
-        dot = F.aggregate(
-            F.zip_with(emb_col, arr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        side = dot(emb_col, arr) > 0
+        bucket = bucket + F.when(side, F.lit(1 << i)).otherwise(F.lit(0))
     return bucket
+
+
+def _cosine_topk(scored: DataFrame) -> DataFrame:
+    """Each query's TOP_K best ``(q_id, n_id, cosine)`` rows, ranked
+    ``cosine DESC, n_id`` — the tie-break every cosine top-k oracle
+    spells — with the 1-based ``rank`` kept as a column.
+    """
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "n_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+    )
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -150,11 +167,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "n_id", cos.alias("cosine"))
         .distinct()  # the same pair can share buckets in several tables
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _cosine_topk(scored)
 
 
 N_CENTROIDS = 16
@@ -185,17 +198,9 @@ def _assign(vectors: DataFrame, cent: DataFrame, id_col: str, emb_col: str, n: i
     )
 
     def _scored(s):
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(emb_col),
-                s["c_emb"],
-                lambda x, y: x.cast("double") * y.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
         return F.struct(
-            F.round(dot, 6).alias("cs"), (-s["c_id"]).alias("ns")
+            cosine_expr(F.col(emb_col), s["c_emb"]).alias("cs"),
+            (-s["c_id"]).alias("ns"),
         )
 
     top = F.slice(
@@ -212,10 +217,32 @@ def _assign(vectors: DataFrame, cent: DataFrame, id_col: str, emb_col: str, n: i
     )
 
 
+def _md5_seeds(emb: DataFrame) -> DataFrame:
+    """The ``N_CENTROIDS`` md5-ranked seed vectors as ``(s_id,
+    s_emb)``: rows ordered by ``md5(cast(vec_id as string))`` then
+    ``vec_id``, ``s_id`` their 0-based rank — a deterministic uniform
+    sample (the standard random init of k-means) every oracle replays
+    as ``ORDER BY md5(...), vec_id LIMIT k``. The one draw every ANN
+    codebook here starts from. Catalyst plans TakeOrderedAndProject
+    (per-partition top-k then a k-row merge), never a global sort.
+    """
+    key = F.md5(F.col("vec_id").cast("string"))
+    seeds0 = (
+        emb.select("vec_id", "embedding")
+        .orderBy(key, "vec_id")
+        .limit(N_CENTROIDS)
+    )
+    # rank → seed id over the k-row result (window over ≤k rows)
+    w = Window.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+    return seeds0.select(
+        (F.row_number().over(w) - 1).alias("s_id"),
+        F.col("embedding").alias("s_emb"),
+    )
+
+
 def deterministic_codebook(emb: DataFrame) -> DataFrame:
-    """Engine-independent IVF codebook: K seed vectors drawn by
-    md5-rank (a deterministic uniform sample — the standard random
-    init of k-means) refined by ONE Lloyd step whose cell means
+    """Engine-independent IVF codebook: the K :func:`_md5_seeds`
+    refined by ONE Lloyd step whose cell means
     accumulate in DECIMAL(18,9) (order-independent, so identical under
     any partitioning). Every arithmetic step — the md5 sample, the
     6dp-rounded seed cosines, the decimal means — is replayable in
@@ -225,24 +252,13 @@ def deterministic_codebook(emb: DataFrame) -> DataFrame:
     is the full fit. This codebook is a LAZY plan (the registered
     query runs no job until the driver acts on it).
 
-    Scale shape: the seed draw is ``orderBy(md5).limit(K)`` — Catalyst
-    plans TakeOrderedAndProject (per-partition top-K then a K-row
-    merge), never a global sort; the Lloyd step routes through the
+    Scale shape: the Lloyd step routes through the
     map-side ``_assign`` (the K-row seed table collapses to one
     broadcast array row, each vector picks its cell inside a single
     projection — no shuffle touches the corpus); the mean shuffle
     carries cells × DIM rows regardless of corpus size.
     """
-    key = F.md5(F.col("vec_id").cast("string"))
-    seeds0 = (
-        emb.select("vec_id", "embedding").orderBy(key, "vec_id").limit(N_CENTROIDS)
-    )
-    # rank → seed id over the K-row result (window over ≤K rows)
-    w = Window.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-    seeds = seeds0.select(
-        (F.row_number().over(w) - 1).alias("s_id"),
-        F.col("embedding").alias("s_emb"),
-    )
+    seeds = _md5_seeds(emb)
     # one Lloyd E-step through the same map-side argmax the probe path
     # uses (best cosine, smallest seed id on ties — the oracle's
     # ORDER BY cs DESC, s_id): no shuffle touches the corpus here
@@ -283,15 +299,8 @@ def kmeans_centroids(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     :func:`kmeans_lloyd` for semantics and the per-round scale
     shape)."""
     e = _kmeans_vectors(emb)
-    key = F.md5(F.col("vec_id").cast("string"))
-    w = Window.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-    cent = (
-        e.orderBy(key, "vec_id")
-        .limit(N_CENTROIDS)
-        .select(
-            (F.row_number().over(w) - 1).alias("c_id"),
-            F.col("embedding").alias("c_emb"),
-        )
+    cent = _md5_seeds(e).select(
+        F.col("s_id").alias("c_id"), F.col("s_emb").alias("c_emb")
     )
     for _ in range(iters):
         assigned = _assign(e, cent, "vec_id", "embedding", 1)
@@ -373,21 +382,12 @@ def kmeans_lloyd(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     e = _kmeans_vectors(emb)
     cent = kmeans_centroids(emb, iters)
     final = _assign(e, cent, "vec_id", "embedding", 1)
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.col("c_emb"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         final.join(F.broadcast(cent), "c_id")
         .select(
             "vec_id",
             F.col("c_id").cast("int").alias("cluster"),
-            F.round(dot, 6).alias("cs"),
+            cosine_expr(F.col("embedding"), F.col("c_emb")).alias("cs"),
         )
     )
 
@@ -496,22 +496,15 @@ def pca_power(emb: DataFrame) -> DataFrame:
         "pca_centered",
     )
 
-    def _dot(v_col):
-        return F.aggregate(
-            F.zip_with(F.col("cx"), v_col, lambda x, vv: x * vv),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     varr = F.array(*([F.lit(0.125)] * DIM))  # 1/sqrt(DIM), exact
     va_frame = None  # after round 1, v rides a broadcast 1-row frame
     zero = F.lit(0).cast("long")
     for _ in range(PCA_ITERS):
         if va_frame is None:
-            d = centered.select("cx", _dot(varr).alias("dot"))
+            d = centered.select("cx", dot(F.col("cx"), varr).alias("dot"))
         else:
             d = centered.join(F.broadcast(va_frame)).select(
-                "cx", _dot(F.col("v")).alias("dot")
+                "cx", dot(F.col("cx"), F.col("v")).alias("dot")
             )
         # Σ_rows micro(dot·x'_j) per dim — the _nat_micro expression
         # spelled in SQL (round → ×1e6 → +0.5 → floor → bigint, same
@@ -550,7 +543,7 @@ def pca_power(emb: DataFrame) -> DataFrame:
     ) + ")"
     fin = (
         centered.join(F.broadcast(va_frame))
-        .select("cx", _nat_micro(_dot(F.col("v"))).alias("dm"))
+        .select("cx", _nat_micro(dot(F.col("cx"), F.col("v"))).alias("dm"))
         .agg(
             F.expr(var_sql).alias("vs"),
             F.sum(
@@ -648,9 +641,7 @@ def ivf_topk(emb: DataFrame, cent: DataFrame) -> DataFrame:
         1,
     )
     queries = _assign(
-        emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-        ),
+        _queries(emb),
         cent,
         "q_id",
         "q_emb",
@@ -663,11 +654,7 @@ def ivf_topk(emb: DataFrame, cent: DataFrame) -> DataFrame:
         .select("q_id", "n_id", cos.alias("cosine"))
         .distinct()  # a pair may meet in several probed lists
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _cosine_topk(scored)
 
 
 KNN_K = 5
@@ -1309,13 +1296,7 @@ def graph_greedy_search(emb: DataFrame, beam: int = GREEDY_BEAM) -> DataFrame:
 
     e = _kmeans_vectors(emb)
     edges, entry = _navigable_graph(emb)
-    q = evicting_cache(
-        e.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-        ),
-        "greedy_queries",
-    )
+    q = evicting_cache(_queries(e), "greedy_queries")
 
     def _score(ids):
         """Attach embeddings and the 6dp query cosine to a tiny
@@ -1453,23 +1434,9 @@ def q_ann_graph_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: makes billion-vector ANN indexes fit in RAM.
 PQ_M = 8
 PQ_SUB_DIM = DIM // PQ_M
-PQ_K = 16
-
-
-def _pq_seeds(emb: DataFrame) -> DataFrame:
-    """The PQ_K md5-ranked seed vectors as ``(s_id, s_emb)`` — the
-    engine-independent sub-codebook draw shared by the encode path
-    (:func:`pq_codes`) and the ADC lookup table (:func:`pq_adc_topk`).
-    ``emb`` must already exclude NULL embeddings."""
-    key = F.md5(F.col("vec_id").cast("string"))
-    seeds0 = (
-        emb.select("vec_id", "embedding").orderBy(key, "vec_id").limit(PQ_K)
-    )
-    w = Window.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-    return seeds0.select(
-        (F.row_number().over(w) - 1).alias("s_id"),
-        F.col("embedding").alias("s_emb"),
-    )
+#: The sub-codebooks slice the one :func:`_md5_seeds` draw, so they
+#: hold as many entries as it draws.
+PQ_K = N_CENTROIDS
 
 
 def pq_codes(emb: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
@@ -1478,10 +1445,9 @@ def pq_codes(emb: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
     compressed representation behind large-scale ANN (IVF-PQ): search
     scans codes + a lookup table instead of raw floats.
 
-    Codebook: the PQ_K md5-ranked seed vectors (the same
-    engine-independent draw ``deterministic_codebook`` uses), sliced
-    per subspace — replayable in ANSI SQL, so the whole encode path
-    is driver hash-checked. A production build refines each
+    Codebook: the PQ_K :func:`_md5_seeds`, sliced per subspace —
+    replayable in ANSI SQL, so the whole encode path is driver
+    hash-checked. A production build refines each
     sub-codebook with per-subspace Lloyd iterations (same mergeable
     decimal-mean machinery as the IVF codebook); the assignment plan
     below is identical either way.
@@ -1500,7 +1466,7 @@ def pq_codes(emb: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
     """
     emb = emb.filter(F.col("embedding").isNotNull())
     if seeds is None:
-        seeds = _pq_seeds(emb)
+        seeds = _md5_seeds(emb)
     carr = seeds.agg(
         F.collect_list(F.struct("s_id", "s_emb")).alias("cents")
     )
@@ -1538,6 +1504,66 @@ def q_emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_codes(read_table(spark, sf_dir, "embeddings"))
 
 
+def _adc_lut(q: DataFrame, seeds: DataFrame) -> DataFrame:
+    """The ADC lookup table: one ``(q_id, sub, code, d2_micro)`` row
+    per query × subspace × ``(s_id, s_emb)`` seed, ``d2_micro`` the
+    subspace's squared L2 (the encoder's positional IEEE fold)
+    snapped to integer micro-units by ``floor(d2·1e6 + 0.5)``: pure
+    IEEE ops plus an exact floor are bit-identical across engines,
+    where ``round()``'s tie-breaking is not (the ts_anomaly lesson).
+    """
+    d2 = F.expr(f"""
+        aggregate(
+            transform(sequence(1, {PQ_SUB_DIM}),
+                i -> cast(element_at(q_emb, sub * {PQ_SUB_DIM} + i)
+                          as double)
+                   - cast(element_at(s_emb, sub * {PQ_SUB_DIM} + i)
+                          as double)),
+            cast(0.0 as double), (acc, x) -> acc + x * x)
+    """)
+    codebook = seeds.select(F.col("s_id").alias("code"), "s_emb")
+    return (
+        q.crossJoin(F.broadcast(codebook))
+        .select(
+            "q_id",
+            "code",
+            "q_emb",
+            "s_emb",
+            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("sub"),
+        )
+        .select(
+            "q_id",
+            "sub",
+            "code",
+            F.floor(d2 * 1000000 + F.lit(0.5)).cast("long").alias(
+                "d2_micro"
+            ),
+        )
+    )
+
+
+def _adc_topk(hits: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` nearest vectors by ADC distance from the
+    ``(q_id, vec_id, d2_micro)`` LUT hits: the micro-unit entries sum
+    exactly per (query, vector) as longs, ranked ``adc_micro, n_id``
+    and reported as ``adc_d2`` = the sum back in units, 6dp.
+    """
+    scored = hits.groupBy("q_id", F.col("vec_id").alias("n_id")).agg(
+        F.sum("d2_micro").alias("adc_micro")
+    )
+    w = Window.partitionBy("q_id").orderBy("adc_micro", "n_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "q_id",
+            "n_id",
+            F.round(F.col("adc_micro") / 1000000.0, 6).alias("adc_d2"),
+            "rank",
+        )
+    )
+
+
 def pq_adc_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     """ANN search over PQ codes by Asymmetric Distance Computation:
     each query's approximate L2² to a corpus vector is the sum over
@@ -1571,61 +1597,13 @@ def pq_adc_topk(emb: DataFrame, k: int = TOP_K) -> DataFrame:
     # TakeOrdered runs twice per execution (once under each broadcast
     # build). The frame is ≤ PQ_K rows BY CONSTRUCTION — an eager
     # localCheckpoint is a bounded micro-materialization at any scale.
-    seeds = _pq_seeds(emb).localCheckpoint(eager=True)
+    seeds = _md5_seeds(emb).localCheckpoint(eager=True)
     codes = pq_codes(emb, seeds=seeds).select("vec_id", "sub", "code")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    lut = _adc_lut(_queries(emb), seeds)
+    hits = codes.join(F.broadcast(lut), ["sub", "code"]).filter(
+        F.col("q_id") != F.col("vec_id")
     )
-    seeds = seeds.select(
-        F.col("s_id").alias("code"), "s_emb"
-    )
-    d2 = F.expr(f"""
-        aggregate(
-            transform(sequence(1, {PQ_SUB_DIM}),
-                i -> cast(element_at(q_emb, sub * {PQ_SUB_DIM} + i)
-                          as double)
-                   - cast(element_at(s_emb, sub * {PQ_SUB_DIM} + i)
-                          as double)),
-            cast(0.0 as double), (acc, x) -> acc + x * x)
-    """)
-    lut = (
-        q.crossJoin(F.broadcast(seeds))
-        .select(
-            "q_id",
-            "code",
-            "q_emb",
-            "s_emb",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("sub"),
-        )
-        .select(
-            "q_id",
-            "sub",
-            "code",
-            # floor(x·1e6 + 0.5), not round(): pure IEEE ops + exact
-            # floor are bit-identical across engines, where round()'s
-            # tie-breaking is not (the ts_anomaly lesson).
-            F.floor(d2 * 1000000 + F.lit(0.5)).cast("long").alias(
-                "d2_micro"
-            ),
-        )
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .filter(F.col("q_id") != F.col("vec_id"))
-        .groupBy("q_id", F.col("vec_id").alias("n_id"))
-        .agg(F.sum("d2_micro").alias("adc_micro"))
-    )
-    w = Window.partitionBy("q_id").orderBy("adc_micro", "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("adc_micro") / 1000000.0, 6).alias("adc_d2"),
-            "rank",
-        )
-    )
+    return _adc_topk(hits, k)
 
 
 def q_ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1668,20 +1646,13 @@ def rerank_topk(
     cand = emb.select(
         F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_emb")
     ).join(F.broadcast(short), "n_id")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    q = _queries(emb)
     rer = cand.join(F.broadcast(q), "q_id").select(
         "q_id",
         "n_id",
         cosine_expr(F.col("q_emb"), F.col("n_emb")).alias("cosine"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "n_id")
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    return _cosine_topk(rer)
 
 
 def q_ann_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1726,15 +1697,7 @@ def ivfpq_topk(emb: DataFrame) -> DataFrame:
     assignment, queries, corpus) — matching ``pq_codes``.
     """
     emb = emb.filter(F.col("embedding").isNotNull())
-    key = F.md5(F.col("vec_id").cast("string"))
-    seeds0 = (
-        emb.select("vec_id", "embedding").orderBy(key, "vec_id").limit(PQ_K)
-    )
-    w0 = Window.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-    seeds = seeds0.select(
-        (F.row_number().over(w0) - 1).alias("s_id"),
-        F.col("embedding").alias("s_emb"),
-    )
+    seeds = _md5_seeds(emb)
     coarse = seeds.filter(F.col("s_id") < IVFPQ_COARSE_K).select(
         F.col("s_id").alias("c_id"), F.col("s_emb").alias("c_emb")
     )
@@ -1742,61 +1705,40 @@ def ivfpq_topk(emb: DataFrame) -> DataFrame:
         emb.select("vec_id", "embedding"), coarse, "vec_id", "embedding", 1
     ).select("vec_id", F.col("c_id").alias("cell"))
     corpus = pq_codes(emb).join(cells, "vec_id")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    q = _queries(emb)
     probes = _assign(q, coarse, "q_id", "q_emb", IVFPQ_PROBE).select(
         "q_id", F.col("c_id").alias("cell")
     )
-    d2 = F.expr(f"""
-        aggregate(
-            transform(sequence(1, {PQ_SUB_DIM}),
-                i -> cast(element_at(q_emb, sub * {PQ_SUB_DIM} + i)
-                          as double)
-                   - cast(element_at(s_emb, sub * {PQ_SUB_DIM} + i)
-                          as double)),
-            cast(0.0 as double), (acc, x) -> acc + x * x)
-    """)
-    lut = (
-        q.crossJoin(F.broadcast(seeds.selectExpr("s_id as code", "s_emb")))
-        .select(
-            "q_id",
-            "code",
-            "q_emb",
-            "s_emb",
-            F.explode(F.sequence(F.lit(0), F.lit(PQ_M - 1))).alias("sub"),
-        )
-        .select(
-            "q_id",
-            "sub",
-            "code",
-            F.floor(d2 * 1000000 + F.lit(0.5)).cast("long").alias(
-                "d2_micro"
-            ),
-        )
-    )
-    scored = (
+    hits = (
         corpus.join(F.broadcast(probes), "cell")
         .filter(F.col("q_id") != F.col("vec_id"))
-        .join(F.broadcast(lut), ["q_id", "sub", "code"])
-        .groupBy("q_id", F.col("vec_id").alias("n_id"))
-        .agg(F.sum("d2_micro").alias("adc_micro"))
+        .join(F.broadcast(_adc_lut(q, seeds)), ["q_id", "sub", "code"])
     )
-    w = Window.partitionBy("q_id").orderBy("adc_micro", "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "q_id",
-            "n_id",
-            F.round(F.col("adc_micro") / 1000000.0, 6).alias("adc_d2"),
-            "rank",
-        )
-    )
+    return _adc_topk(hits, TOP_K)
 
 
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivfpq_topk(read_table(spark, sf_dir, "embeddings"))
+
+
+def _label_centroids(emb: DataFrame) -> DataFrame:
+    """Each label's :func:`centroids_by_label` centroid reassembled
+    into one ``(label, c)`` row, ``c`` the 6dp means in ``pos``
+    order — the bounded prototype table the per-label oracles
+    rebuild with ``list(centroid_val ORDER BY pos)``.
+    """
+    return (
+        centroids_by_label(emb)
+        .groupBy("label")
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("pos", "centroid_val"))
+                ),
+                lambda s: s["centroid_val"],
+            ).alias("c")
+        )
+    )
 
 
 def assign_nearest_centroid(emb: DataFrame) -> DataFrame:
@@ -1827,13 +1769,6 @@ def assign_nearest_centroid(emb: DataFrame) -> DataFrame:
     removes the unassignable rows from the scored output).
     """
     emb = emb.filter(F.col("embedding").isNotNull())
-    cent = centroids_by_label(emb)
-    carr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))),
-            lambda s: s["centroid_val"],
-        ).alias("c")
-    )
     cnorm = F.sqrt(
         F.aggregate(
             F.transform(F.col("c"), lambda x: x * x),
@@ -1841,24 +1776,14 @@ def assign_nearest_centroid(emb: DataFrame) -> DataFrame:
             lambda acc, x: acc + x,
         )
     )
-    carr = carr.select(
+    carr = _label_centroids(emb).select(
         F.col("label").alias("c_label"), "c", cnorm.alias("cnorm")
     )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding"), F.col("c"), lambda x, y: x.cast("double") * y
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    cos6 = dot(F.col("embedding"), F.col("c")) / F.col("cnorm")
     scored = (
         emb.select("vec_id", "embedding")
         .crossJoin(F.broadcast(carr))
-        .select(
-            "vec_id",
-            "c_label",
-            F.round(dot / F.col("cnorm"), 6).alias("cos6"),
-        )
+        .select("vec_id", "c_label", F.round(cos6, 6).alias("cos6"))
     )
     return scored.groupBy("vec_id").agg(
         F.max_by(
@@ -1910,13 +1835,9 @@ def embedding_outliers(emb: DataFrame) -> DataFrame:
     from covid_engineering_spark.functions import evicting_cache
 
     emb = emb.filter(F.col("embedding").isNotNull())
-    cent = centroids_by_label(emb)
-    carr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))),
-            lambda s: s["centroid_val"],
-        ).alias("c")
-    ).select(F.col("label").alias("c_label"), "c")
+    carr = _label_centroids(emb).select(
+        F.col("label").alias("c_label"), "c"
+    )
     d2 = F.expr(f"""
         aggregate(
             transform(sequence(1, {DIM}),
@@ -2280,9 +2201,7 @@ def recall_eval(emb: DataFrame) -> DataFrame:
 def q_cosine_frame(emb: DataFrame) -> DataFrame:
     """The brute-force cosine top-k over an explicit frame (factored
     from ``q_ann_cosine_topk`` so ``recall_eval`` composes it)."""
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
+    q = _queries(emb)
     c = emb.select(
         F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_emb")
     )
@@ -2292,11 +2211,7 @@ def q_cosine_frame(emb: DataFrame) -> DataFrame:
         .filter(F.col("q_id") != F.col("n_id"))
         .select("q_id", "n_id", cos.alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-    )
+    return _cosine_topk(scored)
 
 
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:

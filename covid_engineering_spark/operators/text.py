@@ -347,16 +347,13 @@ UNIGRAM_HOT_DIV = 20
 UNIGRAM_RARE_DIV = 40
 
 
-def unigram_lm(docs: DataFrame) -> DataFrame:
-    """Corpus unigram-model document scoring: build the corpus term-
-    frequency table in-query, then score every document by its tokens'
-    corpus frequencies — total token count, corpus-frequency mass, and
-    the count/fraction of rare tokens (corpus share < 1/40). The
-    shape of every statistical quality filter that scores documents
-    against corpus-level statistics (a unigram LM's log-prob is this
-    same join with ``log`` folded in; kept in exact integer space here
-    so the SQL oracle agrees bit-for-bit — rare_ratio is one IEEE
-    division of two exact longs).
+def _unigram_model(docs: DataFrame) -> DataFrame:
+    """The in-query corpus unigram model joined back onto its
+    documents: one ``(tok, doc_id, c, cf, total, nll_micro)`` row per
+    (doc, term) — ``c`` the term's count in the doc, ``cf`` its corpus
+    count, ``total`` the corpus token count and ``nll_micro`` the
+    per-type negative log-likelihood ``ln(total/cf)`` rounded to 8dp
+    (one libm op, the tfidf discipline) in integer micro-units.
 
     Scale shape: tokens collapse to per-(doc, term) counts at the
     first partial agg, so the join input is bounded by distinct terms
@@ -389,11 +386,33 @@ def unigram_lm(docs: DataFrame) -> DataFrame:
         tf.groupBy("tok").agg(F.sum("c").alias("cf")), "unigram_vocab"
     )
     total = vocab.agg(F.sum("cf").alias("total"))
-    v = vocab.join(F.broadcast(total))
+    nll_micro = F.floor(
+        F.round(F.log(F.col("total") / F.col("cf")), 8) * F.lit(1e6)
+        + F.lit(0.5)
+    ).cast("long")
+    v = vocab.join(F.broadcast(total)).select(
+        "tok", "cf", "total", nll_micro.alias("nll_micro")
+    )
     hot = F.col("cf") * UNIGRAM_HOT_DIV >= F.col("total")
-    joined = tf.join(F.broadcast(v.filter(hot)), "tok").unionByName(
+    return tf.join(F.broadcast(v.filter(hot)), "tok").unionByName(
         tf.join(v.filter(~hot), "tok")
     )
+
+
+def unigram_lm(docs: DataFrame) -> DataFrame:
+    """Corpus unigram-model document scoring: build the corpus term-
+    frequency table in-query, then score every document by its tokens'
+    corpus frequencies — total token count, corpus-frequency mass, and
+    the count/fraction of rare tokens (corpus share < 1/40). The
+    shape of every statistical quality filter that scores documents
+    against corpus-level statistics (a unigram LM's log-prob is this
+    same join with ``log`` folded in; kept in exact integer space here
+    so the SQL oracle agrees bit-for-bit — rare_ratio is one IEEE
+    division of two exact longs).
+
+    Scale shape: that of :func:`_unigram_model`.
+    """
+    joined = _unigram_model(docs)
     rare = (F.col("cf") * UNIGRAM_RARE_DIV < F.col("total")).cast("long")
     agg = joined.groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
@@ -681,47 +700,18 @@ def perplexity(docs: DataFrame) -> DataFrame:
     boilerplate. The standard perplexity-bucketing signal, with the
     corpus itself as the model.
 
-    Determinism: the per-TYPE negative log-likelihood
-    ``ln(total/cf)`` is rounded to 8dp (one libm op, the tfidf
-    discipline) and converted to integer MICRO-units once per
-    vocabulary entry; each document's total NLL is then an exact
+    Determinism: the per-TYPE negative log-likelihood is converted to
+    integer MICRO-units once per vocabulary entry (see
+    :func:`_unigram_model`); each document's total NLL is then an exact
     BIGINT sum (token count × per-type micros), and the mean NLL is
     one truncating integer division (Spark ``DIV`` = DuckDB ``//``,
     the pagerank convention). Perplexity itself is ``exp(mean-NLL)``
     — monotone in the reported integer, left to the consumer so no
     second libm op enters the hashed result.
 
-    Scale shape: identical to ``unigram_lm`` (same cached tf/vocab
-    frames, same provably-≤20-row hot-token broadcast split, 1-row
-    total broadcast); the only addition is one more projected column
-    on the vocabulary frame.
+    Scale shape: that of :func:`_unigram_model`.
     """
-    from covid_engineering_spark.functions import evicting_cache
-
-    tf = evicting_cache(
-        docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        )
-        .groupBy("doc_id", "tok")
-        .agg(F.count("*").alias("c")),
-        "unigram_tf",
-    )
-    vocab = evicting_cache(
-        tf.groupBy("tok").agg(F.sum("c").alias("cf")), "unigram_vocab"
-    )
-    total = vocab.agg(F.sum("cf").alias("total"))
-    nll_micro = F.floor(
-        F.round(F.log(F.col("total") / F.col("cf")), 8) * F.lit(1e6)
-        + F.lit(0.5)
-    ).cast("long")
-    v = vocab.join(F.broadcast(total)).select(
-        "tok", "cf", "total", nll_micro.alias("nll_micro")
-    )
-    hot = F.col("cf") * UNIGRAM_HOT_DIV >= F.col("total")
-    joined = tf.join(F.broadcast(v.filter(hot)), "tok").unionByName(
-        tf.join(v.filter(~hot), "tok")
-    )
-    agg = joined.groupBy("doc_id").agg(
+    agg = _unigram_model(docs).groupBy("doc_id").agg(
         F.sum("c").alias("n_tokens"),
         F.sum(F.col("c") * F.col("nll_micro")).alias("nll_micros"),
     )

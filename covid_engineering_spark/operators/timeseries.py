@@ -354,6 +354,19 @@ def _cents() -> F.Column:
     return F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
 
 
+def _hourly_cents(ev: DataFrame) -> DataFrame:
+    """The hourly per-type series every cents kernel below reads: one
+    row per (``bucket`` = ``date_trunc(EVERY, ts)``, ``event_type``)
+    with ``x_cents`` = the bucket's summed ``CENTS_SQL`` cents. The
+    oracles spell the same ``GROUP BY date_trunc('hour', ts),
+    event_type`` over ``SUM(CENTS_SQL)``, so the bucket grid and the
+    cents rounding change here or nowhere.
+    """
+    return ev.groupBy(
+        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
+    ).agg(F.sum(_cents()).alias("x_cents"))
+
+
 def rolling_anomaly(ev: DataFrame) -> DataFrame:
     """Rolling z-score anomaly flags over the resampled feed: each
     (event_type, bucket) hourly value is compared against the mean and
@@ -378,10 +391,7 @@ def rolling_anomaly(ev: DataFrame) -> DataFrame:
     span, never by raw rows. The one low-cardinality shuffle
     (#types keys) moves only the rolled-up rows.
     """
-    cents = _cents()
-    bucketed = ev.groupBy(
-        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-    ).agg(F.sum(cents).alias("x_cents"))
+    bucketed = _hourly_cents(ev)
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket")
@@ -445,10 +455,7 @@ def seasonal_anomaly(ev: DataFrame) -> DataFrame:
     """
     from covid_engineering_spark.functions import evicting_cache
 
-    cents = _cents()
-    bucketed = ev.groupBy(
-        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-    ).agg(F.sum(cents).alias("x_cents"))
+    bucketed = _hourly_cents(ev)
     dow = F.pmod(
         F.datediff(F.to_date("bucket"), F.to_date(F.lit(DOW_ANCHOR))), 7
     )
@@ -648,10 +655,7 @@ def ewma(ev: DataFrame) -> DataFrame:
     window uses, over the bucket-cardinality frame — never raw
     events.
     """
-    cents = _cents()
-    bucketed = ev.groupBy(
-        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-    ).agg(F.sum(cents).alias("x_cents"))
+    bucketed = _hourly_cents(ev)
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket")
@@ -753,10 +757,7 @@ def holt(ev: DataFrame) -> DataFrame:
     arr = lambda rows: "array(" + ", ".join(  # noqa: E731
         "array(" + ", ".join(f"{c}L" for c in r) + ")" for r in rows
     ) + ")"
-    cents = _cents()
-    bucketed = ev.groupBy(
-        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-    ).agg(F.sum(cents).alias("x_cents"))
+    bucketed = _hourly_cents(ev)
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket")
@@ -820,10 +821,7 @@ def cusum_changepoint(ev: DataFrame) -> DataFrame:
     per-type mean buckets. Windows run over the bucket-cardinality
     frame (buckets × types), never raw events.
     """
-    cents = _cents()
-    bucketed = ev.groupBy(
-        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-    ).agg(F.sum(cents).alias("x_cents"))
+    bucketed = _hourly_cents(ev)
     wtype = Window.partitionBy("event_type")
     wcum = wtype.orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, 0
@@ -877,10 +875,7 @@ def snaive_backtest(ev: DataFrame) -> DataFrame:
     Scale shape: both sides are the bucket-cardinality frame sharing
     one (event_type) exchange layout; the final agg is |types| rows.
     """
-    cents = _cents()
-    bucketed = ev.groupBy(
-        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-    ).agg(F.sum(cents).alias("x_cents"))
+    bucketed = _hourly_cents(ev)
     prior = bucketed.select(
         F.col("event_type").alias("p_type"),
         (F.col("bucket") + F.expr("INTERVAL 7 DAYS")).alias("p_bucket"),
@@ -933,10 +928,7 @@ def autocorr(ev: DataFrame) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    cents = _cents()
-    bucketed = ev.groupBy(
-        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-    ).agg(F.sum(cents).alias("x_cents"))
+    bucketed = _hourly_cents(ev)
     w = Window.partitionBy("event_type").orderBy("bucket")
     pairs = bucketed.withColumn(
         "prev_cents", F.lag("x_cents").over(w)
@@ -1012,13 +1004,7 @@ def mad_anomaly(ev: DataFrame) -> DataFrame:
     """
     from covid_engineering_spark.functions import evicting_cache
 
-    cents = _cents()
-    bucketed = evicting_cache(
-        ev.groupBy(
-            F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-        ).agg(F.sum(cents).alias("x_cents")),
-        "mad_bucketed",
-    )
+    bucketed = evicting_cache(_hourly_cents(ev), "mad_bucketed")
     med = bucketed.groupBy("event_type").agg(
         (F.expr("2 * percentile(x_cents, 0.5)"))
         .cast("long")
@@ -1067,10 +1053,7 @@ def percentile_profile(ev: DataFrame) -> DataFrame:
     Scale shape: raw events partial-aggregate to (type, bucket) rows,
     then one agg over ≤ |types|×24 cells. Two bounded shuffles.
     """
-    cents = _cents()
-    bucketed = ev.groupBy(
-        F.date_trunc(EVERY, "ts").alias("bucket"), "event_type"
-    ).agg(F.sum(cents).alias("x_cents"))
+    bucketed = _hourly_cents(ev)
     return bucketed.groupBy(
         "event_type", F.hour("bucket").alias("hour")
     ).agg(

@@ -99,6 +99,14 @@ _DEFAULTS: dict[str, str] = {
 _FOREIGN_KEEPS = frozenset({"spark.sql.streaming.stateStore.providerClass"})
 
 
+def default_master() -> str:
+    """``$SPARK_MASTER`` when set (``yarn``, ``k8s://...``,
+    ``local[2]``), else ``local[N]`` with N = ``$SPARK_GRAFT_CPUS`` or
+    one thread per CPU this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "covid-engineering-spark",
     master: str | None = None,
@@ -106,21 +114,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or to one
-    thread per CPU this process may run on when that is unset; on a
-    real cluster set ``SPARK_MASTER`` and submit with
-    ``--master yarn``/``k8s`` so the builder inherits it.
+    ``master`` defaults to :func:`default_master`: on a real cluster
+    set ``SPARK_MASTER`` (e.g. ``yarn``) and the session runs there.
     ``spark.sql.shuffle.partitions`` is ``$SPARK_SHUFFLE_PARTITIONS``
     (default 32); ``extra_conf`` overrides any key.
     """
-    builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(
-            os.sched_getaffinity(0)
-        )
-        master = f"local[{cpus}]"
-    if master:
-        builder = builder.master(master)
+    builder = SparkSession.builder.appName(app_name).master(
+        master or default_master()
+    )
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(
         int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))

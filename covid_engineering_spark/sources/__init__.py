@@ -1,6 +1,7 @@
 from covid_engineering_spark.sources.io import (
     compact_parquet,
     read_covid_csv,
+    read_events_stream,
     read_table,
     register_star,
     sqlite_to_parquet,
@@ -13,6 +14,7 @@ from covid_engineering_spark.sources.io import (
 __all__ = [
     "compact_parquet",
     "read_covid_csv",
+    "read_events_stream",
     "read_table",
     "register_star",
     "sqlite_to_parquet",

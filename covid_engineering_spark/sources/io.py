@@ -205,6 +205,20 @@ def read_table(
     return df
 
 
+def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """The events landing zone under ``source_dir`` as a streaming
+    parquet source with the declared ``events`` schema and ``ts``
+    cast to TIMESTAMP: watermarks are defined on TIMESTAMP only, and
+    the table's ``ts`` is timestamp_ntz (the UTC session makes the
+    cast deterministic). Callers add their own watermark.
+    """
+    return (
+        spark.readStream.schema(schemas.STAR["events"])
+        .parquet(source_dir)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+    )
+
+
 def write_partitioned(df: DataFrame, path: str, *keys: str) -> None:
     """Persist hive-partitioned parquet (one directory per key value).
     The analytics layout for the COVID model (SURVEY.md §4): cleaned
@@ -298,19 +312,18 @@ def zorder_value(x, y):
 COMPACT_FILES = 4
 
 
-def compact_parquet(
-    spark: SparkSession, in_path: str, out_path: str, schema
-) -> None:
-    """Rewrite a small-file parquet directory into ``COMPACT_FILES``
-    files. Small files are the dominant operational failure of long
-    running ingest at scale: a scan's task count (and the namenode /
-    object-store request load) is driven by FILE COUNT, not bytes.
+def compact_parquet(spark: SparkSession, in_path: str, out_path: str) -> None:
+    """Rewrite a small-file parquet directory of ``part`` rows into
+    ``COMPACT_FILES`` files. Small files are the dominant operational
+    failure of long running ingest at scale: a scan's task count (and
+    the namenode / object-store request load) is driven by FILE COUNT,
+    not bytes.
     Compaction is a single narrow-read + round-robin repartition +
     write; run it per partition directory so each rewrite is bounded.
     On a cluster, pick the file count as bytes / 128 MB, never 1
     (one file serializes the next scan).
     """
-    df = spark.read.schema(schema).parquet(in_path)
+    df = spark.read.schema(schemas.STAR["part"]).parquet(in_path)
     df.repartition(COMPACT_FILES).write.mode("overwrite").parquet(out_path)
 
 

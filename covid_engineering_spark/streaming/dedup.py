@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_engineering_spark import schemas
+from covid_engineering_spark.sources import read_events_stream, read_table
 
 
 def stream_dedup(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -25,11 +25,8 @@ def stream_dedup(spark: SparkSession, source_dir: str) -> DataFrame:
     emits each key's FIRST arrival, drops re-deliveries that land
     within the watermark horizon (append output mode).
     """
-    stream = (
-        spark.readStream.schema(schemas.STAR["events"])
-        .parquet(source_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
+    stream = read_events_stream(spark, source_dir).withWatermark(
+        "ts", "2 hours"
     )
     return stream.dropDuplicatesWithinWatermark(["event_id"])
 
@@ -44,8 +41,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py); duplicates are exact copies, so the
     surviving row is value-deterministic.
     """
-    from covid_engineering_spark.sources import read_table
-
     ev = read_table(spark, sf_dir, "events").select(
         "event_id",
         F.col("ts").cast("timestamp").alias("ts"),

@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from covid_engineering_spark import schemas
-from covid_engineering_spark.sources import read_table
+from covid_engineering_spark.sources import read_events_stream, read_table
 
 #: Attribution window: a click is attributed to every view by the
 #: same user in the preceding 8 hours (inclusive; the synthetic
@@ -73,43 +72,16 @@ def stream_attributed_clicks(
     source_dir: str,
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Incremental flavor: two watermarked readers over the same
-    landing zone, filtered to each side's event type, joined with the
-    event-time bound in the join condition (the state-eviction
-    contract: views older than watermark + window are dropped).
+    """Incremental flavor of :func:`attributed_clicks`: one
+    watermarked stream over the landing zone, split by event type
+    into the two join sides. The time-range filter folds into the
+    join condition, which is the state-eviction contract: views older
+    than watermark + window are dropped.
     """
-
-    def side(event_type: str, alias_id: str, alias_ts: str) -> DataFrame:
-        reader = spark.readStream.schema(schemas.STAR["events"])
-        return (
-            reader.parquet(source_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == event_type)
-            .select(
-                "user_id",
-                F.col("event_id").alias(alias_id),
-                F.col("ts").alias(alias_ts),
-            )
-            .withWatermark(alias_ts, watermark)
-        )
-
-    v = side("view", "view_id", "view_ts").alias("v")
-    c = side("click", "click_id", "click_ts").alias("c")
-    return v.join(
-        c,
-        F.expr(
-            f"""
-            v.user_id = c.user_id AND
-            click_ts >= view_ts AND
-            click_ts <= view_ts + {ATTRIB_WINDOW}
-            """
-        ),
-    ).select(
-        F.col("v.user_id").alias("user_id"),
-        "view_id",
-        "view_ts",
-        "click_id",
-        "click_ts",
+    ev = read_events_stream(spark, source_dir).withWatermark("ts", watermark)
+    return attributed_clicks(
+        ev.filter(F.col("event_type") == "view"),
+        ev.filter(F.col("event_type") == "click"),
     )
 
 
@@ -158,11 +130,7 @@ def stream_segment_rollup(
     dimension is re-evaluated per micro-batch) and rolled up in
     complete mode. Asserted equal to the batch face in tests.
     """
-    reader = spark.readStream.schema(schemas.STAR["events"])
-    ev = reader.parquet(source_dir).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    return segment_rollup(ev, customer)
+    return segment_rollup(read_events_stream(spark, source_dir), customer)
 
 
 QUERIES = {

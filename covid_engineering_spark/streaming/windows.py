@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from covid_engineering_spark.functions import dsum
-from covid_engineering_spark.sources import read_table
+from covid_engineering_spark.sources import read_events_stream, read_table
 
 GAP = "30 minutes"
 
@@ -126,27 +126,16 @@ def stream_events(spark: SparkSession, source_dir: str) -> DataFrame:
     for a catch-up run, or a processing-time trigger for continuous
     ingest.
     """
-    from covid_engineering_spark import schemas
-
-    # Watermarks are defined on TIMESTAMP only; the table schema is
-    # timestamp_ntz, so cast for event-time tracking (UTC session makes
-    # the cast deterministic) and cast the window bounds back so the
-    # streaming schema equals the batch tumbling_agg schema.
-    stream = (
-        spark.readStream.schema(schemas.STAR["events"])
-        .parquet(source_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
+    stream = read_events_stream(spark, source_dir).withWatermark(
+        "ts", "2 hours"
     )
-    return (
-        stream.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            F.col("w.end").cast("timestamp_ntz").alias("window_end"),
-            "n_events",
-            "sum_value",
-        )
+    # the stream windows a TIMESTAMP ts; cast the bounds back so the
+    # streaming schema equals the batch tumbling_agg schema
+    return tumbling_agg(stream).select(
+        F.col("window_start").cast("timestamp_ntz").alias("window_start"),
+        F.col("window_end").cast("timestamp_ntz").alias("window_end"),
+        "n_events",
+        "sum_value",
     )
 
 

@@ -16,7 +16,6 @@ double range).
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 
@@ -28,15 +27,15 @@ def main() -> int:
     only = set(sys.argv[2:])
     from pyspark.sql import SparkSession
 
+    from covid_engineering_spark.session import default_master
+
     # A vanilla builder, not get_spark(): callers of __spark_entry__
     # bring their own session, so the sweep must pass without the
-    # engine's session defaults. One thread per usable CPU, as
-    # get_spark() sizes it. The console progress bar is off so piped
-    # output holds only the result lines; it is a UI key, not a
-    # query-semantics one.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    # engine's session defaults. The master is get_spark()'s default.
+    # The console progress bar is off so piped output holds only the
+    # result lines; it is a UI key, not a query-semantics one.
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(default_master())
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )

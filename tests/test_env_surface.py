@@ -14,8 +14,12 @@ Values are compared, not spellings: ``k=5`` does not override
 
 import ast
 import operator
+import os
 import pathlib
 import re
+import subprocess
+import sys
+from dataclasses import dataclass
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
 ENGINE = REPO / "covid_engineering_spark"
@@ -171,6 +175,16 @@ class _Module(str):
     """An imported module name bound in a caller's namespace."""
 
 
+@dataclass(frozen=True)
+class _Entry:
+    """A constant key into a module's table, ``schemas.STAR["part"]``:
+    one constant, equal only to the same entry."""
+
+    module: str
+    table: str
+    key: object
+
+
 def _tree(mod: str) -> ast.Module:
     if mod not in _TREES:
         _TREES[mod] = ast.parse(SOURCES[mod].read_text())
@@ -203,6 +217,16 @@ def _value(node, env):
         if isinstance(mod, _Module):
             v = _env(mod).get(node.attr, UNKNOWN)
             return UNKNOWN if isinstance(v, _Module) else v
+    if (
+        isinstance(node, ast.Subscript)
+        and isinstance(node.value, ast.Attribute)
+        and isinstance(node.value.value, ast.Name)
+        and isinstance(env.get(node.value.value.id), _Module)
+    ):
+        key = _value(node.slice, env)
+        if key is not UNKNOWN:
+            mod = env[node.value.value.id]
+            return _Entry(str(mod), node.value.attr, key)
     return UNKNOWN
 
 
@@ -384,3 +408,23 @@ def test_no_engine_parameter_takes_one_constant_everywhere():
         "every call site passes these one literal or module constant; "
         f"fold each into the constant: {sorted(constant)}"
     )
+
+
+def test_spark_master_is_the_session_master(tmp_path):
+    # SPARK_MASTER names the master, not only a switch that turns the
+    # local[N] default off; its own JVM, since tier-1 shares one live
+    # session.
+    code = (
+        "from covid_engineering_spark import get_spark\n"
+        "print('master', get_spark().sparkContext.master)\n"
+    )
+    env = dict(os.environ, PYTHONPATH=str(REPO), SPARK_MASTER="local[2]")
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert "master local[2]" in out.stdout.splitlines(), out.stderr[-3000:]

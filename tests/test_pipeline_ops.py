@@ -207,7 +207,7 @@ def test_compact_parquet_bounds_file_count(spark, tmp_path):
     part = read_table(spark, SF_SMOKE, "part")
     part.repartition(32).write.parquet(small)
     assert len(glob.glob(os.path.join(small, "*.parquet"))) == 32
-    compact_parquet(spark, small, out, schemas.STAR["part"])
+    compact_parquet(spark, small, out)
     assert len(glob.glob(os.path.join(out, "*.parquet"))) <= 4
     back = spark.read.schema(schemas.STAR["part"]).parquet(out)
     assert back.count() == part.count()
