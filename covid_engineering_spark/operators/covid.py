@@ -28,6 +28,18 @@ GAMMA = 1 / 4.5  # main.py:546
 EPS = 0.00001  # main.py:549
 
 
+def sird_estimators(level, d_deaths, d_recovered, d_level, s_t, gamma: float):
+    """The reference's eps-guarded (μₜ, αₜ, βₜ) columns (main.py:536-556)
+    from the infected level, its three daily deltas (deaths, recovered,
+    level) and the susceptible count, at recovery rate ``gamma``."""
+    mu_t = d_deaths / F.greatest(level, F.lit(EPS))
+    alpha_t = (gamma * level - d_recovered) / F.greatest(d_recovered, F.lit(EPS))
+    beta_t = (
+        d_level / F.greatest(level, F.lit(1.0)) + mu_t + F.lit(gamma)
+    ) / F.greatest(s_t, F.lit(EPS))
+    return mu_t, alpha_t, beta_t
+
+
 def estimate_params(cleaned: DataFrame, population: DataFrame) -> DataFrame:
     """Per-(country, date) μₜ/αₜ/βₜ/R₀ₜ series for every country at
     once. ``cleaned`` is clean_complete() output; ``population`` is a
@@ -45,15 +57,14 @@ def estimate_params(cleaned: DataFrame, population: DataFrame) -> DataFrame:
     s_t = F.col("population") - (
         F.col("active") + F.col("recovered") + F.col("deaths")
     )
-    mu_t = F.col("deaths_change") / F.greatest(F.col("active"), F.lit(EPS))
-    alpha_t = (GAMMA * F.col("active") - F.col("recovered_change")) / F.greatest(
-        F.col("recovered_change"), F.lit(EPS)
+    mu_t, alpha_t, beta_t = sird_estimators(
+        F.col("active"),
+        F.col("deaths_change"),
+        F.col("recovered_change"),
+        F.col("active_change"),
+        s_t,
+        GAMMA,
     )
-    beta_t = (
-        F.col("active_change") / F.greatest(F.col("active"), F.lit(1.0))
-        + mu_t
-        + F.lit(GAMMA)
-    ) / F.greatest(s_t, F.lit(EPS))
     return (
         df.select(
             "country_region",

@@ -1417,7 +1417,7 @@ def dsir_gumbel_topk_exact(
     Gumbel draw. The score column is hash-stable, so the whole
     selection (not just the id set) is checkable against an ANSI-SQL
     twin (:func:`dsir_gumbel_sql`; differential test in
-    tests/test_round9_ops.py). Registered as ``pipe_dsir_gumbel``.
+    tests/test_pipeline_ops.py). Registered as ``pipe_dsir_gumbel``.
 
     The draw is HASH-derived, so it is reproducible given (corpus,
     seed) and changing ``seed`` redraws it: ``u = (h + 1) / 2^60``
@@ -2586,7 +2586,7 @@ def dsir_gumbel_sql() -> str:
     8dp-rounded ln's, FLOOR micro snap, BIGINT addition), over the
     SAME weights CTE chain as the registered ``pipe_dsir_select``
     oracle. Hash-stable end to end; verified against the engine in
-    tests/test_round9_ops.py.
+    tests/test_pipeline_ops.py.
     """
     from covid_engineering_spark.operators.dedup import _portable_hash_sql
 

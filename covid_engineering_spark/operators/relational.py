@@ -1775,10 +1775,15 @@ def global_prefix_sum(
     exchange-reuse canonicalization — without the checkpoint each
     chained call re-executes its whole upstream once more for the
     totals branch (measured on rfm's 3 chained stages: ~1.7x wall at
-    sf0.1, 2.2x at 100x). eager=False keeps query CONSTRUCTION
-    job-free (the driver contract); the frame materializes once
+    sf0.1, 2.2x at 100x). The checkpoint truncates lineage at the
+    branch point, and with eager=False its rows materialize once,
     inside the first action, the same discipline as
-    connected_components' CC rounds.
+    connected_components' CC rounds. Building is still not job-free:
+    cutting the lineage plans ``part`` at call time, which runs the
+    range partitioner's bound-sampling job and AQE's upstream stage
+    jobs (at sf0.01, 15 jobs to build ``rfm_segments``, which chains
+    three calls; ``tests/test_build_jobs.py`` lists every query built
+    on this).
     """
     part = (
         df.withColumn("_gps_w", weight)

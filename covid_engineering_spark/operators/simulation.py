@@ -27,13 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from covid_engineering_spark.functions import dsum
+from covid_engineering_spark.operators.covid import sird_estimators
 from covid_engineering_spark.sources import read_table
 
 #: X1 constant parameter set — the reference's CDC-derived params1
 #: (main.py:55-60).
 ALPHA, BETA, GAMMA, MU = 0.0111, 0.25, 0.1, 0.002
 N_POP = 10000000.0
-EPS = 0.00001  # main.py:550
 
 SIM_SCHEMA = "country long, t int, s double, i double, r double, d double"
 
@@ -159,14 +159,14 @@ def q_x2_sird_transfer(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("r") - F.lag("r").over(w)).alias("dr"),
         (F.col("i") - F.lag("i").over(w)).alias("di"),
     ).filter(F.col("dd").isNotNull())
-    s_t = F.lit(N_POP) - F.col("i")
-    mu_t = F.col("dd") / F.greatest(F.col("i"), F.lit(EPS))
-    alpha_t = (F.lit(GAMMA) * F.col("i") - F.col("dr")) / F.greatest(
-        F.col("dr"), F.lit(EPS)
+    mu_t, alpha_t, beta_t = sird_estimators(
+        F.col("i"),
+        F.col("dd"),
+        F.col("dr"),
+        F.col("di"),
+        F.lit(N_POP) - F.col("i"),
+        GAMMA,
     )
-    beta_t = (
-        F.col("di") / F.greatest(F.col("i"), F.lit(1.0)) + mu_t + F.lit(GAMMA)
-    ) / F.greatest(s_t, F.lit(EPS))
     params = a.select(
         (F.row_number().over(w) - 1).alias("t"),
         mu_t.alias("mu_t"),

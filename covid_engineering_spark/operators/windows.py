@@ -174,6 +174,14 @@ def q_m1_ols_origin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _delta_and_rate():
+    """Per-user value delta and its rate over the eps-guarded previous
+    level: the M3 series, which M4 rescales."""
+    prev = F.lag("value").over(_w_user())
+    delta = F.col("value") - prev
+    return delta, delta / F.greatest(prev, F.lit(1e-6))
+
+
 def q_m3_param_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3 — per-key time-varying parameter estimation (μₜ,αₜ,βₜ series,
     main.py:295-317,536-556): delta over eps-guarded previous level,
@@ -182,9 +190,7 @@ def q_m3_param_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     key.
     """
     ev = read_table(spark, sf_dir, "events")
-    prev = F.lag("value").over(_w_user())
-    delta = F.col("value") - prev
-    rate = delta / F.greatest(prev, F.lit(1e-6))
+    delta, rate = _delta_and_rate()
     return ev.select(
         "user_id",
         "event_id",
@@ -198,8 +204,7 @@ def q_m4_r0_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate series scaled by a constant recovery rate γ=0.1.
     """
     ev = read_table(spark, sf_dir, "events")
-    prev = F.lag("value").over(_w_user())
-    rate = (F.col("value") - prev) / F.greatest(prev, F.lit(1e-6))
+    _, rate = _delta_and_rate()
     return ev.select(
         "user_id",
         "event_id",

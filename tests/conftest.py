@@ -13,11 +13,30 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from covid_engineering_spark import get_spark
 
-    spark = get_spark(app_name="covid-engineering-tests", master="local[8]",
+    spark = get_spark(app_name="covid-engineering-tests",
                       extra_conf={"spark.sql.shuffle.partitions": "8"})
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def patho_dir(tmp_path_factory):
+    """The NULL-bearing pathological star the adversarial oracle sweep
+    runs on, written once per session."""
+    from tests.test_adversarial_oracle import _pathological_rows, _write_star
+
+    return _write_star(
+        str(tmp_path_factory.mktemp("patho_star")), _pathological_rows()
+    )
+
+
+def _docs(spark, rows):
+    """A documents frame from ``(doc_id, text)`` pairs."""
+    return spark.createDataFrame(
+        [(i, t, "en", "srcT", len(t)) for i, t in rows],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
 
 
 def parallel_sweep(names, check, workers=8):

@@ -171,13 +171,6 @@ def _write_star(root, rows):
     return root
 
 
-@pytest.fixture(scope="module")
-def patho_dir(tmp_path_factory):
-    return _write_star(
-        str(tmp_path_factory.mktemp("patho_star")), _pathological_rows()
-    )
-
-
 def test_oracles_match_on_pathological_data(spark, patho_dir):
     from tests.conftest import parallel_sweep
 

@@ -9,6 +9,8 @@ made checkable).
   hamming <= 3 by pigeonhole (4 chunks, at most 3 differing bits ->
   some chunk equal), so the output must exactly equal a brute-force
   all-pairs hamming scan over the signatures.
+* Containment and ExactSubstr span analysis: the asymmetric and span
+  semantics pinned on hand-built corpora.
 """
 
 import pytest
@@ -17,13 +19,14 @@ from pyspark.sql import functions as F
 
 from covid_engineering_spark.operators.dedup import (
     SIMHASH_MAX_HAMMING,
+    containment_pairs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
 )
 from covid_engineering_spark.sources import read_table
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, _docs
 
 
 @pytest.fixture(scope="module")
@@ -309,3 +312,68 @@ def test_lsh_bucket_stats_reports_the_cap(spark, docs):
     assert row["capped_buckets"] == 4
     assert row["max_bucket"] == n
     assert row["docs_in_capped_buckets"] == 4 * n
+
+
+def test_containment_catches_subdocument_jaccard_misses(spark):
+    # B fully quotes A inside much more text: C(A->B)=1 while
+    # J(A,B) = |A|/|B| is far below any near-dup threshold.
+    quote = "alpha beta gamma delta epsilon"
+    filler = " ".join(f"w{i} x{i} y{i}" for i in range(30))
+    docs = _docs(spark, [(1, quote), (2, quote + " " + filler)])
+    cont = containment_pairs(docs, threshold=0.9, max_df=None).collect()
+    assert len(cont) == 1
+    row = cont[0]
+    assert (row.d1, row.d2) == (1, 2)
+    assert row.cont_1_in_2 == 1.0 and row.cont_2_in_1 < 0.1
+    jac = ngram_jaccard_pairs(docs, threshold=0.5, max_df=None).collect()
+    assert jac == []  # the pair Jaccard structurally misses
+
+
+def test_containment_threshold_filters_partial_overlap(spark):
+    docs = _docs(
+        spark,
+        [(1, "a b c d e f"), (2, "a b c d zz yy xx ww vv uu")],
+    )
+    # shared shingles: 'a b c', 'b c d' => 2 of doc1's 4 → 0.5
+    got = containment_pairs(docs, threshold=0.8, max_df=None).collect()
+    assert got == []
+    got = containment_pairs(docs, threshold=0.5, max_df=None).collect()
+    assert len(got) == 1 and got[0].cont_1_in_2 == 0.5
+
+
+def test_substring_spans_hand_corpus(spark):
+    """Span semantics pinned on a corpus built by hand: a 10-token run
+    shared by two docs yields ONE merged span of exactly 10 tokens in
+    each (7 overlapping duplicated 8-grams collapse); an in-document
+    repeat of one 8-gram is flagged through two islands; a unique doc
+    and a too-short doc stay clean with zero counters."""
+    from covid_engineering_spark.operators.dedup import (
+        substring_dup_spans,
+    )
+
+    shared = " ".join(f"s{i}" for i in range(10))  # 10-token shared run
+    rep = " ".join(f"r{i}" for i in range(8))  # 8-gram repeated in-doc
+    rows = [
+        (1, f"{shared} a1 a2 a3 a4 a5"),
+        (2, f"b1 b2 b3 {shared}"),
+        (3, f"{rep} c1 c2 c3 {rep}"),
+        (4, "u1 u2 u3 u4 u5 u6 u7 u8 u9 u10"),  # unique, no dup
+        (5, "t1 t2 t3"),  # shorter than k: no grams at all
+    ]
+    out = {
+        r["doc_id"]: r
+        for r in substring_dup_spans(
+            spark.createDataFrame(rows, "doc_id long, text string")
+        ).collect()
+    }
+    for d in (1, 2):  # the shared run: one span, 10 tokens, 3 grams
+        assert out[d]["n_dup_spans"] == 1, out[d]
+        assert out[d]["dup_tokens"] == 10, out[d]
+        assert out[d]["n_dup_grams"] == 3, out[d]
+        assert out[d]["has_dup"]
+    assert out[3]["n_dup_spans"] == 2  # the repeat: two 8-token islands
+    assert out[3]["dup_tokens"] == 16
+    for d in (4, 5):
+        assert not out[d]["has_dup"]
+        assert out[d]["dup_tokens"] == 0
+        assert out[d]["n_dup_spans"] == 0

@@ -134,7 +134,7 @@ def test_similarity_search_runs(spark, capsys):
     )
     # coarse-quantizer paths on a near-uniform corpus: far above the
     # 5/500 = 0.01 random baseline is the honest bar (see
-    # test_round4_ops for the separable-data quality pin)
+    # test_ann.py for the separable-data quality pin)
     assert recall_of("flat adc recall") >= 0.05
     assert recall_of("ivf-pq recall") >= 0.05
     # bucket pre-flight: structure may drift with corpus/hash tweaks;

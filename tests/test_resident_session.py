@@ -16,7 +16,7 @@ import pytest
 
 from covid_engineering_spark.functions import caching
 from covid_engineering_spark.queries import oracles, registry
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle_check import compare, duck_con
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -60,6 +60,35 @@ def test_inputs_rewritten_in_place_are_never_served_stale(
     _write(seeded_tables[2], sf_dir)
     after = _oracle_rows(spark, name, sf_dir)
     assert before != after  # the seeds really differ on this query
+
+
+@pytest.mark.parametrize("name", ["x3_sird_mse", "covid_wave_peaks", "text_perplexity"])
+def test_an_evicted_slot_only_forces_a_recompute(spark, name):
+    # A frame keeps reading its cached slots lazily after it is built.
+    # Running the query on other inputs evicts those slots; collecting
+    # the first frame again must recompute them from its own plan.
+    q = registry()[name]
+    caching.reset()
+    storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = {info.id() for info in storage()}
+    df = q(spark, SF_SMOKE)
+    want = sorted(map(repr, df.collect()))
+    slots = dict(caching._LAST)
+    assert slots, "the query caches no frame"
+    q(spark, SF_ORACLE).collect()
+    assert not any(f.storageLevel.useMemory for f in slots.values())
+    assert sorted(map(repr, df.collect())) == want
+    con = duck_con(SF_SMOKE)
+    try:
+        res = compare(df, con, oracles()[name])
+    finally:
+        con.close()
+    assert res["match"], {k: v for k, v in res.items() if k != "match"}
+    caching.reset()
+    # RDDs an earlier test on the shared session left stored are not
+    # this query's
+    left = [info.name() for info in storage() if info.id() not in before]
+    assert not left, left
 
 
 def test_reset_drops_the_cleaned_series(spark):

@@ -9,46 +9,12 @@
   stripping composed before normalize/dedup/cluster/split.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
-
-from tests.oracle_check import compare, duck_con
-from tests.test_round9_ops import patho_dir  # noqa: F401 - fixture reuse
+from tests.conftest import SF_SMOKE
 
 
 # --- dedup_substring_strip: ExactSubstr span removal ----------------
-
-
-def test_substring_strip_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["dedup_substring_strip"](spark, SF_SMOKE),
-            con,
-            oracles()["dedup_substring_strip"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_substring_strip_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["dedup_substring_strip"](spark, patho_dir),
-            con,
-            oracles()["dedup_substring_strip"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
 
 
 def _hand_corpus(spark):
@@ -151,36 +117,6 @@ def test_substring_strip_plan_shape(spark):
 # --- pipe_near_dup_incremental_lsh: standing-index incremental -------
 
 
-def test_near_dup_lsh_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["pipe_near_dup_incremental_lsh"](spark, SF_SMOKE),
-            con,
-            oracles()["pipe_near_dup_incremental_lsh"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_near_dup_lsh_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["pipe_near_dup_incremental_lsh"](spark, patho_dir),
-            con,
-            oracles()["pipe_near_dup_incremental_lsh"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
 def test_near_dup_lsh_recall_vs_exact_form(spark):
     """The LSH path must find (nearly) every pair the exact
     batch x corpus Jaccard finds — the measured recall trade, same
@@ -273,36 +209,6 @@ def test_near_dup_lsh_prebuilt_index_is_identical(spark, tmp_path):
 # --- emb_kmeans_lloyd: iterated deterministic Lloyd ------------------
 
 
-def test_kmeans_lloyd_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["emb_kmeans_lloyd"](spark, SF_SMOKE),
-            con,
-            oracles()["emb_kmeans_lloyd"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_kmeans_lloyd_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["emb_kmeans_lloyd"](spark, patho_dir),
-            con,
-            oracles()["emb_kmeans_lloyd"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
 def test_kmeans_lloyd_inertia_improves_per_round(spark):
     """Lloyd's guarantee, spherical flavor: each round's mean
     assignment score (dot to own centroid) must not decrease —
@@ -370,36 +276,6 @@ def test_kmeans_lloyd_corpus_never_shuffles_for_assignment(spark):
 # --- ann_ivf_kmeans_topk: IVF over the trained codebook --------------
 
 
-def test_ivf_kmeans_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["ann_ivf_kmeans_topk"](spark, SF_SMOKE),
-            con,
-            oracles()["ann_ivf_kmeans_topk"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_ivf_kmeans_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["ann_ivf_kmeans_topk"](spark, patho_dir),
-            con,
-            oracles()["ann_ivf_kmeans_topk"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
 def test_ivf_kmeans_codebook_recall_beats_one_step(spark):
     """The point of training longer: at the SAME probe budget, the
     iterated codebook's recall@k vs brute force must be >= the
@@ -435,36 +311,6 @@ def test_ivf_kmeans_codebook_recall_beats_one_step(spark):
 
 
 # --- pipe_contamination_report: graded eval overlap ------------------
-
-
-def test_contamination_report_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["pipe_contamination_report"](spark, SF_SMOKE),
-            con,
-            oracles()["pipe_contamination_report"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_contamination_report_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["pipe_contamination_report"](spark, patho_dir),
-            con,
-            oracles()["pipe_contamination_report"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
 
 
 def test_contamination_report_grades_consistently_with_the_gate(spark):
@@ -531,36 +377,6 @@ def test_curate_corpus_strip_stage_composes(spark):
 # --- pipe_bloom_decontaminate: Bloom prescreen + exact verify --------
 
 
-def test_bloom_decontaminate_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["pipe_bloom_decontaminate"](spark, SF_SMOKE),
-            con,
-            oracles()["pipe_bloom_decontaminate"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_bloom_decontaminate_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["pipe_bloom_decontaminate"](spark, patho_dir),
-            con,
-            oracles()["pipe_bloom_decontaminate"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
 def test_bloom_decontaminate_agrees_with_the_exact_gate(spark):
     """The Bloom prescreen must be LOSSLESS on true positives: per
     document, n_exact must equal the binary gate's n_shared (a Bloom
@@ -605,36 +421,6 @@ def test_bloom_decontaminate_plan_shape(spark):
 # --- graph_triangle_count: degree-ordered triangle census ------------
 
 
-def test_triangle_count_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["graph_triangle_count"](spark, SF_SMOKE),
-            con,
-            oracles()["graph_triangle_count"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_triangle_count_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["graph_triangle_count"](spark, patho_dir),
-            con,
-            oracles()["graph_triangle_count"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
 def test_triangle_count_hand_graph(spark):
     """Semantics pinned by hand: K4 on {1,2,3,4} (every vertex closes
     C(3,2)=3 triangles, clustering 1.0), a pendant vertex 5 (degree 1,
@@ -676,36 +462,6 @@ def test_triangle_count_plan_shape(spark):
 
 
 # --- text_entropy: char-level Shannon entropy ------------------------
-
-
-def test_text_entropy_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["text_entropy"](spark, SF_SMOKE),
-            con,
-            oracles()["text_entropy"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_text_entropy_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["text_entropy"](spark, patho_dir),
-            con,
-            oracles()["text_entropy"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
 
 
 def test_text_entropy_hand_values(spark):
@@ -764,36 +520,6 @@ def test_text_entropy_separates_gibberish_from_padding(spark):
 
 
 # --- emb_pca_power: top principal component by power iteration -------
-
-
-def test_pca_power_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["emb_pca_power"](spark, SF_SMOKE),
-            con,
-            oracles()["emb_pca_power"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_pca_power_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["emb_pca_power"](spark, patho_dir),
-            con,
-            oracles()["emb_pca_power"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
 
 
 def test_pca_power_recovers_a_planted_component(spark):
@@ -864,36 +590,6 @@ def test_pca_power_corpus_never_shuffled(spark):
 # --- text_collocations: corpus PMI phrase extraction ------------------
 
 
-def test_collocations_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["text_collocations"](spark, SF_SMOKE),
-            con,
-            oracles()["text_collocations"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_collocations_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["text_collocations"](spark, patho_dir),
-            con,
-            oracles()["text_collocations"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
 def test_collocations_rank_a_planted_phrase_first(spark):
     """PMI semantics pinned by hand: a pair whose words appear ONLY
     together ('san francisco') outranks an equally frequent pair of
@@ -932,36 +628,6 @@ def test_collocations_plan_shape(spark):
 
 
 # --- j9_binned_interval_join: big-big range join via binning ----------
-
-
-def test_j9_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["j9_binned_interval_join"](spark, SF_SMOKE),
-            con,
-            oracles()["j9_binned_interval_join"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_j9_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["j9_binned_interval_join"](spark, patho_dir),
-            con,
-            oracles()["j9_binned_interval_join"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
 
 
 def test_j9_hand_windows(spark):
@@ -1022,36 +688,6 @@ def test_j9_plan_shape(spark):
 
 
 # --- ann_graph_greedy: navigable-graph beam search --------------------
-
-
-def test_graph_greedy_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["ann_graph_greedy"](spark, SF_SMOKE),
-            con,
-            oracles()["ann_graph_greedy"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_graph_greedy_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["ann_graph_greedy"](spark, patho_dir),
-            con,
-            oracles()["ann_graph_greedy"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
 
 
 def test_graph_greedy_navigates_a_planted_geometry(spark):
@@ -1137,36 +773,6 @@ def test_graph_greedy_corpus_never_shuffled_by_the_walk(spark):
 # --- pipe_tokenizer_fertility: per-lang tokenizer-efficiency audit ----
 
 
-def test_tokenizer_fertility_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["pipe_tokenizer_fertility"](spark, SF_SMOKE),
-            con,
-            oracles()["pipe_tokenizer_fertility"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_tokenizer_fertility_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["pipe_tokenizer_fertility"](spark, patho_dir),
-            con,
-            oracles()["pipe_tokenizer_fertility"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
 def test_tokenizer_fertility_hand_values(spark):
     """Ratio semantics pinned by hand: corpus-level sums (a long doc
     dominates the lang ratio — NOT a mean of per-doc ratios), NULL
@@ -1231,36 +837,6 @@ def test_tokenizer_fertility_hand_values(spark):
 # --- graph_kcore: fixed-round k-core peel ------------------------------
 
 
-def test_kcore_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["graph_kcore"](spark, SF_SMOKE),
-            con,
-            oracles()["graph_kcore"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_kcore_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["graph_kcore"](spark, patho_dir),
-            con,
-            oracles()["graph_kcore"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
 def test_kcore_hand_graph(spark):
     """Peel semantics pinned by hand on K5 + appendages, k=3: the
     5-clique (degree 4 each) survives untouched; a tail vertex whose
@@ -1321,36 +897,6 @@ def test_kcore_reaches_fixed_point_on_the_fixture(spark):
 
 
 # --- stream_topk: per-window top-k event types -------------------------
-
-
-def test_stream_topk_matches_duckdb_twin(spark):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()["stream_topk"](spark, SF_SMOKE),
-            con,
-            oracles()["stream_topk"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-def test_stream_topk_matches_twin_on_null_payloads(spark, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()["stream_topk"](spark, patho_dir),
-            con,
-            oracles()["stream_topk"],
-        )
-        assert res["match"], res
-    finally:
-        con.close()
 
 
 def test_stream_topk_rank_contract(spark):

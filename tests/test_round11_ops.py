@@ -19,53 +19,9 @@
   float math happens once per LABEL, never per row.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
-
-from tests.oracle_check import compare, duck_con
-from tests.test_round9_ops import patho_dir  # noqa: F401 - fixture reuse
-
-NEW_OPS = [
-    "text_js_divergence",
-    "ts_decompose",
-    "pipe_quality_classifier",
-    "pipe_curriculum_order",
-    "graph_label_propagation",
-    "ann_rerank_topk",
-    "emb_outliers",
-    "a27_quantile_sketch",
-    "a28_quantile_hist",
-]
-
-
-@pytest.mark.parametrize("name", NEW_OPS)
-def test_matches_duckdb_twin(spark, name):
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(SF_SMOKE)
-    try:
-        res = compare(
-            registry()[name](spark, SF_SMOKE), con, oracles()[name]
-        )
-        assert res["match"], res
-    finally:
-        con.close()
-
-
-@pytest.mark.parametrize("name", NEW_OPS)
-def test_matches_twin_on_null_payloads(spark, name, patho_dir):  # noqa: F811
-    from covid_engineering_spark.queries import oracles, registry
-
-    con = duck_con(patho_dir)
-    try:
-        res = compare(
-            registry()[name](spark, patho_dir), con, oracles()[name]
-        )
-        assert res["match"], res
-    finally:
-        con.close()
+from tests.conftest import SF_SMOKE
 
 
 # --- text_js_divergence ----------------------------------------------

@@ -1,4 +1,6 @@
-"""Time-series rollup: determinism precondition + rollup invariants."""
+"""Time-series tier (operators/timeseries.py): the determinism
+precondition, rollup invariants, and Holt's window-identity forecast
+checked against its sequential textbook fold."""
 
 from pyspark.sql import functions as F
 
@@ -384,3 +386,38 @@ def test_trending_rank_and_coverage(spark):
         # ranking is by count desc then type asc
         ordered = sorted(rs, key=lambda x: (-x.n_events, x.event_type))
         assert [x.rank for x in ordered] == list(range(1, len(rs) + 1))
+
+
+def test_holt_equals_textbook_sequential_recursion(spark):
+    # The engine evaluates Holt as integer-coefficient combinations of
+    # the window inputs; the textbook form is a sequential fold. They
+    # must agree bit-for-bit under exact rational arithmetic + floor.
+    import math
+    from fractions import Fraction as Fr
+
+    from covid_engineering_spark.operators.timeseries import (
+        EWMA_W,
+        q_ts_holt,
+    )
+
+    rows = (
+        q_ts_holt(spark, SF_SMOKE)
+        .filter("event_type = 'click'")
+        .orderBy("bucket")
+        .collect()
+    )
+    assert rows
+    xs = [r["x_cents"] for r in rows]
+    for i, r in enumerate(rows):
+        win = xs[max(0, i - EWMA_W + 1) : i + 1]
+        level = trend = None
+        for t, x in enumerate(win, start=1):
+            if t == 1:
+                level, trend = Fr(x), Fr(0)
+            else:
+                new_level = (Fr(x) + level + trend) / 2
+                trend = (new_level - level + trend) / 2
+                level = new_level
+        assert r["holt_level_cents"] == math.floor(level), (i, r)
+        assert r["holt_trend_cents"] == math.floor(trend), (i, r)
+        assert r["holt_forecast_cents"] == math.floor(level + trend)
